@@ -1,71 +1,117 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.session.{GraftSession, ShuffleWidth}
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
-/** Benchmark main — runs every registered query on
-  * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line:
-  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
+/** Benchmark main — runs every registered query on `SPARK_GRAFT_SF_DIR`,
+  * writes per-row medians, iteration trails and telemetry to
+  * `bench_results.json` (`SPARK_GRAFT_BENCH_OUT`), and prints ONE short
+  * JSON summary line ([[BenchOutput.summary]]).
   *
   * Headline queries (the reference's TPC-H set,
   * /root/reference/crates/bench/src/main.rs:156-163) run ITERS times and
   * report the median; the long tail runs once. Results are materialized
   * with a noop write (full execution, no driver collect).
+  *
+  * Every row also records the layers of its last iteration: DataFrame
+  * build time, the Catalyst phases of the noop write (one
+  * QueryExecutionListener) and per-stage task statistics (one
+  * SparkListener). Listener events arrive asynchronously, so they are
+  * stamped with wall-clock time and assigned to rows by iteration window
+  * after `spark.stop()` has drained the listener bus.
   */
 object Bench {
-  private val Headline =
-    Set("q1_pricing_summary", "q3_shipping_priority",
-      "q6_forecast_revenue", "q10_returned_items")
+
+  /** Wall-clock bounds (epoch ms) of a row's last completed iteration,
+    * and the time its DataFrame took to build. */
+  final case class IterWindow(startMs: Long, endMs: Long, buildMs: Double)
+
+  /** A query execution's Catalyst phase durations, stamped with the
+    * start of its first phase. */
+  final case class PhaseEvent(startMs: Long, phaseMs: Map[String, Long])
+
+  /** Adds the layer fields for the iteration in `w`: the stages submitted
+    * inside it, and the phases of the last query execution that started
+    * inside it (the noop write; earlier ones are eager jobs of the
+    * build). */
+  def withLayers(t: RowTelemetry, w: IterWindow,
+      stages: Seq[(Long, StageStat)], phases: Seq[PhaseEvent]): RowTelemetry = {
+    def inside(ms: Long) = ms >= w.startMs && ms <= w.endMs
+    val write = phases.filter(p => inside(p.startMs)).maxByOption(_.startMs)
+      .fold(Map.empty[String, Long])(_.phaseMs)
+    t.copy(buildMs = Some(BenchOutput.round(w.buildMs, 1)),
+      analysisMs = write.get("analysis"),
+      optimizationMs = write.get("optimization"),
+      planningMs = write.get("planning"),
+      stages = Some(stages.collect { case (at, s) if inside(at) => s }
+        .sortBy(_.id)))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      // shuffle width follows DATA VOLUME, not core count (the r17 50×
-      // probe: a 32-wide shuffle put q10's reduce tasks at the spill
-      // edge, trail 19–95 s; 128-wide ran flat). ShuffleWidth sizes it
-      // from the measured on-disk bytes with the core count as floor —
-      // at sf0.1 that lands exactly on the recorded 32-wide contract.
-      // SPARK_GRAFT_SHUFFLE remains an explicit override for probes.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          graft.session.ShuffleWidth.forBytes(
-            graft.session.ShuffleWidth.dirBytes(sfDir), cpus.toInt).toString))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local[N] heartbeat tolerance: the "executor" shares this JVM, so
-      // a missed heartbeat can only mean a GC pause or hypervisor steal
-      // burst — self-killing on it (exit 56, BENCH_r19: "unable to send
-      // heartbeats to driver more than 60 times" after a stop-the-world
-      // full GC stacked on an 18% steal burst) turns a slow run into a
-      // dead one. Widen the interval, the receiver's expiry timeout, and
-      // the failure budget; on a real cluster these would be tuned to the
-      // fleet's failure-detection needs instead.
-      .config("spark.executor.heartbeatInterval", "20s")
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeat.maxFailures", "1000")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]")
+      .appName("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // shuffle width follows DATA VOLUME, not core count (the 50× scale
+    // probe in BASELINE.md: a 32-wide shuffle put q10's reduce tasks at
+    // the spill edge, trail 19–95 s; 128-wide ran flat). At sf0.1 on
+    // local[32] it lands exactly on the recorded 32-wide contract.
+    ShuffleWidth.configure(spark, sfDir)
 
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      // Residue drop per ITERATION, outside the timed region (r20):
-      // every iteration rebuilds its plan from parquet, so a previous
-      // iteration's localCheckpoint blocks are dead weight — on the
-      // sf5.0 rung a median-of-3 span row accumulated 3 iterations of
-      // multi-GB block residue on the 16 GB heap and drove ParallelGC
-      // into a full-collection spiral (23 GC threads at ~95 s CPU each,
-      // mutators at 4%). Timing methodology is unchanged: the noop sink
-      // still materializes every column inside the timed window; only
-      // the cleanup moved from per-row to per-iteration.
+    val stageEvents = new ConcurrentLinkedQueue[(Long, StageStat)]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val i = e.stageInfo
+        for (sub <- i.submissionTime; m <- Option(i.taskMetrics))
+          stageEvents.add(sub -> StageStat(i.stageId,
+            i.name.linesIterator.nextOption().getOrElse("").take(90),
+            i.numTasks, i.completionTime.getOrElse(sub) - sub,
+            m.executorRunTime, m.jvmGCTime,
+            m.shuffleReadMetrics.fetchWaitTime,
+            m.shuffleWriteMetrics.bytesWritten,
+            m.memoryBytesSpilled + m.diskBytesSpilled))
+      }
+    })
+    val phaseEvents = new ConcurrentLinkedQueue[PhaseEvent]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = add(qe)
+      private def add(qe: QueryExecution): Unit = {
+        val ph = qe.tracker.phases
+        if (ph.nonEmpty) phaseEvents.add(PhaseEvent(
+          ph.values.map(_.startTimeMs).min,
+          ph.map { case (k, p) => k -> (p.endTimeMs - p.startTimeMs) }))
+      }
+    })
+
+    // Residue drop per ITERATION, outside the timed region:
+    // every iteration rebuilds its plan from parquet, so a previous
+    // iteration's localCheckpoint blocks are dead weight — on the
+    // sf5.0 rung a median-of-3 span row accumulated 3 iterations of
+    // multi-GB block residue on the 16 GB heap and drove ParallelGC
+    // into a full-collection spiral. The noop sink still materializes
+    // every column inside the timed window.
+    def dropResidue(): Unit =
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
+    var lastIter: Option[IterWindow] = None
+    def once(fn: (SparkSession, String) => DataFrame): Double = {
+      val startMs = System.currentTimeMillis()
+      val t0 = System.nanoTime()
+      val df = fn(spark, sfDir)
+      val t1 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      val dt = (System.nanoTime() - t0) / 1e9
+      lastIter = Some(IterWindow(startMs, System.currentTimeMillis(),
+        (t1 - t0) / 1e6))
+      dropResidue()
       dt
     }
 
@@ -84,8 +130,7 @@ object Bench {
     // (/root/reference/crates/bench/src/main.rs:30-33,108-120): with
     // probability SPARK_GRAFT_CHAOS per iteration, skip execution, sleep
     // 500 ms, and record the iteration as an error. Deterministic seed so
-    // a chaos run is reproducible. Default 0.0 = feature off, output
-    // unchanged.
+    // a chaos run is reproducible. Default 0.0 = feature off.
     val chaos = sys.env.getOrElse("SPARK_GRAFT_CHAOS", "0.0").toDouble
     // optional comma-separated allowlist for iterating on single queries
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -95,40 +140,21 @@ object Bench {
     // `failures` map with its exception, not as a bare -1.0
     val failInject = sys.env.get("SPARK_GRAFT_FAIL")
     val rng = new scala.util.Random(42)
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    // a row that THROWS records its exception (class + first message
-    // line) in the artifact — a bare -1.0 median cost round 15 a full
-    // judging session of diagnostics before the breakage was even
-    // attributable to a query-vs-harness interaction
-    val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val selected = only.fold(SparkEntry.registry)(
       names => SparkEntry.registry.filter(q => names(q.name)))
-    // Contention immunization + adjudication telemetry (round-14
-    // verdict): localCheckpoint blocks accumulate across the 190+ row
-    // registry and the resulting executor-memory pressure elevated
-    // mid-registry corpus-scan rows 2-5× in two driver runs. Each row
-    // now (a) drops every persistent RDD it left behind before the
-    // next row starts, and (b) records its wall-clock start, run
-    // order, GC time/count delta, and post-row heap so a future slow
-    // row is adjudicable from the committed artifact alone.
+    // Adjudication telemetry: each row records its
+    // wall-clock start, run order, GC time/count delta, post-row heap,
+    // host load and hypervisor steal, so a slow row is attributable to
+    // the query or to the host from the committed artifact alone.
     val gcBeans = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans
-    def gcNow(): (Long, Long) = {
-      var cnt = 0L; var ms = 0L
-      gcBeans.forEach { b =>
-        cnt += math.max(0L, b.getCollectionCount)
-        ms += math.max(0L, b.getCollectionTime)
-      }
-      (cnt, ms)
-    }
+      .getGarbageCollectorMXBeans.asScala
+    def gcNow(): (Long, Long) =
+      (gcBeans.map(b => math.max(0L, b.getCollectionCount)).sum,
+        gcBeans.map(b => math.max(0L, b.getCollectionTime)).sum)
     def heapMb(): Long = java.lang.management.ManagementFactory
       .getMemoryMXBean.getHeapMemoryUsage.getUsed >> 20
-    // Host-load signal (round-16 verdict #2): two judge rounds in a row
-    // burned re-measurement time adjudicating driver-run contention
-    // because the artifact had gc/heap but no way to tell "this row is
-    // slow" from "the host was busy". One /proc/loadavg sample per row
-    // start closes that — a row recorded with load1 >> this JVM's own
-    // core usage is adjudicable as contention from the artifact alone.
+    // One /proc/loadavg sample per row start: a row recorded with load1
+    // far above this JVM's own core usage ran on a busy host.
     def load1(): Double =
       try {
         val s = new String(java.nio.file.Files.readAllBytes(
@@ -142,11 +168,9 @@ object Bench {
       }
     // Hypervisor steal is the contention loadavg CANNOT see: on a
     // shared VM a co-tenant inflates every row ~uniformly while load1
-    // stays flat (measured here: 19.5% steal under full load with an
-    // idle-looking loadavg). Per row, the aggregate /proc/stat cpu
-    // line is sampled at start and end; steal_pct is the stolen share
-    // of ALL cpu ticks during the row — the one number that
-    // adjudicates "slow row" vs "starved host" from the artifact.
+    // stays flat. Per row, the aggregate /proc/stat cpu line is sampled
+    // at start and end; steal_pct is the stolen share of ALL cpu ticks
+    // during the row.
     def cpuTicks(): Option[(Long, Long)] =
       try {
         val line = scala.io.Source.fromFile("/proc/stat").getLines()
@@ -156,22 +180,18 @@ object Bench {
           (f.sum, if (f.length > 7) f(7) else 0L)
         }
       } catch { case _: Throwable => None }
-    def dropResidue(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    val telemetry =
-      scala.collection.mutable.LinkedHashMap.empty[String, String]
     val benchT0 = System.currentTimeMillis()
-    var runOrder = 0
-    val measured = selected.map { q =>
-      val n = if (Headline(q.name)) iters else 1
+    val measured = selected.zipWithIndex.map { case (q, order) =>
+      val n = if (BenchOutput.Headline.contains(q.name)) iters else 1
       val startMs = System.currentTimeMillis() - benchT0
       val loadAtStart = load1()
       val ticks0 = cpuTicks()
       val (gcN0, gcMs0) = gcNow()
-      // raw = ARRIVAL order (not sorted): the per-iteration trail is
-      // emitted below so a one-off slow iteration is distinguishable
-      // from a real regression without a re-run
+      lastIter = None
+      var chaosErrors = 0
+      var failure: Option[String] = None
+      // raw = ARRIVAL order (not sorted): the per-iteration trail lets a
+      // one-off slow iteration be told from a real regression
       val raw =
         try {
           if (failInject.contains(q.name))
@@ -179,118 +199,56 @@ object Bench {
           val first = (1 to n).flatMap { _ =>
             if (chaos > 0.0 && rng.nextDouble() < chaos) {
               Thread.sleep(500)
-              errors(q.name) = errors.getOrElse(q.name, 0) + 1
+              chaosErrors += 1
               None
             } else Some(once(q.run))
           }
           // a single-shot tail row that reads slow gets re-measured:
           // one-shot timings on this host have produced phantom 5-8×
-          // "regressions" on sub-second queries (r10's vector cluster —
-          // judged noise on re-run; r11's d_decontaminate_semantic /
-          // s_knn_join watch rows sat just over the old 1 s line).
-          // Median-of-3 for any ≥0.5 s row keeps the audit trail honest
-          // without tripling the whole run.
+          // "regressions" on sub-second queries. Median-of-3 for any
+          // ≥0.5 s row keeps the audit trail honest without tripling the
+          // whole run.
           if (chaos == 0.0 && n == 1 && first.nonEmpty && first.head >= 0.5)
             first ++ Seq(once(q.run), once(q.run))
           else first
         }
         catch { case e: Throwable =>
+          // class + first message line: a bare -1.0 median is not
+          // attributable to a query-vs-harness interaction
           val msg = Option(e.getMessage).getOrElse("")
             .linesIterator.take(1).mkString.take(300)
-          failures(q.name) = e.getClass.getName + ": " + msg
+          failure = Some(e.getClass.getName + ": " + msg)
           Seq(-1.0)
         }
       dropResidue() // this row's checkpoints must not tax the next row
       val (gcN1, gcMs1) = gcNow()
       val stealPct = (ticks0, cpuTicks()) match {
         case (Some((t0, s0)), Some((t1, s1))) if t1 > t0 =>
-          BigDecimal(100.0 * (s1 - s0) / (t1 - t0))
-            .setScale(1, BigDecimal.RoundingMode.HALF_UP).toString
-        case _ => "-1.0"
+          BenchOutput.round(100.0 * (s1 - s0) / (t1 - t0), 1)
+        case _ => -1.0
       }
-      telemetry(q.name) =
-        s"""{"order":$runOrder,"start_ms":$startMs,"load1":${
-          BigDecimal(loadAtStart).setScale(2,
-            BigDecimal.RoundingMode.HALF_UP)},"steal_pct":$stealPct,"gc_ms":${
-          gcMs1 - gcMs0},"gc_n":${gcN1 - gcN0},"heap_mb":${heapMb()}}"""
-      runOrder += 1
-      val sorted = raw.sorted
-      (q.name, if (sorted.isEmpty) -1.0 else sorted(sorted.size / 2), raw)
+      val telemetry = RowTelemetry(order, startMs,
+        BenchOutput.round(loadAtStart, 2), stealPct, gcMs1 - gcMs0,
+        gcN1 - gcN0, heapMb())
+      (RowResult(q.name, raw, telemetry, failure, chaosErrors), lastIter)
     }
-    val results = measured.map { case (name, med, _) => name -> med }
-    // The driver stores only the TAIL of stdout, so a long line loses
-    // its FRONT — which in round 9 cut the q1..q10 entries out of the
-    // registry-ordered map. Two defenses: headline entries go LAST in
-    // the map (tail-survivable), and a short headline-only JSON line
-    // precedes the full one (redundant copy that fits any tail window).
-    def fmt(v: Double) =
-      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
-    val qs = results.sortBy { case (k, _) => Headline(k) }
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val totalR = BigDecimal(total).setScale(3, BigDecimal.RoundingMode.HALF_UP)
-    val chaosPart =
-      if (errors.nonEmpty)
-        s""","chaos":$chaos,"errors":${errors.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")}"""
-      else ""
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => "\\u%04x".format(c.toInt)
-        case c => c.toString
-      } + "\""
-    val failPart =
-      if (failures.nonEmpty)
-        s""","failures":${failures.map { case (k, v) =>
-          "\"" + k + "\":" + jstr(v) }.mkString("{", ",", "}")}"""
-      else ""
-    // per-iteration trail for every re-measured row (first line: a
-    // long-line truncation by the driver's tail window loses this
-    // first, never the median lines below)
-    val iterRows = measured.filter(_._3.size > 1).map { case (k, _, raw) =>
-      "\"" + k + "\":" + raw.map(fmt).mkString("[", ",", "]")
+    // Stopping drains the listener bus: every stage and phase event of
+    // the run has been delivered once it returns.
+    spark.stop()
+    val stages = stageEvents.asScala.toSeq
+    val phases = phaseEvents.asScala.toSeq
+    val rows = measured.map { case (r, w) =>
+      w.fold(r)(w => r.copy(telemetry = withLayers(r.telemetry, w, stages, phases)))
     }
-    if (iterRows.nonEmpty)
-      println(s"""{"metric":"iters","queries":${
-        iterRows.mkString("{", ",", "}")},"sf":"$sfDir"}""")
-    val headlineQs = results.filter { case (k, _) => Headline(k) }
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    println(s"""{"metric":"headline","value":${fmt(
-      results.filter(r => Headline(r._1)).map(_._2).filter(_ >= 0).sum)},"unit":"sec","queries":$headlineQs,"sf":"$sfDir"}""")
-    println(s"""{"metric":"total","value":$totalR,"unit":"sec","queries":$qs,"sf":"$sfDir"$chaosPart$failPart}""")
-    // The driver's BENCH_rN.json keeps only a ~2,000-char tail of
-    // stdout, which truncates the per-iteration trail out of the
-    // committed record (it did in r13 — the evidence the iters line
-    // exists for). So the FULL results are also written to a stable
-    // file that gets committed each round: every query's median, plus
-    // the raw iteration trail (arrival order) for every re-measured
-    // row, so a one-off slow iteration is distinguishable from a real
-    // regression straight from the artifact.
+    // A run's stdout is often kept only as a ~2,000-char tail, so the
+    // full per-row record goes to a file and stdout gets one short
+    // summary line.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "bench_results.json")
-    val iterJson = measured.filter(_._3.size > 1).map { case (k, _, raw) =>
-      "  \"" + k + "\": " + raw.map(fmt).mkString("[", ", ", "]")
-    }.mkString("{\n", ",\n", "\n}")
-    val medJson = results.map { case (k, v) => "  \"" + k + "\": " + fmt(v) }
-      .mkString("{\n", ",\n", "\n}")
-    val telJson = telemetry.map { case (k, v) => "  \"" + k + "\": " + v }
-      .mkString("{\n", ",\n", "\n}")
-    val full =
-      s"""{
-         |"sf": "$sfDir",
-         |"headline_sec": ${fmt(
-             results.filter(r => Headline(r._1)).map(_._2).filter(_ >= 0).sum)},
-         |"total_sec": $totalR,
-         |"medians": $medJson,
-         |"iters": $iterJson,
-         |"telemetry": $telJson$chaosPart$failPart
-         |}""".stripMargin
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
+      BenchOutput.results(sfDir, rows, chaos))
     catch { case e: Throwable =>
       System.err.println(s"bench: could not write $outPath: $e") }
-    spark.stop()
+    println(BenchOutput.summary(sfDir, rows))
   }
 }

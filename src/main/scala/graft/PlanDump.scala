@@ -1,9 +1,12 @@
 package graft
 
+import graft.session.{GraftSession, ShuffleWidth}
+
 /** Measurement tool (guide §1/§7.2): dump `explain("formatted")` for
   * named registry queries to files, so plan claims (Exchange count,
   * join strategy, PushedFilters/ReadSchema, WholeStageCodegen spans)
-  * are checkable offline without re-running Spark.
+  * are checkable offline without re-running Spark. Run it with one row
+  * name to inspect a single plan.
   *
   * Usage: runMain graft.PlanDump <outDir> [query ...]
   *   (no query names = every registered query)
@@ -19,19 +22,10 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_SUFFIX", "before")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          graft.session.ShuffleWidth.forBytes(
-            graft.session.ShuffleWidth.dirBytes(sfDir), cpus.toInt).toString))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]")
+      .appName("graft-plandump").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ShuffleWidth.configure(spark, sfDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val selected =
       if (names.isEmpty) SparkEntry.registry

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.session.{GraftSession, ShuffleWidth}
+import scala.collection.immutable.ListMap
 
 /** Scale-rung recall probe for the ANN family: recall@10 of each
   * approximate variant against `s_ann_bruteforce` on an arbitrary SF
@@ -18,30 +19,27 @@ object RecallProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .appName("graft-recall-probe")
-      .config("spark.sql.shuffle.partitions",
-        graft.session.ShuffleWidth.forBytes(
-          graft.session.ShuffleWidth.dirBytes(dir), cpus.toInt).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]")
+      .appName("graft-recall-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    ShuffleWidth.configure(spark, dir)
     def topk(name: String): Map[Long, Set[Long]] =
       SparkEntry.queries(name)(spark, dir)
         .select("qid", "vec_id").collect()
         .groupBy(_.getLong(0))
         .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
     val exact = topk("s_ann_bruteforce")
-    val entries = Seq("s_ann_lsh", "s_ann_ivf", "s_ann_pq", "s_ann_ivfpq")
+    val recalls = Seq("s_ann_lsh", "s_ann_ivf", "s_ann_pq", "s_ann_ivfpq")
       .map { name =>
         val approx = topk(name)
         val recall = exact.map { case (q, ids) =>
           ids.intersect(approx.getOrElse(q, Set.empty)).size.toDouble /
             math.max(ids.size, 1)
         }.sum / math.max(exact.size, 1)
-        f""""$name":$recall%.3f"""
+        name -> BenchOutput.round(recall, 3)
       }
-    println(s"""{"sf_dir":"$dir","recall_at_10":{${entries.mkString(",")}}}""")
+    println(BenchOutput.mapper.writeValueAsString(ListMap(
+      "sf_dir" -> dir, "recall_at_10" -> ListMap.from(recalls))))
     spark.stop()
   }
 }

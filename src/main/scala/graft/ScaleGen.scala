@@ -19,14 +19,10 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: ScaleGen <srcSfDir> <dstDir> <factor>")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scalegen")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.session.GraftSession.builder(s"local[$cpus]")
+      .appName("graft-scalegen").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.session.ShuffleWidth.configure(spark, args(0))
     run(spark, args(0), args(1), args(2).toInt)
     spark.stop()
   }

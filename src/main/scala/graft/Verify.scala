@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.session.{GraftSession, ShuffleWidth}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,19 +7,9 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Same local-mode heartbeat tolerance as Bench: a GC/steal stall
-      // must degrade to "slow", never to executor self-kill (BENCH_r19
-      // died of exactly this, exit 56).
-      .config("spark.executor.heartbeatInterval", "20s")
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeat.maxFailures", "1000")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ShuffleWidth.configure(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     // Local-iteration subset (same contract as Bench); driver leaves it unset.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -33,21 +23,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      BenchOutput.oracleSql(SparkEntry.oracleSql))
     spark.stop()
   }
 }

@@ -211,13 +211,15 @@ object McpServer {
   /** Stdio entry point (`runMain graft.server.McpServer <sfDir>`): serves
     * MCP on stdin/stdout with the parquet tables registered. */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.session.GraftSession.builder(
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    args.headOption.foreach(dir => graft.Tables(spark, dir).registerAll())
+    args.headOption match {
+      case Some(dir) =>
+        graft.Tables(spark, dir).registerAll()
+        graft.session.ShuffleWidth.configure(spark, dir)
+      case None => graft.session.ShuffleWidth.configureFromStats(spark)
+    }
     new McpServer(spark).serve(System.in, System.out)
   }
 }

@@ -203,9 +203,12 @@ object GraftSession {
     * AQE with partition coalescing and skew-join splitting, and runtime
     * bloom-filter pruning for large joins (a shuffle-side row filter built
     * from the selective side — the 100 TB analog of the reference's
-    * pushed-filter transfer narrowing). */
-  def builder(master: String = "local[*]"): SparkSession.Builder =
-    SparkSession.builder()
+    * pushed-filter transfer narrowing).
+    *
+    * This is the only place main code builds a session; callers that
+    * read a data directory size the shuffle with [[ShuffleWidth.configure]]. */
+  def builder(master: String = "local[*]"): SparkSession.Builder = {
+    val b = SparkSession.builder()
       .master(master)
       .withExtensions(new GraftExtensions)
       .config("spark.sql.session.timeZone", "UTC")
@@ -232,4 +235,17 @@ object GraftSession {
         graft.sources.azure.AbfsFileSystem.confEntries).map {
         case (k, v) => s"spark.hadoop.$k" -> v
       }.toMap)
+    // In local mode the executor shares the driver's JVM, so a missed
+    // heartbeat can only mean a GC pause or a hypervisor steal burst.
+    // Self-killing on it (exit 56: "unable to send heartbeats to driver
+    // more than 60 times" after a full GC during an 18% steal burst)
+    // turns a slow run into a dead one. A cluster, local-cluster
+    // included, keeps Spark's defaults so a lost executor is still
+    // detected promptly.
+    if (master == "local" || master.startsWith("local["))
+      b.config("spark.executor.heartbeatInterval", "20s")
+        .config("spark.network.timeout", "600s")
+        .config("spark.executor.heartbeat.maxFailures", "1000")
+    else b
+  }
 }
