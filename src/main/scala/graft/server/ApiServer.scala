@@ -382,12 +382,14 @@ final class ApiServer(
   /** Prometheus text exposition over the engine's query log — the
     * reference serves /metrics alongside its REST API
     * (crates/server/src/lib.rs:465-487). Unauthenticated by convention
-    * (scrape targets), and derived from already-scrubbed log entries. */
+    * (scrape targets), and derived from already-scrubbed log entries plus
+    * the result cache's size, which lives in the driver heap. */
   private def handleMetrics(ex: HttpExchange): Unit = {
     val entries = engine.queryLog
     val ok = entries.count(_.succeeded)
     val failed = entries.size - ok
     val hits = entries.count(_.cacheHit)
+    val (cacheEntries, cacheBytes) = engine.cacheUsage
     val durs = entries.map(_.durationMillis).sorted
     def pct(p: Double): Long =
       if (durs.isEmpty) 0L else durs(math.min(durs.size - 1, (p * durs.size).toInt))
@@ -397,6 +399,10 @@ final class ApiServer(
          |graft_queries_total{status="error"} $failed
          |# TYPE graft_cache_hits_total counter
          |graft_cache_hits_total $hits
+         |# TYPE graft_cache_entries gauge
+         |graft_cache_entries $cacheEntries
+         |# TYPE graft_cache_bytes gauge
+         |graft_cache_bytes $cacheBytes
          |# TYPE graft_query_duration_ms summary
          |graft_query_duration_ms{quantile="0.5"} ${pct(0.5)}
          |graft_query_duration_ms{quantile="0.95"} ${pct(0.95)}

@@ -41,9 +41,12 @@ final case class QueryLogEntry(
   *   cost validation → cache lookup → execute with timeout → cache store →
   *   structured query log with PII scrubbing.
   *
-  * Everything heavy stays distributed: the cache stores Parquet (a hit is
-  * a scan, not a driver payload), and execution is triggered by the cache
-  * write or left lazy for the caller when caching is off.
+  * Execution stays distributed; only results come to the driver. A cache
+  * miss runs the query once as a collect bounded at 100,000 rows and keeps
+  * the rows on the driver, with a Parquet copy as the durable one; a hit
+  * serves those rows with no Spark job, and the cache's `maxBytes` bounds
+  * what it holds. Results that are empty, too long or not cacheable stay
+  * lazy for the caller.
   */
 final class GraftSession(
     val spark: SparkSession,
@@ -57,6 +60,9 @@ final class GraftSession(
   private val groupId = new AtomicLong()
 
   def queryLog: Seq[QueryLogEntry] = log.synchronized(log.toSeq)
+
+  /** Entries and weighted bytes the result cache holds; (0, 0) without one. */
+  def cacheUsage: (Int, Long) = cache.fold((0, 0L))(c => (c.size, c.totalBytes))
 
   /** A plan touching any `cache: false` source is exempt from the result
     * cache in both directions (the reference's per-source cache disable,

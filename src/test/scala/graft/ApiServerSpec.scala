@@ -155,6 +155,11 @@ class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     val errCount = "graft_queries_total\\{status=\"error\"\\} (\\d+)".r
       .findFirstMatchIn(body).get.group(1).toInt
     assert(errCount >= 1)
+    // result-cache gauges; this engine has no cache, so both read 0
+    assert(body.contains("# TYPE graft_cache_entries gauge"))
+    assert(body.contains("# TYPE graft_cache_bytes gauge"))
+    assert("(?m)^graft_cache_entries 0$".r.findFirstIn(body).isDefined, body)
+    assert("(?m)^graft_cache_bytes 0$".r.findFirstIn(body).isDefined, body)
   }
 
   test("explain applies the caller's RLS policy to the plan") {
