@@ -1,6 +1,7 @@
 package graft
 
 import graft.session.{GraftSession, ShuffleWidth}
+import graft.util.Reuse
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -91,16 +92,6 @@ object Bench {
       }
     })
 
-    // Residue drop per ITERATION, outside the timed region:
-    // every iteration rebuilds its plan from parquet, so a previous
-    // iteration's localCheckpoint blocks are dead weight — on the
-    // sf5.0 rung a median-of-3 span row accumulated 3 iterations of
-    // multi-GB block residue on the 16 GB heap and drove ParallelGC
-    // into a full-collection spiral. The noop sink still materializes
-    // every column inside the timed window.
-    def dropResidue(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
     var lastIter: Option[IterWindow] = None
     def once(fn: (SparkSession, String) => DataFrame): Double = {
       val startMs = System.currentTimeMillis()
@@ -111,7 +102,14 @@ object Bench {
       val dt = (System.nanoTime() - t0) / 1e9
       lastIter = Some(IterWindow(startMs, System.currentTimeMillis(),
         (t1 - t0) / 1e6))
-      dropResidue()
+      // Residue drop per ITERATION, outside the timed region:
+      // every iteration rebuilds its plan from parquet, so a previous
+      // iteration's materialized blocks are dead weight — on the
+      // sf5.0 rung a median-of-3 span row accumulated 3 iterations of
+      // multi-GB block residue on the 16 GB heap and drove ParallelGC
+      // into a full-collection spiral. The noop sink still materializes
+      // every column inside the timed window.
+      Reuse.releaseAll(spark)
       dt
     }
 
@@ -220,7 +218,7 @@ object Bench {
           failure = Some(e.getClass.getName + ": " + msg)
           Seq(-1.0)
         }
-      dropResidue() // this row's checkpoints must not tax the next row
+      Reuse.releaseAll(spark) // this row's blocks must not tax the next row
       val (gcN1, gcMs1) = gcNow()
       val stealPct = (ticks0, cpuTicks()) match {
         case (Some((t0, s0)), Some((t1, s1))) if t1 > t0 =>

@@ -1,5 +1,6 @@
 package graft
 import graft.session.{GraftSession, ShuffleWidth}
+import graft.util.Reuse
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -22,6 +23,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      // the row's result is on disk: its materializations are residue
+      Reuse.releaseAll(spark)
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       BenchOutput.oracleSql(SparkEntry.oracleSql))

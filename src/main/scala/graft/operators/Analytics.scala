@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{GraftQuery, Tables}
 import graft.util.Exact._
+import graft.util.Reuse
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -215,12 +216,12 @@ object Analytics {
         |  CAST(count(*) AS BIGINT) AS n_users
         |FROM uw u JOIN cohort c USING (user_id)
         |GROUP BY 1, 2""".stripMargin) { (s, dir) =>
-      val uw = t(s, dir).events
+      // feeds the cohort aggregate AND the join
+      val uw = Reuse.materialize(t(s, dir).events
         .select(col("user_id"),
           expr("CAST(datediff(CAST(ts AS DATE), DATE '1970-01-01') div 7 AS BIGINT)")
             .as("week"))
-        .distinct()
-        .localCheckpoint(false) // feeds the cohort aggregate AND the join
+        .distinct())
       val cohort = uw.groupBy(col("user_id"))
         .agg(min(col("week")).as("cohort_week"))
       uw.join(cohort, "user_id")

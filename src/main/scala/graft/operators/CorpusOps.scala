@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.util.Reuse
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,9 +66,10 @@ object CorpusOps {
       withSizes: Boolean = false): DataFrame = {
     // the corpus derivation runs ONCE per row: d feeds both cross-join
     // sides and the final node set
-    val d = withNorm(t(s, dir).documents.filter(col("doc_id") < 150))
-      .select(col("doc_id"), array_distinct(col("words")).as("ws"))
-      .localCheckpoint()
+    val d = Reuse.materialize(
+      withNorm(t(s, dir).documents.filter(col("doc_id") < 150))
+        .select(col("doc_id"), array_distinct(col("words")).as("ws")),
+      eager = true)
     val a = d.select(col("doc_id").as("id_a"), col("ws").as("ws_a"))
     val b = d.select(col("doc_id").as("id_b"), col("ws").as("ws_b"))
     val inter = size(array_intersect(col("ws_a"), col("ws_b")))
@@ -98,7 +100,7 @@ object CorpusOps {
       val collected = pairs.collect()
       // the RDD's only consumers (count + collect) have run — release
       // the executor storage now; GraftSession callers have no
-      // Bench-style dropResidue to do it for them
+      // Reuse.releaseAll sweep to do it for them
       pairs.unpersist(blocking = false)
       collected.foreach { case (x, y) =>
         val rx = find(x); val ry = find(y)
@@ -293,15 +295,17 @@ object CorpusOps {
       // nest into one lazy plan — no per-round action, no re-planning
       // EAGER checkpoints: deg and edges materialize while the pair
       // relation is still cached, so it can be released before returning
-      val deg = cached.select(col("u").as("node"))
+      val deg = Reuse.materialize(cached.select(col("u").as("node"))
         .union(cached.select(col("v")))
-        .groupBy(col("node")).agg(count(lit(1)).cast("bigint").as("deg"))
-        .localCheckpoint()
-      val edges = cached.join(deg, cached("u") === deg("node"))
-        .select(col("u").as("src"), col("v").as("dst"), col("deg"))
-        .union(cached.join(deg, cached("v") === deg("node"))
-          .select(col("v"), col("u"), col("deg")))
-        .localCheckpoint() // 5 iterations reuse the edge relation
+        .groupBy(col("node")).agg(count(lit(1)).cast("bigint").as("deg")),
+        eager = true)
+      // 5 iterations reuse the edge relation
+      val edges = Reuse.materialize(
+        cached.join(deg, cached("u") === deg("node"))
+          .select(col("u").as("src"), col("v").as("dst"), col("deg"))
+          .union(cached.join(deg, cached("v") === deg("node"))
+            .select(col("v"), col("u"), col("deg"))),
+        eager = true)
       // deg/edges are materialized — the cached pair relation is dead weight
       cached.unpersist(blocking = false)
       var pr = deg.select(col("node"), lit(1000000L).as("pr"))
@@ -733,7 +737,7 @@ object CorpusOps {
       val grams = withNorm(t(s, dir).documents)
         .filter(size(col("words")) >= 5)
         .select(col("doc_id"), explode(expr("graft_gram_hashes(words, 5)")).as("g"))
-      val train = graft.util.Reuse.materialize( // feeds positions AND the exact join
+      val train = Reuse.materialize( // feeds positions AND the exact join
         grams.filter(col("doc_id") % 10 =!= 0).select(col("g")).distinct())
       // the Bloom filter as data: the distinct set positions of both
       // 16-bit hash slices — bounded by m, broadcast to the eval side
@@ -877,7 +881,7 @@ object CorpusOps {
          |  round(CAST(n_shared AS DOUBLE) / n_grams, 6) AS shared_frac
          |FROM per""".stripMargin) { (s, dir) =>
       graft.functions.VectorFunctions.register(s)
-      val grams = graft.util.Reuse.materialize(withNorm(t(s, dir).documents)
+      val grams = Reuse.materialize(withNorm(t(s, dir).documents)
         .filter(size(col("words")) >= 5)
         .select(col("doc_id"), explode(expr("graft_gram_hashes(words, 5)")).as("g")))
       val df = grams.groupBy(col("g")).agg(count(lit(1)).as("df"))
@@ -1212,7 +1216,7 @@ object CorpusOps {
         base.withColumn("n_words", size(col("words")).cast("bigint"))
           .select(col("doc_id"), col("n_words"), col("words"))
       else base.select(col("doc_id"), col("words"))
-    val grams = graft.util.Reuse.materialize(keep
+    val grams = Reuse.materialize(keep
       .select(keep.columns.filterNot(_ == "words").map(col) :+
         posexplode(expr("graft_gram_pos_hashes(words, 5)")).as(Seq("pos", "g")): _*))
     // "occurs in ≥2 DISTINCT docs" ⇔ min(doc) ≠ max(doc): one map-side-

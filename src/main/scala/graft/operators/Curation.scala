@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.util.Reuse
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.functions._
@@ -97,7 +98,7 @@ object Curation {
     * shape): a sum-over-Window.partitionBy(w) would put every (doc,word)
     * row of a stopword on ONE task — a hot spot AQE cannot split, since
     * skew handling covers joins/aggregates, not windows. tf is lazily
-    * localCheckpointed so the explode+aggregate runs once for both the
+    * materialized (Reuse) so the explode+aggregate runs once for both the
     * cf aggregation and the join probe. The token total comes from a
     * separate cheap scan (per-doc word counts, no explode) and
     * broadcasts as one row. */
@@ -105,9 +106,8 @@ object Curation {
     val words = TextPipeline.withNorm(t(s, dir).documents)
       .select(col("doc_id"), explode(col("words")).as("w"))
       .filter(col("w") =!= "")
-    val tf = words.groupBy(col("doc_id"), col("w"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
+    val tf = Reuse.materialize(words.groupBy(col("doc_id"), col("w"))
+      .agg(count(lit(1)).as("tf")))
     val cf = tf.groupBy(col("w")).agg(sum(col("tf")).as("cf"))
     // norm is trimmed, so split() only yields an empty token when the
     // whole norm is empty — which contributes 0 tokens either way, so
@@ -149,13 +149,11 @@ object Curation {
     * tfb feeds cb AND the per-doc probe side; cb feeds every marginal
     * AND the scoring join. */
   private def bigramTfCb(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val tfb = TextPipeline.bigramPairs(s, dir)
+    val tfb = Reuse.materialize(TextPipeline.bigramPairs(s, dir)
       .groupBy(col("doc_id"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
-    val cb = tfb.groupBy(col("w1"), col("w2"))
-      .agg(sum(col("tf")).cast("bigint").as("cb"))
-      .localCheckpoint(false)
+      .agg(count(lit(1)).as("tf")))
+    val cb = Reuse.materialize(tfb.groupBy(col("w1"), col("w2"))
+      .agg(sum(col("tf")).cast("bigint").as("cb")))
     (tfb, cb)
   }
 
@@ -648,14 +646,14 @@ object Curation {
          |JOIN minper m ON md5(f.norm) = m.h
          |LEFT JOIN ov o ON o.doc_id = f.doc_id""".stripMargin) { (s, dir) =>
       graft.functions.VectorFunctions.register(s)
-      val feat = TextPipeline.withNorm(t(s, dir).documents)
+      // one corpus scan feeds all three stages
+      val feat = Reuse.materialize(TextPipeline.withNorm(t(s, dir).documents)
         .filter(col("doc_id") % 10 =!= 0)
         .select(col("doc_id"), col("norm"), col("words"),
           when(col("norm") === "", lit(0))
             .otherwise(size(col("words"))).as("n_tokens"),
           when(col("norm") === "", lit(0))
-            .otherwise(size(array_distinct(col("words")))).as("n_distinct"))
-        .localCheckpoint(false) // one corpus scan feeds all three stages
+            .otherwise(size(array_distinct(col("words")))).as("n_distinct")))
       val minper = feat.groupBy(md5(col("norm")).as("h"))
         .agg(min(col("doc_id")).as("keep_id"))
       val evalg = TextPipeline.withNorm(
@@ -798,7 +796,7 @@ object Curation {
       // d feeds both the histogram/bounds branch and the final labeling
       // join — checkpoint it (the docSurprisal pattern) so the surprisal
       // pipeline executes once, not once per branch
-      val d = docSurprisal(s, dir)
+      val d = Reuse.materialize(docSurprisal(s, dir)
         .join(t(s, dir).documents.select(col("doc_id"), col("lang")), "doc_id")
         // ppl in exact integer centi-units from the micro sum: a second
         // float round() of the already-rounded surprisal can land on a
@@ -808,8 +806,7 @@ object Curation {
         // BIGINT-identical in both engines
         .select(col("doc_id"), col("lang"),
           (expr("(pmicro + 5000L * n_tokens) div (10000L * n_tokens)")
-            .cast("double") / 100).as("ppl"))
-        .localCheckpoint(false)
+            .cast("double") / 100).as("ppl")))
       val hist = d.groupBy(col("lang"), col("ppl"))
         .agg(count(lit(1)).as("c"))
       // windows over the HISTOGRAM (distinct ppl values per lang), never
@@ -918,9 +915,8 @@ object Curation {
       // bkt feeds both the distribution aggregate and the scoring pass —
       // checkpoint so the explode+tf shuffle runs once (docSurprisal's
       // pattern); the hash is recomputed nowhere downstream
-      val bkt = tf.withColumn("b", expr("graft_porthash63(w) % 64"))
-        .drop("w")
-        .localCheckpoint(false)
+      val bkt = Reuse.materialize(
+        tf.withColumn("b", expr("graft_porthash63(w) % 64")).drop("w"))
       val dist = bkt.groupBy(col("b")).agg(
         sum(col("tf")).as("cr"),
         sum(when(col("is_t"), col("tf")).otherwise(0L)).as("ct"))
@@ -1018,11 +1014,11 @@ object Curation {
          |ORDER BY est DESC, w LIMIT 50""".stripMargin
     }) { (s, dir) =>
       graft.functions.VectorFunctions.register(s)
-      val cf = TextPipeline.withNorm(t(s, dir).documents)
+      // feeds the sketch, the probe, and the total
+      val cf = Reuse.materialize(TextPipeline.withNorm(t(s, dir).documents)
         .select(col("doc_id"), explode(col("words")).as("w"))
         .filter(col("w") =!= "")
-        .groupBy(col("w")).agg(count(lit(1)).cast("bigint").as("c"))
-        .localCheckpoint(false) // feeds the sketch, the probe, and the total
+        .groupBy(col("w")).agg(count(lit(1)).cast("bigint").as("c")))
       val slots = cf.select(col("w"), col("c"),
           explode(lit(Array(0, 1, 2, 3))).as("r"))
         .withColumn("slot",

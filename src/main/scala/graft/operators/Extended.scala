@@ -593,21 +593,15 @@ object Extended {
         def appendFiltered(pred: String, ts: Long,
             tag: Option[String]): Unit = {
           val df = t(s, dir).nation.filter(pred)
-          val out = java.nio.file.Files.createTempDirectory("graft_ice_data")
-          out.toFile.deleteOnExit()
-          val n = df.count()
-          df.coalesce(1).write.mode("overwrite").parquet(out.toString)
-          import scala.jdk.CollectionConverters._
-          val files = java.nio.file.Files.list(out).iterator().asScala
-            .filter(_.toString.endsWith(".parquet")).toSeq
-            .map(p => IcebergLocal.DataFileInfo(p.toUri.toString, n,
-              java.nio.file.Files.size(p)))
-          IcebergLocal.append(tableDir, files, ts, tag,
+          IcebergLocal.append(tableDir, stageFiles(df, "snap"), ts, tag,
             schema = Some(df.schema))
         }
         appendFiltered("n_regionkey < 2", ts = 1000L, tag = Some("v1"))
         appendFiltered("n_regionkey >= 2", ts = 2000L, tag = None)
       }
+      // IcebergRest.read consults the catalog while it builds the
+      // DataFrame: the plan it returns scans warehouse files only, so it
+      // outlives server.stop() (IcebergRestSpec collects after a stop)
       val server = new IcebergLocal.CatalogServer(warehouse, "lake")
       val port = server.start()
       try {
@@ -615,9 +609,6 @@ object Extended {
         IcebergRest.read(s, catalog, "lake", "nation",
             Some(graft.sources.SnapshotLog.ByVersion("v1")))
           .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-          // materialize before the catalog server stops — the fixture is
-          // bounded (one dimension table), so eager is safe
-          .localCheckpoint(true)
       } finally server.stop()
     },
 
@@ -636,24 +627,13 @@ object Extended {
         |WHERE c_custkey % 7 <> 0 AND c_mktsegment <> 'BUILDING'"""
         .stripMargin) { (s, dir) =>
       import graft.sources.iceberg._
-      import scala.jdk.CollectionConverters._
       val (warehouse, _) = cachedFixture("mor", dir) { wh =>
       val tableDir = wh.resolve("customer")
       val cols = Seq("c_custkey", "c_name", "c_nationkey", "c_mktsegment")
       val data = t(s, dir).customer.select(cols.map(col): _*)
         .orderBy("c_custkey")
-      def onePart(df: org.apache.spark.sql.DataFrame,
-          tag: String): java.nio.file.Path = {
-        val out = java.nio.file.Files.createTempDirectory(s"graft_mor_$tag")
-        out.toFile.deleteOnExit()
-        df.coalesce(1).write.mode("overwrite").parquet(out.toString)
-        java.nio.file.Files.list(out).iterator().asScala
-          .find(_.toString.endsWith(".parquet")).get
-      }
-      val dataFile = onePart(data, "data")
-      val rows = data.count()
-      IcebergLocal.append(tableDir, Seq(IcebergLocal.DataFileInfo(
-        dataFile.toUri.toString, rows, java.nio.file.Files.size(dataFile))),
+      val dataFiles = stageFiles(data, "mor_data")
+      IcebergLocal.append(tableDir, dataFiles,
         timestampMs = 1000L, schema = Some(data.schema))
       // positional deletes: the file is custkey-sorted, so position =
       // rank - 1; remove every custkey divisible by 7.
@@ -668,20 +648,16 @@ object Extended {
         .withColumn("pos", row_number().over(
           org.apache.spark.sql.expressions.Window.orderBy("c_custkey")) - 1)
         .filter(col("c_custkey") % 7 === 0)
-        .select(lit(dataFile.toUri.toString).as("file_path"),
+        .select(lit(dataFiles.head.path).as("file_path"),
           col("pos").cast("long").as("pos"))
-      val posFile = onePart(posDel, "posdel")
-      IcebergLocal.append(tableDir, Seq(IcebergLocal.DataFileInfo(
-        posFile.toUri.toString, posDel.count(),
-        java.nio.file.Files.size(posFile), content = 1)),
+      IcebergLocal.append(tableDir,
+        stageFiles(posDel, "mor_posdel").map(_.copy(content = 1)),
         timestampMs = 2000L)
       // equality deletes: drop one market segment via field id 4
       // (c_mktsegment is the 4th field of the committed schema)
-      val eqFile = onePart(
-        s.range(1).select(lit("BUILDING").as("c_mktsegment")), "eqdel")
-      IcebergLocal.append(tableDir, Seq(IcebergLocal.DataFileInfo(
-        eqFile.toUri.toString, 1, java.nio.file.Files.size(eqFile),
-        content = 2, equalityIds = Seq(4))),
+      IcebergLocal.append(tableDir,
+        stageFiles(s.range(1).select(lit("BUILDING").as("c_mktsegment")),
+          "mor_eqdel").map(_.copy(content = 2, equalityIds = Seq(4))),
         timestampMs = 3000L)
       }
       val server = new IcebergLocal.CatalogServer(warehouse, "lake")
@@ -689,7 +665,6 @@ object Extended {
       try {
         val catalog = new IcebergRestCatalog(s"http://127.0.0.1:$port")
         IcebergRest.read(s, catalog, "lake", "customer")
-          .localCheckpoint(true)
       } finally server.stop()
     },
 
@@ -722,7 +697,6 @@ object Extended {
         IcebergMaintenance.compact(s, tableDir, clock)
       }
       IcebergRest.readLocal(s, warehouse.resolve("customer"))
-        .localCheckpoint(true)
     },
 
     // Row-level DELETE round-trip: IcebergMaintenance.deleteWhere is
@@ -737,16 +711,11 @@ object Extended {
         |WHERE c_mktsegment <> 'MACHINERY' AND c_custkey % 13 <> 0"""
         .stripMargin) { (s, dir) =>
       import graft.sources.iceberg._
-      import scala.jdk.CollectionConverters._
       val (warehouse, _) = cachedFixture("del", dir) { wh =>
         val tableDir = wh.resolve("customer")
         val data = t(s, dir).customer
           .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-        val out = java.nio.file.Files.createTempDirectory("graft_del_data")
-        out.toFile.deleteOnExit()
-        data.write.mode("overwrite").parquet(out.toString)
-        IcebergLocal.append(tableDir,
-          IcebergMaintenance.parquetFileInfos(out),
+        IcebergLocal.append(tableDir, stageFiles(data, "del_data"),
           timestampMs = 1000L, schema = Some(data.schema))
         var now = 1000L
         val clock = () => { now += 1000L; now }
@@ -756,7 +725,6 @@ object Extended {
           "c_custkey % 13 = 0", clock)
       }
       IcebergRest.readLocal(s, warehouse.resolve("customer"))
-        .localCheckpoint(true)
     },
 
     // rewrite_position_deletes round-trip: two OVERLAPPING row-level
@@ -777,11 +745,7 @@ object Extended {
         val tableDir = wh.resolve("customer")
         val data = t(s, dir).customer
           .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-        val out = java.nio.file.Files.createTempDirectory("graft_pdr_data")
-        out.toFile.deleteOnExit()
-        data.write.mode("overwrite").parquet(out.toString)
-        IcebergLocal.append(tableDir,
-          IcebergMaintenance.parquetFileInfos(out),
+        IcebergLocal.append(tableDir, stageFiles(data, "pdr_data"),
           timestampMs = 1000L, schema = Some(data.schema))
         var now = 1000L
         val clock = () => { now += 1000L; now }
@@ -792,7 +756,6 @@ object Extended {
         IcebergMaintenance.rewritePositionDeletes(s, tableDir, clock)
       }
       IcebergRest.readLocal(s, warehouse.resolve("customer"))
-        .localCheckpoint(true)
     },
 
     // WRITE-AUDIT-PUBLISH round-trip: stage half the table on an
@@ -810,22 +773,15 @@ object Extended {
         val tableDir = wh.resolve("customer")
         val data = t(s, dir).customer
           .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
-        def files(df: org.apache.spark.sql.DataFrame, tag: String) = {
-          val out = java.nio.file.Files.createTempDirectory(s"graft_wap_$tag")
-          out.toFile.deleteOnExit()
-          df.coalesce(1).write.mode("overwrite").parquet(out.toString)
-          IcebergMaintenance.parquetFileInfos(out)
-        }
         IcebergLocal.append(tableDir,
-          files(data.filter(col("c_nationkey") < 13), "m"), 1000L,
+          stageFiles(data.filter(col("c_nationkey") < 13), "m"), 1000L,
           schema = Some(data.schema))
         IcebergLocal.append(tableDir,
-          files(data.filter(col("c_nationkey") >= 13), "a"), 2000L,
+          stageFiles(data.filter(col("c_nationkey") >= 13), "a"), 2000L,
           schema = Some(data.schema), branch = Some("audit"))
         IcebergLocal.fastForward(tableDir, "audit")
       }
       IcebergRest.readLocal(s, warehouse.resolve("customer"))
-        .localCheckpoint(true)
     },
 
     // ROLLBACK round-trip: two append commits, then rollback_to_snapshot
@@ -842,22 +798,15 @@ object Extended {
         val tableDir = wh.resolve("nation")
         val data = t(s, dir).nation
           .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-        def files(df: org.apache.spark.sql.DataFrame, tag: String) = {
-          val out = java.nio.file.Files.createTempDirectory(s"graft_rb_$tag")
-          out.toFile.deleteOnExit()
-          df.coalesce(1).write.mode("overwrite").parquet(out.toString)
-          IcebergMaintenance.parquetFileInfos(out)
-        }
         IcebergLocal.append(tableDir,
-          files(data.filter(col("n_regionkey") < 2), "a"), 1000L,
+          stageFiles(data.filter(col("n_regionkey") < 2), "a"), 1000L,
           schema = Some(data.schema))
         IcebergLocal.append(tableDir,
-          files(data.filter(col("n_regionkey") >= 2), "b"), 2000L,
+          stageFiles(data.filter(col("n_regionkey") >= 2), "b"), 2000L,
           schema = Some(data.schema))
         IcebergLocal.rollbackTo(tableDir, 1L)
       }
       IcebergRest.readLocal(s, warehouse.resolve("nation"))
-        .localCheckpoint(true)
     },
 
     // HISTORY metadata table across a WAP publish + rollback — the
@@ -884,29 +833,22 @@ object Extended {
         val tableDir = wh.resolve("nation")
         val data = t(s, dir).nation
           .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-        def files(df: org.apache.spark.sql.DataFrame, tag: String) = {
-          val out = java.nio.file.Files.createTempDirectory(s"graft_hi_$tag")
-          out.toFile.deleteOnExit()
-          df.coalesce(1).write.mode("overwrite").parquet(out.toString)
-          IcebergMaintenance.parquetFileInfos(out)
-        }
         IcebergLocal.append(tableDir,
-          files(data.filter(col("n_regionkey") === 0), "a"), 1000L,
+          stageFiles(data.filter(col("n_regionkey") === 0), "a"), 1000L,
           schema = Some(data.schema))
         IcebergLocal.append(tableDir,
-          files(data.filter(col("n_regionkey") === 1), "b"), 2000L,
+          stageFiles(data.filter(col("n_regionkey") === 1), "b"), 2000L,
           schema = Some(data.schema), branch = Some("audit"))
         IcebergLocal.append(tableDir,
-          files(data.filter(col("n_regionkey") === 2), "c"), 3000L,
+          stageFiles(data.filter(col("n_regionkey") === 2), "c"), 3000L,
           schema = Some(data.schema), branch = Some("audit"))
         IcebergLocal.fastForward(tableDir, "audit", timestampMs = 4000L)
         IcebergLocal.append(tableDir,
-          files(data.filter(col("n_regionkey") === 3), "d"), 5000L,
+          stageFiles(data.filter(col("n_regionkey") === 3), "d"), 5000L,
           schema = Some(data.schema))
         IcebergLocal.rollbackTo(tableDir, 3L, timestampMs = 6000L)
       }
       IcebergRest.metaTable(s, warehouse.resolve("nation"), "history")
-        .localCheckpoint(true)
     },
 
     // CDC CHANGELOG read (create_changelog_view): append s1, append s2,
@@ -926,29 +868,9 @@ object Extended {
         |       CAST(1 AS INTEGER), CAST(3 AS BIGINT)
         |FROM nation WHERE n_regionkey <= 2 AND n_nationkey % 2 = 1"""
         .stripMargin) { (s, dir) =>
-      import graft.sources.iceberg._
-      val (warehouse, s1) = cachedFixture("changes", dir) { wh =>
-        val tableDir = wh.resolve("nation")
-        val data = t(s, dir).nation
-          .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-        def files(df: org.apache.spark.sql.DataFrame, tag: String) = {
-          val out = java.nio.file.Files.createTempDirectory(s"graft_ch_$tag")
-          out.toFile.deleteOnExit()
-          df.coalesce(1).write.mode("overwrite").parquet(out.toString)
-          IcebergMaintenance.parquetFileInfos(out)
-        }
-        val first = IcebergLocal.append(tableDir,
-          files(data.filter(col("n_regionkey") <= 1), "a"), 1000L,
-          schema = Some(data.schema))
-        IcebergLocal.append(tableDir,
-          files(data.filter(col("n_regionkey") === 2), "b"), 2000L,
-          schema = Some(data.schema))
-        IcebergMaintenance.deleteWhere(s, tableDir,
-          "n_nationkey % 2 = 1", () => 3000L)
-        first
-      }
-      IcebergRest.readChanges(s, warehouse.resolve("nation"), s1)
-        .localCheckpoint(true)
+      val (warehouse, s1) = changesFixture(s, dir)
+      graft.sources.iceberg.IcebergRest.readChanges(s,
+        warehouse.resolve("nation"), s1)
     },
 
     // NET changelog over the same window (the procedure's net_changes):
@@ -968,32 +890,11 @@ object Extended {
         |       CAST(1 AS INTEGER), CAST(3 AS BIGINT)
         |FROM nation WHERE n_regionkey <= 1 AND n_nationkey % 2 = 1"""
         .stripMargin) { (s, dir) =>
-      import graft.sources.iceberg._
-      // same cache key as q_iceberg_changes: whichever runs first
-      // builds, the other reuses (identical builder on purpose)
-      val (warehouse, s1) = cachedFixture("changes", dir) { wh =>
-        val tableDir = wh.resolve("nation")
-        val data = t(s, dir).nation
-          .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-        def files(df: org.apache.spark.sql.DataFrame, tag: String) = {
-          val out = java.nio.file.Files.createTempDirectory(s"graft_ch_$tag")
-          out.toFile.deleteOnExit()
-          df.coalesce(1).write.mode("overwrite").parquet(out.toString)
-          IcebergMaintenance.parquetFileInfos(out)
-        }
-        val first = IcebergLocal.append(tableDir,
-          files(data.filter(col("n_regionkey") <= 1), "a"), 1000L,
-          schema = Some(data.schema))
-        IcebergLocal.append(tableDir,
-          files(data.filter(col("n_regionkey") === 2), "b"), 2000L,
-          schema = Some(data.schema))
-        IcebergMaintenance.deleteWhere(s, tableDir,
-          "n_nationkey % 2 = 1", () => 3000L)
-        first
-      }
-      IcebergRest.readChanges(s, warehouse.resolve("nation"), s1,
+      // q_iceberg_changes' table: whichever row runs first builds it
+      val (warehouse, s1) = changesFixture(s, dir)
+      graft.sources.iceberg.IcebergRest.readChanges(s,
+        warehouse.resolve("nation"), s1,
         toSnapshotId = None, options = Map("net" -> "true"))
-        .localCheckpoint(true)
     },
 
     // AGE-BASED EXPIRE with ref retention, pinned through the refs
@@ -1013,15 +914,9 @@ object Extended {
         val tableDir = wh.resolve("nation")
         val data = t(s, dir).nation
           .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-        def files(df: org.apache.spark.sql.DataFrame, tag: String) = {
-          val out = java.nio.file.Files.createTempDirectory(s"graft_ea_$tag")
-          out.toFile.deleteOnExit()
-          df.coalesce(1).write.mode("overwrite").parquet(out.toString)
-          IcebergMaintenance.parquetFileInfos(out)
-        }
         (0 to 3).foreach { i =>
           IcebergLocal.append(tableDir,
-            files(data.filter(col("n_regionkey") === i), s"c$i"),
+            stageFiles(data.filter(col("n_regionkey") === i), s"c$i"),
             (i + 1) * 1000L, schema = Some(data.schema),
             tag = if (i == 1) Some("pinned") else None)
         }
@@ -1029,7 +924,6 @@ object Extended {
           minSnapshotsToKeep = 1, timestampMs = 9000L)
       }
       IcebergRest.metaTable(s, warehouse.resolve("nation"), "refs")
-        .localCheckpoint(true)
     },
 
     // CHERRY-PICK round-trip: the diverged-main half of write-audit-
@@ -1049,28 +943,21 @@ object Extended {
         val tableDir = wh.resolve("customer")
         val data = t(s, dir).customer
           .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
-        def files(df: org.apache.spark.sql.DataFrame, tag: String) = {
-          val out = java.nio.file.Files.createTempDirectory(s"graft_cp_$tag")
-          out.toFile.deleteOnExit()
-          df.coalesce(1).write.mode("overwrite").parquet(out.toString)
-          IcebergMaintenance.parquetFileInfos(out)
-        }
         IcebergLocal.append(tableDir,
-          files(data.filter(col("c_nationkey") < 8), "a"), 1000L,
+          stageFiles(data.filter(col("c_nationkey") < 8), "a"), 1000L,
           schema = Some(data.schema))
         IcebergLocal.append(tableDir,
-          files(data.filter(col("c_nationkey") >= 8 &&
+          stageFiles(data.filter(col("c_nationkey") >= 8 &&
             col("c_nationkey") < 16), "b"), 2000L,
           schema = Some(data.schema), branch = Some("audit"))
         // main diverges AFTER the branch forked: fastForward would
         // refuse this table (pinned in spec); cherry-pick is the out
         IcebergLocal.append(tableDir,
-          files(data.filter(col("c_nationkey") >= 16), "c"), 3000L,
+          stageFiles(data.filter(col("c_nationkey") >= 16), "c"), 3000L,
           schema = Some(data.schema))
         IcebergLocal.cherryPick(tableDir, "audit", timestampMs = 4000L)
       }
       IcebergRest.readLocal(s, warehouse.resolve("customer"))
-        .localCheckpoint(true)
     },
 
     // EXPIRE + VACUUM round-trip: three append commits, the third with
@@ -1091,17 +978,11 @@ object Extended {
         val tableDir = wh.resolve("nation")
         val data = t(s, dir).nation
           .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-        def files(df: org.apache.spark.sql.DataFrame, tag: String) = {
-          val out = java.nio.file.Files.createTempDirectory(s"graft_ev_$tag")
-          out.toFile.deleteOnExit()
-          df.coalesce(1).write.mode("overwrite").parquet(out.toString)
-          IcebergMaintenance.parquetFileInfos(out)
-        }
         IcebergLocal.append(tableDir,
-          files(data.filter(col("n_regionkey") < 2), "a"), 1000L,
+          stageFiles(data.filter(col("n_regionkey") < 2), "a"), 1000L,
           schema = Some(data.schema))
         IcebergLocal.append(tableDir,
-          files(data.filter(col("n_regionkey") === 2), "b"), 2000L,
+          stageFiles(data.filter(col("n_regionkey") === 2), "b"), 2000L,
           schema = Some(data.schema))
         // plant an orphan in the table's own data dir (a failed writer's
         // leftover — exactly what vacuum exists to reclaim)
@@ -1109,14 +990,13 @@ object Extended {
         data.limit(3).coalesce(1).write.mode("overwrite")
           .parquet(orphanDir.toString)
         IcebergLocal.append(tableDir,
-          files(data.filter(col("n_regionkey") > 2), "c"), 3000L,
+          stageFiles(data.filter(col("n_regionkey") > 2), "c"), 3000L,
           schema = Some(data.schema), retainLast = Some(2))
         val reclaimed = IcebergMaintenance.vacuum(tableDir)
         require(reclaimed >= 1,
           s"vacuum reclaimed $reclaimed files — the planted orphan survived")
       }
       IcebergRest.readLocal(s, warehouse.resolve("nation"))
-        .localCheckpoint(true)
     },
 
     // INCREMENTAL (changelog) read round-trip: three quarterly append
@@ -1140,11 +1020,7 @@ object Extended {
         def quarter(from: String, to: String, ts: Long): Unit = {
           val q = orders.where(
             s"o_orderdate >= timestamp '$from' AND o_orderdate < timestamp '$to'")
-          val out = java.nio.file.Files.createTempDirectory("graft_incr")
-          out.toFile.deleteOnExit()
-          q.coalesce(1).write.mode("overwrite").parquet(out.toString)
-          IcebergLocal.append(tableDir,
-            IcebergMaintenance.parquetFileInfos(out), ts,
+          IcebergLocal.append(tableDir, stageFiles(q, "incr"), ts,
             schema = Some(q.schema))
         }
         quarter("1995-01-01", "1995-04-01", 1000L)
@@ -1152,7 +1028,7 @@ object Extended {
         quarter("1995-07-01", "1995-10-01", 3000L)
       }
       IcebergRest.readIncremental(s, warehouse.resolve("orders"),
-        fromSnapshotId = 1L).localCheckpoint(true)
+        fromSnapshotId = 1L)
     },
 
     // Iceberg SCHEMA EVOLUTION round-trip: commit customer with parquet
@@ -1166,22 +1042,17 @@ object Extended {
       """SELECT c_custkey, c_name AS customer_name, c_mktsegment
         |FROM customer""".stripMargin) { (s, dir) =>
       import graft.sources.iceberg._
-      import scala.jdk.CollectionConverters._
       val (warehouse, _) = cachedFixture("evolve", dir) { wh =>
         val tableDir = wh.resolve("customer")
         val stamped = IcebergLocal.withFieldIds(
           t(s, dir).customer.select(col("c_custkey"), col("c_name"),
             col("c_mktsegment")))
-        val out = java.nio.file.Files.createTempDirectory("graft_ev_data")
-        out.toFile.deleteOnExit()
-        stamped.coalesce(1).write.mode("overwrite").parquet(out.toString)
-        IcebergLocal.append(tableDir,
-          IcebergMaintenance.parquetFileInfos(out),
+        IcebergLocal.append(tableDir, stageFiles(stamped, "ev_data"),
           timestampMs = 1000L, schema = Some(stamped.schema))
         IcebergLocal.renameColumn(tableDir, "c_name", "customer_name")
       }
       IcebergRest.readLocal(s, warehouse.resolve("customer"),
-        options = Map("fieldIdReads" -> "true")).localCheckpoint(true)
+        options = Map("fieldIdReads" -> "true"))
     },
 
     // Iceberg ADD/DROP COLUMN round-trip: both are metadata-only schema
@@ -1199,17 +1070,13 @@ object Extended {
         val stamped = IcebergLocal.withFieldIds(
           t(s, dir).customer.select(col("c_custkey"), col("c_name"),
             col("c_acctbal")))
-        val out = java.nio.file.Files.createTempDirectory("graft_ad_data")
-        out.toFile.deleteOnExit()
-        stamped.coalesce(1).write.mode("overwrite").parquet(out.toString)
-        IcebergLocal.append(tableDir,
-          IcebergMaintenance.parquetFileInfos(out),
+        IcebergLocal.append(tableDir, stageFiles(stamped, "ad_data"),
           timestampMs = 1000L, schema = Some(stamped.schema))
         IcebergLocal.addColumn(tableDir, "c_tier", "string")
         IcebergLocal.dropColumn(tableDir, "c_acctbal")
       }
       IcebergRest.readLocal(s, warehouse.resolve("customer"),
-        options = Map("fieldIdReads" -> "true")).localCheckpoint(true)
+        options = Map("fieldIdReads" -> "true"))
     },
 
     // Iceberg REST COMMIT round-trip: the full catalog WRITE protocol
@@ -1250,7 +1117,6 @@ object Extended {
       try {
         val catalog = new IcebergRestCatalog(s"http://127.0.0.1:$port")
         IcebergRest.read(s, catalog, "lake", "customer")
-          .localCheckpoint(true)
       } finally server.stop()
     },
 
@@ -1293,7 +1159,6 @@ object Extended {
           options = Map("filter" ->
             ("o_orderdate >= timestamp '1995-03-01' AND " +
               "o_orderdate < timestamp '1995-09-01'")))
-          .localCheckpoint(true)
       } finally server.stop()
     },
 
@@ -1331,7 +1196,6 @@ object Extended {
         IcebergRest.read(s, catalog, "lake", "orders",
           options = Map("filter" ->
             "o_custkey >= 30 AND o_custkey < 60"))
-          .localCheckpoint(true)
       } finally server.stop()
     },
 
@@ -1377,7 +1241,6 @@ object Extended {
           options = Map("filter" ->
             ("o_orderdate >= timestamp '1995-03-01' AND " +
               "o_orderdate < timestamp '1995-09-01'")))
-          .localCheckpoint(true)
       } finally server.stop()
     },
 
@@ -1432,7 +1295,6 @@ object Extended {
         options = Map("filter" ->
           ("o_orderdate >= timestamp '1995-03-01' AND " +
             "o_orderdate < timestamp '1995-09-01'")))
-        .localCheckpoint(true)
     },
 
     // Z-ORDER clustering round-trip: commit orders in a deliberately
@@ -1465,7 +1327,6 @@ object Extended {
       IcebergRest.readLocal(s, warehouse.resolve("orders"),
         options = Map("filter" ->
           "o_custkey <= 150 AND o_totalprice <= 50000.0"))
-        .localCheckpoint(true)
     },
 
     // Parquet BLOOM-FILTER file skipping: orders land hash-partitioned
@@ -1497,7 +1358,6 @@ object Extended {
       }
       IcebergRest.readLocal(s, warehouse.resolve("orders"),
         options = Map("filter" -> "o_orderkey IN (1, 5, 7)"))
-        .localCheckpoint(true)
     },
 
     // Iceberg METADATA TABLE round-trip: the `partitions` inspection
@@ -1531,7 +1391,6 @@ object Extended {
           Seq(PartitionField("o_month", "o_orderdate", "month")), 1000L)
       }
       IcebergRest.metaTable(s, warehouse.resolve("orders"), "partitions")
-        .localCheckpoint(true)
     },
 
     GraftQuery("q_tablesample", {
@@ -1663,6 +1522,37 @@ object Extended {
     * after build; a fixture that mutates per call must not use this. */
   private val fixtureCache = new java.util.concurrent.ConcurrentHashMap[
     (String, String), (java.nio.file.Path, Any)]()
+
+  /** The changelog rows' table: append s1 (regions 0-1), append s2
+    * (region 2), then DELETE WHERE odd key; returns (warehouse, s1). */
+  private def changesFixture(s: SparkSession,
+      dir: String): (java.nio.file.Path, Long) = {
+    import graft.sources.iceberg._
+    cachedFixture("changes", dir) { wh =>
+      val tableDir = wh.resolve("nation")
+      val data = t(s, dir).nation
+        .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
+      val first = IcebergLocal.append(tableDir,
+        stageFiles(data.filter(col("n_regionkey") <= 1), "a"), 1000L,
+        schema = Some(data.schema))
+      IcebergLocal.append(tableDir,
+        stageFiles(data.filter(col("n_regionkey") === 2), "b"), 2000L,
+        schema = Some(data.schema))
+      IcebergMaintenance.deleteWhere(s, tableDir,
+        "n_nationkey % 2 = 1", () => 3000L)
+      first
+    }
+  }
+
+  /** One fixture commit's data: `df` written as a single parquet file
+    * in a fresh temp dir (JVM-exit cleanup), described for a manifest. */
+  private def stageFiles(df: org.apache.spark.sql.DataFrame,
+      tag: String): Seq[graft.sources.iceberg.IcebergLocal.DataFileInfo] = {
+    val out = java.nio.file.Files.createTempDirectory(s"graft_ice_$tag")
+    out.toFile.deleteOnExit()
+    df.coalesce(1).write.mode("overwrite").parquet(out.toString)
+    graft.sources.iceberg.IcebergMaintenance.parquetFileInfos(out)
+  }
 
   private def cachedFixture[A](name: String, dir: String)(
       build: java.nio.file.Path => A): (java.nio.file.Path, A) = {

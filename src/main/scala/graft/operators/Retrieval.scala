@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.util.Reuse
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -100,11 +101,12 @@ object Retrieval {
       val words = TextPipeline.withNorm(t(s, dir).documents)
         .select(col("doc_id"), explode(col("words")).as("w"))
         .filter(col("w") =!= "")
-      val per = words.groupBy(col("doc_id")).agg(
+      // feeds the stats AND the scoring pass
+      val per = Reuse.materialize(words.groupBy(col("doc_id")).agg(
         count(lit(1)).cast("bigint").as("dl"),
         QueryTerms.zipWithIndex.map { case (qt, i) =>
           sum(when(col("w") === qt, 1L).otherwise(0L)).as(s"tf$i")
-        }: _*).localCheckpoint(false) // feeds the stats AND the scoring pass
+        }: _*))
       // corpus statistics: one row, broadcast — N, total length, per-term df
       val st = per.agg(
         count(lit(1)).cast("bigint").as("n"),
@@ -153,9 +155,9 @@ object Retrieval {
       // (TextPipeline.bigramPairs); everything downstream aggregates the
       // VOCABULARY-sized bigram table, never the corpus
       val bi = TextPipeline.bigramPairs(s, dir).select(col("w1"), col("w2"))
-      val cb = bi.groupBy(col("w1"), col("w2"))
-        .agg(count(lit(1)).cast("bigint").as("cb"))
-        .localCheckpoint(false) // feeds both marginals, the total, and the probe
+      // feeds both marginals, the total, and the probe
+      val cb = Reuse.materialize(bi.groupBy(col("w1"), col("w2"))
+        .agg(count(lit(1)).cast("bigint").as("cb")))
       val c1 = cb.groupBy(col("w1")).agg(sum(col("cb")).as("c1"))
       val c2 = cb.groupBy(col("w2")).agg(sum(col("cb")).as("c2"))
       val tot = cb.agg(sum(col("cb")).as("tt"))

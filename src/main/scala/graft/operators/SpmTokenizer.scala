@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.util.Reuse
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -183,14 +184,13 @@ object SpmTokenizer {
 
   /** `scored(word, j, k, sc)` → `chosen(word, piece)` for every word. */
   private def viterbiRound(scored: DataFrame, wf: DataFrame): DataFrame =
-    scored.groupBy(col("word"))
+    Reuse.materialize(scored.groupBy(col("word"))
       .agg(sort_array(collect_list(
         struct(col("k"), col("j"), col("sc")))).as("tr"))
       .join(wf.select(col("word"), col("len")), "word")
       .withColumn("bests", expr(bestsSql))
       .withColumn("path", expr(pathSql))
-      .select(col("word"), explode(expr(piecesSql)).as("piece"))
-      .localCheckpoint(false)
+      .select(col("word"), explode(expr(piecesSql)).as("piece")))
 
   /** The trained model (sc2 piece scores, npieces per-word counts),
     * both checkpointed, shared between t_spm_train and t_spm_encode so
@@ -210,30 +210,18 @@ object SpmTokenizer {
   private[graft] def modelForTest(s: SparkSession,
       dir: String): (DataFrame, DataFrame) = model(s, dir)
 
-  /** True while every checkpoint RDD backing `df` still holds its
-    * blocks. A localCheckpointed RDD has TRUNCATED lineage — if its
-    * blocks are unpersisted (a bench harness or memory-pressure sweep
-    * calling `getPersistentRDDs.values.foreach(_.unpersist)`), the next
-    * action on it THROWS instead of recomputing. The backing RDDs sit
-    * in the plan's LogicalRDD leaves; unpersist resets their storage
-    * level to NONE, which is the eviction signal. */
-  private def alive(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.collectLeaves().forall {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
-      case _ => true
-    }
-
   private def model(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     synchronized {
       val c = cached
+      // a swept model (Reuse.releaseAll between bench rows) rebuilds:
+      // local-mode checkpoints have truncated lineage and would throw
       if (c != null && (c._1 eq s) && c._2 == dir &&
-          alive(c._3._1) && alive(c._3._2)) c._3
+          Reuse.isLive(c._3._1) && Reuse.isLive(c._3._2)) c._3
       else {
         val m = buildModel(s, dir)
         // materialize the lazy checkpoints NOW: once they hold blocks
         // the model no longer depends on the intermediate checkpoints,
-        // and `alive` sees the real (post-build) storage levels
+        // and `Reuse.isLive` sees the real (post-build) storage levels
         m._1.count(); m._2.count()
         cached = (s, dir, m)
         m
@@ -242,13 +230,13 @@ object SpmTokenizer {
 
   private def buildModel(s: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val wf = TextPipeline.withNorm(t(s, dir).documents)
+    // the ONE corpus pass
+    val wf = Reuse.materialize(TextPipeline.withNorm(t(s, dir).documents)
       .select(explode(col("words")).as("word"))
       .filter(col("word") =!= "" && length(col("word")) <= WordCap)
       .groupBy(col("word")).agg(count(lit(1)).cast("bigint").as("freq"))
-      .withColumn("len", length(col("word")).cast("int"))
-      .localCheckpoint(false) // the ONE corpus pass
-    val sub = wf
+      .withColumn("len", length(col("word")).cast("int")))
+    val sub = Reuse.materialize(wf
       .select(col("word"), col("freq"), col("len"),
         explode(expr(s"sequence(0, ${WordCap - 1})")).as("j"))
       .select(col("word"), col("freq"), col("len"), col("j"),
@@ -256,8 +244,7 @@ object SpmTokenizer {
       .filter(col("j") + col("l") <= col("len"))
       .select(col("word"), col("freq"), col("j"),
         (col("j") + col("l")).as("k"),
-        expr("substring(word, j + 1, l)").as("piece"))
-      .localCheckpoint(false)
+        expr("substring(word, j + 1, l)").as("piece")))
     val seed = sub.groupBy(col("piece"))
       .agg(sum(col("freq")).cast("bigint").as("cnt"))
     val tot1 = seed.agg(sum(col("cnt")).cast("bigint").as("tot"))
@@ -274,10 +261,9 @@ object SpmTokenizer {
         coalesce(col("rc"), lit(0L)).as("rc"),
         (coalesce(col("rc"), lit(0L)) + 1).as("cnt2"))
     val tot2 = base2.agg(sum(col("cnt2")).cast("bigint").as("tot"))
-    val sc2 = base2.crossJoin(broadcast(tot2))
+    val sc2 = Reuse.materialize(base2.crossJoin(broadcast(tot2))
       .select(col("piece"), col("cnt"), col("rc"),
-        expr(scoreSql("cnt2", "tot")).as("sc"))
-      .localCheckpoint(false)
+        expr(scoreSql("cnt2", "tot")).as("sc")))
     // the prune step (SentencePiece drops the least-useful pieces
     // between EM rounds): a multi-char piece never chosen in round 1
     // leaves the final model; single-char pieces always stay so every
@@ -286,9 +272,8 @@ object SpmTokenizer {
       .filter(col("rc") > 0 || length(col("piece")) === 1)
       .select(col("word"), col("j"), col("k"), col("sc"))
     val chosen2 = viterbiRound(s2, wf)
-    val npieces = chosen2.groupBy(col("word"))
-      .agg(count(lit(1)).cast("bigint").as("np"))
-      .localCheckpoint(false)
+    val npieces = Reuse.materialize(chosen2.groupBy(col("word"))
+      .agg(count(lit(1)).cast("bigint").as("np")))
     (sc2, npieces)
   }
 

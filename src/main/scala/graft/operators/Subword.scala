@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.Reuse
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -78,13 +79,12 @@ private[operators] object Subword {
     * each training step re-reads the vocabulary-sized relation, not the
     * corpus. */
   def wordFreqSeg(s: SparkSession, dir: String): DataFrame =
-    TextPipeline.withNorm(graft.Tables(s, dir).documents)
+    Reuse.materialize(TextPipeline.withNorm(graft.Tables(s, dir).documents)
       .select(explode(col("words")).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).cast("bigint").as("freq"))
       .withColumn("seg",
-        expr("concat(concat_ws(' ', split(word, '')), ' _')"))
-      .localCheckpoint(false)
+        expr("concat(concat_ws(' ', split(word, '')), ' _')")))
 
   /** Spark: per-step adjacent-pair counts `(w1, w2, c)` over the
     * current segmentation — a map-side-combinable aggregate over the
@@ -110,7 +110,7 @@ private[operators] object Subword {
     val merged = wf.withColumn("w1", lit(w1)).withColumn("w2", lit(w2))
       .withColumn("seg2", expr(mergeFoldSpark))
       .select(col("word"), col("freq"), col("seg2").as("seg"))
-    if (checkpoint) merged.localCheckpoint(false) else merged
+    if (checkpoint) Reuse.materialize(merged) else merged
   }
 
   /** One driver round-trip selecting up to `k` frequency-argmax merges

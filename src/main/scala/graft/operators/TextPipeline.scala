@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.util.Reuse
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -156,9 +157,8 @@ object TextPipeline {
          |FROM fresh GROUP BY h""".stripMargin) { (s, dir) =>
       // both sides of the anti-join derive from hashed — checkpoint it so
       // the normalize+md5 scan runs once, not once per side
-      val hashed = withNorm(t(s, dir).documents)
-        .select(col("doc_id"), md5(col("norm")).as("h"))
-        .localCheckpoint(false)
+      val hashed = Reuse.materialize(withNorm(t(s, dir).documents)
+        .select(col("doc_id"), md5(col("norm")).as("h")))
       val corpus = hashed.filter(col("doc_id") < 250).select(col("h"))
       val increment = hashed.filter(col("doc_id") >= 250)
       increment.join(corpus, Seq("h"), "left_anti")
@@ -341,12 +341,12 @@ object TextPipeline {
       // AQE cannot split (skew handling covers joins/aggregates, not
       // windows). The groupBy is map-side combined (reducers see one row
       // per map task, not per doc) and the join back is a SHUFFLED join,
-      // which AQE's skew-join CAN split. tf is lazily localCheckpointed so
+      // which AQE's skew-join CAN split. tf is materialized (Reuse) so
       // the explode+aggregate pipeline executes once, feeding both the df
       // aggregation and the join probe from materialized blocks.
-      val tf = docs.select(col("doc_id"), explode(col("words")).as("w"))
-        .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
-        .localCheckpoint(false)
+      val tf = Reuse.materialize(
+        docs.select(col("doc_id"), explode(col("words")).as("w"))
+          .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf")))
       val df = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
       val wDoc = org.apache.spark.sql.expressions.Window
         .partitionBy(col("doc_id")).orderBy(col("tfidf").desc, col("term"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.util.Reuse
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -80,16 +81,12 @@ object Tokenizer {
     // return would be pure storage residue taxing the session until
     // the ContextCleaner happens to collect it (StorageResidueSpec)
     var live: Option[org.apache.spark.sql.DataFrame] = None
-    def unpersistCkpt(df: org.apache.spark.sql.DataFrame): Unit =
-      df.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.foreach(_.unpersist(blocking = false))
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, Long)]
     var rounds = 0
     def finish(): (Seq[(Int, String, String, Long)], Int) = {
-      live.foreach(unpersistCkpt)
-      unpersistCkpt(wf)
+      live.foreach(Reuse.release)
+      Reuse.release(wf)
       (merges.toSeq, rounds)
     }
     while (merges.size < BpeSteps) {
@@ -97,7 +94,7 @@ object Tokenizer {
       val batch = Subword.batchedArgmax(wf, want)
       // wf's pending checkpoint is now materialized: the previous
       // round's (whose data fed this plan) is dead weight
-      live.foreach(unpersistCkpt)
+      live.foreach(Reuse.release)
       live = Some(wf)
       rounds += 1
       if (batch.isEmpty) return finish()

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.util.Reuse
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -87,13 +88,12 @@ object Training {
       val markers = EnMarkers.map("'" + _ + "'").mkString(",")
       // one corpus pass → narrow (y, x0, x1, x2) relation, checkpointed
       // so each training step re-reads 3 ints per doc, not the corpus
-      val feats = TextPipeline.withNorm(t(s, dir).documents)
+      val feats = Reuse.materialize(TextPipeline.withNorm(t(s, dir).documents)
         .select(
           when(col("lang") === "en", 1).otherwise(-1).cast("bigint").as("y"),
           lit(1L).as("x0"),
           expr(s"graft_count_in(words, array($markers))").cast("bigint").as("x1"),
-          size(col("words")).cast("bigint").as("x2"))
-        .localCheckpoint(false)
+          size(col("words")).cast("bigint").as("x2")))
       var (w0, w1, w2) = (0L, 0L, 0L)
       val steps = scala.collection.mutable.ArrayBuffer
         .empty[(Int, Long, Long, Long, Long)]

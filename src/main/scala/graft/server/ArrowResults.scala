@@ -7,7 +7,7 @@ import org.apache.arrow.vector._
 import org.apache.arrow.vector.ipc.ArrowStreamWriter
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ArrowSchema}
 import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
@@ -26,10 +26,6 @@ import scala.jdk.CollectionConverters._
   * through distributed parquet writes, not a serving endpoint.
   */
 object ArrowResults {
-
-  /** Encode `df`'s first `maxRows` rows as one Arrow IPC stream. */
-  def toArrowStream(df: DataFrame, maxRows: Int): Array[Byte] =
-    toArrowStream(df.schema, df.limit(maxRows).collect())
 
   /** Spark schema -> Arrow schema. Result streams force every field
     * nullable (any outer join can introduce nulls the writer must be able

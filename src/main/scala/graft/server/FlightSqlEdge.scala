@@ -40,6 +40,18 @@ final class FlightSqlEdge(
   def start(): Int = server.start()
   def stop(): Unit = server.stop()
 
+  /** A DoGet result as Arrow IPC, at most `maxRows` rows. A longer one
+    * fails the call (RESOURCE_EXHAUSTED) instead of arriving as a silent
+    * prefix that a client such as FlightDataSource would take for the
+    * whole result; REST and pg-wire declare their truncation too. */
+  private def bounded(df: org.apache.spark.sql.DataFrame): Array[Byte] = {
+    val rows = df.limit(maxRows + 1).collect()
+    if (rows.length > maxRows) throw new GrpcStatusException(8,
+      s"result truncated: more than maxRows = $maxRows rows; " +
+        "add a LIMIT or narrow the query")
+    ArrowResults.toArrowStream(df.schema, rows)
+  }
+
   private def authed(headers: Map[String, String]): AuthenticatedUser = {
     val token = headers.get("authorization")
       .filter(_.toLowerCase.startsWith("bearer "))
@@ -211,16 +223,16 @@ final class FlightSqlEdge(
                 .findFieldByName("prepared_statement_handle"))
               .asInstanceOf[ByteString].toByteArray)
           val result = engine.executeQuery(sql, user, params)
-          flightDataFrames(ArrowResults.toArrowStream(result.df, maxRows))
+          flightDataFrames(bounded(result.df))
         case Some(("CommandStatementQuery", body)) =>
           val sql = strField(CommandStatementQueryD,
             DynamicMessage.parseFrom(CommandStatementQueryD, body), "query")
           val result = engine.executeQuery(sql, user, Map.empty)
-          flightDataFrames(ArrowResults.toArrowStream(result.df, maxRows))
+          flightDataFrames(bounded(result.df))
         case _ =>
           val query = new String(ticketBytes, "UTF-8")
           val result = engine.executeQuery(query, user, Map.empty)
-          flightDataFrames(ArrowResults.toArrowStream(result.df, maxRows))
+          flightDataFrames(bounded(result.df))
       }
     case "/arrow.flight.protocol.FlightService/DoPut" =>
       authed(headers)

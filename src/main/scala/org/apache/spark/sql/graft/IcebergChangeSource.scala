@@ -13,6 +13,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.sources.iceberg.{IcebergLocal, IcebergRest, IcebergRestCatalog,
   IcebergTableMeta}
+import graft.util.Reuse
 
 /** Streaming CHANGELOG source for an Iceberg table — `readStream
   * .format("graft-iceberg-stream")` with either `option("path",
@@ -86,6 +87,9 @@ final class IcebergChangeSource(spark: SparkSession,
     * fresh and the floor/cap count from `startingSnapshotId` (or the
     * beginning of the lineage). */
   @volatile private var lastPlannedEnd: Option[Long] = None
+
+  /** Materialized CDC windows by end offset, until their batch commits. */
+  private val windows = scala.collection.mutable.Map.empty[Long, DataFrame]
 
   /** The tailed ref's head: `main` falls back to current-snapshot-id;
     * a named branch that doesn't exist yet has no head (stream idles).
@@ -195,7 +199,12 @@ final class IcebergChangeSource(spark: SparkSession,
       // those into stateful stream-stream joins. Instead the bounded
       // window is materialized once and handed to the runner as ONE
       // streaming leaf — the KafkaSource internalCreateDataFrame shape.
-      val mat = target.changes(spark, from, idOf(end)).localCheckpoint(true)
+      // Held until the batch commits: released on commit(end).
+      val mat = Reuse.materialize(target.changes(spark, from, idOf(end)),
+        eager = true)
+      windows.synchronized {
+        windows.put(idOf(end), mat).foreach(Reuse.release)
+      }
       spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(
         mat.queryExecution.toRdd, mat.schema, isStreaming = true)
     } else {
@@ -211,7 +220,18 @@ final class IcebergChangeSource(spark: SparkSession,
     }
   }
 
-  override def stop(): Unit = ()
+  /** Spark has processed every batch up to `end`: the CDC windows
+    * materialized for them are dead weight (on a cluster they would
+    * otherwise stay persisted for the stream's lifetime). */
+  override def commit(end: Offset): Unit = windows.synchronized {
+    val done = windows.keys.filter(_ <= idOf(end)).toSeq
+    done.foreach(k => windows.remove(k).foreach(Reuse.release))
+  }
+
+  override def stop(): Unit = windows.synchronized {
+    windows.values.foreach(Reuse.release)
+    windows.clear()
+  }
 
   override def toString: String = s"IcebergChangeSource[$target]"
 }

@@ -28,7 +28,7 @@ class ArrowResultsSpec extends AnyFunSuite {
       (1L, Some(2), Some(1.5), Some("a"), Some(true)),
       (2L, None, None, None, None)
     ).toDF("id", "i", "d", "s", "b")
-    readBack(ArrowResults.toArrowStream(df, 100)) { root =>
+    readBack(ArrowResults.toArrowStream(df.schema, df.collect())) { root =>
       assert(root.getRowCount == 2)
       assert(root.getVector("id").asInstanceOf[BigIntVector].get(0) == 1L)
       assert(root.getVector("i").asInstanceOf[IntVector].get(0) == 2)
@@ -46,7 +46,7 @@ class ArrowResultsSpec extends AnyFunSuite {
         |       TIMESTAMP'2024-03-01 12:30:45.123456' AS ts,
         |       CAST(12.34 AS DECIMAL(10,2)) AS dec,
         |       CAST('xy' AS BINARY) AS bin""".stripMargin)
-    readBack(ArrowResults.toArrowStream(df, 10)) { root =>
+    readBack(ArrowResults.toArrowStream(df.schema, df.collect())) { root =>
       val days = root.getVector("dt").asInstanceOf[DateDayVector].get(0)
       assert(days == java.time.LocalDate.of(2024, 3, 1).toEpochDay)
       val micros = root.getVector("ts").asInstanceOf[TimeStampMicroTZVector].get(0)
@@ -59,12 +59,13 @@ class ArrowResultsSpec extends AnyFunSuite {
 
   test("maxRows bounds the stream") {
     val df = spark.range(1000).toDF("n")
-    readBack(ArrowResults.toArrowStream(df, 25))(root => assert(root.getRowCount == 25))
+    readBack(ArrowResults.toArrowStream(df.schema, df.limit(25).collect()))(
+      root => assert(root.getRowCount == 25))
   }
 
   test("nested types degrade to strings rather than failing") {
     val df = spark.sql("SELECT array(1, 2) AS arr")
-    readBack(ArrowResults.toArrowStream(df, 10)) { root =>
+    readBack(ArrowResults.toArrowStream(df.schema, df.collect())) { root =>
       val s = new String(root.getVector("arr").asInstanceOf[VarCharVector].get(0))
       assert(s.contains("1") && s.contains("2"))
     }

@@ -101,6 +101,24 @@ class FlightEdgeSpec extends AnyFunSuite with BeforeAndAfterAll {
       chain(e).mkString(" | "))
   }
 
+  test("a result past maxRows fails the DoGet, never arrives truncated") {
+    val capped = new FlightSqlEdge(engine, new ApiKeyAuthenticator(Map(
+      "admin-key" -> AuthenticatedUser("admin", permissions = Set("admin")))).apply,
+      maxRows = 5)
+    val cappedUrl = s"http://127.0.0.1:${capped.start()}"
+    def readCapped(q: String) =
+      spark.read.format("graft.sources.flight.FlightDataSource")
+        .option("url", cappedUrl).option("query", q)
+        .option("authToken", "admin-key").load()
+    try {
+      val e = intercept[Exception](readCapped("SELECT * FROM nation").collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).flatMap(x => Option(x.getMessage)).toSeq
+      assert(msgs.exists(_.contains("truncated")), msgs.mkString(" | "))
+      assert(readCapped("SELECT n_name FROM nation LIMIT 3").collect().length == 3)
+    } finally capped.stop()
+  }
+
   // ------------------------------------------------- catalog discovery
 
   import org.sparkproject.spark_core.protobuf.{Any => PAny, ByteString, DynamicMessage}

@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.SnapshotLog.{ByTimestamp, ByVersion}
 import graft.sources.iceberg._
+import org.apache.spark.sql.functions.col
 
 /** End-to-end Iceberg REST coverage: a warehouse written by
   * [[IcebergLocal.append]] (spec-shaped metadata JSON + Avro manifests
@@ -63,6 +64,27 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = IcebergRest.read(spark, catalog, "analytics", "nation")
     assert(df.count() == 25)
     assert(df.columns.toSet.contains("n_nationkey"))
+  }
+
+  test("a REST read outlives its catalog server: the plan scans files only") {
+    val own = new IcebergLocal.CatalogServer(warehouse, "analytics")
+    val cat = new IcebergRestCatalog(s"http://127.0.0.1:${own.start()}")
+    val cols = Seq("n_nationkey", "n_name", "n_regionkey")
+    val df = try IcebergRest.read(spark, cat, "analytics", "nation",
+        options = Map("filter" -> "n_regionkey < 3")).select(cols.map(col): _*)
+      finally own.stop()
+    intercept[Exception](cat.loadTable("analytics", "nation"))
+    val want = spark.read.parquet(s"$sf/nation.parquet")
+      .filter("n_regionkey < 3").select(cols.map(col): _*)
+    assert(df.collect().map(_.toString).sorted.toSeq ==
+      want.collect().map(_.toString).sorted.toSeq)
+    // the registry rows that stop their in-query catalog server before
+    // returning the (lazy) DataFrame
+    Seq("q_iceberg_snapshot", "q_iceberg_mor", "q_iceberg_rest_commit",
+      "q_iceberg_partitioned", "q_iceberg_sorted", "q_iceberg_spec_evolution")
+      .foreach { n =>
+        assert(SparkEntry.queries(n)(spark, sf).collect().nonEmpty, n)
+      }
   }
 
   test("snapshot-id and tag time travel resolve the first append") {

@@ -1,11 +1,13 @@
 package graft
 
+import graft.util.Reuse
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
-/** graft.util.Reuse — the shared materializer for relations consumed
-  * more than once: local mode cuts lineage with a lazy localCheckpoint;
-  * cluster mode keeps lineage and persists MEMORY_AND_DISK so an
-  * executor loss recomputes instead of killing the query. */
+/** graft.util.Reuse — the one materialization policy: local mode cuts
+  * lineage with a localCheckpoint; cluster mode keeps lineage and
+  * persists MEMORY_AND_DISK so an executor loss recomputes instead of
+  * killing the query. Release and liveness follow the same mode. */
 class ReuseSpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -16,33 +18,73 @@ class ReuseSpec extends AnyFunSuite {
   }
 
   test("local mode: lazy localCheckpoint (LogicalRDD leaf, same rows)") {
-    val m = graft.util.Reuse.materialize(base, local = true)
+    val m = Reuse.materialize(base, eager = false, local = true)
     try {
       // lineage is cut: the analyzed plan bottoms out in an RDD scan
       assert(m.queryExecution.analyzed.collectLeaves().forall(
-        _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]),
+        _.isInstanceOf[LogicalRDD]),
         m.queryExecution.analyzed.toString)
       assert(m.collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 3L))
     } finally m.unpersist(blocking = true)
   }
 
   test("cluster mode: persist keeps lineage (recomputable) + same rows") {
-    val m = graft.util.Reuse.materialize(base, local = false)
+    val m = Reuse.materialize(base, eager = false, local = false)
     try {
       assert(m.storageLevel.useDisk, "expected MEMORY_AND_DISK persist")
       assert(m.collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 3L))
       // lineage survives: the plan still reaches the original leaves,
       // so a lost cached block recomputes from the source
       assert(m.queryExecution.analyzed.collectLeaves().forall(
-        !_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]),
+        !_.isInstanceOf[LogicalRDD]),
         m.queryExecution.analyzed.toString)
     } finally m.unpersist(blocking = true)
   }
 
   test("default mode on a local session is the checkpoint path") {
-    val m = graft.util.Reuse.materialize(base)
+    val m = Reuse.materialize(base)
     try assert(m.queryExecution.analyzed.collectLeaves().forall(
-      _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]))
+      _.isInstanceOf[LogicalRDD]))
     finally m.unpersist(blocking = true)
+  }
+
+  /** Per RDD behind a local-mode cut: are all its partitions stored? */
+  private def cutFilled(m: org.apache.spark.sql.DataFrame) =
+    m.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
+      .map(r => spark.sparkContext.getRDDStorageInfo.find(_.id == r.id)
+        .exists(_.numCachedPartitions == r.getNumPartitions))
+
+  test("eager mode computes now: local checkpoint and cluster persist") {
+    val local = Reuse.materialize(base, eager = true, local = true)
+    val cluster = Reuse.materialize(base, eager = true, local = false)
+    try {
+      assert(cutFilled(local) == Seq(true), "eager cut holds its blocks")
+      // the persisted relation's buffers were filled by the eager count
+      val cached = spark.sharedState.cacheManager.lookupCachedData(
+        cluster.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      assert(cached.exists(_.cachedRepresentation.cacheBuilder
+        .isCachedColumnBuffersLoaded), "eager persist is filled")
+      assert(cluster.collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 3L))
+    } finally {
+      Reuse.release(local, local = true)
+      Reuse.release(cluster, local = false)
+    }
+  }
+
+  test("release and isLive follow the mode") {
+    Seq(true, false).foreach { local =>
+      val m = Reuse.materialize(base, eager = true, local = local)
+      assert(Reuse.isLive(m, local), s"local=$local: live after materialize")
+      Reuse.release(m, local)
+      assert(!Reuse.isLive(m, local), s"local=$local: dead after release")
+    }
+  }
+
+  test("releaseAll drops cut blocks and cached relations") {
+    val local = Reuse.materialize(base, eager = true, local = true)
+    val cluster = Reuse.materialize(base, eager = true, local = false)
+    Reuse.releaseAll(spark)
+    assert(!Reuse.isLive(local, local = true))
+    assert(!Reuse.isLive(cluster, local = false))
   }
 }

@@ -772,6 +772,10 @@ class StreamingSpec extends AnyFunSuite {
     }
     IcebergLocal.append(dir, partFiles(nation.filter("n_regionkey <= 1")),
       1000L, schema = Some(nation.schema))
+    // each trigger materializes its CDC window; a committed batch's
+    // window is released, so at most the latest one stays held
+    val preexisting = spark.sparkContext.getPersistentRDDs.keySet
+    def heldWindows = spark.sparkContext.getPersistentRDDs.keySet -- preexisting
     val q = spark.readStream.format("graft-iceberg-stream")
       .option("path", dir.toString).option("mode", "changelog").load()
       .writeStream.outputMode("append")
@@ -799,7 +803,9 @@ class StreamingSpec extends AnyFunSuite {
       assert(counts() == Map(
         "insert" -> nation.filter("n_regionkey <= 2").count(),
         "delete" -> odd), counts())
+      assert(heldWindows.size <= 1, s"windows held after 3 batches: $heldWindows")
     } finally q.stop()
+    assert(heldWindows.isEmpty, s"windows held after stop: $heldWindows")
     // unknown mode refuses at load
     val e = intercept[Exception](spark.readStream
       .format("graft-iceberg-stream").option("path", dir.toString)
