@@ -1,16 +1,21 @@
 package graft
 
-import graft.session.{GraftSession, ShuffleWidth}
+import com.sun.management.GarbageCollectionNotificationInfo
+import graft.session.GraftSession
 import graft.util.Reuse
+import java.lang.management.ManagementFactory
 import java.util.concurrent.ConcurrentLinkedQueue
+import javax.management.{NotificationEmitter, NotificationListener}
+import javax.management.openmbean.CompositeData
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
+import scala.collection.immutable.TreeMap
 import scala.jdk.CollectionConverters._
 
 /** Benchmark main — runs every registered query on `SPARK_GRAFT_SF_DIR`,
-  * writes per-row medians, iteration trails and telemetry to
+  * writes a run stamp, per-row medians, iteration trails and telemetry to
   * `bench_results.json` (`SPARK_GRAFT_BENCH_OUT`), and prints ONE short
   * JSON summary line ([[BenchOutput.summary]]).
   *
@@ -53,6 +58,23 @@ object Bench {
         .sortBy(_.id)))
   }
 
+  /** The run's [[RunStamp]]; `shufflePartitions` is the width the session
+    * ended on. */
+  private def runStamp(shufflePartitions: String): RunStamp = {
+    val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+    def flag(p: String) = jvmArgs.findLast(_.startsWith(p)).map(_.stripPrefix(p))
+    val sha = try {
+      val p = new ProcessBuilder("git", "rev-parse", "HEAD")
+        .redirectError(ProcessBuilder.Redirect.DISCARD).start()
+      val out = new String(p.getInputStream.readAllBytes()).trim
+      if (p.waitFor() == 0 && out.nonEmpty) out else "unknown"
+    } catch { case _: Exception => "unknown" }
+    RunStamp(Runtime.getRuntime.availableProcessors, flag("-Xmx"), flag("-Xms"),
+      ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getName).toSeq,
+      sha, TreeMap.from(sys.env.filter(_._1.startsWith("SPARK_GRAFT_"))),
+      shufflePartitions)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -60,11 +82,6 @@ object Bench {
     val spark = GraftSession.builder(s"local[$cpus]")
       .appName("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // shuffle width follows DATA VOLUME, not core count (the 50× scale
-    // probe in BASELINE.md: a 32-wide shuffle put q10's reduce tasks at
-    // the spill edge, trail 19–95 s; 128-wide ran flat). At sf0.1 on
-    // local[32] it lands exactly on the recorded 32-wide contract.
-    ShuffleWidth.configure(spark, sfDir)
 
     val stageEvents = new ConcurrentLinkedQueue[(Long, StageStat)]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -144,13 +161,28 @@ object Bench {
     // wall-clock start, run order, GC time/count delta, post-row heap,
     // host load and hypervisor steal, so a slow row is attributable to
     // the query or to the host from the committed artifact alone.
-    val gcBeans = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala
+    val gcBeans = ManagementFactory.getGarbageCollectorMXBeans.asScala
+    // The worst single pause per row, from the collectors' notifications:
+    // a gc_ms sum cannot tell one 30 s stall from many short ones.
+    // Concurrent cycles (G1's, ZGC's, Shenandoah's) are not pauses.
+    val currentRow = new java.util.concurrent.atomic.AtomicReference("")
+    val pauseMax = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    val gcListener: NotificationListener = (n, _) =>
+      if (n.getType == GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
+        val info = GarbageCollectionNotificationInfo.from(
+          n.getUserData.asInstanceOf[CompositeData])
+        val row = currentRow.get
+        if (row.nonEmpty && !Seq("Concurrent", "Cycles").exists(info.getGcName.contains))
+          pauseMax.merge(row, info.getGcInfo.getDuration, (a, b) => math.max(a, b))
+      }
+    gcBeans.foreach {
+      case e: NotificationEmitter => e.addNotificationListener(gcListener, null, null)
+      case _ => ()
+    }
     def gcNow(): (Long, Long) =
       (gcBeans.map(b => math.max(0L, b.getCollectionCount)).sum,
         gcBeans.map(b => math.max(0L, b.getCollectionTime)).sum)
-    def heapMb(): Long = java.lang.management.ManagementFactory
-      .getMemoryMXBean.getHeapMemoryUsage.getUsed >> 20
+    def heapMb(): Long = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed >> 20
     // One /proc/loadavg sample per row start: a row recorded with load1
     // far above this JVM's own core usage ran on a busy host.
     def load1(): Double =
@@ -161,8 +193,7 @@ object Bench {
         s.split("\\s+")(0).toDouble
       } catch { case _: Throwable =>
         // non-Linux fallback; -1.0 if the bean has no figure either
-        java.lang.management.ManagementFactory
-          .getOperatingSystemMXBean.getSystemLoadAverage
+        ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
       }
     // Hypervisor steal is the contention loadavg CANNOT see: on a
     // shared VM a co-tenant inflates every row ~uniformly while load1
@@ -185,6 +216,7 @@ object Bench {
       val loadAtStart = load1()
       val ticks0 = cpuTicks()
       val (gcN0, gcMs0) = gcNow()
+      currentRow.set(q.name)
       lastIter = None
       var chaosErrors = 0
       var failure: Option[String] = None
@@ -225,10 +257,17 @@ object Bench {
           BenchOutput.round(100.0 * (s1 - s0) / (t1 - t0), 1)
         case _ => -1.0
       }
+      currentRow.set("")
       val telemetry = RowTelemetry(order, startMs,
         BenchOutput.round(loadAtStart, 2), stealPct, gcMs1 - gcMs0,
-        gcN1 - gcN0, heapMb())
+        gcN1 - gcN0, heapMb(),
+        Option(pauseMax.get(q.name)).fold(0L)(_.longValue))
       (RowResult(q.name, raw, telemetry, failure, chaosErrors), lastIter)
+    }
+    val stamp = runStamp(spark.conf.get("spark.sql.shuffle.partitions"))
+    gcBeans.foreach {
+      case e: NotificationEmitter => e.removeNotificationListener(gcListener)
+      case _ => ()
     }
     // Stopping drains the listener bus: every stage and phase event of
     // the run has been delivered once it returns.
@@ -244,7 +283,7 @@ object Bench {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "bench_results.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
-      BenchOutput.results(sfDir, rows, chaos))
+      BenchOutput.results(sfDir, stamp, rows, chaos))
     catch { case e: Throwable =>
       System.err.println(s"bench: could not write $outPath: $e") }
     println(BenchOutput.summary(sfDir, rows))

@@ -12,16 +12,24 @@ final case class StageStat(id: Int, name: String, tasks: Int,
     durationMs: Long, executorRunMs: Long, gcMs: Long, fetchWaitMs: Long,
     shuffleWriteBytes: Long, spillBytes: Long)
 
-/** Per-row telemetry in `bench_results.json`. The first seven fields cover
-  * the whole row (all iterations plus residue drop). The layer fields
+/** Per-row telemetry in `bench_results.json`. The first eight fields cover
+  * the whole row (all iterations plus residue drop); `gcPauseMaxMs` is the
+  * longest single collector pause inside the row. The layer fields
   * describe the row's last completed iteration: DataFrame build time, the
   * Catalyst phases of its noop write, and the stages it ran. They are
   * absent when no iteration completed. */
 final case class RowTelemetry(order: Int, startMs: Long, load1: Double,
     stealPct: Double, gcMs: Long, gcN: Long, heapMb: Long,
-    buildMs: Option[Double] = None, analysisMs: Option[Long] = None,
-    optimizationMs: Option[Long] = None, planningMs: Option[Long] = None,
-    stages: Option[Seq[StageStat]] = None)
+    gcPauseMaxMs: Long = 0L, buildMs: Option[Double] = None,
+    analysisMs: Option[Long] = None, optimizationMs: Option[Long] = None,
+    planningMs: Option[Long] = None, stages: Option[Seq[StageStat]] = None)
+
+/** What a bench run ran on: host cores, the heap flags, the collectors,
+  * the commit, every `SPARK_GRAFT_*` override in force and the shuffle
+  * width the session chose. */
+final case class RunStamp(cores: Int, xmx: Option[String], xms: Option[String],
+    gc: Seq[String], gitSha: String, overrides: Map[String, String],
+    shufflePartitions: String)
 
 /** One bench row: iteration times in arrival order (`Seq(-1.0)` when the
   * row threw), the exception text if it did, and the chaos-skipped
@@ -74,17 +82,20 @@ object BenchOutput {
       "families" -> ListMap.from(Families.map(f =>
         s"${f}_" -> secs(rows.filter(_.name.startsWith(f))))),
       "gc_ms" -> rows.map(_.telemetry.gcMs).sum,
+      "gc_pause_max_ms" -> rows.map(_.telemetry.gcPauseMaxMs).maxOption.getOrElse(0L),
       "sf" -> sf))
   }
 
-  /** `bench_results.json`: every row's median, the iteration trail of
-    * every re-measured row and every row's telemetry; `chaos`/`errors`
-    * and `failures` only when there are any. */
-  def results(sf: String, rows: Seq[RowResult], chaos: Double): String = {
+  /** `bench_results.json`: the run stamp, every row's median, the
+    * iteration trail of every re-measured row and every row's telemetry;
+    * `chaos`/`errors` and `failures` only when there are any. */
+  def results(sf: String, stamp: RunStamp, rows: Seq[RowResult],
+      chaos: Double): String = {
     val errors = rows.collect { case r if r.chaosErrors > 0 => r.name -> r.chaosErrors }
     val failures = rows.flatMap(r => r.failure.map(r.name -> _))
     mapper.writerWithDefaultPrettyPrinter().writeValueAsString(ListMap(
       "sf" -> sf,
+      "stamp" -> stamp,
       "headline_sec" -> secs(rows.filter(r => Headline.contains(r.name))),
       "total_sec" -> secs(rows),
       "medians" -> ListMap.from(rows.map(r => r.name -> round(r.median, 3))),

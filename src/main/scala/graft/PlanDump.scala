@@ -1,6 +1,6 @@
 package graft
 
-import graft.session.{GraftSession, ShuffleWidth}
+import graft.session.GraftSession
 
 /** Measurement tool (guide §1/§7.2): dump `explain("formatted")` for
   * named registry queries to files, so plan claims (Exchange count,
@@ -25,7 +25,6 @@ object PlanDump {
     val spark = GraftSession.builder(s"local[$cpus]")
       .appName("graft-plandump").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    ShuffleWidth.configure(spark, sfDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val selected =
       if (names.isEmpty) SparkEntry.registry

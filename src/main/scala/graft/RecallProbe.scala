@@ -1,6 +1,6 @@
 package graft
 
-import graft.session.{GraftSession, ShuffleWidth}
+import graft.session.GraftSession
 import scala.collection.immutable.ListMap
 
 /** Scale-rung recall probe for the ANN family: recall@10 of each
@@ -22,7 +22,6 @@ object RecallProbe {
     val spark = GraftSession.builder(s"local[$cpus]")
       .appName("graft-recall-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    ShuffleWidth.configure(spark, dir)
     def topk(name: String): Map[Long, Set[Long]] =
       SparkEntry.queries(name)(spark, dir)
         .select("qid", "vec_id").collect()

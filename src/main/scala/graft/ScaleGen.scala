@@ -22,7 +22,6 @@ object ScaleGen {
     val spark = graft.session.GraftSession.builder(s"local[$cpus]")
       .appName("graft-scalegen").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.session.ShuffleWidth.configure(spark, args(0))
     run(spark, args(0), args(1), args(2).toInt)
     spark.stop()
   }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.session.ShuffleWidth
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loader for the driver-provided TPC-H-ish parquet tables (TESTDATA.md).
@@ -19,11 +20,14 @@ final case class Tables(spark: SparkSession, dir: String) {
     * once per (session, dir) removes that constant cost from every query.
     * This is driver-side metadata only (the analog of a catalog's table
     * cache) — at 100 TB the file listing is exactly the thing you don't
-    * want to redo per query. */
-  def load(name: String): DataFrame =
+    * want to redo per query. Resolving a directory also sizes the
+    * session's shuffle from its bytes ([[ShuffleWidth.configure]]). */
+  def load(name: String): DataFrame = {
+    ShuffleWidth.configure(spark, dir)
     Tables.cache.getOrElseUpdate((spark, dir, name),
       if (name == "events") loadEvents
       else spark.read.parquet(s"$dir/$name.parquet"))
+  }
 
   def region: DataFrame = load("region")
   def nation: DataFrame = load("nation")

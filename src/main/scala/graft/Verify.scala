@@ -1,5 +1,5 @@
 package graft
-import graft.session.{GraftSession, ShuffleWidth}
+import graft.session.GraftSession
 import graft.util.Reuse
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -10,7 +10,6 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    ShuffleWidth.configure(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     // Local-iteration subset (same contract as Bench); driver leaves it unset.
     val only = sys.env.get("SPARK_GRAFT_ONLY")

@@ -44,11 +44,11 @@ object Relational {
          |  count(*) AS count_order
          |FROM lineitem WHERE l_shipdate <= '1998-12-01'
          |GROUP BY l_returnflag, l_linestatus""".stripMargin) { (s, dir) =>
-      // Four corpus-growing groups ⇒ the decimal-buffer path (dsum/davg):
-      // per-row work is a scaled-long conversion (no string-based decimal
-      // cast), the sum buffer widens to DECIMAL(28,0) so 100 TB totals
-      // stay exact. Catalyst dedups the identical sum() subexpressions
-      // between each dsum/davg pair — 5 distinct sums, not 8.
+      // Four corpus-growing groups ⇒ the 128-bit path (dsum/davg): per-row
+      // work is a scaled-long conversion (no string-based decimal cast)
+      // and two long adds into ExactSum's buffer, exact to 10^38 scaled
+      // units, so 100 TB totals stay exact. Catalyst dedups the identical
+      // sums between each dsum/davg pair — 5 distinct sums, not 8.
       val dp = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
       val ch = dp * (lit(1.0) + col("l_tax"))
       t(s, dir).lineitem.filter(col("l_shipdate") <= "1998-12-01")

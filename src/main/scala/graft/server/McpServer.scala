@@ -214,12 +214,7 @@ object McpServer {
     val spark = graft.session.GraftSession.builder(
       sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    args.headOption match {
-      case Some(dir) =>
-        graft.Tables(spark, dir).registerAll()
-        graft.session.ShuffleWidth.configure(spark, dir)
-      case None => graft.session.ShuffleWidth.configureFromStats(spark)
-    }
+    args.headOption.foreach(dir => graft.Tables(spark, dir).registerAll())
     new McpServer(spark).serve(System.in, System.out)
   }
 }

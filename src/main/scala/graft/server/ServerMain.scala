@@ -23,8 +23,9 @@ object ServerMain {
     val spark = graft.session.GraftSession.builder(
         sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
       .appName("graft-server")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "4"))
+      // pins the width Tables and SourceRegistry would set from the data
+      .config(sys.env.get("SPARK_GRAFT_SHUFFLE")
+        .map("spark.sql.shuffle.partitions" -> _).toMap)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     a.get("--data").foreach { dir =>
@@ -33,17 +34,6 @@ object ServerMain {
     a.get("--config").foreach { yml =>
       new graft.sources.SourceRegistry(spark)
         .registerAll(graft.sources.SourcesConfig.fromYamlFile(yml))
-    }
-    // width follows the registered data's volume — the data dir's
-    // on-disk bytes PLUS the catalog statistics source registration
-    // recorded (Iceberg snapshot totals, declared federated sizes), so
-    // an all-federated session with no local dir still gets
-    // volume-derived width (AQE coalesces down per stage); an explicit
-    // SPARK_GRAFT_SHUFFLE pins it instead. Runs AFTER both
-    // registrations so every stat is on the books.
-    if (!sys.env.contains("SPARK_GRAFT_SHUFFLE")) a.get("--data") match {
-      case Some(dir) => graft.session.ShuffleWidth.configure(spark, dir)
-      case None => graft.session.ShuffleWidth.configureFromStats(spark)
     }
     // engine settings from graft.yaml beside the sources config (the
     // reference's embedded backend reads strake.yaml the same way;

@@ -211,8 +211,10 @@ object GraftSession {
     * from the selective side — the 100 TB analog of the reference's
     * pushed-filter transfer narrowing).
     *
-    * This is the only place main code builds a session; callers that
-    * read a data directory size the shuffle with [[ShuffleWidth.configure]]. */
+    * This is the only place main code builds a session. It leaves
+    * `spark.sql.shuffle.partitions` to [[ShuffleWidth]], which sizes it
+    * from the data the session resolves ([[graft.Tables]],
+    * [[graft.sources.SourceRegistry]]) unless the caller pins it. */
   def builder(master: String = "local[*]"): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(master)

@@ -15,11 +15,12 @@ import org.apache.spark.sql.SparkSession
   * swamping tiny tasks.
   *
   * The estimate is deliberately cheap and static: sum the on-disk
-  * bytes of the session's source directory once at session build and
-  * divide by a target of compressed bytes per reduce task. Columnar
-  * sources expand ~10–15× in flight here (sf5.0: 236 MB of parquet is
-  * ~3 GB of rows), so the 2 MB compressed target keeps a reduce task's
-  * working set in the tens of MB. AQE then coalesces DOWN at runtime
+  * bytes of each data directory once, when the session first resolves
+  * it ([[graft.Tables]]), and divide by a target of compressed bytes per
+  * reduce task. Columnar sources expand ~10–15× in flight here (sf5.0:
+  * 236 MB of parquet is ~3 GB of rows), so the 2 MB compressed target
+  * keeps a reduce task's working set in the tens of MB. AQE then
+  * coalesces DOWN at runtime
   * when a stage's actual exchange is small — over-provisioning width
   * is self-correcting, under-provisioning is a spill (asymmetry that
   * justifies rounding up). Tables with no local directory to walk —
@@ -61,13 +62,13 @@ object ShuffleWidth {
     finally it.close()
   }
 
-  /** Session-conf prefix under which [[graft.sources.SourceRegistry]]
-    * records per-registered-table input-byte estimates (Iceberg
-    * snapshot `total-files-size`, federated row-count × row-width,
-    * file sizes of paths outside the session data dir). The catalog
-    * side of the width rule: a session whose tables arrive through a
-    * sources config — no local data directory at all — still gets
-    * volume-derived width instead of the core floor. */
+  /** Session-conf prefix under which [[configure]] records data
+    * directories and [[graft.sources.SourceRegistry]] per-registered-table
+    * input-byte estimates (Iceberg snapshot `total-files-size`, federated
+    * row-count × row-width, file sizes of paths outside the session data
+    * dir). The catalog side of the width rule: a session whose tables
+    * arrive through a sources config — no local data directory at all —
+    * still gets volume-derived width instead of the core floor. */
   val StatsKeyPrefix = "graft.stats.bytes."
 
   /** Record one table's estimated input bytes (idempotent per view
@@ -89,22 +90,32 @@ object ShuffleWidth {
     spark.conf.getAll.keys.filter(_.startsWith(StatsKeyPrefix))
       .foreach(spark.conf.unset)
 
-  /** Set `spark.sql.shuffle.partitions` for the session from the data
-    * directory's measured volume PLUS any catalog statistics recorded
-    * by source registration; returns the chosen width. AQE's
-    * coalescing (enabled by every graft session builder) trims unused
-    * width per stage at runtime. */
-  def configure(spark: SparkSession, dir: String): Int =
-    configureTotal(spark, dirBytes(dir) + statsBytes(spark))
+  /** Record a data directory's bytes once per session ([[graft.Tables]]
+    * calls it as it resolves one) and, when new, re-derive the width. */
+  def configure(spark: SparkSession, dir: String): Unit = {
+    val key = StatsKeyPrefix + "dir:" + dir
+    if (spark.conf.getOption(key).isEmpty) {
+      spark.conf.set(key, dirBytes(dir).toString)
+      configureFromStats(spark)
+    }
+  }
 
-  /** Width purely from registered catalog statistics — the no-data-dir
-    * session shape (everything federated/REST). */
-  def configureFromStats(spark: SparkSession): Int =
-    configureTotal(spark, statsBytes(spark))
+  /** The width this rule last set: a set width that differs was pinned. */
+  private val AppliedKey = "graft.shuffle.applied"
 
-  private def configureTotal(spark: SparkSession, bytes: Long): Int = {
-    val width = forBytes(bytes, spark.sparkContext.defaultParallelism)
-    spark.conf.set("spark.sql.shuffle.partitions", width.toString)
-    width
+  /** Set `spark.sql.shuffle.partitions` from every recorded statistic and
+    * return the width in effect; a width the caller pinned (builder or
+    * `spark.conf.set`) is left alone. AQE's coalescing trims unused width
+    * per stage at runtime. */
+  def configureFromStats(spark: SparkSession): Int = {
+    // getAll holds only the settings someone made, not the defaults
+    val set = spark.conf.getAll.get("spark.sql.shuffle.partitions")
+    if (set.nonEmpty && set != spark.conf.getOption(AppliedKey)) set.get.toInt
+    else {
+      val width = forBytes(statsBytes(spark), spark.sparkContext.defaultParallelism)
+      spark.conf.set("spark.sql.shuffle.partitions", width.toString)
+      spark.conf.set(AppliedKey, width.toString)
+      width
+    }
   }
 }

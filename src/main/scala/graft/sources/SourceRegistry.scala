@@ -24,9 +24,12 @@ final class SourceRegistry(spark: SparkSession) {
   private val budgets = scala.collection.concurrent.TrieMap.empty[String, ConcurrencyBudget]
   private val retry = new RetryPolicy(maxAttempts = 3, baseDelayMillis = 100)
 
+  /** Registers every source, then sizes the shuffle from their statistics. */
   def registerAll(config: SourcesConfig,
-      warnings: WarningCollector = new WarningCollector): Unit =
+      warnings: WarningCollector = new WarningCollector): Unit = {
     config.sources.foreach(s => registerSource(s, warnings))
+    graft.session.ShuffleWidth.configureFromStats(spark)
+  }
 
   def registerSource(src: SourceDef, warnings: WarningCollector): Unit = {
     val breaker = breakers.getOrElseUpdate(src.name, new CircuitBreaker(src.name))

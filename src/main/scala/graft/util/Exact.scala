@@ -1,6 +1,7 @@
 package graft.util
 
-import org.apache.spark.sql.Column
+import graft.functions.ExactSum
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
@@ -27,11 +28,14 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
   * Two summation paths with different overflow envelopes — pick by how the
   * GROUP SUM grows with corpus size:
   *
-  *  - [[dsum]]/[[davg]]/[[dsumPart]]/[[dsumFinal]] — scaled longs summed as
-  *    DECIMAL(18,0) (compact-long adds; Spark widens the sum buffer to
-  *    DECIMAL(28,0), exact to ~10^28/10^scale units). Safe for GLOBAL sums
-  *    on a 100 TB corpus: use when the per-group total grows with the data
-  *    (q1's four groups, q6's single row, rollup grand totals).
+  *  - [[dsum]]/[[davg]]/[[dsumPart]] — scaled longs summed by
+  *    [[graft.functions.ExactSum]] into a DECIMAL(38,0): a 128-bit total
+  *    kept in two primitive longs (three long adds per row, no BigDecimal),
+  *    exact to 10^38 scaled units (10^32 units at scale 6) and an error,
+  *    never a wrap or a NULL, past that. [[dsumFinal]] re-adds the few
+  *    partial rows with Spark's `sum`. Safe for GLOBAL sums on a 100 TB
+  *    corpus: use when the per-group total grows with the data (q1's four
+  *    groups, q6's single row, rollup grand totals).
   *  - [[lsum]]/[[lsumPart]]/[[lsumFinal]] — scaled longs summed as LONG.
   *    Caps the per-group total at 2^63/10^scale (~9.2e12 units at scale 6).
   *    Use when the group sum is bounded by the entity, not the corpus —
@@ -65,19 +69,20 @@ object Exact {
 
   // ------------------------------------------------------- general path
   /** Exact sum of a money-like double column; result as double.
-    * Overflow-safe for global sums at 100 TB (decimal sum buffer). */
+    * Overflow-safe for global sums at 100 TB (128-bit sum buffer). */
   def dsum(c: Column, scale: Int = 6): Column =
-    unscaled(sum(scaled(c, scale).cast(DecimalType(18, 0))), scale)
+    unscaled(dsumPart(c, scale), scale)
 
   /** Exact average: exact sum divided by count, in double. */
   def davg(c: Column, scale: Int = 6): Column =
     (dsum(c, scale) / count(c)).cast(DoubleType)
 
   /** Two-phase split of dsum for multi-phase aggregations (rollup/cube/
-    * grouping sets): keep the partial as DECIMAL so the re-aggregation
-    * stays exact; convert to double only at the very end. */
+    * grouping sets): keep the partial as DECIMAL(38,0) so the
+    * re-aggregation stays exact; convert to double only at the very end. */
   def dsumPart(c: Column, scale: Int = 6): Column =
-    sum(scaled(c, scale).cast(DecimalType(18, 0)))
+    GraftColumnBridge.column(ExactSum(
+      GraftColumnBridge.expression(scaled(c, scale))).toAggregateExpression())
   def dsumFinal(partial: Column, scale: Int = 6): Column =
     unscaled(sum(partial), scale)
 

@@ -16,6 +16,9 @@ class BenchOutputSpec extends AnyFunSuite {
 
   private def parse(s: String): JsonNode = BenchOutput.mapper.readTree(s)
 
+  private val stamp = RunStamp(4, Some("4g"), Some("4g"),
+    Seq("PS Scavenge", "PS MarkSweep"), "0123abc", Map("SPARK_GRAFT_CPUS" -> "4"), "9")
+
   private val families = Seq("q", "d", "t", "s", "m")
 
   /** 200 rows across the five families, the headline four first, one
@@ -47,12 +50,13 @@ class BenchOutputSpec extends AnyFunSuite {
 
   test("a failure message with quotes, backslashes and control characters round-trips") {
     val msg = "java.lang.IllegalStateException: bad \"quoted\" path C:\\tmp\nnext line \u0001 end"
-    val j = parse(BenchOutput.results(sf, Seq(
+    val j = parse(BenchOutput.results(sf, stamp, Seq(
       RowResult("q1_pricing_summary", Seq(0.5, 0.25, 0.75), tel(0)),
       RowResult("q_bad", Seq(-1.0), tel(1), Some(msg))), chaos = 0.0))
     assert(j.get("failures").get("q_bad").asText == msg)
     assert(j.fieldNames.asScala.toSeq ==
-      Seq("sf", "headline_sec", "total_sec", "medians", "iters", "telemetry", "failures"))
+      Seq("sf", "stamp", "headline_sec", "total_sec", "medians", "iters", "telemetry",
+        "failures"))
     assert(j.get("medians").get("q1_pricing_summary").asDouble == 0.5)
     assert(j.get("medians").get("q_bad").asDouble == -1.0)
     assert(j.get("iters").get("q1_pricing_summary").elements.asScala
@@ -60,7 +64,24 @@ class BenchOutputSpec extends AnyFunSuite {
     assert(!j.get("iters").has("q_bad"))
     val t = j.get("telemetry").get("q_bad")
     assert(t.fieldNames.asScala.toSeq ==
-      Seq("order", "start_ms", "load1", "steal_pct", "gc_ms", "gc_n", "heap_mb"))
+      Seq("order", "start_ms", "load1", "steal_pct", "gc_ms", "gc_n", "heap_mb",
+        "gc_pause_max_ms"))
+  }
+
+  test("the summary names the run's worst GC pause; results carry the run stamp") {
+    val paused = rows.zipWithIndex.map { case (r, i) =>
+      r.copy(telemetry = r.telemetry.copy(gcPauseMaxMs = if (i == 17) 33100L else i.toLong))
+    }
+    val line = BenchOutput.summary(sf, paused)
+    assert(line.length <= 1500, s"${line.length} chars")
+    assert(parse(line).get("gc_pause_max_ms").asLong == 33100L)
+    val j = parse(BenchOutput.results(sf, stamp, paused, chaos = 0.0))
+    assert(j.get("telemetry").get(paused(17).name).get("gc_pause_max_ms").asLong == 33100L)
+    val s = j.get("stamp")
+    assert(s.fieldNames.asScala.toSeq == Seq("cores", "xmx", "xms", "gc", "git_sha",
+      "overrides", "shuffle_partitions"))
+    assert(s.get("overrides").get("SPARK_GRAFT_CPUS").asText == "4")
+    assert(s.get("shuffle_partitions").asText == "9")
   }
 
   test("oracle SQL with a tab and a carriage return round-trips") {
@@ -83,7 +104,7 @@ class BenchOutputSpec extends AnyFunSuite {
       Bench.PhaseEvent(10400L, Map("analysis" -> 1L, "optimization" -> 2L,
         "planning" -> 3L)))
     val row = Bench.withLayers(tel(0), w, stages, phases)
-    val j = parse(BenchOutput.results(sf,
+    val j = parse(BenchOutput.results(sf, stamp,
       Seq(RowResult("q6_forecast_revenue", Seq(1.0), row)), chaos = 0.0))
       .get("telemetry").get("q6_forecast_revenue")
     assert(j.get("build_ms").asDouble == 42.4)

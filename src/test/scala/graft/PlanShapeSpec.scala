@@ -760,14 +760,64 @@ class PlanShapeSpec extends AnyFunSuite {
     // configure() adds any catalog stats recorded in the shared
     // session (another suite's SourceRegistry run) — isolate
     ShuffleWidth.clearStats(spark)
+    // the test session pins its width, and a pinned width is left alone
+    spark.conf.unset("spark.sql.shuffle.partitions")
     try {
-      val small = ShuffleWidth.configure(spark, dirOf(1L << 20))
-      assert(small == cores, s"small volume must floor at cores, got $small")
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == cores.toString)
-      val big = ShuffleWidth.configure(spark, dirOf(512L << 20))
-      assert(big == 256, s"512 MB / 2 MB target = 256-wide, got $big")
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == "256")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      ShuffleWidth.configure(spark, dirOf(1L << 20))
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == cores.toString,
+        "small volume must floor at cores")
+      // recorded directories add up: start the second volume alone
+      ShuffleWidth.clearStats(spark)
+      ShuffleWidth.configure(spark, dirOf(512L << 20))
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "256",
+        "512 MB / 2 MB target = 256-wide")
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prev)
+      ShuffleWidth.clearStats(spark)
+    }
+  }
+
+  test("a session that resolves a data directory gets its width from the " +
+      "directory's bytes, with no configure call; a pinned width stays") {
+    import graft.session.ShuffleWidth
+    import java.nio.file.{Files, Paths}
+    // a directory with a real table and 100 MB of sparse padding
+    val dir = Files.createTempDirectory("graft-width-tables")
+    Files.copy(Paths.get(s"$sf/nation.parquet"), dir.resolve("nation.parquet"))
+    val raf = new java.io.RandomAccessFile(dir.resolve("pad.bin").toFile, "rw")
+    raf.setLength(100L << 20); raf.close()
+    val want = ShuffleWidth.forBytes(ShuffleWidth.dirBytes(dir.toString),
+      spark.sparkContext.defaultParallelism)
+    assert(want > 4, s"the padding must lift the width off the test pin: $want")
+    // a fresh session as GraftSession.builder leaves it: no width pinned
+    // (newSession inherits the shared context's pin from its SparkConf)
+    val fresh = spark.newSession()
+    fresh.conf.unset("spark.sql.shuffle.partitions")
+    assert(Tables(fresh, dir.toString).nation.count() == 25)
+    assert(fresh.conf.get("spark.sql.shuffle.partitions") == want.toString)
+    // a caller's pin is left alone, on a fresh session and on the shared one
+    val pinned = spark.newSession()
+    pinned.conf.set("spark.sql.shuffle.partitions", "7")
+    assert(Tables(pinned, dir.toString).nation.count() == 25)
+    assert(pinned.conf.get("spark.sql.shuffle.partitions") == "7")
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert(Tables(spark, dir.toString).nation.count() == 25)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == before)
+  }
+
+  test("q1 and q6 keep no decimal in their aggregate buffers") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.types.DecimalType
+    Seq("q1_pricing_summary", "q6_forecast_revenue").foreach { q =>
+      val aggs = SparkEntry.queries(q)(spark, sf).queryExecution.sparkPlan
+        .collect { case a: BaseAggregateExec => a }
+      assert(aggs.nonEmpty, q)
+      val buffers = aggs.flatMap(_.aggregateExpressions
+        .flatMap(_.aggregateFunction.aggBufferAttributes))
+      assert(buffers.nonEmpty, q)
+      assert(!buffers.exists(_.dataType.isInstanceOf[DecimalType]),
+        s"$q buffers: ${buffers.map(b => s"${b.name}:${b.dataType.simpleString}")}")
+    }
   }
 
   test("shuffle width from CATALOG statistics: an Iceberg-registered " +
@@ -812,7 +862,9 @@ class PlanShapeSpec extends AnyFunSuite {
       // 4) width follows the RECORDED volume: overlay a synthetic
       // 1 GB estimate (as a big remote table would record) and the
       // stats-only configure chooses 512-wide — volume-derived, far
-      // above the core floor, with not one local byte on disk
+      // above the core floor, with not one local byte on disk (the
+      // test session's pinned width is lifted first: a pin is left alone)
+      spark.conf.unset("spark.sql.shuffle.partitions")
       ShuffleWidth.record(spark, "icestats_big", 1L << 30)
       val width = ShuffleWidth.configureFromStats(spark)
       val expected = (((1L << 30) + realBytes +

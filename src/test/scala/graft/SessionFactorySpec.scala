@@ -11,29 +11,34 @@ import org.scalatest.funsuite.AnyFunSuite
   *    so extensions, AQE and the local-mode heartbeat tolerance cannot
   *    drift apart between entry points.
   *  - Every lineage cut goes through `graft.util.Reuse`, so the
-  *    local-versus-cluster materialization mode is decided in one place. */
+  *    local-versus-cluster materialization mode is decided in one place.
+  *  - Shuffle width is set where data is resolved (`Tables`,
+  *    `SourceRegistry`), so no main sizes it on its own. */
 class SessionFactorySpec extends AnyFunSuite {
 
   private val owners = Seq(
-    "SparkSession.builder()" -> "graft/session/GraftSession.scala",
-    ".localCheckpoint(" -> "graft/util/Reuse.scala")
+    "SparkSession.builder()" -> Seq("graft/session/GraftSession.scala"),
+    ".localCheckpoint(" -> Seq("graft/util/Reuse.scala"),
+    "ShuffleWidth.configure" -> Seq("graft/session/ShuffleWidth.scala",
+      "graft/Tables.scala", "graft/sources/SourceRegistry.scala"))
 
-  owners.foreach { case (token, owner) =>
-    test(s"$token appears only in ${Paths.get(owner).getFileName}") {
+  owners.foreach { case (token, files) =>
+    test(s"$token appears only in " +
+        files.map(f => Paths.get(f).getFileName).mkString(", ")) {
       val root = Paths.get("src/main/scala")
       assert(Files.isDirectory(root), s"run from the repository root: $root")
-      val allowed = root.resolve(owner)
-      assert(Files.isRegularFile(allowed), s"owner file missing: $allowed")
+      val allowed = files.map(root.resolve).toSet
+      allowed.foreach(a => assert(Files.isRegularFile(a), s"owner file missing: $a"))
       val walk = Files.walk(root)
       val hits =
         try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
-          .filterNot(_ == allowed).flatMap { p: Path =>
+          .filterNot(allowed).flatMap { p: Path =>
             Files.readAllLines(p).asScala.zipWithIndex.collect {
               case (line, i) if line.contains(token) => s"$p:${i + 1}"
             }
           }.toList
         finally walk.close()
-      assert(hits.isEmpty, s"$token outside $owner: $hits")
+      assert(hits.isEmpty, s"$token outside ${files.mkString(", ")}: $hits")
     }
   }
 }
