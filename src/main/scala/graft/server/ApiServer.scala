@@ -23,7 +23,7 @@ import scala.util.control.NonFatal
   * permissions + policy rules); 401 without a valid key.
   *
   * Result rows are JSON for the control-plane API; bulk data egress at
-  * scale belongs to the Arrow path (Spark Connect / Thrift server), which
+  * scale belongs to the Arrow path (the Flight SQL edge), which
   * this API deliberately doesn't replace — same stance as the reference
   * (REST for control, Flight for data).
   */
@@ -383,22 +383,22 @@ final class ApiServer(
     * reference serves /metrics alongside its REST API
     * (crates/server/src/lib.rs:465-487). Unauthenticated by convention
     * (scrape targets), and derived from already-scrubbed log entries plus
-    * the result cache's size, which lives in the driver heap. */
+    * the result cache's size, which lives in the driver heap. Counters
+    * and `_sum`/`_count` are the session's running totals; the quantiles
+    * cover the entries the log retains, so a scrape costs the same
+    * however long the engine has served. */
   private def handleMetrics(ex: HttpExchange): Unit = {
-    val entries = engine.queryLog
-    val ok = entries.count(_.succeeded)
-    val failed = entries.size - ok
-    val hits = entries.count(_.cacheHit)
+    val t = engine.queryTotals
     val (cacheEntries, cacheBytes) = engine.cacheUsage
-    val durs = entries.map(_.durationMillis).sorted
+    val durs = engine.queryLog.map(_.durationMillis).sorted
     def pct(p: Double): Long =
       if (durs.isEmpty) 0L else durs(math.min(durs.size - 1, (p * durs.size).toInt))
     val body =
       s"""# TYPE graft_queries_total counter
-         |graft_queries_total{status="ok"} $ok
-         |graft_queries_total{status="error"} $failed
+         |graft_queries_total{status="ok"} ${t.ok}
+         |graft_queries_total{status="error"} ${t.error}
          |# TYPE graft_cache_hits_total counter
-         |graft_cache_hits_total $hits
+         |graft_cache_hits_total ${t.cacheHits}
          |# TYPE graft_cache_entries gauge
          |graft_cache_entries $cacheEntries
          |# TYPE graft_cache_bytes gauge
@@ -407,8 +407,8 @@ final class ApiServer(
          |graft_query_duration_ms{quantile="0.5"} ${pct(0.5)}
          |graft_query_duration_ms{quantile="0.95"} ${pct(0.95)}
          |graft_query_duration_ms{quantile="0.99"} ${pct(0.99)}
-         |graft_query_duration_ms_sum ${durs.sum}
-         |graft_query_duration_ms_count ${durs.size}
+         |graft_query_duration_ms_sum ${t.durationSumMillis}
+         |graft_query_duration_ms_count ${t.count}
          |""".stripMargin
     val bytes = body.getBytes(StandardCharsets.UTF_8)
     ex.getResponseHeaders.add("Content-Type", "text/plain; version=0.0.4")

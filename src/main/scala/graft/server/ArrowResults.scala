@@ -127,7 +127,7 @@ object ArrowResults {
         case (x: VarBinaryVector, _) => x.setSafe(i, r.getAs[Array[Byte]](c))
         // both external date/timestamp representations appear depending
         // on spark.sql.datetime.java8API.enabled — a SESSION-wide conf
-        // that other components (e.g. the Thrift JDBC edge) may flip
+        // that user code may flip
         case (x: DateDayVector, _) => r.get(c) match {
           case d: java.sql.Date => x.setSafe(i, d.toLocalDate.toEpochDay.toInt)
           case d: java.time.LocalDate => x.setSafe(i, d.toEpochDay.toInt)

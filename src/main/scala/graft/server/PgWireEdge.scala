@@ -5,7 +5,6 @@ import java.net.{ServerSocket, Socket, SocketException}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.StructType
@@ -64,15 +63,6 @@ final class PgWireEdge(
   /** pid → (secret, Spark job group) for CancelRequest routing: the
     * BackendKeyData pair handed to each connection at startup. */
   private val cancelKeys = new ConcurrentHashMap[Int, (Int, String)]()
-
-  /** Last few statements received off the wire (bounded), so tests and
-    * operators can assert what a pg client actually pushed down. */
-  private val queryLog = new java.util.concurrent.ConcurrentLinkedDeque[String]()
-  def recentQueries: Seq[String] = queryLog.asScala.toSeq
-  private def logQuery(sql: String): Unit = {
-    queryLog.addLast(sql)
-    while (queryLog.size > 64) queryLog.pollFirst()
-  }
 
   def start(): Int = {
     server = new ServerSocket(0, 64, java.net.InetAddress.getLoopbackAddress)
@@ -213,7 +203,6 @@ final class PgWireEdge(
         case Some(m) => m.tpe match {
           case MsgQuery =>
             val sql = cstring(java.nio.ByteBuffer.wrap(m.payload))
-            logQuery(sql)
             // pg's simple protocol runs a multi-statement string in
             // order, one response set per statement, ONE ReadyForQuery
             // at the end; an error skips the remainder (the whole
@@ -313,7 +302,6 @@ final class PgWireEdge(
     val sql = cstring(bb)
     val nOids = bb.getShort.toInt
     val oids = IndexedSeq.fill(nOids)(bb.getInt)
-    logQuery(sql)
     // COPY rides the simple-query sub-protocol; a Parse of it would
     // otherwise fall through to Spark's parser and die with a
     // confusing syntax error instead of a clean refusal

@@ -3,7 +3,6 @@ package graft.session
 import graft.plans.{CostValidator, DefensiveLimitRule}
 import graft.util.Scrubber
 import java.util.concurrent.atomic.AtomicLong
-import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future, TimeoutException}
 import scala.concurrent.duration._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -32,6 +31,16 @@ final case class QueryLogEntry(
     userId: String, scrubbedSql: String, durationMillis: Long,
     cacheHit: Boolean, succeeded: Boolean)
 
+/** Running totals over every query a session has logged, the ones its
+  * log has since dropped included. */
+final case class QueryTotals(ok: Long, error: Long, cacheHits: Long,
+    durationSumMillis: Long) {
+  def count: Long = ok + error
+  def add(e: QueryLogEntry): QueryTotals = QueryTotals(
+    ok + (if (e.succeeded) 1 else 0), error + (if (e.succeeded) 0 else 1),
+    cacheHits + (if (e.cacheHit) 1 else 0), durationSumMillis + e.durationMillis)
+}
+
 /** The engine facade: `executeQuery(sql, user)` runs the full reference
   * lifecycle (/root/reference/crates/runtime/src/federation.rs:326-487) on
   * Spark:
@@ -39,7 +48,8 @@ final case class QueryLogEntry(
   *   user context → analyze (RLS/masking applied by [[graft.plans.RowPolicyRule]]
   *   if the session was built with [[GraftExtensions]]) → defensive limit →
   *   cost validation → cache lookup → execute with timeout → cache store →
-  *   structured query log with PII scrubbing.
+  *   structured query log with PII scrubbing, bounded to the last
+  *   [[GraftSession.LogCapacity]] entries plus running [[QueryTotals]].
   *
   * Execution stays distributed; only results come to the driver. A cache
   * miss runs the query once as a collect bounded at 100,000 rows and keeps
@@ -56,10 +66,23 @@ final class GraftSession(
   private val budget = new graft.util.Resilience.ConcurrencyBudget(config.connectionBudget)
   private val limitRule = DefensiveLimitRule(config.defensiveLimit)
   private val validator = CostValidator(config.maxScanBytes, config.maxOutputRows)
-  private val log = mutable.ArrayBuffer.empty[QueryLogEntry]
+  private val log = new Array[QueryLogEntry](GraftSession.LogCapacity)
+  private var totals = QueryTotals(0, 0, 0, 0) // guarded by log
   private val groupId = new AtomicLong()
 
-  def queryLog: Seq[QueryLogEntry] = log.synchronized(log.toSeq)
+  /** The last [[GraftSession.LogCapacity]] queries, oldest first. */
+  def queryLog: Seq[QueryLogEntry] = log.synchronized {
+    val n = math.min(totals.count, log.length.toLong).toInt
+    Vector.tabulate(n)(i => log(((totals.count - n + i) % log.length).toInt))
+  }
+
+  /** Counts and duration sum over every query this session has run. */
+  def queryTotals: QueryTotals = log.synchronized(totals)
+
+  private[graft] def record(e: QueryLogEntry): Unit = log.synchronized {
+    log((totals.count % log.length).toInt) = e
+    totals = totals.add(e)
+  }
 
   /** Entries and weighted bytes the result cache holds; (0, 0) without one. */
   def cacheUsage: (Int, Long) = cache.fold((0, 0L))(c => (c.size, c.totalBytes))
@@ -140,10 +163,8 @@ final class GraftSession(
       QueryResult(result, warnings.all)
     } finally {
       RowPolicyRule_clear()
-      log.synchronized {
-        log += QueryLogEntry(user.id, Scrubber.scrub(sql),
-          System.currentTimeMillis() - start, cacheHit, ok)
-      }
+      record(QueryLogEntry(user.id, Scrubber.scrub(sql),
+        System.currentTimeMillis() - start, cacheHit, ok))
     }
   }
 
@@ -197,6 +218,10 @@ final class GraftSession(
 }
 
 object GraftSession {
+  /** Query-log entries a session retains: far more than a benchmark run
+    * logs, so every request of a run can still be matched to its entry. */
+  val LogCapacity = 10000
+
   private lazy val executionContext: ExecutionContext =
     ExecutionContext.fromExecutor(
       java.util.concurrent.Executors.newCachedThreadPool(r => {
@@ -225,10 +250,6 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      // static conf for the optional Thrift JDBC edge (server/JdbcEdge):
-      // ODBC/JDBC sessions share THIS session's catalog (temp views,
-      // registered sources) instead of getting isolated empty sessions
-      .config("spark.sql.hive.thriftServer.singleSession", "true")
       // http(s)://, ftp://, sftp://, and s3:///s3a:// file paths resolve
       // out of the box (sources/HttpFileSystem, FtpFileSystem,
       // SftpFileSystem, s3/S3FileSystem); per-read auth headers via

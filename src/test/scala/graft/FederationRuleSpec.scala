@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -85,7 +85,7 @@ class FederationRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = spark.sql(
       "SELECT n_regionkey, count(*) AS n FROM fedpg_nation GROUP BY n_regionkey")
     assert(df.queryExecution.optimizedPlan.collect {
-      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
+      case a: Aggregate => a
     }.isEmpty, df.queryExecution.optimizedPlan)
     val (rows, remote) = remoteQueriesDuring(df.collect())
     assert(remote.size == 1, remote)
@@ -156,6 +156,16 @@ class FederationRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(remote.size == 1, remote) // only nation's per-scan SELECT
     assert(!remote.head.toUpperCase.contains("JOIN"), remote.head)
     assert(rows.length == 25)
+    // scans of a source with no SQL dialect (the local parquet views)
+    // never federate: the same join runs locally, nothing goes remote
+    val plain = spark.sql(
+      """SELECT r.r_name, n.n_name FROM nation n
+        |JOIN region r ON n.n_regionkey = r.r_regionkey""".stripMargin)
+    assert(plain.queryExecution.optimizedPlan.collect {
+      case j: Join => j }.nonEmpty, plain.queryExecution.optimizedPlan)
+    val (plainRows, plainRemote) = remoteQueriesDuring(plain.collect())
+    assert(plainRemote.isEmpty, plainRemote)
+    assert(plainRows.map(_.toSeq).toSet == rows.map(_.toSeq).toSet)
   }
 
   test("an untranslatable join predicate falls back to local execution") {
@@ -170,6 +180,19 @@ class FederationRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (rows, remote) = remoteQueriesDuring(df.collect())
     assert(remote.size == 2, s"expected two per-scan queries, got $remote")
     assert(rows.length == 25)
+    // ROLLUP (an Expand under the aggregate) has no dialect form either:
+    // the grouping sets run in Spark over one per-scan read
+    val rollup = spark.sql(
+      "SELECT n_regionkey, count(*) AS n FROM fedpg_nation GROUP BY ROLLUP(n_regionkey)")
+    assert(rollup.queryExecution.optimizedPlan.collect {
+      case a: Aggregate => a }.nonEmpty, rollup.queryExecution.optimizedPlan)
+    val (rollupRows, rollupRemote) = remoteQueriesDuring(rollup.collect())
+    assert(rollupRemote.size == 1, rollupRemote)
+    assert(!rollupRemote.head.toUpperCase.contains("GROUP BY"), rollupRemote.head)
+    assert(rollupRows.map(_.toSeq).toSet == spark.sql(
+      "SELECT n_regionkey, count(*) AS n FROM nation GROUP BY ROLLUP(n_regionkey)")
+      .collect().map(_.toSeq).toSet)
+    assert(rollupRows.length == 6)
   }
 
   test("an unsupported expression ABOVE a federatable join still federates the join") {
@@ -383,6 +406,7 @@ class FederationRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
         org.apache.spark.sql.functions.avg("emp_id").as("a"))
     val opt = df.queryExecution.optimizedPlan
     assert(opt.collect { case j: Join => j }.isEmpty, opt)
+    assert(opt.collect { case a: Aggregate => a }.isEmpty, opt)
     assert(opt.collectLeaves().size == 1, opt)
     val rows = df.collect().map(r =>
       (r.getString(0), r.getLong(1), r.getDouble(2))).toSet

@@ -103,6 +103,10 @@ class PgEdgeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("filter, column, and limit pushdown reach the remote SQL") {
+    // the statements the edge's engine ran, after a mark
+    def remoteSince(mark: Int): Seq[String] =
+      engine.queryLog.drop(mark).map(_.scrubbedSql)
+    val mark = engine.queryLog.size
     val df = readTable("nation")
       .filter("n_regionkey = 0").select("n_name")
     val names = df.collect().map(_.getString(0)).toSet
@@ -110,13 +114,14 @@ class PgEdgeSpec extends AnyFunSuite with BeforeAndAfterAll {
       "SELECT n_name FROM nation WHERE n_regionkey = 0")
       .collect().map(_.getString(0)).toSet
     assert(names == expected && names.size == 5)
-    val wire = edge.recentQueries.last
+    val wire = remoteSince(mark).last
     assert(wire.contains("\"n_regionkey\" = 0"), wire)
     assert(wire.contains("SELECT \"n_name\""), wire)
     assert(!wire.contains("n_comment"), s"unpruned column on the wire: $wire")
 
+    val limitMark = engine.queryLog.size
     readTable("region").limit(3).collect()
-    assert(edge.recentQueries.last.contains("LIMIT 3"), edge.recentQueries.last)
+    assert(remoteSince(limitMark).last.contains("LIMIT 3"), remoteSince(limitMark).last)
   }
 
   test("range partitioning issues one disjoint slice per partition") {

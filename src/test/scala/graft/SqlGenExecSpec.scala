@@ -149,29 +149,6 @@ class SqlGenExecSpec extends AnyFunSuite with BeforeAndAfterAll {
     check(df)
   }
 
-  test("exec: whole-subplan federation pushes a join+aggregate as one SQL") {
-    val sub = users.join(orders, col("id") === col("user_id"))
-      .groupBy(col("name")).agg(sum(col("amount")).as("total"))
-    val pushed = FederatedQuery.viaJdbc(spark, sub, "derby", url).get
-    // the remote result equals Spark executing the same plan locally
-    assert(sparkRows(pushed).sortBy(_.mkString("|")) ==
-      sparkRows(sub).sortBy(_.mkString("|")))
-    // and the Spark-side plan over the pushed read is a bare JDBC scan —
-    // the join/aggregate ran remotely
-    val plan = pushed.queryExecution.optimizedPlan.toString
-    assert(!plan.contains("Aggregate") && !plan.contains("Join"), plan)
-  }
-
-  test("exec: federation falls back to None for sources without a dialect") {
-    assert(FederatedQuery.viaJdbc(spark, users, "unknown_engine", url).isEmpty)
-  }
-
-  test("exec: federation falls back to None for plans the dialect can't express") {
-    val rollup = users.rollup(col("name")).agg(sum(col("score")).as("s"))
-    assert(FederatedQuery.viaJdbc(spark, rollup, "derby", url).isEmpty,
-      "unsupported plan must fall back to local execution, not throw")
-  }
-
   test("exec: set-op branch with ORDER BY+LIMIT runs on Derby") {
     check(users.select(col("id")).orderBy(col("id").desc).limit(2)
       .union(orders.select(col("user_id"))))
