@@ -110,7 +110,9 @@ object Bench {
     })
 
     var lastIter: Option[IterWindow] = None
-    def once(fn: (SparkSession, String) => DataFrame): Double = {
+    // the iteration's materializations are released as its scope ends,
+    // after the timed interval
+    def once(fn: (SparkSession, String) => DataFrame): Double = Reuse.scoped {
       val startMs = System.currentTimeMillis()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
@@ -119,14 +121,6 @@ object Bench {
       val dt = (System.nanoTime() - t0) / 1e9
       lastIter = Some(IterWindow(startMs, System.currentTimeMillis(),
         (t1 - t0) / 1e6))
-      // Residue drop per ITERATION, outside the timed region:
-      // every iteration rebuilds its plan from parquet, so a previous
-      // iteration's materialized blocks are dead weight — on the
-      // sf5.0 rung a median-of-3 span row accumulated 3 iterations of
-      // multi-GB block residue on the 16 GB heap and drove ParallelGC
-      // into a full-collection spiral. The noop sink still materializes
-      // every column inside the timed window.
-      Reuse.releaseAll(spark)
       dt
     }
 
@@ -250,7 +244,6 @@ object Bench {
           failure = Some(e.getClass.getName + ": " + msg)
           Seq(-1.0)
         }
-      Reuse.releaseAll(spark) // this row's blocks must not tax the next row
       val (gcN1, gcMs1) = gcNow()
       val stealPct = (ticks0, cpuTicks()) match {
         case (Some((t0, s0)), Some((t1, s1))) if t1 > t0 =>

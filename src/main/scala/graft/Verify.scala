@@ -17,13 +17,11 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try Reuse.scoped(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // the row's result is on disk: its materializations are residue
-      Reuse.releaseAll(spark)
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       BenchOutput.oracleSql(SparkEntry.oracleSql))

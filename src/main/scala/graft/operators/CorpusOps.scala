@@ -99,8 +99,8 @@ object CorpusOps {
       // its smallest doc_id — exactly the min(label) the oracle computes
       val collected = pairs.collect()
       // the RDD's only consumers (count + collect) have run — release
-      // the executor storage now; GraftSession callers have no
-      // Reuse.releaseAll sweep to do it for them
+      // the executor storage now: an RDD-level cache is outside Reuse,
+      // so no row scope releases it
       pairs.unpersist(blocking = false)
       collected.foreach { case (x, y) =>
         val rx = find(x); val ry = find(y)

@@ -192,43 +192,9 @@ object SpmTokenizer {
       .withColumn("path", expr(pathSql))
       .select(col("word"), explode(expr(piecesSql)).as("piece")))
 
-  /** The trained model (sc2 piece scores, npieces per-word counts),
-    * both checkpointed, shared between t_spm_train and t_spm_encode so
-    * one registry round trains once. SINGLE-slot cache, not a
-    * per-session map: the cached DataFrames strongly reference their
-    * SparkSession, so a WeakHashMap keyed by session could never
-    * collect its entries (value-reaches-key) and a long-lived server
-    * creating per-tenant sessions would pin every session's
-    * checkpointed RDD blocks forever. One slot bounds the pinning to
-    * one model; a different (session, dir) simply retrains — corpus
-    * dirs are immutable for a session's lifetime, so staleness cannot
-    * occur. */
-  @volatile private var cached: (SparkSession, String, (DataFrame, DataFrame)) =
-    null
-
-  /** Spec access to the trained model (sc2, npieces). */
-  private[graft] def modelForTest(s: SparkSession,
-      dir: String): (DataFrame, DataFrame) = model(s, dir)
-
-  private def model(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    synchronized {
-      val c = cached
-      // a swept model (Reuse.releaseAll between bench rows) rebuilds:
-      // local-mode checkpoints have truncated lineage and would throw
-      if (c != null && (c._1 eq s) && c._2 == dir &&
-          Reuse.isLive(c._3._1) && Reuse.isLive(c._3._2)) c._3
-      else {
-        val m = buildModel(s, dir)
-        // materialize the lazy checkpoints NOW: once they hold blocks
-        // the model no longer depends on the intermediate checkpoints,
-        // and `Reuse.isLive` sees the real (post-build) storage levels
-        m._1.count(); m._2.count()
-        cached = (s, dir, m)
-        m
-      }
-    }
-
-  private def buildModel(s: SparkSession,
+  /** The trained model: sc2 piece scores and npieces per-word counts,
+    * both cut through [[Reuse]]. Each row trains the model it reads. */
+  private[graft] def model(s: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     // the ONE corpus pass
     val wf = Reuse.materialize(TextPipeline.withNorm(t(s, dir).documents)

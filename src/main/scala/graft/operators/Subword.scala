@@ -6,12 +6,11 @@ import org.apache.spark.sql.functions._
 
 /** Machinery shared by the subword-tokenizer trainers ([[Tokenizer]] BPE
   * and [[WpTokenizer]] WordPiece): ONE greedy merge-fold algorithm, one
-  * word-frequency/segmentation representation, one pair-count shape, one
-  * encode oracle, and one per-(session, corpus) training memo. The two
-  * trainers differ ONLY in the per-step argmax objective (raw pair
-  * frequency vs likelihood gain), so that is the only thing they define
-  * themselves — a fix to the fold or the memo discipline lands in both
-  * at once. [[SpmTokenizer]] (unigram LM) prunes rather than merges and
+  * word-frequency/segmentation representation, one pair-count shape and
+  * one encode oracle. The two trainers differ ONLY in the per-step argmax
+  * objective (raw pair frequency vs likelihood gain), so that is the only
+  * thing they define themselves — a fix to the fold lands in both at
+  * once. [[SpmTokenizer]] (unigram LM) prunes rather than merges and
   * shares nothing here.
   */
 private[operators] object Subword {
@@ -42,17 +41,19 @@ private[operators] object Subword {
   /** DuckDB: one training step — symbol split, pair counts, the
     * caller's argmax CTE (`best$i(w1, w2, ...)`, possibly preceded by
     * extra CTEs it needs), then the shared greedy re-segmentation into
-    * `wf$i`. */
+    * `wf$i`. The step's CTEs are MATERIALIZED: each `wf$p` feeds both
+    * the next split and the next re-segmentation, so an inlined chain
+    * re-evaluates every earlier step twice per step. */
   def stepCtes(i: Int, extraAndBest: String): String = {
     val p = i - 1
-    s"""sym$i AS (SELECT freq, string_split(seg, ' ') AS sym FROM wf$p),
-       |px$i AS (SELECT freq, sym, unnest(range(1, len(sym))) AS j
+    s"""sym$i AS MATERIALIZED (SELECT freq, string_split(seg, ' ') AS sym FROM wf$p),
+       |px$i AS MATERIALIZED (SELECT freq, sym, unnest(range(1, len(sym))) AS j
        |         FROM sym$i WHERE len(sym) >= 2),
-       |pc$i AS (SELECT sym[j] AS w1, sym[j + 1] AS w2,
+       |pc$i AS MATERIALIZED (SELECT sym[j] AS w1, sym[j + 1] AS w2,
        |           CAST(sum(freq) AS BIGINT) AS c
        |         FROM px$i GROUP BY 1, 2),
        |$extraAndBest,
-       |wf$i AS (SELECT word, freq,
+       |wf$i AS MATERIALIZED (SELECT word, freq,
        |  CASE WHEN b.w1 IS NULL OR len(string_split(seg, ' ')) < 2 THEN seg ELSE
        |    list_reduce(string_split(seg, ' '), (acc, x) ->
        |      CASE WHEN x = b.w2 AND (acc = b.w1 OR
@@ -163,22 +164,5 @@ private[operators] object Subword {
     // keep the head (it is the argmax regardless); later members must
     // STRICTLY dominate anything a prior merge could promote
     batch.head +: batch.tail.takeWhile(_._3 > stop).toSeq
-  }
-
-  /** Per-(session, corpus-dir) training memo: train and encode share
-    * one run instead of each paying the corpus pass and the per-step
-    * argmax jobs. Corpus dirs are immutable for a session's lifetime
-    * (testdata and spec temp dirs are write-once), which is what makes
-    * the memo sound. Weak on the session so a stopped session doesn't
-    * pin its tables. */
-  final class TrainMemo[T] {
-    private val m = java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        scala.collection.concurrent.TrieMap[String, T]]())
-
-    def getOrElseUpdate(s: SparkSession, dir: String)(train: => T): T =
-      m.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty[String, T])
-        .getOrElseUpdate(dir, train)
   }
 }

@@ -53,12 +53,6 @@ object Tokenizer {
   private def bpeEncodeOracle: String =
     Subword.encodeOracle(bpeCtes, BpeSteps, "n_bpe_tokens")
 
-  private val trained = new Subword.TrainMemo[Seq[(Int, String, String, Long)]]
-
-  private def trainBpe(s: SparkSession,
-      dir: String): Seq[(Int, String, String, Long)] =
-    trained.getOrElseUpdate(s, dir)(trainBpeUncached(s, dir))
-
   /** Pairs merged per driver round-trip. 4 roughly quarters the
     * sequential job count at equal output (equality PROVEN, not
     * sampled — see [[Subword.batchedArgmax]]'s soundness argument);
@@ -75,11 +69,10 @@ object Tokenizer {
       dir: String, k: Int): (Seq[(Int, String, String, Long)], Int) = {
     var wf = Subword.wordFreqSeg(s, dir)
     // the checkpoint each round's argmax action just materialized;
-    // superseded (and unpersisted) when the NEXT round's action
-    // materializes its successor — the result of training is a
-    // driver-side merge table, so any checkpoint left persisted at
-    // return would be pure storage residue taxing the session until
-    // the ContextCleaner happens to collect it (StorageResidueSpec)
+    // released when the NEXT round's action materializes its successor,
+    // so a vocabulary-scale run holds one round's cut, not thousands —
+    // the result of training is a driver-side merge table, so none
+    // outlives the loop
     var live: Option[org.apache.spark.sql.DataFrame] = None
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, Long)]
@@ -108,7 +101,7 @@ object Tokenizer {
     finish()
   }
 
-  private def trainBpeUncached(s: SparkSession,
+  private def trainBpe(s: SparkSession,
       dir: String): Seq[(Int, String, String, Long)] =
     trainBpeRounds(s, dir, BatchK)._1
 

@@ -81,18 +81,11 @@ object WpTokenizer {
   private def wpEncodeOracle: String =
     Subword.encodeOracle(wpCtes, WpSteps, "n_wp_tokens")
 
-  private val trained =
-    new Subword.TrainMemo[Seq[(Int, String, String, Long, Long, Long)]]
-
-  private def trainWp(s: SparkSession,
-      dir: String): Seq[(Int, String, String, Long, Long, Long)] =
-    trained.getOrElseUpdate(s, dir)(trainWpUncached(s, dir))
-
   /** Driver-side training loop over vocabulary-sized intermediates:
     * one corpus pass builds the word-frequency table; each of the
     * `WpSteps` iterations aggregates pair + symbol counts over it,
     * broadcast-joins them, and takes the likelihood-argmax pair. */
-  private def trainWpUncached(s: SparkSession,
+  private def trainWp(s: SparkSession,
       dir: String): Seq[(Int, String, String, Long, Long, Long)] = {
     var wf = Subword.wordFreqSeg(s, dir)
     val merges = scala.collection.mutable.ArrayBuffer

@@ -69,11 +69,11 @@ object ServerMain {
       queryTimeout = setting("query_timeout_seconds", _.toLongOption,
           "a number of seconds")
         .map(scala.concurrent.duration.Duration(_, "s"))
-        .getOrElse(graft.session.GraftConfig().queryTimeout),
-      cacheEnabled = setting("cache_enabled", _.toBooleanOption, "a boolean")
-        .getOrElse(true))
+        .getOrElse(graft.session.GraftConfig().queryTimeout))
+    val cacheOn = setting("cache_enabled", _.toBooleanOption, "a boolean")
+      .getOrElse(true)
     val engine = new graft.session.GraftSession(spark, config,
-      cache = Some(graft.session.QueryCache.temp()))
+      cache = Option.when(cacheOn)(graft.session.QueryCache.temp()))
     val key = sys.env.getOrElse("GRAFT_API_KEY", "")
     val auth = new ApiKeyAuthenticator(
       if (key.isEmpty) Map.empty

@@ -16,7 +16,6 @@ final case class GraftConfig(
     maxScanBytes: Option[Long] = None,
     maxOutputRows: Option[Long] = None,
     queryTimeout: Duration = 300.seconds,
-    cacheEnabled: Boolean = true,
     connectionBudget: Int = 100)
 
 final case class QueryResult(df: DataFrame, warnings: Seq[QueryWarning])
@@ -144,7 +143,7 @@ final class GraftSession(
         }
         validator.validate(df)
         cache match {
-          case Some(c) if config.cacheEnabled && useCache && cacheableFor(df) =>
+          case Some(c) if useCache && cacheableFor(df) =>
             val k = c.key(df, user)
             c.lookup(spark, k) match {
               case Some(hit) =>

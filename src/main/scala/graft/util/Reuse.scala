@@ -1,19 +1,20 @@
 package graft.util
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable.ArrayBuffer
 
 /** The one materialization policy: every relation an operator, source
   * or main consumes more than once, or cuts for an iterative lineage,
-  * is materialized, checked and released here, and nowhere else
+  * is materialized and released here, and nowhere else
   * (SessionFactorySpec keeps `.localCheckpoint(` out of every other
   * main file). The mode follows the session's master:
   *
-  * | master              | `materialize(df, eager)`                 | `release(df)`             | `isLive(df)`               |
-  * |---------------------|------------------------------------------|---------------------------|----------------------------|
-  * | `local`, `local[N]` | `localCheckpoint(eager)`                 | unpersist `LogicalRDD` leaves | every leaf still stored |
-  * | any other           | `persist(MEMORY_AND_DISK)`, `count()` if eager | `unpersist()`       | `storageLevel` is not NONE |
+  * | master              | `materialize(df, eager)`                       | `release(df)`                        | end of `scoped(body)` |
+  * |---------------------|------------------------------------------------|--------------------------------------|-----------------------|
+  * | `local`, `local[N]` | `localCheckpoint(eager)`                       | drop the `LogicalRDD` leaves' blocks | the same, blocking    |
+  * | any other           | `persist(MEMORY_AND_DISK)`, `count()` if eager | `unpersist()`                        | the same, blocking    |
   *
   * In `local[N]` a localCheckpoint is the cheapest lineage cut:
   * executor-local blocks, no replication, and "executor loss" cannot
@@ -34,6 +35,12 @@ object Reuse {
   private def isLocal(df: DataFrame): Boolean =
     df.sparkSession.sparkContext.isLocal
 
+  /** The cuts made by this thread's innermost [[scoped]] block, each
+    * with the mode it was made in. A plain ThreadLocal: a thread started
+    * inside a scope (a pooled executor thread above all) must not
+    * inherit a scope that may already have ended. */
+  private val current = new ThreadLocal[ArrayBuffer[(DataFrame, Boolean)]]
+
   /** Cut-or-cache `df` for multi-consumer reuse; `eager` computes it
     * now (before an input it reads goes away, or so a later release of
     * its inputs is safe). Mode picked from the session's master. */
@@ -42,41 +49,51 @@ object Reuse {
 
   /** Mode-explicit variant (unit-testable both ways on one session). */
   private[graft] def materialize(df: DataFrame, eager: Boolean,
-      local: Boolean): DataFrame =
-    if (local) df.localCheckpoint(eager)
-    else {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      if (eager) p.count()
-      p
-    }
+      local: Boolean): DataFrame = {
+    val m =
+      if (local) df.localCheckpoint(eager)
+      else {
+        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+        if (eager) p.count()
+        p
+      }
+    Option(current.get).foreach(_ += (m -> local))
+    m
+  }
 
   /** Drop the blocks behind a [[materialize]]d relation (non-blocking).
     * After a local-mode release the relation is unreadable (its lineage
     * is cut); after a cluster-mode one it recomputes. */
   def release(df: DataFrame): Unit = release(df, isLocal(df))
 
-  private[graft] def release(df: DataFrame, local: Boolean): Unit =
-    if (local) checkpointRdds(df).foreach(_.unpersist(blocking = false))
-    else df.unpersist(blocking = false)
+  private[graft] def release(df: DataFrame, local: Boolean,
+      blocking: Boolean = false): Unit =
+    if (local) {
+      // dropped by id: `RDD.unpersist` would warn that a locally
+      // checkpointed RDD cannot be recomputed, which is the point
+      val sc = df.sparkSession.sparkContext
+      df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }
+        .foreach(GraftPlanBridge.dropRdd(sc, _, blocking))
+    } else df.unpersist(blocking)
 
-  /** True while the blocks behind a [[materialize]]d relation are still
-    * held — false once a [[release]] or a [[releaseAll]] sweep dropped
-    * them, so a memoized relation knows to rebuild. */
-  def isLive(df: DataFrame): Boolean = isLive(df, isLocal(df))
-
-  private[graft] def isLive(df: DataFrame, local: Boolean): Boolean =
-    if (local) checkpointRdds(df).forall(_.getStorageLevel != StorageLevel.NONE)
-    else df.storageLevel != StorageLevel.NONE
-
-  /** Drop every cached relation and persisted RDD of the session — the
-    * per-row sweep of the batch harnesses (Bench, Verify), so one row's
-    * materializations never tax the next. */
-  def releaseAll(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+  /** Runs `body` as one unit of work — a harness row — and releases,
+    * blocking, every relation this thread [[materialize]]d inside it,
+    * however `body` ends. Scopes nest; outside any scope nothing is
+    * recorded and a caller releases its own cuts (serving, streaming).
+    *
+    * Why the row is the lifetime: every row builds its plan from the
+    * sources again, so a previous row's blocks are dead weight. On the
+    * sf5.0 rung a median-of-3 row that kept three iterations of
+    * multi-GB block residue on a 16 GB heap drove ParallelGC into a
+    * full-collection spiral. */
+  def scoped[T](body: => T): T = {
+    val outer = current.get
+    val cuts = ArrayBuffer.empty[(DataFrame, Boolean)]
+    current.set(cuts)
+    try body
+    finally {
+      if (outer == null) current.remove() else current.set(outer)
+      cuts.foreach { case (df, local) => release(df, local, blocking = true) }
+    }
   }
-
-  private def checkpointRdds(df: DataFrame) =
-    df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
 }

@@ -10,6 +10,9 @@ class OperatorSemanticsSpec extends AnyFunSuite {
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 
+  /** The trained SPM model, built once for the specs that inspect it. */
+  private lazy val spmModel = graft.operators.SpmTokenizer.model(spark, sf)
+
   test("recursive CTE fixpoint yields 1..20") {
     val rows = run("q_recursive_cte").collect().map(r => (r.getInt(0), r.getInt(1))).sorted
     assert(rows.map(_._1).toSeq == (1 to 20))
@@ -893,7 +896,7 @@ class OperatorSemanticsSpec extends AnyFunSuite {
 
   test("spm tokenizer: the engine's Viterbi equals an exact driver-side DP") {
     import graft.operators.SpmTokenizer
-    val (sc2, npieces) = SpmTokenizer.modelForTest(spark, sf)
+    val (sc2, npieces) = spmModel
     // the final model prunes multi-char pieces never chosen in round 1
     // (single chars always survive) — the reference DP must see the
     // same transition set
@@ -942,24 +945,20 @@ class OperatorSemanticsSpec extends AnyFunSuite {
     }
   }
 
-  test("spm model cache survives a full unpersist sweep (bench dropResidue)") {
-    import graft.operators.SpmTokenizer
-    // prime the cache and remember an answer
-    val before = run("t_spm_encode").orderBy("doc_id").limit(5).collect()
-      .map(r => (r.get(0), r.getAs[Long]("n_spm_tokens"))).toSeq
-    // the bench harness unpersists EVERY persistent RDD between rows;
-    // a localCheckpoint-backed cache has truncated lineage and cannot
-    // recompute — model() must detect the eviction and rebuild instead
-    // of throwing (round-15 t_spm_encode = -1.0)
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    val after = run("t_spm_encode").orderBy("doc_id").limit(5).collect()
-      .map(r => (r.get(0), r.getAs[Long]("n_spm_tokens"))).toSeq
-    assert(after == before,
-      s"post-eviction encode diverged: $after vs $before")
-    // and the rebuilt model is a usable cache again
-    val (sc2, _) = SpmTokenizer.modelForTest(spark, sf)
-    assert(sc2.limit(1).count() == 1)
+  test("spm rows train the model they read, in every row scope") {
+    import graft.util.Reuse
+    def encode() = Reuse.scoped(run("t_spm_encode").orderBy("doc_id")
+      .limit(5).collect().map(r => (r.get(0), r.getAs[Long]("n_spm_tokens"))).toSeq)
+    val first = encode()
+    // the first scope dropped its model's blocks: a model kept across
+    // rows would now read truncated lineage and throw
+    assert(encode() == first)
+    // the row's vocabulary is the model the spec builds on its own
+    val (sc2, _) = spmModel
+    val want = sc2.orderBy(col("rc").desc, col("piece")).limit(50)
+      .select("piece").collect().map(_.getString(0)).toSeq
+    val got = Reuse.scoped(run("t_spm_train").collect().map(_.getString(0)).toSeq)
+    assert(got == want)
   }
 
   test("resize kernel emits fixed-size deterministic thumbnails") {

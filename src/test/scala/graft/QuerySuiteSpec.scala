@@ -21,9 +21,15 @@ object SparkTestSession {
 }
 
 /** One spec per registered operator: every query must plan and execute on
-  * sf0.001 with a sane schema. Targeted value assertions live in the
-  * sibling specs; cross-engine value equality is the DuckDB differential
-  * gate (tools/check.py / the driver). */
+  * sf0.001 with a sane schema, and leave no storage behind once its row
+  * scope ends, as it runs in Bench and Verify. A row may persist or
+  * checkpoint whatever it needs while computing; a persisted RDD that
+  * outlives the scope (an RDD-level cache nobody unpersists, a cut made
+  * outside `Reuse`) taxes every later query's memory until the session
+  * dies. Other suites share the JVM, so each row is held against the
+  * storage held before it, not against a clean slate. Targeted value
+  * assertions live in the sibling specs; cross-engine value equality is
+  * the DuckDB differential gate (tools/check.py). */
 class QuerySuiteSpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -32,12 +38,22 @@ class QuerySuiteSpec extends AnyFunSuite {
 
   SparkEntry.registry.foreach { q =>
     test(s"${q.name} executes") {
-      val df = q.run(spark, sf)
-      assert(df.columns.nonEmpty, "no columns")
-      assert(df.columns.distinct.length == df.columns.length,
-        s"duplicate column names: ${df.columns.mkString(",")}")
-      val n = df.count()
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val n = graft.util.Reuse.scoped {
+        val df = q.run(spark, sf)
+        assert(df.columns.nonEmpty, "no columns")
+        assert(df.columns.distinct.length == df.columns.length,
+          s"duplicate column names: ${df.columns.mkString(",")}")
+        df.count()
+      }
       if (!mayBeEmpty(q.name)) assert(n > 0, s"${q.name} returned 0 rows")
+      val residue = spark.sparkContext.getPersistentRDDs
+        .filterNot { case (id, _) => before(id) }
+      assert(residue.isEmpty,
+        s"${q.name} leaked ${residue.size} persisted RDD(s) past its scope: " +
+          residue.map { case (id, r) =>
+            s"#$id ${r.name} [${r.getStorageLevel.description}]" }
+            .mkString("; "))
     }
   }
 

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** graft.util.Reuse — the one materialization policy: local mode cuts
   * lineage with a localCheckpoint; cluster mode keeps lineage and
   * persists MEMORY_AND_DISK so an executor loss recomputes instead of
-  * killing the query. Release and liveness follow the same mode. */
+  * killing the query. Release follows the same mode, and a scope
+  * releases what its thread materialized inside it. */
 class ReuseSpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -71,20 +72,80 @@ class ReuseSpec extends AnyFunSuite {
     }
   }
 
+  private def persistedIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Ids of the persisted RDDs behind `m`: the cut's `LogicalRDD` leaves in
+    * local mode, the cached relation's buffers in cluster mode. */
+  private def heldIds(m: org.apache.spark.sql.DataFrame, local: Boolean) =
+    if (local) m.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }.toSet
+    else spark.sharedState.cacheManager.lookupCachedData(
+      m.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).toSeq
+      .map(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers.id).toSet
+
+  /** The spec's liveness probe: is every RDD behind `m` still persisted? */
+  private def isLive(m: org.apache.spark.sql.DataFrame, local: Boolean) = {
+    val ids = heldIds(m, local)
+    ids.nonEmpty && ids.subsetOf(persistedIds)
+  }
+
   test("release and isLive follow the mode") {
     Seq(true, false).foreach { local =>
       val m = Reuse.materialize(base, eager = true, local = local)
-      assert(Reuse.isLive(m, local), s"local=$local: live after materialize")
+      assert(isLive(m, local), s"local=$local: live after materialize")
       Reuse.release(m, local)
-      assert(!Reuse.isLive(m, local), s"local=$local: dead after release")
+      assert(!isLive(m, local), s"local=$local: dead after release")
     }
   }
 
+  // The end of a row's scope is the row-end sweep: one scope holding a
+  // cut of each mode drops the cut's blocks and the cached relation.
   test("releaseAll drops cut blocks and cached relations") {
-    val local = Reuse.materialize(base, eager = true, local = true)
-    val cluster = Reuse.materialize(base, eager = true, local = false)
-    Reuse.releaseAll(spark)
-    assert(!Reuse.isLive(local, local = true))
-    assert(!Reuse.isLive(cluster, local = false))
+    var local, cluster: org.apache.spark.sql.DataFrame = null
+    Reuse.scoped {
+      local = Reuse.materialize(base, eager = true, local = true)
+      cluster = Reuse.materialize(base, eager = true, local = false)
+      assert(isLive(local, local = true) && isLive(cluster, local = false))
+    }
+    assert(!isLive(local, local = true))
+    assert(!isLive(cluster, local = false))
+  }
+
+  test("a scope releases its cuts in both modes") {
+    Seq(true, false).foreach { local =>
+      val before = persistedIds
+      var held = Set.empty[Int]
+      val n = Reuse.scoped {
+        val m = Reuse.materialize(base, eager = true, local = local)
+        held = heldIds(m, local)
+        assert(held.nonEmpty && held.subsetOf(persistedIds),
+          s"local=$local: held inside the scope")
+        m.count()
+      }
+      assert(n == 2)
+      assert((held & persistedIds).isEmpty, s"local=$local: released at exit")
+      assert(persistedIds.subsetOf(before), s"local=$local: no residue")
+    }
+  }
+
+  test("a cut made outside any scope survives") {
+    val m = Reuse.materialize(base, eager = true, local = true)
+    try {
+      Reuse.scoped(Reuse.materialize(base, eager = true, local = true).count())
+      assert(isLive(m, local = true))
+      assert(m.count() == 2)
+    } finally Reuse.release(m, local = true)
+  }
+
+  test("a cut made on a thread started inside a scope is not captured") {
+    var m: org.apache.spark.sql.DataFrame = null
+    Reuse.scoped {
+      val t = new Thread(() =>
+        m = Reuse.materialize(base, eager = true, local = true))
+      t.start(); t.join()
+    }
+    try {
+      assert(isLive(m, local = true))
+      assert(m.count() == 2)
+    } finally Reuse.release(m, local = true)
   }
 }

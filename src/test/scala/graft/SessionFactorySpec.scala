@@ -11,7 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    so extensions, AQE and the local-mode heartbeat tolerance cannot
   *    drift apart between entry points.
   *  - Every lineage cut goes through `graft.util.Reuse`, so the
-  *    local-versus-cluster materialization mode is decided in one place.
+  *    local-versus-cluster materialization mode is decided in one place,
+  *    and its blocks live as long as the scope that made it: no main
+  *    sweeps the session's persisted RDDs, and only the Spark shim drops
+  *    blocks by id.
   *  - Shuffle width is set where data is resolved (`Tables`,
   *    `SourceRegistry`), so no main sizes it on its own. */
 class SessionFactorySpec extends AnyFunSuite {
@@ -19,6 +22,8 @@ class SessionFactorySpec extends AnyFunSuite {
   private val owners = Seq(
     "SparkSession.builder()" -> Seq("graft/session/GraftSession.scala"),
     ".localCheckpoint(" -> Seq("graft/util/Reuse.scala"),
+    "getPersistentRDDs" -> Seq("graft/util/Reuse.scala"),
+    "unpersistRDD" -> Seq("org/apache/spark/sql/GraftPlanBridge.scala"),
     "ShuffleWidth.configure" -> Seq("graft/session/ShuffleWidth.scala",
       "graft/Tables.scala", "graft/sources/SourceRegistry.scala"))
 
