@@ -2,6 +2,7 @@ package graft.plans
 
 import scala.jdk.CollectionConverters._
 
+import graft.sources.{RemoteSqlOptions, RemoteSqlSource, RemoteSqlTable}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Cast, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -279,14 +280,9 @@ final case class FederationRule(spark: SparkSession) extends Rule[LogicalPlan] {
       val conf = passThroughConf(leaf) ++
         Map("url" -> leaf.url, "query" -> sql)
       val table = leaf.kind match {
-        case "postgres" =>
-          new graft.sources.pg.PgTable(schema, graft.sources.pg.PgOptions(conf))
-        case "mysql" =>
-          new graft.sources.mysql.MySqlTable(
-            schema, graft.sources.mysql.MySqlOptions(conf))
-        case "clickhouse" =>
-          new graft.sources.clickhouse.ClickHouseTable(
-            schema, graft.sources.clickhouse.ClickHouseOptions(conf))
+        case k if RemoteSqlSource.byKind.contains(k) =>
+          new RemoteSqlTable(schema,
+            RemoteSqlOptions(conf, RemoteSqlSource.byKind(k).wire))
         // engine-to-engine: the collapsed subtree ships as Spark SQL to
         // a remote graft peer over the Arrow-carrying transports — the
         // reference's Flight-to-Flight subplan shipping
@@ -350,9 +346,7 @@ object FederationRule {
   /** The wire-source kind of a DSv2 scan, by its Table class. */
   private def kindOf(r: DataSourceV2Relation): Option[String] =
     r.table match {
-      case _: graft.sources.pg.PgTable => Some("postgres")
-      case _: graft.sources.mysql.MySqlTable => Some("mysql")
-      case _: graft.sources.clickhouse.ClickHouseTable => Some("clickhouse")
+      case t: RemoteSqlTable => Some(t.opts.wire.kind)
       case _: graft.sources.arrowhttp.ArrowHttpTable => Some("arrowhttp")
       case _: graft.sources.flight.FlightTable => Some("flight")
       case _ => None

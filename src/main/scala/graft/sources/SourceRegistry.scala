@@ -102,51 +102,18 @@ final class SourceRegistry(spark: SparkSession) {
           .option("pushDownAggregate", "true")
           .options(src.options)
           .load()
-      case "postgres" | "postgresql" =>
-        // live wire-protocol source (sources/pg) — no driver jar: the
-        // hand-built protocol-v3 client with filter/column/limit pushdown
-        // and optional range-partitioned parallel reads (the reference's
-        // postgres.rs federation stance). partition_column on the table
-        // def rides through as the range-partitioning column.
-        val r = spark.read.format("graft.sources.pg.PgDataSource")
+      case kind if RemoteSqlSource.byKind.contains(kind) =>
+        // live wire-protocol sources (postgres, mysql, clickhouse) — no
+        // driver jar: one shared scan over hand-built clients, with
+        // filter/column/limit pushdown and optional range-partitioned
+        // parallel reads (the reference's sql/ connectors' federation
+        // stance). partition_column on the table def rides through as
+        // the range-partitioning column.
+        val source = RemoteSqlSource.byKind(kind)
+        val r = spark.read.format(source.getClass.getName)
           .option("url", src.url.getOrElse(
             throw new IllegalArgumentException(
-              s"postgres source ${src.name} needs url")))
-          .option("table", t.name)
-          .options(src.options ++
-            t.partitionColumn.map("partitionColumn" -> _).toMap)
-        (t.declaredSchema match {
-          case Some(sc) => r.schema(sc)
-          case None => r
-        }).load()
-      case "mysql" =>
-        // live wire-protocol source (sources/mysql) — the same no-jar
-        // stance as the postgres source: hand-built handshake/auth/
-        // COM_QUERY client with filter/column/limit pushdown and
-        // optional range-partitioned parallel reads (the reference's
-        // mysql.rs connector, there carried by mysql_async)
-        val r = spark.read.format("graft.sources.mysql.MySqlDataSource")
-          .option("url", src.url.getOrElse(
-            throw new IllegalArgumentException(
-              s"mysql source ${src.name} needs url")))
-          .option("table", t.name)
-          .options(src.options ++
-            t.partitionColumn.map("partitionColumn" -> _).toMap)
-        (t.declaredSchema match {
-          case Some(sc) => r.schema(sc)
-          case None => r
-        }).load()
-      case "clickhouse" =>
-        // live native-protocol source (sources/clickhouse) — the same
-        // no-jar stance as postgres/mysql: hand-built Hello/Query/Data
-        // client with filter/column/limit pushdown and optional
-        // range-partitioned parallel reads (the reference's
-        // clickhouse.rs connector, there carried by
-        // datafusion-table-providers)
-        val r = spark.read.format("graft.sources.clickhouse.ClickHouseDataSource")
-          .option("url", src.url.getOrElse(
-            throw new IllegalArgumentException(
-              s"clickhouse source ${src.name} needs url")))
+              s"${source.wire.kind} source ${src.name} needs url")))
           .option("table", t.name)
           .options(src.options ++
             t.partitionColumn.map("partitionColumn" -> _).toMap)

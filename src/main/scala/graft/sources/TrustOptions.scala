@@ -1,7 +1,8 @@
 package graft.sources
 
-/** Shared truststore option parsing for the wire sources (pg, MySQL,
-  * ClickHouse): `truststore`/`trustStore` names a PKCS12 pinning the
+/** Shared truststore option parsing for every source that speaks TLS
+  * (the remote-SQL wires pg, MySQL and ClickHouse; the Flight SQL and
+  * gRPC clients): `truststore`/`trustStore` names a PKCS12 pinning the
   * server's certificate, `truststorePassword`/`trustStorePassword`
   * unlocks it (default "changeit", the JDK keytool default). One
   * definition so the option aliases and defaults can't drift between

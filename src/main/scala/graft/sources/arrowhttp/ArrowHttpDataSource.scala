@@ -6,6 +6,8 @@ import java.nio.charset.StandardCharsets
 import java.util
 import scala.jdk.CollectionConverters._
 
+import graft.sources.RemoteSqlSource
+import graft.sql.SparkDialect
 import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector._
 import org.apache.arrow.vector.ipc.ArrowStreamReader
@@ -13,7 +15,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -110,11 +112,15 @@ final class ArrowHttpScanBuilder(fullSchema: StructType, opts: ArrowHttpOptions)
   // genuinely capped full scans.
   override def pushLimit(n: Int): Boolean = { limit = Some(n); true }
 
+  // the remote reads Spark SQL, where a backslash in a string literal is
+  // an escape: SparkDialect doubles it, so a pushed value means the same
+  // on both sides and the pushdown stays exact
+  private def where(f: Filter): Option[String] =
+    RemoteSqlSource.whereClause(f, SparkDialect, ArrowHttpScanBuilder.literal)
+
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(whereClause(_).isDefined)
-    // EXACT pushdown for the accepted comparisons: the remote engine
-    // evaluates the same predicate semantics, so Spark needn't re-filter
-    filters.filter(whereClause(_).isEmpty)
+    pushed = filters.filter(where(_).isDefined)
+    filters.filter(where(_).isEmpty)
   }
   override def pushedFilters(): Array[Filter] = pushed
 
@@ -122,36 +128,15 @@ final class ArrowHttpScanBuilder(fullSchema: StructType, opts: ArrowHttpOptions)
     required = requiredSchema
 
   override def build(): Scan =
-    new ArrowHttpScan(required, opts, pushed.flatMap(whereClause).toSeq, limit)
+    new ArrowHttpScan(required, opts, pushed.flatMap(where).toSeq, limit)
+}
 
-  /** filter -> SQL predicate; None keeps it in Spark. */
-  private def whereClause(f: Filter): Option[String] = {
-    def lit(v: Any): Option[String] = v match {
-      case s: String => Some("'" + s.replace("'", "''") + "'")
-      case n @ (_: Int | _: Long | _: Short | _: Byte) => Some(n.toString)
-      // doubles as an explicit string cast: Double.toString round-trips
-      // exactly through string->double, while a bare 1.1 literal parses
-      // as DECIMAL on the remote side; non-finite values have no SQL
-      // literal, and FLOAT comparisons are precision-hazardous (the
-      // remote widens the column to double) — both stay in Spark
-      case d: Double if !d.isNaN && !d.isInfinite =>
-        Some(s"CAST('$d' AS DOUBLE)")
-      case d: java.math.BigDecimal => Some(d.toPlainString)
-      case b: Boolean => Some(b.toString)
-      case _ => None
-    }
-    def col(c: String): Option[String] =
-      try { graft.util.Sanitize.validateIdentifier(c); Some(s"`$c`") }
-      catch { case _: Exception => None }
-    f match {
-      case EqualTo(c, v) => for (cc <- col(c); vv <- lit(v)) yield s"$cc = $vv"
-      case GreaterThan(c, v) => for (cc <- col(c); vv <- lit(v)) yield s"$cc > $vv"
-      case GreaterThanOrEqual(c, v) => for (cc <- col(c); vv <- lit(v)) yield s"$cc >= $vv"
-      case LessThan(c, v) => for (cc <- col(c); vv <- lit(v)) yield s"$cc < $vv"
-      case LessThanOrEqual(c, v) => for (cc <- col(c); vv <- lit(v)) yield s"$cc <= $vv"
-      case IsNotNull(c) => col(c).map(cc => s"$cc IS NOT NULL")
-      case _ => None
-    }
+object ArrowHttpScanBuilder {
+  /** Doubles travel as an explicit string cast: Double.toString
+    * round-trips exactly through string->double, while a bare 1.1 literal
+    * parses as DECIMAL on the remote side. */
+  val literal: PartialFunction[Any, String] = {
+    case d: Double if !d.isNaN && !d.isInfinite => s"CAST('$d' AS DOUBLE)"
   }
 }
 

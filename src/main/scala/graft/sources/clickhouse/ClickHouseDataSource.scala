@@ -1,235 +1,52 @@
 package graft.sources.clickhouse
 
-import java.util
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources._
+import graft.sources.{RemoteResult, RemoteSqlOptions, RemoteSqlSource, RemoteSqlWire}
+import graft.sql.ClickHouseDialect
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DSv2 ClickHouse source over the hand-built native-protocol client —
-  * the live Spark analog of the reference's clickhouse connector
-  * (clickhouse.rs:28-217): filter/column/limit pushdown rewrites the
-  * remote SQL, range partitioning parallelizes the read. Same option
-  * surface as the pg/mysql sources. Schema inference runs
-  * `SELECT * FROM t LIMIT 0` — native blocks carry (name, type) even
-  * with zero rows. */
-class ClickHouseDataSource extends TableProvider {
+/** The ClickHouse source: the shared remote-SQL scan over the hand-built
+  * native-protocol client (the reference's clickhouse.rs:28-217, there
+  * carried by datafusion-table-providers). */
+class ClickHouseDataSource extends RemoteSqlSource(ClickHouseRemote)
 
-  override def supportsExternalMetadata(): Boolean = true
+/** ClickHouse's wire for [[RemoteSqlSource]]: `clickhouse://` urls,
+  * native blocks that carry (name, type) even with zero rows, cells
+  * already decoded to JVM values.
+  *
+  * `truststore` makes the connection TLS from the first byte
+  * (ClickHouse's secure port 9440 model); `compress` (default true, the
+  * posture of real deployments; `false` for debugging against plain
+  * captures) sets LZ4 wire compression. */
+object ClickHouseRemote extends RemoteSqlWire("clickhouse", "clickhouse", ClickHouseDialect) {
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val opts = ClickHouseOptions(options.asCaseSensitiveMap().asScala.toMap)
-    val conn = ClickHouseWireConnection.connect(opts.connInfo, compress = opts.compress,
-      ssl = opts.sslContext)
-    try conn.query(s"SELECT * FROM ${opts.fromClause} LIMIT 0").sparkSchema
-    finally conn.close()
+  override val literal: PartialFunction[Any, String] = {
+    case d: java.sql.Date => s"toDate32('${d.toLocalDate}')"
+    case d: java.time.LocalDate => s"toDate32('$d')"
   }
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new ClickHouseTable(schema, ClickHouseOptions(properties.asScala.toMap))
-}
-
-final case class ClickHouseOptions(conf: Map[String, String]) {
-  val url: String = conf.getOrElse("url",
-    throw new IllegalArgumentException("graft-clickhouse: missing option 'url'"))
-  val connInfo: ClickHouseConnInfo = ClickHouseConnInfo.parse(url)
-  val table: Option[String] = conf.get("table").orElse(conf.get("dbtable"))
-  val query: Option[String] = conf.get("query")
-  require(table.isDefined || query.isDefined,
-    "graft-clickhouse: need option 'table' or 'query'")
-  table.foreach(graft.util.Sanitize.validateIdentifier)
-
-  def fromClause: String = table match {
-    case Some(t) => ClickHouseSql.quote(t)
-    case None => s"(${query.get}) AS graft_q"
+  def address(url: String): String = {
+    val i = ClickHouseConnInfo.parse(url)
+    s"${i.host}:${i.port}/${i.database}"
   }
 
-  /** LZ4 wire compression (`compress`, default true — the posture of
-    * real deployments; `false` for debugging against plain captures). */
-  val compress: Boolean =
+  private def compress(conf: Map[String, String]): Boolean =
     conf.getOrElse("compress", "true").toBoolean
 
-  /** `truststore`(+`truststorePassword`): a PKCS12 pinning the server's
-    * certificate — presence makes the connection TLS from the first
-    * byte (ClickHouse's secure port 9440 model). Rebuilt per use:
-    * options serialize to executors, SSLContext does not. */
-  def sslContext: Option[javax.net.ssl.SSLContext] =
-    graft.sources.TrustOptions.sslContext(conf)
+  override def check(opts: RemoteSqlOptions): Unit = compress(opts.conf)
 
-  val partitionColumn: Option[String] =
-    conf.get("partitionColumn").map(graft.util.Sanitize.validateIdentifier)
-  val numPartitions: Int = conf.get("numPartitions").map(_.toInt).getOrElse(1)
-  val lowerBound: Option[Long] = conf.get("lowerBound").map(_.toLong)
-  val upperBound: Option[Long] = conf.get("upperBound").map(_.toLong)
-  require(numPartitions == 1 ||
-    (partitionColumn.isDefined && lowerBound.isDefined && upperBound.isDefined),
-    "graft-clickhouse: numPartitions > 1 needs partitionColumn, lowerBound, upperBound")
-}
-
-/** ClickHouse-dialect SQL fragments for pushdown: backtick quoting
-  * (ClickHouse accepts both backticks and double quotes), same
-  * exactly-translatable predicate subset as the pg/mysql sources. */
-object ClickHouseSql {
-  def quote(ident: String): String =
-    "`" + graft.util.Sanitize.validateIdentifier(ident) + "`"
-
-  def whereClause(f: Filter): Option[String] = {
-    def lit(v: Any): Option[String] = v match {
-      case s: String => Some("'" +
-        s.replace("\\", "\\\\").replace("'", "''") + "'")
-      case n @ (_: Int | _: Long | _: Short | _: Byte) => Some(n.toString)
-      case d: Double if !d.isNaN && !d.isInfinite => Some(d.toString)
-      case d: java.math.BigDecimal => Some(d.toPlainString)
-      case b: Boolean => Some(if (b) "true" else "false")
-      case d: java.sql.Date => Some(s"toDate32('${d.toLocalDate}')")
-      case d: java.time.LocalDate => Some(s"toDate32('$d')")
-      case _ => None
+  def run(opts: RemoteSqlOptions, sql: String): RemoteResult = {
+    val conn = ClickHouseWireConnection.connect(ClickHouseConnInfo.parse(opts.url),
+      compress = compress(opts.conf), ssl = opts.sslContext)
+    val result = RemoteSqlWire.onOpen(conn)(_.query(sql))
+    new RemoteResult {
+      def columns: Seq[String] = result.columns.map(_._1)
+      def schema: StructType = result.sparkSchema
+      def rows(types: Array[DataType]): Iterator[Array[Any]] =
+        result.rows.iterator.map(raw =>
+          Array.tabulate[Any](types.length)(i => toCatalyst(raw(i), types(i))))
+      def close(): Unit = conn.close()
     }
-    def col(c: String): Option[String] =
-      try Some(quote(c)) catch { case _: Exception => None }
-    f match {
-      case EqualTo(c, v) => for (cc <- col(c); vv <- lit(v)) yield s"$cc = $vv"
-      case GreaterThan(c, v) => for (cc <- col(c); vv <- lit(v)) yield s"$cc > $vv"
-      case GreaterThanOrEqual(c, v) => for (cc <- col(c); vv <- lit(v)) yield s"$cc >= $vv"
-      case LessThan(c, v) => for (cc <- col(c); vv <- lit(v)) yield s"$cc < $vv"
-      case LessThanOrEqual(c, v) => for (cc <- col(c); vv <- lit(v)) yield s"$cc <= $vv"
-      case IsNull(c) => col(c).map(cc => s"$cc IS NULL")
-      case IsNotNull(c) => col(c).map(cc => s"$cc IS NOT NULL")
-      case In(c, vs) if vs.nonEmpty =>
-        val lits = vs.toSeq.map(lit)
-        for (cc <- col(c) if lits.forall(_.isDefined))
-          yield s"$cc IN (${lits.flatten.mkString(", ")})"
-      case And(l, r) =>
-        for (ll <- whereClause(l); rr <- whereClause(r)) yield s"($ll AND $rr)"
-      case Or(l, r) =>
-        for (ll <- whereClause(l); rr <- whereClause(r)) yield s"($ll OR $rr)"
-      case _ => None
-    }
-  }
-}
-
-final class ClickHouseTable(schema: StructType, opts: ClickHouseOptions)
-    extends Table with SupportsRead {
-  override def name(): String =
-    s"clickhouse(${opts.connInfo.host}:${opts.connInfo.port}/" +
-      s"${opts.connInfo.database}#${opts.table.getOrElse("<query>")})"
-  override def schema(): StructType = schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ClickHouseScanBuilder(schema, opts)
-}
-
-final class ClickHouseScanBuilder(fullSchema: StructType,
-    opts: ClickHouseOptions) extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns with SupportsPushDownLimit {
-
-  private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = fullSchema
-  private var limit: Option[Int] = None
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(ClickHouseSql.whereClause(_).isDefined)
-    filters.filter(ClickHouseSql.whereClause(_).isEmpty)
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    if (requiredSchema.nonEmpty) required = requiredSchema
-  override def pushLimit(n: Int): Boolean = { limit = Some(n); true }
-
-  override def build(): Scan = new ClickHouseScan(required, opts,
-    pushed.flatMap(ClickHouseSql.whereClause).toSeq, limit)
-}
-
-final class ClickHouseScan(schema: StructType, opts: ClickHouseOptions,
-    wheres: Seq[String], limit: Option[Int]) extends Scan with Batch {
-  override def readSchema(): StructType = schema
-  override def toBatch: Batch = this
-  override def description(): String = s"ClickHouseScan(${sqlFor(None)})"
-
-  override def planInputPartitions(): Array[InputPartition] =
-    rangePredicates.map(r =>
-      ClickHouseInputPartition(opts, sqlFor(r))).toArray
-
-  private def rangePredicates: Seq[Option[String]] =
-    if (opts.numPartitions <= 1) Seq(None)
-    else {
-      val col = ClickHouseSql.quote(opts.partitionColumn.get)
-      val lo = opts.lowerBound.get
-      val hi = opts.upperBound.get
-      val n = opts.numPartitions.toLong
-      val stride = math.max(1L, (hi - lo) / n)
-      (0L until n).map { i =>
-        val from = lo + i * stride
-        val to = from + stride
-        if (n == 1) None
-        else if (i == 0) Some(s"($col < $to OR $col IS NULL)")
-        else if (i == n - 1) Some(s"$col >= $from")
-        else Some(s"$col >= $from AND $col < $to")
-      }
-    }
-
-  private def sqlFor(range: Option[String]): String = {
-    val cols =
-      if (schema.fields.isEmpty) "1"
-      else schema.fieldNames.map(ClickHouseSql.quote).mkString(", ")
-    val preds = wheres ++ range.map(r => s"($r)")
-    val where = if (preds.isEmpty) "" else preds.mkString(" WHERE ", " AND ", "")
-    val fetch = limit.map(n => s" LIMIT $n").getOrElse("")
-    s"SELECT $cols FROM ${opts.fromClause}$where$fetch"
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val s = schema
-    (p: InputPartition) => {
-      val pp = p.asInstanceOf[ClickHouseInputPartition]
-      new ClickHousePartitionReader(s, pp.opts, pp.sql)
-    }
-  }
-}
-
-final case class ClickHouseInputPartition(opts: ClickHouseOptions,
-    sql: String) extends InputPartition
-
-final class ClickHousePartitionReader(schema: StructType,
-    opts: ClickHouseOptions, sql: String) extends PartitionReader[InternalRow] {
-
-  private var conn: ClickHouseWireConnection = _
-  private var rows: Iterator[Array[Any]] = _
-  private var fieldTypes: Array[DataType] = _
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    if (rows == null) {
-      conn = ClickHouseWireConnection.connect(opts.connInfo, compress = opts.compress,
-      ssl = opts.sslContext)
-      val result = conn.query(sql)
-      val got = result.columns.map(_._1)
-      val want = schema.fieldNames.toSeq
-      if (schema.fields.nonEmpty && got != want)
-        throw new ClickHouseProtocolException(
-          s"clickhouse: server returned columns $got, expected $want")
-      fieldTypes = schema.fields.map(_.dataType)
-      rows = result.rows.iterator
-    }
-    if (rows.hasNext) {
-      val raw = rows.next()
-      val values = new Array[Any](fieldTypes.length)
-      var i = 0
-      while (i < fieldTypes.length) {
-        values(i) = toCatalyst(raw(i), fieldTypes(i))
-        i += 1
-      }
-      current = InternalRow.fromSeq(values.toIndexedSeq)
-      true
-    } else false
   }
 
   /** External decode value → Catalyst internal. */
@@ -246,7 +63,4 @@ final class ClickHousePartitionReader(schema: StructType,
         Decimal(v.asInstanceOf[java.math.BigDecimal], d.precision, d.scale)
       case _ => v // ints, longs, floats, doubles, booleans pass through
     }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = if (conn != null) conn.close()
 }

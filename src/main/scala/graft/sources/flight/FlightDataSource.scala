@@ -69,10 +69,7 @@ final case class FlightOptions(conf: Map[String, String]) {
     * the JVM default truststore. Rebuilt per use — options serialize to
     * executors, SSLContext does not. */
   def sslContext: Option[javax.net.ssl.SSLContext] =
-    conf.get("truststore").orElse(conf.get("trustStore")).map(p =>
-      graft.sources.grpc.Http2Grpc.trustContext(p,
-        conf.getOrElse("truststorePassword",
-          conf.getOrElse("trustStorePassword", "changeit"))))
+    graft.sources.TrustOptions.sslContext(conf)
 }
 
 final class FlightTable(schema: StructType, opts: FlightOptions)

@@ -84,10 +84,7 @@ final case class GrpcOptions(conf: Map[String, String]) {
     * Rebuilt per use — options serialize to executors, SSLContext
     * does not. */
   def sslContext: Option[javax.net.ssl.SSLContext] =
-    conf.get("truststore").orElse(conf.get("trustStore")).map(p =>
-      Http2Grpc.trustContext(p,
-        conf.getOrElse("truststorePassword",
-          conf.getOrElse("trustStorePassword", "changeit"))))
+    graft.sources.TrustOptions.sslContext(conf)
 
   val transport: String = conf.getOrElse("transport", "http1") match {
     case t @ ("http1" | "h2c") => t

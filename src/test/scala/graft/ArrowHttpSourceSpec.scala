@@ -74,6 +74,31 @@ class ArrowHttpSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.count() == 0) // no match, and no injection/parse failure
   }
 
+  test("pushed string filters keep backslashes: rows match the local query") {
+    import spark.implicits._
+    // the remote reads Spark SQL, where a backslash in a literal is an
+    // escape: 'C:\tmp' unescaped would compare against a tab, and a
+    // value ending in \' would close the literal early
+    Seq("""C:\tmp""" -> 1, "C:\tmp" -> 2, """x\' OR 1=1 --""" -> 3, "plain" -> 4)
+      .toDF("p", "n").createOrReplaceTempView("bs_paths")
+    def both(f: org.apache.spark.sql.Column): (Seq[Int], Seq[Int]) = {
+      def ns(df: org.apache.spark.sql.DataFrame) =
+        df.filter(f).select("n").collect().map(_.getInt(0)).toSeq.sorted
+      (ns(remote("bs_paths")), ns(spark.table("bs_paths")))
+    }
+    val (got, want) = both(col("p") === """C:\tmp""")
+    assert(got == want && want == Seq(1), s"remote $got, local $want")
+    val (got2, want2) = both(col("p") === """x\' OR 1=1 --""")
+    assert(got2 == want2 && want2 == Seq(3), s"remote $got2, local $want2")
+    // IN and OR are pushed now too, and still read the same rows
+    val inOr = col("p").isin("""C:\tmp""", "plain") || col("n") === 3
+    val pushed = remote("bs_paths").filter(inOr).queryExecution.executedPlan
+      .collectLeaves().map(_.toString).mkString
+    assert(pushed.contains(" IN (") && pushed.contains(" OR "), pushed)
+    val (got3, want3) = both(inOr)
+    assert(got3 == want3 && want3 == Seq(1, 3, 4), s"remote $got3, local $want3")
+  }
+
   test("a truncated remote result fails the scan loudly") {
     // a second server whose cap is below the table size: consuming the
     // capped stream would silently mis-count downstream, so the source

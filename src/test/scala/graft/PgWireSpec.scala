@@ -3,7 +3,6 @@ package graft
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
@@ -181,26 +180,6 @@ class PgWireSpec extends AnyFunSuite {
     assert(PgTypes.sparkTypeOf(PgTypes.JsonbOid, -1) == StringType)
     // complex Spark types serve as text
     assert(PgTypes.oidOf(ArrayType(IntegerType)) == (PgTypes.TextOid, -1))
-  }
-
-  // ------------------------------------------------------------ pushdown
-
-  test("filters translate to pg WHERE fragments exactly or not at all") {
-    assert(PgSql.whereClause(EqualTo("c", 5)).contains("\"c\" = 5"))
-    assert(PgSql.whereClause(EqualTo("c", "o'brien"))
-      .contains("\"c\" = 'o''brien'"))
-    assert(PgSql.whereClause(In("c", Array(1, 2, 3)))
-      .contains("\"c\" IN (1, 2, 3)"))
-    assert(PgSql.whereClause(And(GreaterThan("a", 1), IsNull("b")))
-      .contains("(\"a\" > 1 AND \"b\" IS NULL)"))
-    // doubles travel as an explicit round-trippable cast
-    assert(PgSql.whereClause(LessThan("a", 1.5))
-      .contains("\"a\" < CAST('1.5' AS double precision)"))
-    // not exactly translatable → stays in Spark
-    assert(PgSql.whereClause(EqualTo("a", Double.NaN)).isEmpty)
-    assert(PgSql.whereClause(StringContains("a", "x")).isEmpty)
-    // a malicious column name cannot reach the remote SQL
-    assert(PgSql.whereClause(EqualTo("a\"; DROP TABLE t; --", 1)).isEmpty)
   }
 
   test("connection urls parse with defaults") {

@@ -29,13 +29,6 @@ class ReachabilitySpec extends AnyFunSuite {
     "graft/streaming/NearDupStream.scala" -> streaming,
     "graft/streaming/DocumentStream.scala" -> streaming)
 
-  /** Not reached and not a root: named here until it is wired into a
-    * path that a main, the registry or an edge reaches, or deleted
-    * (ROADMAP item 7). Its nested constraint classes share names with
-    * Catalyst's `In` and the SQL AST's `Between`, which hid it from a
-    * scan over every declared name. */
-  private val unwired = Set("graft/session/Contracts.scala")
-
   private val mainRoot = Paths.get("src/main/scala")
 
   private def read(p: Path): String =
@@ -151,11 +144,8 @@ class ReachabilitySpec extends AnyFunSuite {
     assert(mainFiles.forall(_.names.nonEmpty),
       s"no top-level declaration found: ${mainFiles.filter(_.names.isEmpty).map(_.rel)}")
     val unreached = mainFiles.filterNot(f => exempt(f) || named(f)).map(_.rel)
-    val unexpected = unreached.filterNot(unwired)
-    assert(unexpected.isEmpty,
-      s"main files nothing reaches (wire them in or delete them): $unexpected")
-    assert(unwired.forall(unreached.contains),
-      s"reached now, drop from the unwired list: ${unwired.filterNot(unreached.contains)}")
+    assert(unreached.isEmpty,
+      s"main files nothing reaches (wire them in or delete them): $unreached")
   }
 
   test("each root is a main file the name scan alone would not reach") {

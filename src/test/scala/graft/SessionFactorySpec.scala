@@ -16,7 +16,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    sweeps the session's persisted RDDs, and only the Spark shim drops
   *    blocks by id.
   *  - Shuffle width is set where data is resolved (`Tables`,
-  *    `SourceRegistry`), so no main sizes it on its own. */
+  *    `SourceRegistry`), so no main sizes it on its own.
+  *  - Filter pushdown into remote SQL is rendered in one place
+  *    (`RemoteSqlSource.whereClause`, quoting and escaping from
+  *    `graft.sql.Dialects`), so no source keeps its own copy. */
 class SessionFactorySpec extends AnyFunSuite {
 
   private val owners = Seq(
@@ -25,7 +28,8 @@ class SessionFactorySpec extends AnyFunSuite {
     "getPersistentRDDs" -> Seq("graft/util/Reuse.scala"),
     "unpersistRDD" -> Seq("org/apache/spark/sql/GraftPlanBridge.scala"),
     "ShuffleWidth.configure" -> Seq("graft/session/ShuffleWidth.scala",
-      "graft/Tables.scala", "graft/sources/SourceRegistry.scala"))
+      "graft/Tables.scala", "graft/sources/SourceRegistry.scala"),
+    "def whereClause" -> Seq("graft/sources/RemoteSqlSource.scala"))
 
   owners.foreach { case (token, files) =>
     test(s"$token appears only in " +
