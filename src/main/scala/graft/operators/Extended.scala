@@ -593,7 +593,7 @@ object Extended {
         def appendFiltered(pred: String, ts: Long,
             tag: Option[String]): Unit = {
           val df = t(s, dir).nation.filter(pred)
-          IcebergLocal.append(tableDir, stageFiles(df, "snap"), ts, tag,
+          IcebergCommit.local(tableDir).append(stageFiles(df, "snap"), ts, tag,
             schema = Some(df.schema))
         }
         appendFiltered("n_regionkey < 2", ts = 1000L, tag = Some("v1"))
@@ -633,7 +633,7 @@ object Extended {
       val data = t(s, dir).customer.select(cols.map(col): _*)
         .orderBy("c_custkey")
       val dataFiles = stageFiles(data, "mor_data")
-      IcebergLocal.append(tableDir, dataFiles,
+      IcebergCommit.local(tableDir).append(dataFiles,
         timestampMs = 1000L, schema = Some(data.schema))
       // positional deletes: the file is custkey-sorted, so position =
       // rank - 1; remove every custkey divisible by 7.
@@ -650,12 +650,12 @@ object Extended {
         .filter(col("c_custkey") % 7 === 0)
         .select(lit(dataFiles.head.path).as("file_path"),
           col("pos").cast("long").as("pos"))
-      IcebergLocal.append(tableDir,
+      IcebergCommit.local(tableDir).append(
         stageFiles(posDel, "mor_posdel").map(_.copy(content = 1)),
         timestampMs = 2000L)
       // equality deletes: drop one market segment via field id 4
       // (c_mktsegment is the 4th field of the committed schema)
-      IcebergLocal.append(tableDir,
+      IcebergCommit.local(tableDir).append(
         stageFiles(s.range(1).select(lit("BUILDING").as("c_mktsegment")),
           "mor_eqdel").map(_.copy(content = 2, equalityIds = Seq(4))),
         timestampMs = 3000L)
@@ -690,11 +690,12 @@ object Extended {
         var now = 0L
         val clock = () => { now += 1000L; now }
         val committer = graft.streaming.IcebergSink.upsertCommitter(
-          tableDir, keyCols = Seq("c_custkey"), clock = clock)
+          IcebergCommit.local(tableDir), keyCols = Seq("c_custkey"),
+          clock = clock)
         committer(base, 0L)
         committer(base.filter(col("c_custkey") % 10 === 3)
           .withColumn("c_acctbal", col("c_acctbal") + lit(100.0)), 1L)
-        IcebergMaintenance.compact(s, tableDir, clock)
+        IcebergMaintenance.compact(s, IcebergCommit.local(tableDir), clock)
       }
       IcebergRest.readLocal(s, warehouse.resolve("customer"))
     },
@@ -715,13 +716,13 @@ object Extended {
         val tableDir = wh.resolve("customer")
         val data = t(s, dir).customer
           .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-        IcebergLocal.append(tableDir, stageFiles(data, "del_data"),
+        IcebergCommit.local(tableDir).append(stageFiles(data, "del_data"),
           timestampMs = 1000L, schema = Some(data.schema))
         var now = 1000L
         val clock = () => { now += 1000L; now }
-        IcebergMaintenance.deleteWhere(s, tableDir,
+        IcebergMaintenance.deleteWhere(s, IcebergCommit.local(tableDir),
           "c_mktsegment = 'MACHINERY'", clock)
-        IcebergMaintenance.deleteWhere(s, tableDir,
+        IcebergMaintenance.deleteWhere(s, IcebergCommit.local(tableDir),
           "c_custkey % 13 = 0", clock)
       }
       IcebergRest.readLocal(s, warehouse.resolve("customer"))
@@ -745,15 +746,16 @@ object Extended {
         val tableDir = wh.resolve("customer")
         val data = t(s, dir).customer
           .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-        IcebergLocal.append(tableDir, stageFiles(data, "pdr_data"),
+        IcebergCommit.local(tableDir).append(stageFiles(data, "pdr_data"),
           timestampMs = 1000L, schema = Some(data.schema))
         var now = 1000L
         val clock = () => { now += 1000L; now }
-        IcebergMaintenance.deleteWhere(s, tableDir,
+        IcebergMaintenance.deleteWhere(s, IcebergCommit.local(tableDir),
           "c_mktsegment = 'HOUSEHOLD'", clock)
-        IcebergMaintenance.deleteWhere(s, tableDir,
+        IcebergMaintenance.deleteWhere(s, IcebergCommit.local(tableDir),
           "c_custkey % 7 = 0", clock)
-        IcebergMaintenance.rewritePositionDeletes(s, tableDir, clock)
+        IcebergMaintenance.rewritePositionDeletes(s,
+          IcebergCommit.local(tableDir), clock)
       }
       IcebergRest.readLocal(s, warehouse.resolve("customer"))
     },
@@ -773,13 +775,13 @@ object Extended {
         val tableDir = wh.resolve("customer")
         val data = t(s, dir).customer
           .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
-        IcebergLocal.append(tableDir,
+        IcebergCommit.local(tableDir).append(
           stageFiles(data.filter(col("c_nationkey") < 13), "m"), 1000L,
           schema = Some(data.schema))
-        IcebergLocal.append(tableDir,
+        IcebergCommit.local(tableDir).append(
           stageFiles(data.filter(col("c_nationkey") >= 13), "a"), 2000L,
           schema = Some(data.schema), branch = Some("audit"))
-        IcebergLocal.fastForward(tableDir, "audit")
+        IcebergCommit.local(tableDir).fastForward("audit")
       }
       IcebergRest.readLocal(s, warehouse.resolve("customer"))
     },
@@ -798,13 +800,13 @@ object Extended {
         val tableDir = wh.resolve("nation")
         val data = t(s, dir).nation
           .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-        IcebergLocal.append(tableDir,
+        IcebergCommit.local(tableDir).append(
           stageFiles(data.filter(col("n_regionkey") < 2), "a"), 1000L,
           schema = Some(data.schema))
-        IcebergLocal.append(tableDir,
+        IcebergCommit.local(tableDir).append(
           stageFiles(data.filter(col("n_regionkey") >= 2), "b"), 2000L,
           schema = Some(data.schema))
-        IcebergLocal.rollbackTo(tableDir, 1L)
+        IcebergCommit.local(tableDir).rollbackTo(1L)
       }
       IcebergRest.readLocal(s, warehouse.resolve("nation"))
     },
@@ -833,20 +835,20 @@ object Extended {
         val tableDir = wh.resolve("nation")
         val data = t(s, dir).nation
           .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-        IcebergLocal.append(tableDir,
+        IcebergCommit.local(tableDir).append(
           stageFiles(data.filter(col("n_regionkey") === 0), "a"), 1000L,
           schema = Some(data.schema))
-        IcebergLocal.append(tableDir,
+        IcebergCommit.local(tableDir).append(
           stageFiles(data.filter(col("n_regionkey") === 1), "b"), 2000L,
           schema = Some(data.schema), branch = Some("audit"))
-        IcebergLocal.append(tableDir,
+        IcebergCommit.local(tableDir).append(
           stageFiles(data.filter(col("n_regionkey") === 2), "c"), 3000L,
           schema = Some(data.schema), branch = Some("audit"))
-        IcebergLocal.fastForward(tableDir, "audit", timestampMs = 4000L)
-        IcebergLocal.append(tableDir,
+        IcebergCommit.local(tableDir).fastForward("audit", timestampMs = 4000L)
+        IcebergCommit.local(tableDir).append(
           stageFiles(data.filter(col("n_regionkey") === 3), "d"), 5000L,
           schema = Some(data.schema))
-        IcebergLocal.rollbackTo(tableDir, 3L, timestampMs = 6000L)
+        IcebergCommit.local(tableDir).rollbackTo(3L, timestampMs = 6000L)
       }
       IcebergRest.metaTable(s, warehouse.resolve("nation"), "history")
     },
@@ -915,12 +917,12 @@ object Extended {
         val data = t(s, dir).nation
           .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
         (0 to 3).foreach { i =>
-          IcebergLocal.append(tableDir,
+          IcebergCommit.local(tableDir).append(
             stageFiles(data.filter(col("n_regionkey") === i), s"c$i"),
             (i + 1) * 1000L, schema = Some(data.schema),
             tag = if (i == 1) Some("pinned") else None)
         }
-        IcebergLocal.expireSnapshots(tableDir, olderThanMs = 3500L,
+        IcebergCommit.local(tableDir).expireSnapshots(olderThanMs = 3500L,
           minSnapshotsToKeep = 1, timestampMs = 9000L)
       }
       IcebergRest.metaTable(s, warehouse.resolve("nation"), "refs")
@@ -943,19 +945,19 @@ object Extended {
         val tableDir = wh.resolve("customer")
         val data = t(s, dir).customer
           .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
-        IcebergLocal.append(tableDir,
+        IcebergCommit.local(tableDir).append(
           stageFiles(data.filter(col("c_nationkey") < 8), "a"), 1000L,
           schema = Some(data.schema))
-        IcebergLocal.append(tableDir,
+        IcebergCommit.local(tableDir).append(
           stageFiles(data.filter(col("c_nationkey") >= 8 &&
             col("c_nationkey") < 16), "b"), 2000L,
           schema = Some(data.schema), branch = Some("audit"))
         // main diverges AFTER the branch forked: fastForward would
         // refuse this table (pinned in spec); cherry-pick is the out
-        IcebergLocal.append(tableDir,
+        IcebergCommit.local(tableDir).append(
           stageFiles(data.filter(col("c_nationkey") >= 16), "c"), 3000L,
           schema = Some(data.schema))
-        IcebergLocal.cherryPick(tableDir, "audit", timestampMs = 4000L)
+        IcebergCommit.local(tableDir).cherryPick("audit", timestampMs = 4000L)
       }
       IcebergRest.readLocal(s, warehouse.resolve("customer"))
     },
@@ -978,10 +980,10 @@ object Extended {
         val tableDir = wh.resolve("nation")
         val data = t(s, dir).nation
           .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-        IcebergLocal.append(tableDir,
+        IcebergCommit.local(tableDir).append(
           stageFiles(data.filter(col("n_regionkey") < 2), "a"), 1000L,
           schema = Some(data.schema))
-        IcebergLocal.append(tableDir,
+        IcebergCommit.local(tableDir).append(
           stageFiles(data.filter(col("n_regionkey") === 2), "b"), 2000L,
           schema = Some(data.schema))
         // plant an orphan in the table's own data dir (a failed writer's
@@ -989,7 +991,7 @@ object Extended {
         val orphanDir = tableDir.resolve("data").resolve("orphan")
         data.limit(3).coalesce(1).write.mode("overwrite")
           .parquet(orphanDir.toString)
-        IcebergLocal.append(tableDir,
+        IcebergCommit.local(tableDir).append(
           stageFiles(data.filter(col("n_regionkey") > 2), "c"), 3000L,
           schema = Some(data.schema), retainLast = Some(2))
         val reclaimed = IcebergMaintenance.vacuum(tableDir)
@@ -1020,7 +1022,7 @@ object Extended {
         def quarter(from: String, to: String, ts: Long): Unit = {
           val q = orders.where(
             s"o_orderdate >= timestamp '$from' AND o_orderdate < timestamp '$to'")
-          IcebergLocal.append(tableDir, stageFiles(q, "incr"), ts,
+          IcebergCommit.local(tableDir).append(stageFiles(q, "incr"), ts,
             schema = Some(q.schema))
         }
         quarter("1995-01-01", "1995-04-01", 1000L)
@@ -1047,9 +1049,9 @@ object Extended {
         val stamped = IcebergLocal.withFieldIds(
           t(s, dir).customer.select(col("c_custkey"), col("c_name"),
             col("c_mktsegment")))
-        IcebergLocal.append(tableDir, stageFiles(stamped, "ev_data"),
+        IcebergCommit.local(tableDir).append(stageFiles(stamped, "ev_data"),
           timestampMs = 1000L, schema = Some(stamped.schema))
-        IcebergLocal.renameColumn(tableDir, "c_name", "customer_name")
+        IcebergCommit.local(tableDir).renameColumn("c_name", "customer_name")
       }
       IcebergRest.readLocal(s, warehouse.resolve("customer"),
         options = Map("fieldIdReads" -> "true"))
@@ -1070,10 +1072,10 @@ object Extended {
         val stamped = IcebergLocal.withFieldIds(
           t(s, dir).customer.select(col("c_custkey"), col("c_name"),
             col("c_acctbal")))
-        IcebergLocal.append(tableDir, stageFiles(stamped, "ad_data"),
+        IcebergCommit.local(tableDir).append(stageFiles(stamped, "ad_data"),
           timestampMs = 1000L, schema = Some(stamped.schema))
-        IcebergLocal.addColumn(tableDir, "c_tier", "string")
-        IcebergLocal.dropColumn(tableDir, "c_acctbal")
+        IcebergCommit.local(tableDir).addColumn("c_tier", "string")
+        IcebergCommit.local(tableDir).dropColumn("c_acctbal")
       }
       IcebergRest.readLocal(s, warehouse.resolve("customer"),
         options = Map("fieldIdReads" -> "true"))
@@ -1106,9 +1108,9 @@ object Extended {
         try {
           val cat = new IcebergRestCatalog(s"http://127.0.0.1:$p")
           cat.createTable("lake", "customer", data.schema)
-          IcebergRestCommit.append(cat, "lake", "customer", tableDir,
+          IcebergCommit.rest(cat, "lake", "customer", tableDir).append(
             files(data.filter(col("c_nationkey") < 13), "b0"), 1000L)
-          IcebergRestCommit.append(cat, "lake", "customer", tableDir,
+          IcebergCommit.rest(cat, "lake", "customer", tableDir).append(
             files(data.filter(col("c_nationkey") >= 13), "b1"), 2000L)
         } finally srv.stop()
       }
@@ -1274,10 +1276,11 @@ object Extended {
           Seq(PartitionField("o_month", "o_orderdate", "month")), 1000L)
         var now = 1000L
         val clock = () => { now += 1000L; now }
-        IcebergMaintenance.deleteWhere(s, tableDir,
+        IcebergMaintenance.deleteWhere(s, IcebergCommit.local(tableDir),
           "o_orderkey % 3 = 0", clock)
         val committer = graft.streaming.IcebergSink.upsertCommitter(
-          tableDir, keyCols = Seq("o_orderkey"), clock = clock)
+          IcebergCommit.local(tableDir), keyCols = Seq("o_orderkey"),
+          clock = clock)
         committer(y95.where("o_orderkey % 10 = 7 AND o_orderkey % 3 <> 0")
           .withColumn("o_totalprice", col("o_totalprice") + lit(50.0)), 1L)
         val at = now
@@ -1318,10 +1321,10 @@ object Extended {
         out.toFile.deleteOnExit()
         orders.repartition(8, col("o_orderkey")) // unclustered on purpose
           .write.mode("overwrite").parquet(out.toString)
-        IcebergLocal.append(tableDir,
+        IcebergCommit.local(tableDir).append(
           IcebergMaintenance.parquetFileInfos(out),
           timestampMs = 1000L, schema = Some(orders.schema))
-        IcebergMaintenance.compactZOrder(s, tableDir,
+        IcebergMaintenance.compactZOrder(s, IcebergCommit.local(tableDir),
           Seq("o_custkey", "o_totalprice"), files = 8, () => 2000L)
       }
       IcebergRest.readLocal(s, warehouse.resolve("orders"),
@@ -1351,7 +1354,7 @@ object Extended {
         orders.repartition(8, col("o_orderkey")).write.mode("overwrite")
           .option("parquet.bloom.filter.enabled#o_orderkey", "true")
           .parquet(out.toString)
-        IcebergLocal.append(tableDir,
+        IcebergCommit.local(tableDir).append(
           IcebergPartitioned.listParquetDeep(out)
             .map(p => IcebergPartitioned.fileInfo(p, orders.schema, Nil)),
           timestampMs = 1000L, schema = Some(orders.schema))
@@ -1532,13 +1535,13 @@ object Extended {
       val tableDir = wh.resolve("nation")
       val data = t(s, dir).nation
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-      val first = IcebergLocal.append(tableDir,
+      val first = IcebergCommit.local(tableDir).append(
         stageFiles(data.filter(col("n_regionkey") <= 1), "a"), 1000L,
         schema = Some(data.schema))
-      IcebergLocal.append(tableDir,
+      IcebergCommit.local(tableDir).append(
         stageFiles(data.filter(col("n_regionkey") === 2), "b"), 2000L,
         schema = Some(data.schema))
-      IcebergMaintenance.deleteWhere(s, tableDir,
+      IcebergMaintenance.deleteWhere(s, IcebergCommit.local(tableDir),
         "n_nationkey % 2 = 1", () => 3000L)
       first
     }

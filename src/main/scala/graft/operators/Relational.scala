@@ -551,7 +551,7 @@ object Relational {
       import s.implicits._
       val v = Seq(("1-URGENT", 1), ("2-HIGH", 2), ("3-MEDIUM", 3),
         ("4-NOT SPECIFIED", 4), ("5-LOW", 5)).toDF("prio", "rank")
-      broadcast(v).join(t(s, dir).orders, col("o_orderpriority") === col("prio"), "left")
+      v.join(t(s, dir).orders, col("o_orderpriority") === col("prio"), "left")
         .groupBy(col("rank")).agg(count(col("o_orderkey")).as("n"))
     },
 

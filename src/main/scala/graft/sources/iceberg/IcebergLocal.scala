@@ -1,7 +1,7 @@
 package graft.sources.iceberg
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
@@ -11,29 +11,21 @@ import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 
-/** Append-only Iceberg TABLE WRITER + filesystem-backed REST catalog,
-  * from the public Iceberg table spec (v2) and REST OpenAPI: lets the
-  * engine materialize results as Iceberg snapshots (metadata JSON +
-  * Avro manifests over parquet data files) and serve them to ANY
-  * REST-catalog client — including [[IcebergRestCatalog]], which is how
-  * the round-trip is verified end-to-end without the Iceberg runtime
-  * jars. The written artifacts are spec-shaped (`vN.metadata.json` with
-  * the v2-required structural fields, `snap-*.avro` manifest lists and
-  * `manifest-*.avro` manifests with the spec's field names, counts, and
-  * sequence numbers). The table schema is the spec's typed struct,
-  * derived from the committed DataFrame's schema (nested structs,
-  * lists, maps; depth-first field ids) — so a schema-strict external
-  * reader sees real column types, not just history. When a commit
-  * carries no schema (legacy callers), the previous commit's schema is
-  * carried forward verbatim.
+/** Iceberg table FILES + filesystem-backed REST catalog, from the
+  * public Iceberg table spec (v2) and REST OpenAPI: the Avro manifests
+  * and manifest lists a commit prepares over parquet data files, the
+  * spec's typed schema struct (nested structs, lists, maps; depth-first
+  * field ids) derived from a DataFrame, and a catalog server that serves
+  * the tables of a warehouse directory to ANY REST-catalog client —
+  * including [[IcebergRestCatalog]], which is how the round-trip is
+  * verified end-to-end without the Iceberg runtime jars. The metadata
+  * JSON is written by [[IcebergCommit]] alone.
   *
-  * Writes are append-style commits: each [[IcebergLocal.append]] adds a
-  * manifest and a snapshot whose manifest list carries every prior
-  * manifest (the "fast append" commit shape). A commit of
-  * `content = 1` files is a POSITIONAL-DELETE commit (the v2
-  * merge-on-read shape: parquet files of (file_path, pos) rows in a
-  * content=1 delete manifest) — which the read side applies. Row
-  * rewrites/compaction are out of scope.
+  * A commit's new manifest list carries every prior manifest (the "fast
+  * append" shape). A commit of `content = 1` files is a
+  * POSITIONAL-DELETE commit (the v2 merge-on-read shape: parquet files
+  * of (file_path, pos) rows in a content=1 delete manifest) — which the
+  * read side applies.
   */
 object IcebergLocal {
 
@@ -139,7 +131,7 @@ object IcebergLocal {
       s"""{"type":"record","name":"r102","fields":[${fields.mkString(",")}]}""")
   }
 
-  private val manifestFileSchema: Schema = new Schema.Parser().parse(
+  private[iceberg] val manifestFileSchema: Schema = new Schema.Parser().parse(
     """{"type":"record","name":"manifest_file","fields":[
       |  {"name":"manifest_path","type":"string"},
       |  {"name":"manifest_length","type":"long"},
@@ -155,7 +147,7 @@ object IcebergLocal {
       |  {"name":"existing_rows_count","type":"long"},
       |  {"name":"deleted_rows_count","type":"long"}]}""".stripMargin)
 
-  private def writeAvro(path: JPath, schema: Schema,
+  private[iceberg] def writeAvro(path: JPath, schema: Schema,
       records: Seq[GenericRecord]): Unit = {
     val w = new DataFileWriter[GenericRecord](
       new GenericDatumWriter[GenericRecord](schema))
@@ -171,437 +163,6 @@ object IcebergLocal {
     * stays O(threshold + files/threshold). Real Iceberg bounds the same
     * growth with its manifest-merge write path. */
   val MergeManifestsAbove = 100
-
-  /** Commit `files` as a new snapshot of the table at `tableDir`
-    * (created on first append). `timestampMs` is the commit time
-    * (caller-supplied: deterministic history for tests, wall clock for
-    * production use); `tag` optionally names the new snapshot. Returns
-    * the new snapshot id (1, 2, ...).
-    *
-    * `retainLast = Some(n)` expires history as it commits: only the
-    * newest n snapshots stay in the metadata (with their snapshot-log
-    * entries and tags — tags on expired snapshots are dropped), and the
-    * expired snapshots' manifest-list files plus superseded metadata
-    * JSONs are deleted. Data files and manifests stay — every surviving
-    * snapshot's manifest list still references them. This bounds both
-    * the per-commit metadata rewrite and the metadata directory's growth
-    * for unbounded streams (Iceberg's expire-snapshots maintenance,
-    * fused into the commit). */
-  def append(tableDir: JPath, files: Seq[DataFileInfo],
-      timestampMs: Long, tag: Option[String] = None,
-      retainLast: Option[Int] = None,
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
-      /** `replace = true` commits `files` as the table's ENTIRE new file
-        * set — no prior manifests carried — which is how compaction
-        * publishes a rewritten (deletes-materialized) layout while every
-        * earlier snapshot's manifest list stays intact for time travel. */
-      replace: Boolean = false,
-      /** the table's partition spec (recorded in the metadata JSON and
-        * shaping the manifest entries' `partition` struct); requires
-        * `schema` for source-id resolution. [[IcebergPartitioned]] is
-        * the writer that computes the matching per-file tuples. */
-      partitionSpec: Option[Seq[PartitionField]] = None,
-      /** rewrite-position-deletes commit: drop carried position-delete
-        * files (this commit's `files` replace them); data and equality
-        * lineage carried untouched. */
-      dropPositionDeletes: Boolean = false,
-      /** write-audit-publish: commit to this BRANCH ref instead of
-        * `main` — the new snapshot carries the branch head's manifests
-        * (falling back to main's for a new branch), moves only the
-        * branch ref, and leaves main + current-snapshot-id untouched,
-        * so readers of the table see nothing until
-        * [[fastForward]] publishes the branch. */
-      branch: Option[String] = None,
-      /** the WRITE-time sort order of this commit's files (identity
-        * transforms, ascending, nulls first): registered in the
-        * metadata's `sort-orders` (order 0 = unsorted always kept, per
-        * the spec) and `default-sort-order-id` moved to it — the layout
-        * declaration query engines read to skip sorts and that makes
-        * file bounds tight for range pruning. Requires `schema`. */
-      sortOrder: Option[Seq[String]] = None): Long = {
-    val metaDir = tableDir.resolve("metadata")
-    Files.createDirectories(metaDir)
-    val priorRaw = currentMetadataFile(tableDir)
-      .map(p => mapper.readTree(Files.readString(p)))
-    val prior = currentMetadata(tableDir)
-    // maxOption: a REST-created table exists with ZERO snapshots
-    val snapId = prior.flatMap(_.snapshots.map(_.snapshotId).maxOption)
-      .getOrElse(0L) + 1
-    // the PARENT this commit builds on: the target branch's head when
-    // it exists, else main's head (a new branch forks from main), else
-    // the newest snapshot (pre-branching metadata without refs)
-    val priorRefs = prior.map(_.refs).getOrElse(Map.empty)
-    val parentId: Option[Long] = branch.flatMap(b =>
-        priorRefs.get(b).map(_._2))
-      .orElse(priorRefs.get("main").map(_._2))
-      .orElse(prior.flatMap(_.snapshots.map(_.snapshotId).maxOption))
-    // spec-less commits resolve the UNPARTITIONED spec through the same
-    // evolution rule as partitioned ones: on a table whose spec 0 has
-    // fields, stamping the new manifest `spec 0 + empty tuple` would
-    // hand external readers a manifest whose declared spec doesn't
-    // match its partition struct — the empty shape gets (or reuses) a
-    // real spec id instead, registered in the metadata below
-    val specId = resolveSpecId(prior, partitionSpec.getOrElse(Nil))
-    val listPath = writeSnapshotFiles(tableDir, prior, files, snapId,
-      replace, partitionSpec, schema, specId = specId,
-      dropPositionDeletes = dropPositionDeletes, parentId = parentId)
-    writeMetadata(tableDir, priorRaw, prior, files, snapId, listPath,
-      timestampMs, tag, retainLast, schema, partitionSpec, specId,
-      branch = branch, parentId = parentId, sortOrder = sortOrder)
-  }
-
-  /** PUBLISH a branch — the fast-forward half of write-audit-publish:
-    * move `main` (and current-snapshot-id) to `fromRef`'s head, as a
-    * new metadata version. Requires main's current head to be an
-    * ANCESTOR of the branch head (walking `parent-snapshot-id`): a
-    * diverged main (commits landed on main after the branch forked)
-    * is refused loudly — fast-forwarding it would silently unpublish
-    * those commits. Time travel to pre-publish snapshots is untouched. */
-  def fastForward(tableDir: JPath, fromRef: String,
-      timestampMs: Long = System.currentTimeMillis()): Long = {
-    val p = currentMetadataFile(tableDir).getOrElse(
-      throw new IllegalArgumentException(s"no committed table at $tableDir"))
-    val meta = currentMetadata(tableDir).get
-    val target = meta.refs.get(fromRef).map(_._2).getOrElse(
-      throw new IllegalArgumentException(
-        s"no ref '$fromRef' on the table (have ${
-          meta.refs.keys.toSeq.sorted.mkString(", ")})"))
-    val mainHead = meta.refs.get("main").map(_._2)
-    val byId = meta.snapshots.map(s => s.snapshotId -> s).toMap
-    // ancestry walk: main's head must appear on the branch head's
-    // parent chain (or main must be absent — publishing the first ref)
-    val isFf = mainHead.forall { mh =>
-      var cur: Option[Long] = Some(target)
-      var found = false
-      while (cur.isDefined && !found) {
-        if (cur.contains(mh)) found = true
-        else cur = cur.flatMap(byId.get).flatMap(_.parentId)
-      }
-      found
-    }
-    if (!isFf) throw new IllegalArgumentException(
-      s"not a fast-forward: main (${mainHead.getOrElse(-1L)}) is not an " +
-        s"ancestor of '$fromRef' ($target) — main has diverged; merge or " +
-        "rebase the branch instead")
-    val root = mapper.readTree(Files.readString(p)).asInstanceOf[ObjectNode]
-    root.put("current-snapshot-id", target)
-    root.put("last-updated-ms", timestampMs)
-    val refs = root.withObject("/refs")
-    refNode(refs, "main", "branch", target)
-    // the publish is logged at OPERATION time, not at the branch head's
-    // creation time: the audit commit may be arbitrarily older than its
-    // publication, and a regressed snapshot-log breaks external readers
-    val ln = root.withArray[ArrayNode]("snapshot-log").addObject()
-    ln.put("timestamp-ms", timestampMs)
-    ln.put("snapshot-id", target)
-    val metaDir = tableDir.resolve("metadata")
-    writeMetadataFile(metaDir, maxMetadataVersion(metaDir) + 1,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    target
-  }
-
-  /** ROLLBACK the table to an earlier RETAINED snapshot (Iceberg's
-    * `rollback_to_snapshot` procedure): move `main` and
-    * current-snapshot-id back to `snapshotId`, as a NEW metadata
-    * version. The rolled-past snapshots stay in the metadata — time
-    * travel to them keeps working until
-    * expiry drops them; only the published view moves. A subsequent
-    * [[append]] builds on the rollback target (its parent is `main`'s
-    * head), so the undone commits fall off the new lineage exactly like
-    * a git reset + new commit. Refuses an id the table doesn't retain,
-    * and refuses a target that is NOT an ancestor of the current main
-    * head (real `rollback_to_snapshot` semantics): an unpublished WAP
-    * branch head is retained but was never current, and "rolling back"
-    * to it would publish unaudited data — that move is [[fastForward]]
-    * or [[cherryPick]], never rollback. `timestampMs` is the OPERATION
-    * time: the new snapshot-log entry and `last-updated-ms` are stamped
-    * with it (real Iceberg's metadata parser rejects snapshot logs
-    * whose timestamps regress), never with the rollback target's
-    * original creation time.
-    * Reference surface: iceberg.rs snapshot procedures (the reference
-    * delegates to the catalog's rollback endpoint). */
-  def rollbackTo(tableDir: JPath, snapshotId: Long,
-      timestampMs: Long = System.currentTimeMillis()): Long = {
-    val p = currentMetadataFile(tableDir).getOrElse(
-      throw new IllegalArgumentException(s"no committed table at $tableDir"))
-    val meta = currentMetadata(tableDir).get
-    meta.snapshots.find(_.snapshotId == snapshotId).getOrElse(
-      throw new IllegalArgumentException(
-        s"no snapshot $snapshotId on the table (have ${
-          meta.snapshots.map(_.snapshotId).sorted.mkString(", ")})"))
-    val byId = meta.snapshots.map(s => s.snapshotId -> s).toMap
-    val mainHead = meta.refs.get("main").map(_._2)
-      .orElse(meta.currentSnapshotId)
-    val isAncestor = mainHead.exists { mh =>
-      var cur: Option[Long] = Some(mh)
-      var found = false
-      while (cur.isDefined && !found) {
-        if (cur.contains(snapshotId)) found = true
-        else cur = cur.flatMap(byId.get).flatMap(_.parentId)
-      }
-      found
-    }
-    if (!isAncestor) throw new IllegalArgumentException(
-      s"cannot roll back to $snapshotId: not an ancestor of the current " +
-        s"main head (${mainHead.getOrElse(-1L)}) — rolling back to an " +
-        "unpublished branch snapshot would publish unaudited data; " +
-        "fast-forward or cherry-pick the branch instead")
-    val root = mapper.readTree(Files.readString(p)).asInstanceOf[ObjectNode]
-    root.put("current-snapshot-id", snapshotId)
-    root.put("last-updated-ms", timestampMs)
-    refNode(root.withObject("/refs"), "main", "branch", snapshotId)
-    // the snapshot-log records the PUBLISHED lineage: rollback appends
-    // an entry pointing back at the old snapshot (spec behavior — the
-    // log is a history of current-pointer moves, not of commits),
-    // stamped at OPERATION time so the log stays monotonic
-    val ln = root.withArray[ArrayNode]("snapshot-log").addObject()
-    ln.put("timestamp-ms", timestampMs)
-    ln.put("snapshot-id", snapshotId)
-    val metaDir = tableDir.resolve("metadata")
-    writeMetadataFile(metaDir, maxMetadataVersion(metaDir) + 1,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    snapshotId
-  }
-
-  /** CHERRY-PICK a branch head onto a DIVERGED main — the half of
-    * write-audit-publish [[fastForward]] refuses: commit a NEW snapshot
-    * on `main` that re-applies exactly the manifests the branch head
-    * ADDED, carrying main's current manifests verbatim. The added
-    * manifest FILES are reused (no data movement — this is pure
-    * metadata work); their manifest-list entries are re-stamped with
-    * the new snapshot's sequence number so main's existing deletes
-    * (sequence-gated) never apply to the re-applied rows. Only a PURE
-    * fast-append branch snapshot qualifies: a snapshot that rewrote or
-    * dropped manifests (compaction/replace/position-delete rewrite) or
-    * whose commit merged its carried tail cannot be replayed onto a
-    * different base without re-deriving the rewrite, so it is refused
-    * loudly. The branch ref itself is left untouched. */
-  def cherryPick(tableDir: JPath, fromRef: String,
-      timestampMs: Long): Long = {
-    val p = currentMetadataFile(tableDir).getOrElse(
-      throw new IllegalArgumentException(s"no committed table at $tableDir"))
-    val meta = currentMetadata(tableDir).get
-    val target = meta.refs.get(fromRef).map(_._2).getOrElse(
-      throw new IllegalArgumentException(
-        s"no ref '$fromRef' on the table (have ${
-          meta.refs.keys.toSeq.sorted.mkString(", ")})"))
-    val byId = meta.snapshots.map(s => s.snapshotId -> s).toMap
-    val snap = byId(target)
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val headEntries = IcebergAvro.read(snap.manifestList, conf)
-    val parentEntries = snap.parentId.flatMap(byId.get).toSeq
-      .flatMap(ps => IcebergAvro.read(ps.manifestList, conf))
-    def path(r: GenericRecord): String = r.get("manifest_path").toString
-    def num(r: GenericRecord, f: String): Long =
-      r.get(f).asInstanceOf[Number].longValue()
-    val added = headEntries.filter(r =>
-      num(r, "added_snapshot_id") == target)
-    // pure fast-append check, both directions: the head added only
-    // brand-new manifests (a merged carry re-records EXISTING entries
-    // under the head's id — existing_files_count > 0 exposes it), and
-    // dropped nothing its parent carried (replace / posdel-rewrite)
-    val pureAppend = added.forall(r =>
-      num(r, "existing_files_count") == 0 &&
-        num(r, "deleted_files_count") == 0) &&
-      headEntries.map(path).toSet ==
-        parentEntries.map(path).toSet ++ added.map(path)
-    if (!pureAppend) throw new IllegalArgumentException(
-      s"cannot cherry-pick '$fromRef' ($target): not a pure fast-append " +
-        "snapshot — it rewrote, merged, or dropped carried manifests; " +
-        "replay the rewrite against main instead")
-    val mainHead = meta.refs.get("main").map(_._2)
-      .orElse(meta.currentSnapshotId)
-    // ALREADY-APPLIED guard (real cherrypick dedupes via WAP-id /
-    // ancestry): a branch head that is already on main's lineage —
-    // after fastForward, or a second cherryPick of the same branch —
-    // would pass the pure-fast-append check and silently re-append its
-    // manifests on top of main's carried copies, duplicating every row
-    val alreadyAncestor = mainHead.exists { mh =>
-      var cur: Option[Long] = Some(mh)
-      var found = false
-      while (cur.isDefined && !found) {
-        if (cur.contains(target)) found = true
-        else cur = cur.flatMap(byId.get).flatMap(_.parentId)
-      }
-      found
-    }
-    if (alreadyAncestor) throw new IllegalArgumentException(
-      s"cannot cherry-pick '$fromRef' ($target): already an ancestor of " +
-        s"main's head (${mainHead.getOrElse(-1L)}) — applying it again " +
-        "would duplicate its rows")
-    val mainEntries = mainHead.flatMap(byId.get).toSeq
-      .flatMap(ms => IcebergAvro.read(ms.manifestList, conf))
-    val mainPaths = mainEntries.map(path).toSet
-    val dupPaths = added.map(path).filter(mainPaths.contains)
-    if (dupPaths.nonEmpty) throw new IllegalArgumentException(
-      s"cannot cherry-pick '$fromRef' ($target): ${dupPaths.size} of its " +
-        s"added manifests already live in main's head (e.g. ${
-          dupPaths.head}) — applying it again would duplicate rows")
-    val newId = meta.snapshots.map(_.snapshotId).max + 1
-    val metaDir = tableDir.resolve("metadata")
-    val listPath = metaDir.resolve(f"snap-$newId%05d.avro")
-    writeAvro(listPath, manifestFileSchema,
-      mainEntries.map { old =>
-        val r = new GenericData.Record(manifestFileSchema)
-        manifestFileSchema.getFields.forEach(f =>
-          r.put(f.name(), old.get(f.name())))
-        r
-      } ++ added.map { old =>
-        val r = new GenericData.Record(manifestFileSchema)
-        manifestFileSchema.getFields.forEach(f =>
-          r.put(f.name(), old.get(f.name())))
-        // re-applied HERE: the manifest's ADDED entries (null sequence)
-        // inherit the list entry's sequence, so re-stamping the entry —
-        // not the manifest file — moves the rows' data sequence to this
-        // commit, ordering them after every delete main already holds
-        r.put("sequence_number", newId)
-        r.put("min_sequence_number", newId)
-        r.put("added_snapshot_id", newId)
-        r
-      })
-    val root = mapper.readTree(Files.readString(p)).asInstanceOf[ObjectNode]
-    root.put("current-snapshot-id", newId)
-    root.put("last-sequence-number",
-      math.max(root.path("last-sequence-number").asLong(0L), newId))
-    root.put("last-updated-ms", timestampMs)
-    snapNode(root.withArray[ArrayNode]("snapshots").addObject(),
-      newId, timestampMs, listPath.toUri.toString, parentId = mainHead)
-    refNode(root.withObject("/refs"), "main", "branch", newId)
-    val ln = root.withArray[ArrayNode]("snapshot-log").addObject()
-    ln.put("timestamp-ms", timestampMs)
-    ln.put("snapshot-id", newId)
-    writeMetadataFile(metaDir,
-      math.max(newId, maxMetadataVersion(metaDir) + 1),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    newId
-  }
-
-  /** AGE- and REF-aware snapshot expiry (Iceberg's `expire_snapshots`
-    * with `older_than` / `retain_last` semantics + the spec's ref
-    * retention): drop snapshots whose commit timestamp is strictly
-    * before `olderThanMs`, EXCEPT
-    *   - any snapshot a named ref points at (a pinned tag or a branch
-    *     head survives any age-based sweep — the spec's contract that
-    *     retention never breaks a published pointer), and
-    *   - the newest `minSnapshotsToKeep` ancestors of EVERY branch head
-    *     (main included), regardless of age — `min-snapshots-to-keep`.
-    * Writes one new metadata version: surviving snapshots (parent edges
-    * to expired snapshots cut), refs unchanged, the snapshot-log
-    * filtered to survivors; then reclaims the expired snapshots'
-    * manifest-list files and superseded metadata JSONs. Manifests and
-    * data files stay — surviving lists may still reference them;
-    * [[IcebergMaintenance.removeOrphanFiles]] is the disk-level sweep.
-    * Complements `append(retainLast = n)` (count-based expiry at commit
-    * time); this is the standalone scheduled-maintenance shape. Returns
-    * the expired snapshot ids. */
-  def expireSnapshots(tableDir: JPath, olderThanMs: Long,
-      minSnapshotsToKeep: Int = 1,
-      timestampMs: Long = System.currentTimeMillis()): Seq[Long] = {
-    val p = currentMetadataFile(tableDir).getOrElse(
-      throw new IllegalArgumentException(s"no committed table at $tableDir"))
-    val meta = currentMetadata(tableDir).get
-    val (droppedRefs, expiredIds) =
-      expirePlan(meta, olderThanMs, minSnapshotsToKeep, timestampMs)
-    if (droppedRefs.isEmpty && expiredIds.isEmpty) return Nil
-    val expiredSet = expiredIds.toSet
-    val keptIds = meta.snapshots.map(_.snapshotId).toSet -- expiredSet
-    val root = mapper.readTree(Files.readString(p)).asInstanceOf[ObjectNode]
-    root.put("last-updated-ms", timestampMs)
-    val snaps = root.putArray("snapshots")
-    meta.snapshots.filter(s => keptIds(s.snapshotId)).foreach(s =>
-      snapNode(snaps.addObject(), s.snapshotId, s.timestampMs,
-        s.manifestList, s.parentId.filter(keptIds.contains), s.summary))
-    droppedRefs.foreach(root.withObject("/refs").remove)
-    val log = root.putArray("snapshot-log")
-    meta.snapshotLog.filter { case (_, id) => keptIds(id) }
-      .foreach { case (ts, id) =>
-        val n = log.addObject()
-        n.put("timestamp-ms", ts); n.put("snapshot-id", id)
-      }
-    val metaDir = tableDir.resolve("metadata")
-    writeMetadataFile(metaDir, maxMetadataVersion(metaDir) + 1,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    meta.snapshots.filter(s => expiredSet(s.snapshotId)).foreach { s =>
-      Files.deleteIfExists(java.nio.file.Paths.get(
-        java.net.URI.create(s.manifestList)))
-      Files.deleteIfExists(
-        metaDir.resolve(f"v${s.snapshotId}%05d.metadata.json"))
-    }
-    expiredIds
-  }
-
-  /** PURE expiry planning, shared by [[expireSnapshots]] and the REST
-    * client's catalog-routed expire: given the loaded metadata,
-    * compute (refs to drop, snapshot ids to expire) honoring the
-    * spec's PER-REF retention overrides ([[RefRetention]]):
-    *   - a non-main ref whose pinned snapshot is older than the ref's
-    *     `max-ref-age-ms` expires the REF itself (its snapshot then
-    *     survives only if something else retains it);
-    *   - each branch keeps its newest `min-snapshots-to-keep`
-    *     ancestors (override, else the call's table default) plus
-    *     every ancestor younger than the branch's `max-snapshot-age-ms`
-    *     cutoff (override, else the call's `olderThanMs`);
-    *   - any snapshot younger than `olderThanMs` survives regardless
-    *     (overrides EXTEND retention; the table cutoff is the floor).
-    * Ref heads still in the refs map are always kept. */
-  def expirePlan(meta: IcebergTableMeta, olderThanMs: Long,
-      minSnapshotsToKeep: Int,
-      timestampMs: Long): (Set[String], Seq[Long]) = {
-    val byId = meta.snapshots.map(s => s.snapshotId -> s).toMap
-    val droppedRefs = meta.refs.collect {
-      case (name, (_, id)) if name != "main" &&
-          meta.refRetention.get(name).flatMap(_.maxRefAgeMs).exists(age =>
-            byId.get(id).exists(s => timestampMs - s.timestampMs > age)) =>
-        name
-    }.toSet
-    val liveRefs = meta.refs -- droppedRefs
-    val refHeads = liveRefs.values.map(_._2).toSet ++
-      meta.currentSnapshotId
-    val branchKeep = liveRefs.collect {
-      case (name, ("branch", head)) =>
-        val ret = meta.refRetention.getOrElse(name, RefRetention())
-        val keepN = math.max(
-          ret.minSnapshotsToKeep.getOrElse(minSnapshotsToKeep), 1)
-        val cutoff = ret.maxSnapshotAgeMs.map(timestampMs - _)
-          .getOrElse(olderThanMs)
-        val chain = Iterator.iterate(Option(head))(
-            _.flatMap(byId.get).flatMap(_.parentId))
-          .takeWhile(_.isDefined).flatten.toSeq
-        chain.take(keepN) ++ chain.filter(id =>
-          byId.get(id).exists(_.timestampMs >= cutoff))
-    }.flatten.toSet
-    val keptIds = meta.snapshots.filter(s =>
-      s.timestampMs >= olderThanMs ||
-        refHeads.contains(s.snapshotId) ||
-        branchKeep.contains(s.snapshotId))
-      .map(_.snapshotId).toSet
-    (droppedRefs,
-      meta.snapshots.filterNot(s => keptIds(s.snapshotId))
-        .map(_.snapshotId))
-  }
-
-  /** Declare per-ref retention (the v2 spec's snapshot-ref fields) on
-    * an existing ref, as a metadata-only commit. `None` leaves a field
-    * absent (table defaults apply at expire time). */
-  def setRefRetention(tableDir: JPath, refName: String,
-      minSnapshotsToKeep: Option[Int] = None,
-      maxSnapshotAgeMs: Option[Long] = None,
-      maxRefAgeMs: Option[Long] = None): Unit = {
-    val p = currentMetadataFile(tableDir).getOrElse(
-      throw new IllegalArgumentException(s"no committed table at $tableDir"))
-    val meta = currentMetadata(tableDir).get
-    require(meta.refs.contains(refName),
-      s"no ref '$refName' on the table (have ${
-        meta.refs.keys.toSeq.sorted.mkString(", ")})")
-    val root = mapper.readTree(Files.readString(p)).asInstanceOf[ObjectNode]
-    val rn = root.withObject("/refs").withObject(s"/$refName")
-    minSnapshotsToKeep.foreach(rn.put("min-snapshots-to-keep", _))
-    maxSnapshotAgeMs.foreach(rn.put("max-snapshot-age-ms", _))
-    maxRefAgeMs.foreach(rn.put("max-ref-age-ms", _))
-    val metaDir = tableDir.resolve("metadata")
-    writeMetadataFile(metaDir, maxMetadataVersion(metaDir) + 1,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-  }
 
   /** The spec id this commit's partition spec gets: a prior spec with
     * identical fields is REUSED; anything else becomes a NEW spec at
@@ -623,10 +184,8 @@ object IcebergLocal {
   /** Write this commit's manifest + manifest list under
     * `tableDir/metadata` for snapshot `snapId`, carrying (and, past
     * [[MergeManifestsAbove]], compacting) the prior snapshot's
-    * manifests. Pure FILE work — the metadata JSON is untouched, so the
-    * local commit ([[append]] → [[writeMetadata]]) and the REST commit
-    * path ([[IcebergRestCommit]], where the CATALOG owns the metadata
-    * swap) share one definition. `uniq` disambiguates file names when
+    * manifests. Pure FILE work — the metadata JSON is
+    * [[IcebergCommit]]'s. `uniq` disambiguates file names when
     * several writers prepare the same snapshot id concurrently (the
     * optimistic-concurrency race; the loser's files become orphans that
     * [[IcebergMaintenance.vacuum]] reclaims). Returns the
@@ -913,355 +472,6 @@ object IcebergLocal {
     listPath
   }
 
-  /** Build + write the new `vN.metadata.json` for snapshot `snapId`
-    * whose manifest list is `listPath` — the LOCAL metadata swap (the
-    * REST path's equivalent lives in the catalog server's commit
-    * endpoint). Returns `snapId`. */
-  private def writeMetadata(tableDir: JPath,
-      priorRaw: Option[com.fasterxml.jackson.databind.JsonNode],
-      prior: Option[IcebergTableMeta], files: Seq[DataFileInfo],
-      snapId: Long, listPath: JPath, timestampMs: Long,
-      tag: Option[String], retainLast: Option[Int],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      partitionSpec: Option[Seq[PartitionField]],
-      specId: Int = 0,
-      branch: Option[String] = None,
-      parentId: Option[Long] = None,
-      sortOrder: Option[Seq[String]] = None): Long = {
-    val metaDir = tableDir.resolve("metadata")
-    val root = mapper.createObjectNode()
-    root.put("format-version", 2)
-    root.put("table-uuid", java.util.UUID.nameUUIDFromBytes(
-      tableDir.toString.getBytes(StandardCharsets.UTF_8)).toString)
-    root.put("location", tableDir.toUri.toString)
-    root.put("last-updated-ms", timestampMs)
-    // v2-required structural fields. The schema is the spec's typed
-    // struct derived from the DataFrame schema (carry-forward of the
-    // prior commit's schema for schema-less callers). Partitioning/
-    // sort: unpartitioned, unsorted — the only layouts this writer
-    // produces.
-    root.put("last-sequence-number", snapId)
-    schema match {
-      case Some(st) =>
-        val counter = new java.util.concurrent.atomic.AtomicInteger()
-        val sc = icebergStructNode(st, counter)
-        sc.put("schema-id", 0)
-        root.put("last-column-id", counter.get())
-        root.putArray("schemas").add(sc)
-      case None =>
-        val (schemasNode, lastCol) = priorRaw match {
-          case Some(pr) if pr.has("schemas") =>
-            (pr.get("schemas"), pr.path("last-column-id").asInt(0))
-          case _ =>
-            val arr = mapper.createArrayNode()
-            val sc = arr.addObject()
-            sc.put("type", "struct"); sc.put("schema-id", 0)
-            sc.putArray("fields")
-            (arr, 0)
-        }
-        root.put("last-column-id", lastCol)
-        root.set[com.fasterxml.jackson.databind.JsonNode]("schemas", schemasNode.deepCopy())
-        ()
-    }
-    // schema-carrying commits write their schema as id 0; schema-less
-    // commits must carry the PRIOR pointer too — a rename bumps it, and
-    // resetting to 0 here would silently undo the evolution
-    root.put("current-schema-id",
-      if (schema.isDefined) 0
-      else priorRaw.map(_.path("current-schema-id").asInt(0)).getOrElse(0))
-    partitionSpec match {
-      case Some(spec) =>
-        // the committed spec, source ids resolved depth-first through
-        // the schema; partition field ids start at 1000 (spec rule).
-        // EVOLUTION: every prior spec is carried verbatim (old
-        // manifests keep pruning under the spec id they were written
-        // with); this commit's spec either matches one of them
-        // (resolveSpecId reused its id — nothing to add) or is a NEW
-        // spec appended under `specId`, with default-spec-id moved.
-        val ids = topLevelFieldIds(schema.get)
-        val specs = root.putArray("partition-specs")
-        val priorSpecs = priorRaw.flatMap(pr =>
-          Option(pr.get("partition-specs"))).toSeq
-          .flatMap(n => (0 until n.size()).map(n.get))
-        priorSpecs.foreach(n =>
-          specs.add(n.deepCopy[com.fasterxml.jackson.databind.JsonNode]()))
-        val priorIds = priorSpecs
-          .flatMap(n => Option(n.get("spec-id")).map(_.asInt())).toSet
-        var lastPid = priorRaw
-          .map(_.path("last-partition-id").asInt(999)).getOrElse(999)
-        if (!priorIds.contains(specId)) {
-          // the spec rule: an EQUIVALENT field (same source + same
-          // transform) in any earlier spec keeps its partition field
-          // id; genuinely new fields get fresh ids past the table max
-          val reuse: Map[(Int, String), Int] = priorSpecs.flatMap(n =>
-            Option(n.get("fields")).toSeq.flatMap(fs =>
-              (0 until fs.size()).map(fs.get).flatMap { f =>
-                for {
-                  sid <- Option(f.get("source-id")).map(_.asInt())
-                  tr <- Option(f.get("transform")).map(_.asText())
-                  fid <- Option(f.get("field-id")).map(_.asInt())
-                } yield (sid, tr) -> fid
-              })).toMap
-          val ps = specs.addObject()
-          ps.put("spec-id", specId)
-          val fs = ps.putArray("fields")
-          spec.foreach { f =>
-            val sid = ids.getOrElse(f.sourceColumn,
-              throw new IllegalArgumentException(
-                s"partition source column '${f.sourceColumn}' absent from schema"))
-            val fid = reuse.getOrElse((sid, f.transform),
-              { lastPid += 1; lastPid })
-            val fn = fs.addObject()
-            fn.put("name", f.name)
-            fn.put("transform", f.transform)
-            fn.put("source-id", sid)
-            fn.put("field-id", fid)
-          }
-        }
-        root.put("default-spec-id", specId)
-        root.put("last-partition-id", lastPid)
-      case None => priorRaw match {
-        case Some(pr) if pr.has("partition-specs") =>
-          // spec-less commits carry the table's partition spec forward
-          // (like schemas) — a streaming append must not strip the
-          // pruning metadata a partitioned table was created with.
-          // This commit's manifests are stamped `specId` (the resolved
-          // UNPARTITIONED shape, empty tuple); when the table never had
-          // an empty spec, register one under that id so every
-          // manifest's declared spec matches its partition struct for
-          // external readers. default-spec-id stays where it was — a
-          // data append is not spec evolution.
-          val specsNode = pr.get("partition-specs").deepCopy[
-            com.fasterxml.jackson.databind.JsonNode]()
-          root.set[com.fasterxml.jackson.databind.JsonNode](
-            "partition-specs", specsNode)
-          specsNode match {
-            case arr: ArrayNode
-                if !(0 until arr.size()).exists(
-                  i => arr.get(i).path("spec-id").asInt(-1) == specId) =>
-              val ps = arr.addObject()
-              ps.put("spec-id", specId); ps.putArray("fields")
-              ()
-            case _ => ()
-          }
-          root.put("default-spec-id", pr.path("default-spec-id").asInt(0))
-          root.put("last-partition-id",
-            pr.path("last-partition-id").asInt(999))
-          ()
-        case _ =>
-          val specs = root.putArray("partition-specs")
-          val ps = specs.addObject()
-          ps.put("spec-id", 0); ps.putArray("fields")
-          root.put("default-spec-id", 0)
-          root.put("last-partition-id", 999) // partition ids start at 1000
-      }
-    }
-    // sort orders: order 0 (unsorted) always exists per the spec; a
-    // SORTED commit registers its write order (identity/asc/nulls-first
-    // fields) — reusing an identical prior order's id — and moves
-    // default-sort-order-id; an unsorted commit CARRIES the prior
-    // orders and default untouched (a later spec-less append must not
-    // silently reset a sorted table's declared layout)
-    val priorOrders = priorRaw.flatMap(pr =>
-      Option(pr.get("sort-orders"))).toSeq
-      .flatMap(n => (0 until n.size()).map(n.get))
-    val orders = root.putArray("sort-orders")
-    if (priorOrders.isEmpty) {
-      val so = orders.addObject()
-      so.put("order-id", 0); so.putArray("fields")
-    } else priorOrders.foreach(n =>
-      orders.add(n.deepCopy[com.fasterxml.jackson.databind.JsonNode]()))
-    sortOrder match {
-      case Some(cols) =>
-        val ids = topLevelFieldIds(schema.getOrElse(
-          throw new IllegalArgumentException(
-            "sortOrder requires schema (source-id resolution)")))
-        val srcIds = cols.map(c => ids.getOrElse(c,
-          throw new IllegalArgumentException(
-            s"sort column '$c' absent from schema")))
-        def fieldsOf(n: com.fasterxml.jackson.databind.JsonNode) =
-          (0 until n.path("fields").size()).map { i =>
-            val f = n.path("fields").get(i)
-            (f.path("source-id").asInt(), f.path("transform").asText(),
-              f.path("direction").asText(), f.path("null-order").asText())
-          }
-        val want = srcIds.map(id =>
-          (id, "identity", "asc", "nulls-first"))
-        val existing = (0 until orders.size()).map(orders.get)
-          .find(n => fieldsOf(n) == want)
-          .map(_.path("order-id").asInt())
-        val oid = existing.getOrElse {
-          val next = (0 until orders.size())
-            .map(orders.get(_).path("order-id").asInt()).max + 1
-          val so = orders.addObject()
-          so.put("order-id", next)
-          val fs = so.putArray("fields")
-          srcIds.foreach { id =>
-            val fn = fs.addObject()
-            fn.put("transform", "identity")
-            fn.put("source-id", id)
-            fn.put("direction", "asc")
-            fn.put("null-order", "nulls-first")
-          }
-          next
-        }
-        root.put("default-sort-order-id", oid)
-        ()
-      case None =>
-        root.put("default-sort-order-id", priorRaw
-          .map(_.path("default-sort-order-id").asInt(0)).getOrElse(0))
-        ()
-    }
-    val priorRefs = prior.map(_.refs).getOrElse(Map.empty)
-    // a BRANCH commit leaves the published head where it was: readers
-    // of the table (current-snapshot-id / main) see nothing until
-    // fastForward publishes the branch
-    val priorMain = priorRefs.get("main").map(_._2)
-    root.put("current-snapshot-id",
-      if (branch.isEmpty) snapId else priorMain.getOrElse(-1L))
-    val priorSnaps = prior.toSeq.flatMap(_.snapshots).sortBy(_.snapshotId)
-    val keptPrior = retainLast match {
-      case Some(n) => priorSnaps.takeRight(math.max(n - 1, 0))
-      case None => priorSnaps
-    }
-    val keptIds = keptPrior.map(_.snapshotId).toSet + snapId
-    val snaps = root.putArray("snapshots")
-    keptPrior.foreach(s =>
-      snapNode(snaps.addObject(), s.snapshotId, s.timestampMs,
-        s.manifestList, s.parentId.filter(keptIds.contains), s.summary))
-    // incremental stats: this commit's added files on top of the
-    // parent's totals (the spec's summary accounting — a compaction
-    // that rewrites files through another path may overestimate, which
-    // only over-provisions width; AQE coalesces down). A parent with no
-    // recorded totals restarts the total at this commit's adds.
-    val parentTotals = parentId
-      .orElse(prior.flatMap(_.refs.get("main").map(_._2)))
-      .flatMap(pid => prior.flatMap(_.snapshots.find(_.snapshotId == pid)))
-      .map(_.summary).getOrElse(Map.empty)
-    def pt(k: String): Long =
-      parentTotals.get(k).flatMap(_.toLongOption).getOrElse(0L)
-    val addedSize = files.map(_.sizeBytes).sum
-    val addedRecords = files.filter(_.content == 0).map(_.recordCount).sum
-    snapNode(snaps.addObject(), snapId, timestampMs,
-      listPath.toUri.toString, parentId.filter(keptIds.contains),
-      summary = Map(
-        "added-files-size" -> addedSize.toString,
-        "added-records" -> addedRecords.toString,
-        "total-files-size" -> (pt("total-files-size") + addedSize).toString,
-        "total-records" -> (pt("total-records") + addedRecords).toString))
-    val refs = root.putObject("refs")
-    branch match {
-      case None => refNode(refs, "main", "branch", snapId)
-      case Some(_) => priorMain.foreach(refNode(refs, "main", "branch", _))
-    }
-    val movedRefs = Set("main") ++ branch
-    (priorRefs -- movedRefs).foreach { case (name, (tpe, id)) =>
-      // a tag on an expired snapshot dies with it — a surviving ref to a
-      // snapshot absent from `snapshots` would be a dangling pointer
-      if (keptIds.contains(id)) refNode(refs, name, tpe, id)
-    }
-    branch.foreach(b => refNode(refs, b, "branch", snapId))
-    tag.foreach(tg => refNode(refs, tg, "tag", snapId))
-    carryRefRetention(refs, prior)
-    // the snapshot-log is CARRIED from the prior metadata (filtered to
-    // surviving ids), never rebuilt from the snapshots list: the log
-    // records published-pointer moves — branch (WAP) commits were never
-    // in it, a rollback/fast-forward entry's timestamp is the operation
-    // time not the snapshot's creation time, and a re-published
-    // snapshot legitimately appears once per move. Rebuilding from
-    // `snapshots` would resurrect branch commits and erase all of that.
-    val log = root.putArray("snapshot-log")
-    prior.map(_.snapshotLog).getOrElse(Nil)
-      .filter { case (_, id) => keptIds.contains(id) }
-      .foreach { case (ts, id) =>
-        val n = log.addObject()
-        n.put("timestamp-ms", ts); n.put("snapshot-id", id)
-      }
-    // the log tracks the PUBLISHED lineage: branch commits don't append
-    if (branch.isEmpty) {
-      val ln = log.addObject()
-      ln.put("timestamp-ms", timestampMs); ln.put("snapshot-id", snapId)
-    }
-
-    // version = snapId in the common case, but a metadata-only schema
-    // commit (rename/add/drop) may have taken versions past the
-    // snapshot numbering — never reuse one (metadata files are
-    // immutable in the format)
-    writeMetadataFile(metaDir,
-      math.max(snapId, maxMetadataVersion(metaDir) + 1),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-
-    // GC for expired snapshots: their manifest-list files and their
-    // (superseded) metadata JSONs. Manifests and data files stay — the
-    // surviving manifest lists still reference them.
-    priorSnaps.filterNot(s => keptIds.contains(s.snapshotId)).foreach { s =>
-      Files.deleteIfExists(java.nio.file.Paths.get(
-        java.net.URI.create(s.manifestList)))
-      Files.deleteIfExists(
-        metaDir.resolve(f"v${s.snapshotId}%05d.metadata.json"))
-    }
-    snapId
-  }
-
-  private def snapNode(n: ObjectNode, id: Long, ts: Long,
-      list: String, parentId: Option[Long] = None,
-      summary: Map[String, String] = Map.empty): Unit = {
-    n.put("snapshot-id", id)
-    // this writer's commits are strictly serial: sequence number == id
-    n.put("sequence-number", id)
-    n.put("timestamp-ms", ts)
-    n.put("manifest-list", list)
-    n.put("schema-id", 0)
-    parentId.foreach(n.put("parent-snapshot-id", _))
-    // the summary carries the spec's stats keys verbatim when the
-    // caller has them (re-serialization must not strip another
-    // commit's statistics; fresh commits write incremental totals —
-    // `total-files-size` is what ShuffleWidth plans reduce width from)
-    val sm = n.putObject("summary")
-    sm.put("operation", summary.getOrElse("operation", "append"))
-    (summary - "operation").toSeq.sortBy(_._1)
-      .foreach { case (k, v) => sm.put(k, v) }
-  }
-
-  private def refNode(refs: ObjectNode, name: String, tpe: String,
-      id: Long): Unit = {
-    // MERGE into an existing node (withObject, not putObject): a ref
-    // may carry the spec's retention fields (min-snapshots-to-keep /
-    // max-snapshot-age-ms / max-ref-age-ms) — moving its pointer must
-    // not strip them
-    val r = refs.withObject(s"/$name")
-    r.put("snapshot-id", id); r.put("type", tpe)
-  }
-
-  /** Re-stamp carried per-ref retention fields onto a freshly rebuilt
-    * refs object (writeMetadata rebuilds refs from the parsed prior,
-    * which strips unmodeled fields). */
-  private def carryRefRetention(refs: ObjectNode,
-      prior: Option[IcebergTableMeta]): Unit =
-    prior.toSeq.flatMap(_.refRetention).foreach { case (name, ret) =>
-      if (refs.has(name)) {
-        val rn = refs.withObject(s"/$name")
-        ret.minSnapshotsToKeep.foreach(rn.put("min-snapshots-to-keep", _))
-        ret.maxSnapshotAgeMs.foreach(rn.put("max-snapshot-age-ms", _))
-        ret.maxRefAgeMs.foreach(rn.put("max-ref-age-ms", _))
-      }
-    }
-
-  /** Max field id anywhere in a schema tree (`id`/`element-id`/
-    * `key-id`/`value-id`) — the `last-column-id` a schema implies. */
-  private def maxFieldIdIn(
-      sc: com.fasterxml.jackson.databind.JsonNode): Int = {
-    var lastCol = 0
-    def walkIds(n: com.fasterxml.jackson.databind.JsonNode): Unit = {
-      Seq("id", "element-id", "key-id", "value-id").foreach(k =>
-        if (n.has(k) && n.get(k).isInt)
-          lastCol = math.max(lastCol, n.get(k).asInt()))
-      n.elements().forEachRemaining(walkIds)
-    }
-    walkIds(sc)
-    lastCol
-  }
-
   private val MetadataName = """v(\d+)\.metadata\.json""".r
 
   /** Latest committed `vN.metadata.json` of the table at `tableDir`.
@@ -1282,44 +492,6 @@ object IcebergLocal {
       .sortBy(_._1).lastOption.map(_._2)
   }
 
-  /** Highest committed metadata version number in `metaDir` (0 when
-    * none). Snapshot commits normally number their metadata by snapshot
-    * id, but metadata-only schema commits take versions of their own —
-    * "next version" must come from the directory, not the snapshot
-    * list. */
-  private[iceberg] def maxMetadataVersion(metaDir: JPath): Long = {
-    if (!Files.isDirectory(metaDir)) return 0L
-    listDir(metaDir).flatMap { p =>
-      p.getFileName.toString match {
-        case MetadataName(v) => Some(v.toLong)
-        case _ => None
-      }
-    }.maxOption.getOrElse(0L)
-  }
-
-  /** Write `json` as `v{version}.metadata.json` ATOMICALLY (temp file in
-    * the same directory + atomic move): metadata files are immutable in
-    * the table format — a concurrent reader (or a crash mid-write) must
-    * see either the previous current file or the complete new one, never
-    * a torn JSON. The temp name doesn't match [[MetadataName]], so a
-    * crashed leftover is invisible to [[currentMetadataFile]]. */
-  private[iceberg] def writeMetadataFile(metaDir: JPath, version: Long,
-      json: String): JPath = {
-    val target = metaDir.resolve(f"v$version%05d.metadata.json")
-    val tmp = Files.createTempFile(metaDir, ".metadata-", ".json.tmp")
-    Files.writeString(tmp, json)
-    try
-      Files.move(tmp, target,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.AtomicMoveNotSupportedException =>
-        Files.move(tmp, target,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    target
-  }
-
-  /** Latest committed metadata of the table at `tableDir`, if any. */
   /** Spark schema → the table spec's typed struct (v2 "schemas" entry):
     * nested structs/lists/maps mapped to the spec's type objects, field
     * ids assigned depth-first from 1 via `counter` (whose final value is
@@ -1428,105 +600,14 @@ object IcebergLocal {
     }.toMap
   }
 
-  /** Metadata-only column rename — Iceberg schema evolution: a NEW
-    * schema (same field ids, next schema-id) becomes current, so files
-    * written under the old name keep resolving BY FIELD ID while reads
-    * surface the new name. Committed as a new metadata VERSION (see
-    * [[evolveSchema]]); the rename survives schema-less commits (which
-    * carry schemas forward) — a subsequent schema-carrying append
-    * replaces the schema table. */
-  def renameColumn(tableDir: JPath, from: String, to: String): Unit =
-    evolveSchema(tableDir, s"rename '$from'") { (next, _) =>
-      import scala.jdk.CollectionConverters._
-      var hit = false
-      next.withArray[ArrayNode]("fields").elements().asScala.foreach { f =>
-        if (f.path("name").asText() == from) {
-          f.asInstanceOf[ObjectNode].put("name", to); hit = true
-        }
-      }
-      require(hit, s"rename: table has no top-level column '$from'")
-    }
-
-  /** ADD a nullable top-level column as a metadata-only schema commit
-    * (the spec's ADD COLUMN): a NEW schema id with the field appended
-    * under a fresh field id past `last-column-id` (ids are never
-    * reused). Files written before the add lack the column and surface
-    * NULL — no data rewrite, which is the point at 100 TB. Only
-    * nullable adds are legal: existing files cannot supply a required
-    * value. `icebergType` is a spec primitive ("string", "long", ...). */
-  def addColumn(tableDir: JPath, name: String, icebergType: String): Unit =
-    evolveSchema(tableDir, s"add '$name'") { (next, root) =>
-      import scala.jdk.CollectionConverters._
-      require(!next.withArray[ArrayNode]("fields").elements().asScala
-        .exists(_.path("name").asText() == name),
-        s"add: column '$name' already exists")
-      val fid = root.path("last-column-id").asInt(0) + 1
-      val f = next.withArray[ArrayNode]("fields").addObject()
-      f.put("id", fid)
-      f.put("name", name)
-      f.put("required", false)
-      f.put("type", icebergType)
-      root.put("last-column-id", fid)
-      ()
-    }
-
-  /** DROP a top-level column as a metadata-only schema commit: the
-    * field leaves the current schema (data files keep their bytes;
-    * readers of the new schema no longer see them, and time travel to
-    * pre-drop snapshots still does). The field id is retired, never
-    * reused — `last-column-id` only grows. */
-  def dropColumn(tableDir: JPath, name: String): Unit =
-    evolveSchema(tableDir, s"drop '$name'") { (next, _) =>
-      import scala.jdk.CollectionConverters._
-      val fields = next.withArray[ArrayNode]("fields")
-      val keep = fields.elements().asScala
-        .filter(_.path("name").asText() != name).toSeq
-      require(keep.size < fields.size(),
-        s"drop: table has no top-level column '$name'")
-      require(keep.nonEmpty, "drop: cannot remove the last column")
-      fields.removeAll()
-      keep.foreach(fields.add)
-    }
-
-  /** Shared metadata-only schema-commit shape (rename/add/drop): copy
-    * the current schema, let `mutate` edit the copy (and the root, for
-    * last-column-id), register it under a fresh schema id, move
-    * `current-schema-id`, and commit the result as a NEW metadata
-    * version file (`v(maxVersion+1).metadata.json`, atomic move) — the
-    * format treats metadata files as immutable, so a crash mid-write
-    * must not tear the table's newest metadata, and the prior version
-    * stays intact as the rollback point. Snapshot commits number past
-    * evolution versions (see [[writeMetadata]]), so versions never
-    * collide. */
-  private def evolveSchema(tableDir: JPath, what: String)(
-      mutate: (ObjectNode, ObjectNode) => Unit): Unit = {
-    import scala.jdk.CollectionConverters._
-    val p = currentMetadataFile(tableDir).getOrElse(
-      throw new IllegalArgumentException(s"no committed table at $tableDir"))
-    val root = mapper.readTree(Files.readString(p)).asInstanceOf[ObjectNode]
-    val curId = root.path("current-schema-id").asInt(0)
-    val schemas = root.withArray[ArrayNode]("schemas")
-    val cur = schemas.elements().asScala
-      .find(_.path("schema-id").asInt(0) == curId).getOrElse(
-        throw new IllegalArgumentException(s"no current schema in $p"))
-    val next = cur.deepCopy[ObjectNode]()
-    val newId = schemas.elements().asScala
-      .map(_.path("schema-id").asInt(0)).max + 1
-    next.put("schema-id", newId)
-    mutate(next, root)
-    schemas.add(next)
-    root.put("current-schema-id", newId)
-    val metaDir = tableDir.resolve("metadata")
-    writeMetadataFile(metaDir, maxMetadataVersion(metaDir) + 1,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    ()
-  }
-
   /** REST catalog over a warehouse directory: every subdirectory of
     * `warehouse` with committed metadata is a table in `namespace`.
-    * Serves the four read endpoints [[IcebergRestCatalog]] speaks; an
-    * optional `requiredHeader` (name → value) turns on auth (401
-    * otherwise), mirroring the reference catalog's token gate. */
+    * Serves the endpoints [[IcebergRestCatalog]] speaks: config,
+    * namespaces, table listing and loading, and POSTs that create a table
+    * (CreateTableRequest) or commit to one (CommitTableRequest, applied
+    * by [[IcebergCommit.applyCommit]]); an optional `requiredHeader`
+    * (name → value) turns on auth (401 otherwise), mirroring the
+    * reference catalog's token gate. */
   final class CatalogServer(warehouseDir: JPath, namespace: String,
       requiredHeader: Option[(String, String)] = None,
       /** (accessKey, secretKey, region, service): require every request
@@ -1565,397 +646,6 @@ object IcebergLocal {
       * too; commits are metadata-sized, so one lock is not a throughput
       * concern. */
     private val commitLock = new Object
-
-    /** Create an EMPTY table (v00000.metadata.json, zero snapshots)
-      * from a CreateTableRequest: name + schema taken verbatim,
-      * partition-spec honored when present. 409 on an existing table —
-      * two racing creators resolve exactly like racing committers (the
-      * loser loads and proceeds). */
-    private def applyCreate(body: String): Either[(Int, String), JPath] = {
-      val req =
-        try mapper.readTree(body)
-        catch { case e: Exception =>
-          return Left(400 -> s"malformed create body: ${e.getMessage}")
-        }
-      val name = req.path("name").asText("")
-      if (name.isEmpty || name.contains("/") || name.contains(".."))
-        return Left(400 -> "create needs a legal table name")
-      val schema = Option(req.get("schema")).getOrElse(
-        return Left(400 -> "create needs a schema"))
-      val dir = warehouse.resolve(name).normalize()
-      if (dir.getParent != warehouse)
-        return Left(400 -> "create needs a legal table name")
-      if (currentMetadataFile(dir).isDefined)
-        return Left(409 -> s"table $name already exists")
-      val root = mapper.createObjectNode()
-      root.put("format-version", 2)
-      root.put("table-uuid", java.util.UUID.nameUUIDFromBytes(
-        dir.toString.getBytes(StandardCharsets.UTF_8)).toString)
-      root.put("location", dir.toUri.toString)
-      root.put("last-updated-ms", System.currentTimeMillis())
-      root.put("last-sequence-number", 0L)
-      val sc = schema.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
-      sc match {
-        case o: ObjectNode => o.put("schema-id", 0); ()
-        case _ => return Left(400 -> "schema must be a struct object")
-      }
-      // last-column-id: the max field id anywhere in the schema tree
-      root.put("last-column-id", maxFieldIdIn(sc))
-      root.putArray("schemas").add(sc)
-      root.put("current-schema-id", 0)
-      val specs = root.putArray("partition-specs")
-      Option(req.get("partition-spec")) match {
-        case Some(ps) =>
-          val node = ps.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
-          node match {
-            case o: ObjectNode => if (!o.has("spec-id")) { o.put("spec-id", 0); () }
-            case _ => ()
-          }
-          specs.add(node)
-          val maxField = IcebergJson.arr(ps.get("fields"))
-            .flatMap(f => Option(f.get("field-id")).map(_.asInt()))
-            .maxOption.getOrElse(999)
-          root.put("last-partition-id", maxField)
-          ()
-        case None =>
-          val p0 = specs.addObject()
-          p0.put("spec-id", 0); p0.putArray("fields")
-          root.put("last-partition-id", 999)
-          ()
-      }
-      root.put("default-spec-id", 0)
-      val orders = root.putArray("sort-orders")
-      val so = orders.addObject()
-      so.put("order-id", 0); so.putArray("fields")
-      root.put("default-sort-order-id", 0)
-      root.put("current-snapshot-id", -1L)
-      root.putArray("snapshots")
-      root.putObject("refs")
-      root.putArray("snapshot-log")
-      val metaDir = dir.resolve("metadata")
-      Files.createDirectories(metaDir)
-      val out = writeMetadataFile(metaDir, 0,
-        mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-      Right(out)
-    }
-
-    /** Validate a CommitTableRequest's requirements against the CURRENT
-      * metadata and apply its updates as a new `vN.metadata.json`.
-      * Supported requirements: `assert-ref-snapshot-id` (the CAS every
-      * append needs), `assert-table-uuid`. Supported updates:
-      * `add-snapshot`, `set-snapshot-ref` (the fast-append commit
-      * shape), and `add-spec`/`set-default-spec` (partition-spec
-      * evolution through the protocol); schema changes stay
-      * catalog-side state this endpoint carries forward untouched. */
-    private def applyCommit(dir: JPath,
-        body: String): Either[(Int, String), JPath] = {
-      val req =
-        try mapper.readTree(body)
-        catch { case e: Exception =>
-          return Left(400 -> s"malformed commit body: ${e.getMessage}")
-        }
-      val mf = currentMetadataFile(dir).getOrElse(
-        return Left(404 -> "no committed table"))
-      val root = mapper.readTree(Files.readString(mf))
-        .asInstanceOf[ObjectNode]
-      for (r <- IcebergJson.arr(req.get("requirements"))) {
-        r.path("type").asText() match {
-          case "assert-ref-snapshot-id" =>
-            val ref = r.path("ref").asText("main")
-            val want = Option(r.get("snapshot-id")).filterNot(_.isNull)
-              .map(_.asLong())
-            val have = Option(root.path("refs").get(ref))
-              .map(_.get("snapshot-id").asLong())
-            if (want != have)
-              return Left(409 -> (s"requirement failed: ref '$ref' is at " +
-                s"${have.getOrElse("absent")}, commit expected " +
-                s"${want.getOrElse("absent")}"))
-          case "assert-table-uuid" =>
-            if (r.path("uuid").asText() != root.path("table-uuid").asText())
-              return Left(409 -> "requirement failed: table-uuid mismatch")
-          case "assert-current-schema-id" =>
-            // the CAS a schema-evolution commit rides: the client built
-            // its next schema from this id — a racing schema change
-            // moved it, and applying anyway would silently drop one of
-            // the two evolutions
-            val want = r.path("current-schema-id").asInt(-1)
-            val have = root.path("current-schema-id").asInt(0)
-            if (want != have)
-              return Left(409 -> ("requirement failed: current-schema-id " +
-                s"is $have, commit expected $want"))
-          case other =>
-            return Left(400 -> s"unsupported requirement '$other'")
-        }
-      }
-      var newSnapId = -1L
-      var lastAddedSpec = -1
-      var lastAddedSchema = -1
-      var schemaChanged = false
-      var refMoved = false
-      var snapshotsRemoved: Seq[Long] = Nil
-      // Manifest-list files of expired snapshots are reclaimed ONLY
-      // after the new metadata version lands: a later update in the
-      // same request can still reject the whole commit, and deleting
-      // inside the loop would leave the still-current metadata
-      // pointing at vanished files (IcebergLocal.expireSnapshots
-      // order: metadata first, then reclaim).
-      var pendingListDeletes: Seq[String] = Nil
-      for (u <- IcebergJson.arr(req.get("updates"))) {
-        u.path("action").asText() match {
-          // schema EVOLUTION through the protocol: the client prepares
-          // the next schema (copy-and-mutate of the current one, field
-          // ids preserved) and its id must be the NEXT one — a racing
-          // schema change turns this into a 409 and the client
-          // re-resolves against the new head, the same CAS shape as
-          // add-spec
-          case "add-schema" =>
-            val sc = u.get("schema")
-            if (sc == null || !sc.has("schema-id") || !sc.has("fields"))
-              return Left(400 -> "add-schema needs schema-id + fields")
-            val schemas = root.withArray[ArrayNode]("schemas")
-            val existing = (0 until schemas.size())
-              .map(schemas.get(_).path("schema-id").asInt(0))
-            val sid = sc.get("schema-id").asInt()
-            if (existing.contains(sid))
-              return Left(409 -> (s"requirement failed: schema-id $sid " +
-                "already exists — reload and re-resolve"))
-            if (existing.nonEmpty && sid != existing.max + 1)
-              return Left(409 -> (s"requirement failed: schema-id $sid " +
-                s"is not the next id (${existing.max + 1})"))
-            schemas.add(
-              sc.deepCopy[com.fasterxml.jackson.databind.JsonNode]())
-            // field ids are never reused: last-column-id only grows
-            root.put("last-column-id",
-              math.max(root.path("last-column-id").asInt(0),
-                maxFieldIdIn(sc)))
-            lastAddedSchema = sid
-            ()
-          case "set-current-schema" =>
-            val sid = u.path("schema-id").asInt()
-            // -1 = "the schema added in this commit" (REST spec shorthand)
-            if (sid == -1 && lastAddedSchema == -1)
-              return Left(400 -> "set-current-schema -1 without add-schema")
-            val target = if (sid == -1) lastAddedSchema else sid
-            val schemas = root.withArray[ArrayNode]("schemas")
-            if (!(0 until schemas.size())
-                .exists(schemas.get(_).path("schema-id").asInt(0) == target))
-              return Left(400 -> s"set-current-schema: no schema $target")
-            root.put("current-schema-id", target)
-            schemaChanged = true
-            ()
-          // partition-spec EVOLUTION through the protocol: the client
-          // asserts the spec id its prepared manifests are stamped with
-          // (it must be the NEXT id — a racing writer who added a spec
-          // first turns this into a 409, and the client re-resolves on
-          // retry like any CAS loss); the SERVER assigns field ids,
-          // reusing equivalent (source-id, transform) fields' ids per
-          // the spec rule, exactly as the local metadata writer does
-          case "add-spec" =>
-            val sp = u.get("spec")
-            if (sp == null || !sp.has("spec-id") || !sp.has("fields"))
-              return Left(400 -> "add-spec needs spec-id + fields")
-            val specs = root.withArray[ArrayNode]("partition-specs")
-            val existing = (0 until specs.size())
-              .map(specs.get(_).path("spec-id").asInt(0))
-            val sid = sp.get("spec-id").asInt()
-            if (existing.contains(sid))
-              return Left(409 -> (s"requirement failed: spec-id $sid " +
-                "already exists — reload and re-resolve"))
-            if (existing.nonEmpty && sid != existing.max + 1)
-              return Left(409 -> (s"requirement failed: spec-id $sid is " +
-                s"not the next id (${existing.max + 1})"))
-            var lastPid = root.path("last-partition-id").asInt(999)
-            val reuse = (for {
-              i <- 0 until specs.size()
-              f <- IcebergJson.arr(specs.get(i).get("fields"))
-            } yield (f.path("source-id").asInt(),
-              f.path("transform").asText()) -> f.path("field-id").asInt())
-              .toMap
-            val ps = specs.addObject()
-            ps.put("spec-id", sid)
-            val fs = ps.putArray("fields")
-            for (f <- IcebergJson.arr(sp.get("fields"))) {
-              val fid = reuse.getOrElse(
-                (f.path("source-id").asInt(), f.path("transform").asText()),
-                { lastPid += 1; lastPid })
-              val fn = fs.addObject()
-              fn.put("name", f.path("name").asText())
-              fn.put("transform", f.path("transform").asText())
-              fn.put("source-id", f.path("source-id").asInt())
-              fn.put("field-id", fid)
-            }
-            root.put("last-partition-id", lastPid)
-            lastAddedSpec = sid
-            ()
-          case "set-default-spec" =>
-            val sid = u.path("spec-id").asInt()
-            // -1 = "the spec added in this commit" (REST spec shorthand)
-            if (sid == -1 && lastAddedSpec == -1)
-              return Left(400 -> "set-default-spec -1 without add-spec")
-            root.put("default-spec-id",
-              if (sid == -1) lastAddedSpec else sid)
-            ()
-          case "add-snapshot" =>
-            val sn = u.get("snapshot")
-            if (sn == null || !sn.has("snapshot-id") ||
-                !sn.has("manifest-list"))
-              return Left(400 -> "add-snapshot needs snapshot-id + manifest-list")
-            newSnapId = sn.get("snapshot-id").asLong()
-            if (IcebergJson.arr(root.get("snapshots"))
-                .exists(_.path("snapshot-id").asLong() == newSnapId))
-              return Left(409 -> s"snapshot $newSnapId already exists")
-            root.withArray[ArrayNode]("snapshots").add(
-              sn.deepCopy[com.fasterxml.jackson.databind.JsonNode]())
-            root.put("last-sequence-number",
-              math.max(root.path("last-sequence-number").asLong(0),
-                sn.path("sequence-number").asLong(0)))
-            root.put("last-updated-ms", sn.path("timestamp-ms").asLong(0))
-            // NOT logged here: the snapshot-log records the PUBLISHED
-            // lineage (current-pointer moves), so the entry lands when
-            // set-snapshot-ref moves `main` — a branch (WAP) commit
-            // adds its snapshot without touching the log, same as the
-            // local writer
-            ()
-          case "set-snapshot-ref" =>
-            val name = u.path("ref-name").asText()
-            if (name.isEmpty)
-              return Left(400 -> "set-snapshot-ref needs ref-name")
-            val sid = u.path("snapshot-id").asLong()
-            // the ref must point at a snapshot the table actually has
-            // (an add-snapshot earlier in this body already landed it);
-            // a dangling ref would break every reader that resolves it
-            val snapTs = IcebergJson.arr(root.get("snapshots"))
-              .find(_.path("snapshot-id").asLong() == sid)
-              .map(_.path("timestamp-ms").asLong(0))
-            if (snapTs.isEmpty)
-              return Left(400 -> s"set-snapshot-ref: no snapshot $sid")
-            val refs = Option(root.get("refs"))
-              .collect { case o: ObjectNode => o }
-              .getOrElse(root.putObject("refs"))
-            val rn = refs.putObject(name)
-            rn.put("snapshot-id", sid)
-            rn.put("type", u.path("type").asText("branch"))
-            // ANY ref update makes the commit valid — a ref-only
-            // CommitTableRequest that creates/moves a tag or audit
-            // branch (e.g. tagging an old snapshot for retention) is
-            // legal under the REST spec, not just moves of `main`
-            refMoved = true
-            if (name == "main") {
-              root.put("current-snapshot-id", sid)
-              // every move of `main` — with a fresh snapshot (append),
-              // to an existing one (rollback/fast-forward) — lands in
-              // the snapshot-log: the log is the history of published-
-              // pointer moves, not of snapshot creation. A move to a
-              // snapshot ADDED IN THIS COMMIT is stamped with that
-              // snapshot's timestamp (that IS the commit time); a move
-              // to a pre-existing snapshot (rollback / fast-forward
-              // publish) is stamped at COMMIT time, clamped monotonic —
-              // the target's creation time may be arbitrarily old and a
-              // regressed log breaks external metadata parsers
-              val ln = root.withArray[ArrayNode]("snapshot-log")
-              val lastTs = if (ln.size() == 0) 0L
-                else ln.get(ln.size() - 1).path("timestamp-ms").asLong(0L)
-              // an update MAY carry its own operation timestamp (the
-              // graft client sends one for deterministic histories;
-              // spec-standard clients omit it and get server wall
-              // clock) — unknown fields are ignored by other catalogs
-              val explicitTs = Option(u.get("timestamp-ms"))
-                .filterNot(_.isNull).map(_.asLong())
-              val logTs =
-                if (sid == newSnapId) snapTs.get
-                else explicitTs.getOrElse(
-                  math.max(System.currentTimeMillis(), lastTs))
-              root.put("last-updated-ms",
-                math.max(root.path("last-updated-ms").asLong(0L), logTs))
-              val le = ln.addObject()
-              le.put("timestamp-ms", logTs)
-              le.put("snapshot-id", sid)
-            }
-            ()
-          case "remove-snapshot-ref" =>
-            // spec action: drop a named ref (expired tag/branch). main
-            // is never removable — it IS the published table
-            val name = u.path("ref-name").asText()
-            if (name.isEmpty)
-              return Left(400 -> "remove-snapshot-ref needs ref-name")
-            if (name == "main")
-              return Left(400 -> "cannot remove ref 'main'")
-            Option(root.get("refs"))
-              .collect { case o: ObjectNode => o }
-              .foreach(_.remove(name))
-            refMoved = true
-            ()
-          case "remove-snapshots" =>
-            // spec action: snapshot EXPIRY through the protocol. A
-            // still-referenced snapshot must not drop — removing it
-            // would dangle every reader that resolves the ref
-            val ids = IcebergJson.arr(u.get("snapshot-ids"))
-              .map(_.asLong()).toSet
-            if (ids.isEmpty)
-              return Left(400 -> "remove-snapshots needs snapshot-ids")
-            val refHeads = Option(root.get("refs")).toSeq.flatMap { r =>
-              val it = r.properties().iterator()
-              Iterator.continually(it).takeWhile(_.hasNext)
-                .map(_.next().getValue.path("snapshot-id").asLong()).toSeq
-            }.toSet + root.path("current-snapshot-id").asLong(-1L)
-            val pinned = ids.intersect(refHeads)
-            if (pinned.nonEmpty)
-              return Left(400 -> (s"remove-snapshots: ${
-                pinned.toSeq.sorted.mkString(", ")} still referenced " +
-                "by a ref or the current pointer"))
-            val snapsArr = root.withArray[ArrayNode]("snapshots")
-            val kept = IcebergJson.arr(snapsArr)
-              .filterNot(s => ids.contains(s.path("snapshot-id").asLong()))
-            // capture the dropped snapshots' manifest lists for GC
-            snapshotsRemoved = snapshotsRemoved ++ ids.toSeq.sorted
-            val removedLists = IcebergJson.arr(snapsArr)
-              .filter(s => ids.contains(s.path("snapshot-id").asLong()))
-              .map(_.path("manifest-list").asText())
-            snapsArr.removeAll()
-            kept.foreach(s => snapsArr.add(
-              s.deepCopy[com.fasterxml.jackson.databind.JsonNode]()))
-            // parent edges to removed snapshots are cut (spec: expiry
-            // truncates lineage, readers must not chase a dangling id)
-            val keptIds = kept.map(_.path("snapshot-id").asLong()).toSet
-            IcebergJson.arr(snapsArr).foreach { s =>
-              val so = s.asInstanceOf[ObjectNode]
-              if (so.has("parent-snapshot-id") &&
-                  !keptIds.contains(so.path("parent-snapshot-id").asLong()))
-                so.remove("parent-snapshot-id")
-            }
-            val logArr = root.withArray[ArrayNode]("snapshot-log")
-            val keptLog = IcebergJson.arr(logArr)
-              .filterNot(e => ids.contains(e.path("snapshot-id").asLong()))
-            logArr.removeAll()
-            keptLog.foreach(e => logArr.add(
-              e.deepCopy[com.fasterxml.jackson.databind.JsonNode]()))
-            pendingListDeletes =
-              pendingListDeletes ++ removedLists.filter(_.nonEmpty)
-            ()
-          case other =>
-            return Left(400 -> s"unsupported update '$other'")
-        }
-      }
-      if (newSnapId <= 0 && !schemaChanged && !refMoved &&
-          snapshotsRemoved.isEmpty)
-        return Left(400 -> ("commit carries no add-snapshot, schema " +
-          "change, ref move, or snapshot removal"))
-      // schema-only commits take a version of their own; snapshot
-      // commits keep version == snapshot-id unless evolution versions
-      // already passed it. Atomic move — same torn-write guarantee as
-      // the local path.
-      val metaDir = dir.resolve("metadata")
-      val version =
-        math.max(newSnapId, maxMetadataVersion(metaDir) + 1)
-      val out = writeMetadataFile(metaDir, version,
-        mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-      pendingListDeletes.foreach { l =>
-        try Files.deleteIfExists(java.nio.file.Paths.get(
-          java.net.URI.create(l)))
-        catch { case _: IllegalArgumentException => () }
-      }
-      Right(out)
-    }
 
     /** Full SigV4 re-verification: parse the Authorization header,
       * check the credential scope (key id, region, service), check the
@@ -2027,6 +717,23 @@ object IcebergLocal {
             verifySigV4(ex, bodyBytes, ak, sk, rg, svc) }) {
         send(403, """{"error":"signature does not match"}"""); return
       }
+      def applyPost(what: String)(
+          apply: JsonNode => Either[(Int, String), JPath]): Unit = {
+        val result =
+          try {
+            val req = mapper.readTree(bodyBytes)
+            commitLock.synchronized(apply(req))
+          } catch { case e: java.io.IOException =>
+            Left(400 -> s"malformed $what body: ${e.getMessage}")
+          }
+        result match {
+          case Right(mf) =>
+            send(200, s"""{"metadata-location":"${mf.toUri}",
+              |"metadata":${Files.readString(mf)}}""".stripMargin)
+          case Left((code, msg)) =>
+            send(code, s"""{"error":${mapper.writeValueAsString(msg)}}""")
+        }
+      }
       val path = ex.getRequestURI.getPath
       val tablePrefix = s"/v1/namespaces/$namespace/tables"
       path match {
@@ -2038,15 +745,13 @@ object IcebergLocal {
           // spec CreateTableRequest: name + schema (+ partition-spec) →
           // an EMPTY table (zero snapshots) whose first data commit
           // rides the same CAS as every other (main asserted absent)
-          val body = new String(bodyBytes, StandardCharsets.UTF_8)
-          commitLock.synchronized {
-            applyCreate(body) match {
-              case Right(mf) =>
-                send(200, s"""{"metadata-location":"${mf.toUri}",
-                  |"metadata":${Files.readString(mf)}}""".stripMargin)
-              case Left((code, msg)) =>
-                send(code, s"""{"error":${mapper.writeValueAsString(msg)}}""")
-            }
+          applyPost("create") { req =>
+            val name = req.path("name").asText("")
+            val dir = warehouse.resolve(name).normalize()
+            if (name.isEmpty || name.contains("/") || name.contains("..") ||
+                dir.getParent != warehouse)
+              Left(400 -> "create needs a legal table name")
+            else IcebergCommit.applyCreate(dir, req)
           }
         case `tablePrefix` =>
           val ids = tables.map(t =>
@@ -2061,21 +766,12 @@ object IcebergLocal {
           val legalName = !t.contains("/") && !t.contains("..") &&
             dir.getParent == warehouse
           (if (legalName) currentMetadataFile(dir) else None) match {
-            case Some(mf) if ex.getRequestMethod == "POST" =>
+            case Some(_) if ex.getRequestMethod == "POST" =>
               // spec CommitTableRequest: requirement validation and the
               // metadata swap are ATOMIC under the server's commit lock
               // — the linearization point 1000 optimistic writers
               // coordinate through
-              val body = new String(bodyBytes, StandardCharsets.UTF_8)
-              commitLock.synchronized {
-                applyCommit(dir, body) match {
-                  case Right(newMf) =>
-                    send(200, s"""{"metadata-location":"${newMf.toUri}",
-                      |"metadata":${Files.readString(newMf)}}""".stripMargin)
-                  case Left((code, msg)) =>
-                    send(code, s"""{"error":${mapper.writeValueAsString(msg)}}""")
-                }
-              }
+              applyPost("commit")(IcebergCommit.applyCommit(dir, _))
             case Some(mf) =>
               send(200, s"""{"metadata-location":"${mf.toUri}",
                 |"metadata":${Files.readString(mf)}}""".stripMargin)

@@ -5,24 +5,28 @@ import java.nio.file.{Files, Path => JPath}
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Table maintenance for locally committed Iceberg tables — the
-  * rewrite-data-files compaction every merge-on-read table eventually
-  * needs: each upsert batch adds an equality-delete file whose
-  * broadcast anti-join every subsequent read replays, so read cost
-  * grows with delete history until a compaction materializes the
-  * deletes into a clean file set.
+import graft.sources.SnapshotLog.ByVersion
+
+/** Table maintenance for Iceberg tables, local or catalog-served (an
+  * [[IcebergCommit.Target]]) — the rewrite-data-files compaction every
+  * merge-on-read table eventually needs: each upsert batch adds an
+  * equality-delete file whose broadcast anti-join every subsequent read
+  * replays, so read cost grows with delete history until a compaction
+  * materializes the deletes into a clean file set.
   *
-  * [[compact]] reads the CURRENT state through the same MoR read path
-  * queries use ([[IcebergRest.readLocal]] — positional + equality
-  * deletes applied, sequence-gated), writes it as fresh parquet, and
-  * commits the result as a REPLACE snapshot (`IcebergLocal.append(...,
-  * replace = true)`): the new manifest list carries only the rewritten
-  * files, while every earlier snapshot's manifest list stays intact —
-  * time travel to pre-compaction history keeps working, and reads of
-  * the new head carry zero delete joins. Iceberg's own
-  * rewrite_data_files action has the same contract.
+  * [[compact]] reads main's head through the same MoR read path queries
+  * use (positional + equality deletes applied, sequence-gated), writes
+  * it as fresh parquet, and commits the result as a REPLACE snapshot
+  * pinned to that head: the new manifest list carries only the
+  * rewritten files, while every earlier snapshot's manifest list stays
+  * intact — time travel to pre-compaction history keeps working, and
+  * reads of the new head carry zero delete joins. Iceberg's own
+  * rewrite_data_files action has the same contract. A commit that lands
+  * between the read and the rewrite's commit makes the rewrite stale:
+  * it fails with [[IcebergCommitConflict]] instead of dropping the
+  * racer's rows, and is never retried.
   *
   * Scale notes: the rewrite is one distributed read→write of the live
   * data (the same cost as any full-table query on the table), the
@@ -31,22 +35,40 @@ import org.apache.spark.sql.SparkSession
   */
 object IcebergMaintenance {
 
-  /** Compact `tableDir` into a deletes-free snapshot tagged
+  /** Compact `table` into a deletes-free snapshot tagged
     * `compacted-<snapshotId>`; returns the new snapshot id. */
-  def compact(spark: SparkSession, tableDir: JPath,
+  def compact(spark: SparkSession, table: IcebergCommit.Target,
       clock: () => Long = () => System.currentTimeMillis(),
-      retainLast: Option[Int] = None): Long = {
-    val df = IcebergRest.readLocal(spark, tableDir)
-    // maxOption: a REST-created table exists with ZERO snapshots
-    val next = IcebergLocal.currentMetadata(tableDir)
-      .flatMap(_.snapshots.map(_.snapshotId).maxOption).getOrElse(0L) + 1
-    val outDir = tableDir.resolve("data").resolve(f"compact-$next%05d")
-    df.write.mode("overwrite").parquet(outDir.toString)
-    val files = parquetFileInfos(outDir)
-    IcebergLocal.append(tableDir, files, clock(),
-      tag = Some(s"compacted-$next"), retainLast = retainLast,
-      schema = Some(df.schema), replace = true)
+      retainLast: Option[Int] = None): Long =
+    rewriteHead(spark, table, "compact", "compacted", clock, retainLast) {
+      (df, outDir) =>
+        df.write.mode("overwrite").parquet(outDir.toString)
+        parquetFileInfos(outDir)
+    }
+
+  /** Read main's head of `table`, rewrite it with `write` into
+    * `data/<dir>-<next id>`, and commit the files as a REPLACE snapshot
+    * tagged `<tag>-<next id>` and pinned to that head. */
+  private def rewriteHead(spark: SparkSession, table: IcebergCommit.Target,
+      dir: String, tag: String, clock: () => Long,
+      retainLast: Option[Int])(
+      write: (DataFrame, JPath) => Seq[IcebergLocal.DataFileInfo]): Long = {
+    val meta = table.current().meta
+    val head = mainHead(meta)
+    val df = IcebergRest.readMeta(spark, meta, Some(ByVersion(head.toString)),
+      Map.empty, None, table.tableDir.toString)
+    val next = meta.snapshots.map(_.snapshotId).max + 1
+    val files =
+      write(df, table.tableDir.resolve("data").resolve(f"$dir-$next%05d"))
+    table.append(files, clock(), tag = Some(s"$tag-$next"),
+      retainLast = retainLast, schema = Some(df.schema), replace = true,
+      assertMainAt = Some(head))
   }
+
+  private def mainHead(meta: IcebergTableMeta): Long =
+    meta.refs.get("main").map(_._2).orElse(meta.currentSnapshotId)
+      .getOrElse(throw new IllegalArgumentException(
+        "the table has no published snapshot"))
 
   /** Z-ORDER clustering compaction — Iceberg's `rewrite_data_files
     * (strategy => 'sort', sort_order => 'zorder(a, b)')`: rewrite the
@@ -67,26 +89,17 @@ object IcebergMaintenance {
     * the parquet footers ([[IcebergPartitioned.fileInfo]]) so the
     * pruner sees them; the commit is a REPLACE snapshot like
     * [[compact]] (deletes materialized, history intact). */
-  def compactZOrder(spark: SparkSession, tableDir: JPath,
+  def compactZOrder(spark: SparkSession, table: IcebergCommit.Target,
       cols: Seq[String], files: Int,
       clock: () => Long = () => System.currentTimeMillis(),
-      retainLast: Option[Int] = None): Long = {
-    val df = IcebergRest.readLocal(spark, tableDir)
-    // maxOption: a REST-created table exists with ZERO snapshots
-    val next = IcebergLocal.currentMetadata(tableDir)
-      .flatMap(_.snapshots.map(_.snapshotId).maxOption).getOrElse(0L) + 1
-    val outDir = tableDir.resolve("data").resolve(f"zorder-$next%05d")
-    val infos = zOrderRewrite(df, cols, files, outDir)
-    IcebergLocal.append(tableDir, infos, clock(),
-      tag = Some(s"zordered-$next"), retainLast = retainLast,
-      schema = Some(df.schema), replace = true)
-  }
+      retainLast: Option[Int] = None): Long =
+    rewriteHead(spark, table, "zorder", "zordered", clock, retainLast)(
+      zOrderRewrite(_, cols, files, _))
 
-  /** The Z-ORDER rewrite core, shared by the local and the
-    * catalog-routed compaction: write `df` z-clustered on `cols` into
+  /** The Z-ORDER rewrite core: write `df` z-clustered on `cols` into
     * `files` files under `outDir`, return their footer-derived infos
     * (bounds included, so the pruner sees the clustering). */
-  private[iceberg] def zOrderRewrite(
+  private def zOrderRewrite(
       df: org.apache.spark.sql.DataFrame, cols: Seq[String],
       files: Int, outDir: JPath): Seq[IcebergLocal.DataFileInfo] = {
     import org.apache.spark.sql.functions._
@@ -150,7 +163,7 @@ object IcebergMaintenance {
     *   3. dedupe (file_path, pos) — re-deleting an already-deleted row
     *      re-records its position, and history accumulates duplicates;
     *   4. write the survivors as `targetFiles` merged delete files and
-    *      commit them with [[IcebergLocal.append]]'s
+    *      commit them with [[IcebergCommit.Target.append]]'s
     *      rewrite-position-deletes shape: carried data and EQUALITY
     *      delete lineage untouched (equality deletes keep their
     *      original sequence gates), carried position-delete files
@@ -160,33 +173,35 @@ object IcebergMaintenance {
     *      couldn't.
     *
     * Earlier snapshots' manifest lists stay intact — time travel to
-    * pre-rewrite history replays the original delete files. Returns the
-    * new snapshot id, or -1 when the table has no position deletes. */
-  def rewritePositionDeletes(spark: SparkSession, tableDir: JPath,
+    * pre-rewrite history replays the original delete files. Like
+    * [[compact]], the commit is pinned to the head it read and never
+    * retried. Returns the new snapshot id, or -1 when the table has no
+    * position deletes. */
+  def rewritePositionDeletes(spark: SparkSession,
+      table: IcebergCommit.Target,
       clock: () => Long = () => System.currentTimeMillis(),
       targetFiles: Int = 1,
       retainLast: Option[Int] = None): Long = {
-    val meta = IcebergLocal.currentMetadata(tableDir).getOrElse(
-      throw new IllegalArgumentException(s"no committed table at $tableDir"))
-    val next = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val outDir = tableDir.resolve("data").resolve(f"posdel-rw-$next%05d")
-    val files = posDelRewriteFiles(spark, meta, outDir, targetFiles)
+    val meta = table.current().meta
+    val head = mainHead(meta)
+    val next = meta.snapshots.map(_.snapshotId).max + 1
+    val outDir = table.tableDir.resolve("data").resolve(f"posdel-rw-$next%05d")
+    val files = posDelRewriteFiles(spark, meta, head, outDir, targetFiles)
     if (files.isEmpty) return -1L
-    IcebergLocal.append(tableDir, files, clock(),
-      tag = Some(s"posdel-rewritten-$next"), retainLast = retainLast,
-      dropPositionDeletes = true)
+    table.append(files, clock(), tag = Some(s"posdel-rewritten-$next"),
+      retainLast = retainLast, dropPositionDeletes = true,
+      assertMainAt = Some(head))
   }
 
-  /** The position-delete MERGE core, shared by the local and the
-    * catalog-routed rewrite: dedupe every live position-delete row
-    * (dropping rows whose target file no longer exists) into
-    * `targetFiles` files under `outDir`; empty when the head carries
-    * no position deletes (caller no-ops). */
-  private[iceberg] def posDelRewriteFiles(spark: SparkSession,
-      meta: IcebergTableMeta, outDir: JPath,
+  /** The position-delete MERGE core: dedupe every live position-delete
+    * row of snapshot `head` (dropping rows whose target file no longer
+    * exists) into `targetFiles` files under `outDir`; empty when the
+    * head carries no position deletes (caller no-ops). */
+  private def posDelRewriteFiles(spark: SparkSession,
+      meta: IcebergTableMeta, head: Long, outDir: JPath,
       targetFiles: Int): Seq[IcebergLocal.DataFileInfo] = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    val snap = IcebergMetadata.select(meta, None)
+    val snap = IcebergMetadata.select(meta, Some(ByVersion(head.toString)))
     val scan = IcebergManifests.scanFiles(spark, snap.manifestList)
     if (scan.positionDeletes.isEmpty) return Nil
     // path forms differ by writer: Spark's _metadata.file_path (what
@@ -221,14 +236,16 @@ object IcebergMaintenance {
     * Returns the new snapshot id, or -1 when nothing matched (no empty
     * snapshot committed). Deleting already-deleted rows is a no-op by
     * construction — the MoR read the positions are computed from never
-    * surfaces them. */
-  def deleteWhere(spark: SparkSession, tableDir: JPath, condition: String,
+    * surfaces them. The positions are main's head's, so the commit is
+    * pinned to that head and never retried, like [[compact]]. */
+  def deleteWhere(spark: SparkSession, table: IcebergCommit.Target,
+      condition: String,
       clock: () => Long = () => System.currentTimeMillis(),
       retainLast: Option[Int] = None): Long = {
     import org.apache.spark.sql.functions.col
-    val meta = IcebergLocal.currentMetadata(tableDir).getOrElse(
-      throw new IllegalArgumentException(s"no committed table at $tableDir"))
-    val snap = IcebergMetadata.select(meta, None)
+    val meta = table.current().meta
+    val head = mainHead(meta)
+    val snap = IcebergMetadata.select(meta, Some(ByVersion(head.toString)))
     val scan = IcebergManifests.scanFiles(spark, snap.manifestList)
     // positions come from the PHYSICAL rows (deletes not re-applied):
     // re-recording a position an earlier delete already retired is a
@@ -239,7 +256,7 @@ object IcebergMaintenance {
       .select(col("_metadata.file_path").as("file_path"),
         col("_metadata.row_index").cast("long").as("pos"))
     val next = meta.snapshots.map(_.snapshotId).max + 1
-    val outDir = tableDir.resolve("data").resolve(f"delete-$next%05d")
+    val outDir = table.tableDir.resolve("data").resolve(f"delete-$next%05d")
     hits.write.mode("overwrite").parquet(outDir.toString)
     val files = parquetFileInfos(outDir, content = 1)
       .filter(_.recordCount > 0)
@@ -248,8 +265,8 @@ object IcebergMaintenance {
       listParquet(outDir).foreach(Files.deleteIfExists(_))
       -1L
     } else
-      IcebergLocal.append(tableDir, files, clock(),
-        tag = Some(s"delete-$next"), retainLast = retainLast)
+      table.append(files, clock(), tag = Some(s"delete-$next"),
+        retainLast = retainLast, assertMainAt = Some(head), maxRetries = 0)
   }
 
   /** Delete every file under the table's own `data/` and `metadata/`

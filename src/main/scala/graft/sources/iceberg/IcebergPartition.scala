@@ -338,8 +338,9 @@ object IcebergPartitioned {
       /** file-count target for the sorted layout (range partitions
         * before the Hive-dir split); required > 0 when sortBy is set. */
       targetFileCount: Int = 0): Long = {
-    require(spec.nonEmpty, "use IcebergLocal.append for unpartitioned commits")
-    IcebergLocal.append(tableDir,
+    require(spec.nonEmpty,
+      "use IcebergCommit.Target.append for unpartitioned commits")
+    IcebergCommit.local(tableDir).append(
       writeFiles(df, tableDir.resolve(dataSubdir), spec, sortBy,
         targetFileCount),
       timestampMs, tag, retainLast,

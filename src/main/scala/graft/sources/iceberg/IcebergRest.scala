@@ -99,9 +99,9 @@ final case class RefRetention(
     maxSnapshotAgeMs: Option[Long] = None,
     maxRefAgeMs: Option[Long] = None)
 
-/** A commit requirement failed server-side (HTTP 409): another writer
-  * moved the ref between this writer's load and its commit. Re-load,
-  * re-prepare, retry. */
+/** A commit requirement failed (HTTP 409 from a catalog, or a local
+  * metadata version taken first): another writer moved the table between
+  * this writer's load and its commit. Re-load, re-prepare, retry. */
 final class IcebergCommitConflict(msg: String)
     extends RuntimeException(msg)
 
@@ -231,21 +231,11 @@ final class IcebergRestCatalog(baseUrl: String,
     * like a commit race. */
   def createTable(namespace: String, table: String,
       schema: org.apache.spark.sql.types.StructType,
-      partitionSpec: Option[Seq[PartitionField]] = None): JsonNode = {
-    val counter = new java.util.concurrent.atomic.AtomicInteger()
-    val sc = IcebergLocal.icebergStructNode(schema, counter)
-    val ids = IcebergLocal.topLevelFieldIds(schema)
-    val specJson = partitionSpec.map { spec =>
-      val fields = spec.zipWithIndex.map { case (f, i) =>
-        s"""{"name":"${f.name}","transform":"${f.transform}",""" +
-          s""""source-id":${ids(f.sourceColumn)},"field-id":${1000 + i}}"""
-      }.mkString("[", ",", "]")
-      s""","partition-spec":{"spec-id":0,"fields":$fields}"""
-    }.getOrElse("")
+      partitionSpec: Option[Seq[PartitionField]] = None): JsonNode =
     post(s"/v1/namespaces/${enc(namespace)}/tables",
-      s"""{"name":"$table","schema":$sc$specJson}""",
+      mapper.writeValueAsString(IcebergCommit.createRequest(table,
+        Some(schema), partitionSpec)),
       s"create $namespace.$table")
-  }
 
   private def post(path: String, body: String, label: String): JsonNode = {
     val c = new URI(base + path).toURL
@@ -1178,7 +1168,7 @@ object IcebergRest {
     }
   }
 
-  private def readMeta(spark: SparkSession, meta: IcebergTableMeta,
+  private[iceberg] def readMeta(spark: SparkSession, meta: IcebergTableMeta,
       spec: Option[VersionSpec], options: Map[String, String],
       schema: Option[org.apache.spark.sql.types.StructType],
       label: String): DataFrame = {

@@ -2,157 +2,93 @@ package graft.streaming
 
 import java.nio.file.{Files, Path => JPath}
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
 
-import graft.sources.iceberg.IcebergLocal
+import graft.sources.iceberg.{IcebergCommit, IcebergLocal, IcebergMaintenance}
 
 /** Streaming sink committing each micro-batch as an append-only Iceberg
-  * snapshot ([[IcebergLocal.append]]): `writeStream.foreachBatch(
-  * IcebergSink.committer(tableDir))`. Composes the round's pieces into
-  * the standard lakehouse ingest shape — a continuous feed lands as a
-  * queryable snapshot history, readable (with time travel) by
-  * [[graft.sources.iceberg.IcebergRest]] or any catalog client, while
-  * the stream is still running.
+  * snapshot through an [[IcebergCommit.Target]]:
+  * `writeStream.foreachBatch(IcebergSink.committer(IcebergCommit.local(dir)))`.
+  * Composes the round's pieces into the standard lakehouse ingest
+  * shape — a continuous feed lands as a queryable snapshot history,
+  * readable (with time travel) by [[graft.sources.iceberg.IcebergRest]]
+  * or any catalog client, while the stream is still running.
+  *
+  * Every batch commit is a compare-and-swap on the table's head that a
+  * lost race retries on the new head, so SEVERAL independent streaming
+  * jobs can append to one table — local or catalog-served — and no
+  * writer overwrites another's snapshot. An absent table is created by
+  * the first batch (through the catalog's create endpoint for a REST
+  * target; a racing job's create winning resolves like any lost CAS).
   *
   * Exactly-once per micro-batch: Structured Streaming re-runs a batchId
   * after a failure, so each commit is tagged `batch-<id>` and a batch
   * whose tag already exists in the table's refs is skipped — the replay
-  * becomes a no-op instead of a duplicate snapshot. (The tag check and
-  * commit are driver-side and serial per query, matching foreachBatch's
-  * execution model.)
+  * becomes a no-op instead of a duplicate snapshot.
   *
   * Scale notes for an unbounded stream: the distributed work is exactly
   * the batch's parquet write — the plan executes ONCE (no isEmpty/count
   * pre-pass; emptiness is decided from what was written). Row counts
-  * come from the parquet footers, read driver-side with
-  * [[ParquetFileReader]] — zero Spark jobs. Commit-side growth is
-  * bounded: manifest tails compact once they exceed
-  * [[IcebergLocal.MergeManifestsAbove]], and `retainLast` caps the
-  * snapshot history (per-commit metadata rewrite AND metadata-directory
-  * size stay O(retainLast) instead of growing with every batch —
-  * Iceberg's expire-snapshots maintenance, fused into the commit).
+  * come from the parquet footers, read driver-side — zero Spark jobs.
+  * Commit-side growth is bounded: manifest tails compact once they
+  * exceed [[IcebergLocal.MergeManifestsAbove]], and `retainLast` caps
+  * the snapshot history (per-commit metadata rewrite AND
+  * metadata-directory size stay O(retainLast) instead of growing with
+  * every batch — Iceberg's expire-snapshots maintenance, fused into the
+  * commit).
   */
 object IcebergSink {
 
   /** A `foreachBatch` function writing every micro-batch to
-    * `tableDir/data/batch-<id>/` and committing it as snapshot tagged
-    * `batch-<id>`. `clock` supplies commit timestamps (injectable for
-    * deterministic histories in tests). `retainLast` bounds the snapshot
-    * history for unbounded streams; note a replayed batchId older than
-    * the retained window re-commits (its tag expired with its snapshot),
-    * so pick it well above the stream's maximum replay depth — Spark
-    * replays only the last unacknowledged batch, so anything ≥ 2 is
-    * safe from duplicates in practice. */
-  def committer(tableDir: JPath,
+    * `<tableDir>/data/<tag>/` and committing it as a snapshot tagged
+    * `<tag>` = `batch-<id>`. `clock` supplies commit timestamps
+    * (injectable for deterministic histories in tests). `retainLast`
+    * bounds the snapshot history for unbounded streams; note a replayed
+    * batchId older than the retained window re-commits (its tag expired
+    * with its snapshot), so pick it well above the stream's maximum
+    * replay depth — Spark replays only the last unacknowledged batch,
+    * so anything ≥ 2 is safe from duplicates in practice. */
+  def committer(table: IcebergCommit.Target,
       clock: () => Long = () => System.currentTimeMillis(),
       retainLast: Option[Int] = None,
       /** partition every batch under this spec
         * ([[graft.sources.iceberg.IcebergPartitioned]] layout: tuples +
         * column bounds in the manifests, the spec in the metadata) —
         * the streamed table then prunes like a batch-written one. */
-      partitionSpec: Option[Seq[graft.sources.iceberg.PartitionField]] = None)
+      partitionSpec: Option[Seq[graft.sources.iceberg.PartitionField]] = None,
+      /** prefixes the tag (`<streamId>-batch-<id>`) to tell CONCURRENT
+        * writers' batches apart: batch ids are per-query, so two jobs
+        * sharing a table without one would collide on `batch-0` and
+        * silently skip each other's batches. Use a stable per-query id
+        * (e.g. derived from the checkpoint location). */
+      streamId: Option[String] = None)
       : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    val tag = s"batch-$batchId"
-    val committed = IcebergLocal.currentMetadata(tableDir)
-      .exists(_.refs.contains(tag))
-    if (!committed) {
-      val dataDir = tableDir.resolve("data").resolve(tag)
+    val tag = (streamId.toSeq :+ s"batch-$batchId").mkString("-")
+    if (!table.metadata().exists(_.refs.contains(tag))) {
+      val dataDir = table.tableDir.resolve("data").resolve(tag)
       // stamp parquet field ids (what real Iceberg writers always do) so
       // the table is rename-evolvable via field-id reads from birth
       val stamped = IcebergLocal.withFieldIds(batch)
-      val files = partitionSpec match {
-        case Some(spec) =>
-          graft.sources.iceberg.IcebergPartitioned
-            .writeFiles(stamped, dataDir, spec)
-        case None =>
-          stamped.write.mode("overwrite").parquet(dataDir.toString)
-          val conf = new Configuration()
-          listParquet(dataDir).map { p =>
-            val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(p.toUri), conf))
-            val n = try r.getRecordCount finally r.close()
-            IcebergLocal.DataFileInfo(p.toUri.toString, n, Files.size(p))
-          }
-      }
-      if (files.exists(_.recordCount > 0))
-        IcebergLocal.append(tableDir, files.filter(_.recordCount > 0),
-          clock(), Some(tag), retainLast, schema = Some(stamped.schema),
-          partitionSpec = partitionSpec)
-      else deleteRecursively(dataDir) // empty batch: nothing to commit
+      val files = writeBatch(stamped, dataDir, partitionSpec)
+        .filter(_.recordCount > 0)
+      if (files.nonEmpty) {
+        table.append(files, clock(), Some(tag), retainLast,
+          schema = Some(stamped.schema), partitionSpec = partitionSpec)
+        ()
+      } else deleteRecursively(dataDir) // empty batch: nothing to commit
     }
   }
 
-  /** A `foreachBatch` function committing every micro-batch THROUGH the
-    * REST catalog's commit endpoint
-    * ([[graft.sources.iceberg.IcebergRestCommit]]) — so SEVERAL
-    * independent streaming jobs can append to ONE table concurrently:
-    * each batch commit is an optimistic compare-and-swap at the
-    * catalog, losers retry on the new head, and no writer ever
-    * overwrites another's snapshot. The plain [[committer]] cannot make
-    * that promise (it rewrites `vN.metadata.json` directly, a
-    * last-writer-wins race).
-    *
-    * Fully catalog-routed: an absent table is CREATED through the
-    * catalog's create endpoint (a racing job's create winning resolves
-    * like any CAS loss), and every batch — including the first —
-    * commits through the CAS. Exactly-once per batch via
-    * the same `batch-<id>` tag check, read from the CATALOG (so a
-    * replay is a no-op even when a different job's commits moved the
-    * head in between). Retention is maintenance-side for this
-    * committer ([[graft.sources.iceberg.IcebergMaintenance]]):
-    * retainLast's in-commit expiry is a local-path rewrite. */
-  def restCommitter(catalog: graft.sources.iceberg.IcebergRestCatalog,
-      namespace: String, table: String, tableDir: JPath,
-      clock: () => Long = () => System.currentTimeMillis(),
-      partitionSpec: Option[Seq[graft.sources.iceberg.PartitionField]] = None,
-      /** distinguishes CONCURRENT writers' idempotence tags: batch ids
-        * are per-query, so two jobs sharing a table would otherwise
-        * collide on `batch-0` and silently skip each other's batches.
-        * REQUIRED (no default): the advertised use case is several
-        * independent jobs on one table, and a shared default would make
-        * them drop each other's batches with no error. Use a stable
-        * per-query id (e.g. derived from the checkpoint location). */
-      streamId: String)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    val tag = s"$streamId-batch-$batchId"
-    val existing =
-      try Some(catalog.loadTable(namespace, table))
-      catch {
-        // ONLY a 404 means "not created yet" — a transient server error
-        // must propagate (Structured Streaming retries the batch), not
-        // trigger a second creating commit racing the first
-        case e: java.io.IOException
-            if Option(e.getMessage).exists(_.contains("HTTP 404")) => None
-      }
-    if (!existing.exists(_.refs.contains(tag))) {
-      val dataDir = tableDir.resolve("data").resolve(tag)
-      val stamped = IcebergLocal.withFieldIds(batch)
-      val files = (partitionSpec match {
-        case Some(spec) => graft.sources.iceberg.IcebergPartitioned
-          .writeFiles(stamped, dataDir, spec)
-        case None =>
-          stamped.write.mode("overwrite").parquet(dataDir.toString)
-          graft.sources.iceberg.IcebergMaintenance.parquetFileInfos(dataDir)
-      }).filter(_.recordCount > 0)
-      if (files.nonEmpty) {
-        if (existing.isEmpty) {
-          // create THROUGH the catalog; a racing job's create winning
-          // is fine — creation resolves like any other CAS loss
-          try catalog.createTable(namespace, table, stamped.schema,
-            partitionSpec)
-          catch {
-            case _: graft.sources.iceberg.IcebergCommitConflict => ()
-          }
-        }
-        graft.sources.iceberg.IcebergRestCommit.append(catalog,
-          namespace, table, tableDir, files, clock(), Some(tag),
-          partitionSpec, Some(stamped.schema))
-        ()
-      } else deleteRecursively(dataDir)
-    }
+  /** Write `stamped` under `dataDir` (partitioned by `spec` when set)
+    * and list the written files with their footer row counts. */
+  private def writeBatch(stamped: DataFrame, dataDir: JPath,
+      spec: Option[Seq[graft.sources.iceberg.PartitionField]])
+      : Seq[IcebergLocal.DataFileInfo] = spec match {
+    case Some(sp) =>
+      graft.sources.iceberg.IcebergPartitioned.writeFiles(stamped, dataDir, sp)
+    case None =>
+      stamped.write.mode("overwrite").parquet(dataDir.toString)
+      IcebergMaintenance.parquetFileInfos(dataDir)
   }
 
   /** A `foreachBatch` function committing every micro-batch as a CDC
@@ -182,7 +118,7 @@ object IcebergSink {
     * (narrow), written once; reads broadcast it. The distributed work
     * per batch is exactly two parquet writes of batch-sized data; row
     * counts come from footers, zero extra Spark jobs. */
-  def upsertCommitter(tableDir: JPath, keyCols: Seq[String],
+  def upsertCommitter(table: IcebergCommit.Target, keyCols: Seq[String],
       clock: () => Long = () => System.currentTimeMillis(),
       retainLast: Option[Int] = None,
       /** when set, every batch's DATA commit lands Hive-partitioned
@@ -196,7 +132,7 @@ object IcebergSink {
       : (DataFrame, Long) => Unit = { (batch, batchId) =>
     require(keyCols.nonEmpty, "upsertCommitter needs at least one key column")
     val tag = s"batch-$batchId"
-    val meta = IcebergLocal.currentMetadata(tableDir)
+    val meta = table.metadata()
     if (!meta.exists(_.refs.contains(tag))) {
       // spec field ids are depth-first from 1 over the committed schema
       // (a nested column consumes ids before the next top-level one), so
@@ -209,44 +145,29 @@ object IcebergSink {
           s"key column '$c' absent from batch schema ${batch.schema.simpleString}")))
       val delTag = s"$tag-del"
       val delDone = meta.exists(_.refs.contains(delTag))
-      val dataDir = tableDir.resolve("data").resolve(tag)
+      val dataDir = table.tableDir.resolve("data").resolve(tag)
       // field ids stamped: the upsert table is rename-evolvable
       val stamped = IcebergLocal.withFieldIds(batch)
-      val files = partitionSpec match {
-        case Some(spec) => graft.sources.iceberg.IcebergPartitioned
-          .writeFiles(stamped, dataDir, spec)
-        case None =>
-          stamped.write.mode("overwrite").parquet(dataDir.toString)
-          graft.sources.iceberg.IcebergMaintenance.parquetFileInfos(dataDir)
-      }
+      val files = writeBatch(stamped, dataDir, partitionSpec)
       if (files.exists(_.recordCount > 0)) {
         // delete-before-data, skipped for the table's first commit
         // (nothing to retire) or when a replay already committed it
         if (meta.isDefined && !delDone) {
-          val delDir = tableDir.resolve("data").resolve(delTag)
+          val delDir = table.tableDir.resolve("data").resolve(delTag)
           batch.selectExpr(keyCols: _*).distinct()
             .write.mode("overwrite").parquet(delDir.toString)
-          val delFiles = graft.sources.iceberg.IcebergMaintenance
+          val delFiles = IcebergMaintenance
             .parquetFileInfos(delDir, content = 2, equalityIds = keyIds)
             .filter(_.recordCount > 0)
           if (delFiles.nonEmpty)
-            IcebergLocal.append(tableDir, delFiles, clock(), Some(delTag),
-              retainLast)
+            table.append(delFiles, clock(), Some(delTag), retainLast)
         }
-        IcebergLocal.append(tableDir, files.filter(_.recordCount > 0),
-          clock(), Some(tag), retainLast, schema = Some(stamped.schema),
+        table.append(files.filter(_.recordCount > 0), clock(), Some(tag),
+          retainLast, schema = Some(stamped.schema),
           partitionSpec = partitionSpec)
+        ()
       } else deleteRecursively(dataDir) // empty batch: nothing to commit
     }
-  }
-
-  private def listParquet(dir: JPath): Seq[JPath] = {
-    val s = Files.list(dir) // close releases the directory fd
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala
-        .filter(_.toString.endsWith(".parquet")).toSeq
-    } finally s.close()
   }
 
   private def deleteRecursively(dir: JPath): Unit = {

@@ -166,7 +166,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
       fields.get(0).path("null-order").asText() == "nulls-first")
     // an UNSORTED later commit carries the declared order untouched
     val extra = orders.limit(5)
-    IcebergLocal.append(sortedDir,
+    IcebergCommit.local(sortedDir).append(
       IcebergPartitioned.writeFiles(extra, sortedDir.resolve("data/b1"),
         spec),
       2000L, schema = Some(extra.schema), partitionSpec = Some(spec))
@@ -203,7 +203,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
     assert(files.size == 5)
     val infos = files.map(p =>
       IcebergPartitioned.fileInfo(p, nation.schema, Nil))
-    IcebergLocal.append(dir, infos, 1000L, schema = Some(nation.schema))
+    IcebergCommit.local(dir).append(infos, 1000L, schema = Some(nation.schema))
     val pruned = IcebergRest.readLocal(spark, dir,
       options = Map("filter" -> "n_nationkey = 13"))
     assert(pruned.count() == 1)
@@ -224,7 +224,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
       .col("n_nationkey")).write.mode("overwrite").parquet(out.toString)
     val infos = IcebergPartitioned.listParquetDeep(out)
       .map(p => IcebergPartitioned.fileInfo(p, nation.schema, Nil))
-    IcebergLocal.append(dir, infos, 1000L, schema = Some(nation.schema))
+    IcebergCommit.local(dir).append(infos, 1000L, schema = Some(nation.schema))
     // a function of the column: no necessary condition derivable — the
     // pruner must keep every file, the filter still applies row-wise
     val df = IcebergRest.readLocal(spark, dir,
@@ -245,7 +245,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
     val spec = Seq(PartitionField("o_month", "o_orderdate", "month"))
     IcebergPartitioned.append(orders, dir, "data/b0", spec, 1000L)
-    IcebergMaintenance.deleteWhere(spark, dir,
+    IcebergMaintenance.deleteWhere(spark, IcebergCommit.local(dir),
       "o_orderkey % 3 = 0", () => 2000L)
     val filter = "o_orderdate >= date '1995-03-01' AND o_orderdate < date '1995-06-01'"
     val got = IcebergRest.readLocal(spark, dir,
@@ -333,7 +333,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
     val infos = Seq("allnull", "mixed", "nonull").flatMap(s =>
       IcebergPartitioned.listParquetDeep(out.resolve(s))
         .map(p => IcebergPartitioned.fileInfo(p, schema, Nil)))
-    IcebergLocal.append(dir, infos, 1000L, schema = Some(schema))
+    IcebergCommit.local(dir).append(infos, 1000L, schema = Some(schema))
     val isNull = IcebergRest.readLocal(spark, dir,
       options = Map("filter" -> "c IS NULL"))
     assert(isNull.count() == 3)
@@ -377,7 +377,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
       .col("n_name")).write.mode("overwrite").parquet(out.toString)
     val infos = IcebergPartitioned.listParquetDeep(out)
       .map(p => IcebergPartitioned.fileInfo(p, nation.schema, Nil))
-    IcebergLocal.append(dir, infos, 1000L, schema = Some(nation.schema))
+    IcebergCommit.local(dir).append(infos, 1000L, schema = Some(nation.schema))
     val pruned = IcebergRest.readLocal(spark, dir,
       options = Map("filter" -> "startswith(n_name, 'NATION_2')"))
     assert(pruned.count() ==
@@ -502,7 +502,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
     files.zipWithIndex.foreach { case (p, i) =>
       val m = spark.read.parquet(p.toString).head().getAs[Int]("m")
       val info = IcebergPartitioned.fileInfo(p, schema, Seq("m" -> m))
-      IcebergLocal.append(dir, Seq(info), 1000L + i,
+      IcebergCommit.local(dir).append(Seq(info), 1000L + i,
         schema = Some(schema), partitionSpec = Some(spec))
     }
     val meta = IcebergLocal.currentMetadata(dir).get
@@ -532,7 +532,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
     orders.limit(10).coalesce(1).write.mode("overwrite").parquet(out.toString)
     val infos = IcebergPartitioned.listParquetDeep(out)
       .map(p => IcebergPartitioned.fileInfo(p, orders.schema, Nil))
-    IcebergLocal.append(dir, infos, 2000L)
+    IcebergCommit.local(dir).append(infos, 2000L)
     val meta = IcebergLocal.currentMetadata(dir).get
     assert(meta.partitionSpecs(0) == spec,
       "spec-less commit dropped the table's partition spec")
@@ -552,7 +552,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
     val out = freshDir("zorder_files")
     orders.repartition(8, org.apache.spark.sql.functions.col("o_orderkey"))
       .write.mode("overwrite").parquet(out.toString)
-    IcebergLocal.append(dir, IcebergMaintenance.parquetFileInfos(out),
+    IcebergCommit.local(dir).append(IcebergMaintenance.parquetFileInfos(out),
       1000L, schema = Some(orders.schema))
     // unclustered baseline: hash layout spreads every value range over
     // every file, so these predicates keep (nearly) all 8 files.
@@ -570,7 +570,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
     assert(beforeBoth >= 7, s"hash layout should not prune: $beforeBoth")
     val wantBoth = IcebergRest.readLocal(spark, dir).where(both)
       .collect().map(_.toString).sorted
-    IcebergMaintenance.compactZOrder(spark, dir,
+    IcebergMaintenance.compactZOrder(spark, IcebergCommit.local(dir),
       Seq("o_custkey", "o_totalprice"), files = 8, () => 2000L)
     // the pruned post-zorder read stays EXACT...
     val after = IcebergRest.readLocal(spark, dir,
@@ -601,14 +601,14 @@ class IcebergPartitionSpec extends AnyFunSuite {
         lit(null).cast("long").as("c"), (col("id") % 13).as("d"))
     val out = freshDir("zorder_edge_files")
     df.repartition(4).write.mode("overwrite").parquet(out.toString)
-    IcebergLocal.append(dir, IcebergMaintenance.parquetFileInfos(out),
+    IcebergCommit.local(dir).append(IcebergMaintenance.parquetFileInfos(out),
       1000L, schema = Some(df.schema))
     // 4 clustered columns (one all-null): must not throw, and the
     // result must be row-exact. With k=4 the per-dimension bit width is
     // capped so the interleaved value stays NON-NEGATIVE — a sign-flip
     // would not corrupt rows, only locality, so exactness is the
     // contract pinned here and the cap is pinned by construction
-    IcebergMaintenance.compactZOrder(spark, dir,
+    IcebergMaintenance.compactZOrder(spark, IcebergCommit.local(dir),
       Seq("a", "b", "c", "d"), files = 4, () => 2000L)
     val got = IcebergRest.readLocal(spark, dir)
     assert(got.count() == 1000)
@@ -639,7 +639,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
         .parquet(out.toString)
       val infos = IcebergPartitioned.listParquetDeep(out)
         .map(p => IcebergPartitioned.fileInfo(p, df.schema, Nil))
-      IcebergLocal.append(dir, infos, 1000L, schema = Some(df.schema))
+      IcebergCommit.local(dir).append(infos, 1000L, schema = Some(df.schema))
       dir
     }
     val dir = commit("with_bloom", bloom = true)
@@ -672,7 +672,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
     sdf.repartition(8, col("u")).write.mode("overwrite")
       .option("parquet.bloom.filter.enabled#u", "true")
       .parquet(sout.toString)
-    IcebergLocal.append(sdir, IcebergPartitioned.listParquetDeep(sout)
+    IcebergCommit.local(sdir).append(IcebergPartitioned.listParquetDeep(sout)
       .map(p => IcebergPartitioned.fileInfo(p, sdf.schema, Nil)),
       1000L, schema = Some(sdf.schema))
     val sHit = read("u = 'url-4000'", sdir)
@@ -692,7 +692,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
       df.repartition(8, col(keyCol)).write.mode("overwrite")
         .option(s"parquet.bloom.filter.enabled#$keyCol", "true")
         .parquet(out.toString)
-      IcebergLocal.append(dir, IcebergPartitioned.listParquetDeep(out)
+      IcebergCommit.local(dir).append(IcebergPartitioned.listParquetDeep(out)
         .map(p => IcebergPartitioned.fileInfo(p, df.schema, Nil)),
         1000L, schema = Some(df.schema))
       dir
@@ -790,7 +790,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
     // position deletes via the engine's DELETE WHERE...
     val nDel = IcebergRest.readLocal(spark, dir)
       .where("o_orderkey % 5 = 0").count()
-    IcebergMaintenance.deleteWhere(spark, dir, "o_orderkey % 5 = 0",
+    IcebergMaintenance.deleteWhere(spark, IcebergCommit.local(dir), "o_orderkey % 5 = 0",
       () => 2000L)
     // ...and one equality-delete file (the upsert shape) on a key that
     // EXISTS and survives the position delete
@@ -801,7 +801,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
     orders.limit(0).select(col("o_orderkey"))
       .union(spark.range(1).select(lit(eqKey).as("o_orderkey")))
       .coalesce(1).write.mode("overwrite").parquet(eqDir.toString)
-    IcebergLocal.append(dir,
+    IcebergCommit.local(dir).append(
       IcebergMaintenance.parquetFileInfos(eqDir, content = 2,
         equalityIds = Seq(1)), 3000L)
     val files = IcebergRest.metaTable(spark, dir, "files")
@@ -853,8 +853,8 @@ class IcebergPartitionSpec extends AnyFunSuite {
     // two OVERLAPPING deletes: the second re-records every %35 key's
     // position (positions come from physical rows), so the delete
     // history carries duplicates the rewrite must collapse
-    IcebergMaintenance.deleteWhere(spark, dir, "o_orderkey % 5 = 0", clock)
-    IcebergMaintenance.deleteWhere(spark, dir, "o_orderkey % 7 = 0", clock)
+    IcebergMaintenance.deleteWhere(spark, IcebergCommit.local(dir), "o_orderkey % 5 = 0", clock)
+    IcebergMaintenance.deleteWhere(spark, IcebergCommit.local(dir), "o_orderkey % 7 = 0", clock)
     // plus one equality delete whose lineage must survive untouched
     val eqKey = orders.where("o_orderkey % 5 <> 0 AND o_orderkey % 7 <> 0")
       .agg(org.apache.spark.sql.functions.min("o_orderkey"))
@@ -863,7 +863,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
     orders.limit(0).select(col("o_orderkey"))
       .union(spark.range(1).select(lit(eqKey).as("o_orderkey")))
       .coalesce(1).write.mode("overwrite").parquet(eqDir.toString)
-    IcebergLocal.append(dir,
+    IcebergCommit.local(dir).append(
       IcebergMaintenance.parquetFileInfos(eqDir, content = 2,
         equalityIds = Seq(1)), clock())
     val preSnap = IcebergLocal.currentMetadata(dir).get
@@ -883,7 +883,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
     val dataBefore = IcebergRest.metaTable(spark, dir, "files")
       .where("content = 0").select("file_path")
       .collect().map(_.getString(0)).sorted.toSeq
-    IcebergMaintenance.rewritePositionDeletes(spark, dir, clock)
+    IcebergMaintenance.rewritePositionDeletes(spark, IcebergCommit.local(dir), clock)
     // FEWER delete files, duplicates gone, data files byte-identical
     val (filesAfter, recsAfter) = delStats()
     assert(filesAfter == 1, s"expected 1 merged delete file: $filesAfter")
@@ -913,7 +913,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
       == orders.count())
     // idempotent-ish: a second rewrite has nothing to merge beyond the
     // single file it rewrites to a single file; zero deletes -> -1
-    val again = IcebergMaintenance.rewritePositionDeletes(spark, dir, clock)
+    val again = IcebergMaintenance.rewritePositionDeletes(spark, IcebergCommit.local(dir), clock)
     assert(again > 0)
     assert(delStats() == (1L, nDistinct))
   }
@@ -929,14 +929,14 @@ class IcebergPartitionSpec extends AnyFunSuite {
     var now = 1000L
     val clock = () => { now += 1000L; now }
     // s2: positional deletes; s3+s4: equality-delete upsert (price bump)
-    IcebergMaintenance.deleteWhere(spark, dir, "o_orderkey % 3 = 0", clock)
+    IcebergMaintenance.deleteWhere(spark, IcebergCommit.local(dir), "o_orderkey % 3 = 0", clock)
     val committer = graft.streaming.IcebergSink.upsertCommitter(
-      dir, keyCols = Seq("o_orderkey"), clock = clock)
+      IcebergCommit.local(dir), keyCols = Seq("o_orderkey"), clock = clock)
     committer(orders.where("o_orderkey % 10 = 7 AND o_orderkey % 3 <> 0")
       .withColumn("o_totalprice", col("o_totalprice") + lit(50.0)), 1L)
     val travelAt = now
     // s5 AFTER the travel point: must not apply to the as-of read
-    IcebergMaintenance.deleteWhere(spark, dir, "o_orderkey % 10 = 1", clock)
+    IcebergMaintenance.deleteWhere(spark, IcebergCommit.local(dir), "o_orderkey % 10 = 1", clock)
     // timestamp literal on the NTZ column: the UTC cast unwrap must
     // still derive the pruning predicate through the coercion cast
     val filter = "o_orderdate >= timestamp '1995-03-01' AND " +
@@ -1113,7 +1113,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
     val infos = Seq("match", "other").flatMap(d =>
       IcebergPartitioned.listParquetDeep(out.resolve(d))
         .map(p => IcebergPartitioned.fileInfo(p, schema, Nil)))
-    IcebergLocal.append(dir, infos, 1000L, schema = Some(schema))
+    IcebergCommit.local(dir).append(infos, 1000L, schema = Some(schema))
     val got = IcebergRest.readLocal(spark, dir,
       options = Map("filter" -> "s LIKE 'abc#%' ESCAPE '#'"))
     assert(got.collect().map(_.getString(0)).toSeq == Seq("abc%"),
@@ -1140,7 +1140,7 @@ class IcebergPartitionSpec extends AnyFunSuite {
     val schema = Seq("x").toDF("s").schema
     val infos = IcebergPartitioned.listParquetDeep(out)
       .map(p => IcebergPartitioned.fileInfo(p, schema, Nil))
-    IcebergLocal.append(dir, infos, 1000L, schema = Some(schema))
+    IcebergCommit.local(dir).append(infos, 1000L, schema = Some(schema))
     val got = IcebergRest.readLocal(spark, dir,
       options = Map("filter" -> "s >= ''"))
     assert(got.count() == 2,

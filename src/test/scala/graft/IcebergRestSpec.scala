@@ -11,7 +11,7 @@ import graft.sources.iceberg._
 import org.apache.spark.sql.functions.col
 
 /** End-to-end Iceberg REST coverage: a warehouse written by
-  * [[IcebergLocal.append]] (spec-shaped metadata JSON + Avro manifests
+  * [[IcebergCommit.local]] (spec-shaped metadata JSON + Avro manifests
   * over real parquet), served by [[IcebergLocal.CatalogServer]], read
   * back through [[IcebergRestCatalog]]/[[IcebergRest]] — discovery,
   * current reads, every time-travel spec form, auth, and the explicit
@@ -42,10 +42,10 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     warehouse = Files.createTempDirectory("ice-wh")
     val nationDir = warehouse.resolve("nation")
     val nation = spark.read.parquet(s"$sf/nation.parquet")
-    snap1 = IcebergLocal.append(nationDir,
+    snap1 = IcebergCommit.local(nationDir).append(
       partFiles(nation.filter("n_regionkey < 2")),
       timestampMs = 1000L, tag = Some("initial"))
-    snap2 = IcebergLocal.append(nationDir,
+    snap2 = IcebergCommit.local(nationDir).append(
       partFiles(nation.filter("n_regionkey >= 2")),
       timestampMs = 2000L)
     server = new IcebergLocal.CatalogServer(warehouse, "analytics")
@@ -199,7 +199,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       .orderBy("n_nationkey")
     val dataInfos = partFiles(nation)
     assert(dataInfos.size == 1) // coalesce(1): positions are file-global
-    IcebergLocal.append(dir, dataInfos, timestampMs = 1000L,
+    IcebergCommit.local(dir).append(dataInfos, timestampMs = 1000L,
       tag = Some("pre-delete"))
     val delDir = Files.createTempDirectory("ice-del")
     import spark.implicits._
@@ -209,7 +209,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       .write.mode("overwrite").parquet(delDir.toString)
     val delFile = Files.list(delDir).iterator().asScala
       .find(_.toString.endsWith(".parquet")).get
-    IcebergLocal.append(dir, Seq(IcebergLocal.DataFileInfo(
+    IcebergCommit.local(dir).append(Seq(IcebergLocal.DataFileInfo(
       delFile.toUri.toString, 3, Files.size(delFile), content = 1)),
       timestampMs = 2000L)
     try {
@@ -253,10 +253,10 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       .write.mode("overwrite").parquet(delDir.toString)
     val delFile = Files.list(delDir).iterator().asScala
       .find(_.toString.endsWith(".parquet")).get
-    IcebergLocal.append(dir, Seq(IcebergLocal.DataFileInfo(
+    IcebergCommit.local(dir).append(Seq(IcebergLocal.DataFileInfo(
       delFile.toUri.toString, 1, Files.size(delFile), content = 1)),
       timestampMs = 1000L)
-    IcebergLocal.append(dir, dataInfos, timestampMs = 2000L)
+    IcebergCommit.local(dir).append(dataInfos, timestampMs = 2000L)
     try {
       assert(IcebergRest.read(spark, catalog, "analytics", "morseq")
         .count() == 25)
@@ -274,7 +274,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the delete (seq 2) applies to data at seq 1 only.
     val dir = warehouse.resolve("eqdel")
     val nation = spark.read.parquet(s"$sf/nation.parquet")
-    IcebergLocal.append(dir, partFiles(nation), timestampMs = 1000L,
+    IcebergCommit.local(dir).append(partFiles(nation), timestampMs = 1000L,
       tag = Some("pre-delete"), schema = Some(nation.schema))
     val delDir = Files.createTempDirectory("ice-del-eq")
     import spark.implicits._
@@ -282,7 +282,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       .write.mode("overwrite").parquet(delDir.toString)
     val delFile = Files.list(delDir).iterator().asScala
       .find(_.toString.endsWith(".parquet")).get
-    IcebergLocal.append(dir, Seq(IcebergLocal.DataFileInfo(
+    IcebergCommit.local(dir).append(Seq(IcebergLocal.DataFileInfo(
       delFile.toUri.toString, 2, Files.size(delFile), content = 2,
       equalityIds = Seq(1))),
       timestampMs = 2000L)
@@ -314,10 +314,10 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val delFile = Files.list(delDir).iterator().asScala
       .find(_.toString.endsWith(".parquet")).get
     // delete first (seq 1), data second (seq 2): strict < -> no-op
-    IcebergLocal.append(dir, Seq(IcebergLocal.DataFileInfo(
+    IcebergCommit.local(dir).append(Seq(IcebergLocal.DataFileInfo(
       delFile.toUri.toString, 1, Files.size(delFile), content = 2)),
       timestampMs = 1000L)
-    IcebergLocal.append(dir, partFiles(nation), timestampMs = 2000L)
+    IcebergCommit.local(dir).append(partFiles(nation), timestampMs = 2000L)
     try {
       assert(IcebergRest.read(spark, catalog, "analytics", "eqdel2")
         .count() == 25)
@@ -327,8 +327,8 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // now the applying order: data (seq 1), delete (seq 2)
     val dir2 = warehouse.resolve("eqdel3")
-    IcebergLocal.append(dir2, partFiles(nation), timestampMs = 1000L)
-    IcebergLocal.append(dir2, Seq(IcebergLocal.DataFileInfo(
+    IcebergCommit.local(dir2).append(partFiles(nation), timestampMs = 1000L)
+    IcebergCommit.local(dir2).append(Seq(IcebergLocal.DataFileInfo(
       delFile.toUri.toString, 1, Files.size(delFile), content = 2)),
       timestampMs = 2000L)
     try {
@@ -353,9 +353,9 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     // stamped ids must match the committed schema's numbering
     assert(stamped.schema.fields.map(
       _.metadata.getLong("parquet.field.id")).toSeq == Seq(1L, 2L))
-    IcebergLocal.append(dir, partFiles(stamped), timestampMs = 1000L,
+    IcebergCommit.local(dir).append(partFiles(stamped), timestampMs = 1000L,
       schema = Some(stamped.schema))
-    IcebergLocal.renameColumn(dir, "n_name", "nation_label")
+    IcebergCommit.local(dir).renameColumn("n_name", "nation_label")
     try {
       val df = IcebergRest.readLocal(spark, dir,
         options = Map("fieldIdReads" -> "true"))
@@ -376,7 +376,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
         .write.mode("overwrite").parquet(delDir.toString)
       val delFile = Files.list(delDir).iterator().asScala
         .find(_.toString.endsWith(".parquet")).get
-      IcebergLocal.append(dir, Seq(IcebergLocal.DataFileInfo(
+      IcebergCommit.local(dir).append(Seq(IcebergLocal.DataFileInfo(
         delFile.toUri.toString, 1, Files.size(delFile), content = 2,
         equalityIds = Seq(2))), timestampMs = 2000L)
       val after = IcebergRest.readLocal(spark, dir,
@@ -394,11 +394,11 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = spark.read.parquet(s"$sf/nation.parquet")
       .select("n_nationkey", "n_name", "n_regionkey")
     val stamped = IcebergLocal.withFieldIds(base)
-    IcebergLocal.append(dir, partFiles(stamped), timestampMs = 1000L,
+    IcebergCommit.local(dir).append(partFiles(stamped), timestampMs = 1000L,
       schema = Some(stamped.schema))
     try {
       // ADD: pre-add files surface NULL for the new column — no rewrite
-      IcebergLocal.addColumn(dir, "n_tier", "string")
+      IcebergCommit.local(dir).addColumn("n_tier", "string")
       val added = IcebergRest.readLocal(spark, dir,
         options = Map("fieldIdReads" -> "true"))
       assert(added.columns.toSeq ==
@@ -407,14 +407,14 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(added.filter("n_tier IS NOT NULL").count() == 0)
       // DROP: the column leaves the current schema; other values still
       // resolve by field id
-      IcebergLocal.dropColumn(dir, "n_regionkey")
+      IcebergCommit.local(dir).dropColumn("n_regionkey")
       val dropped = IcebergRest.readLocal(spark, dir,
         options = Map("fieldIdReads" -> "true"))
       assert(dropped.columns.toSeq == Seq("n_nationkey", "n_name", "n_tier"))
       assert(dropped.filter("n_name IS NULL").count() == 0)
       // a later ADD must NOT reuse the dropped column's field id —
       // reuse would resurrect n_regionkey's bytes under the new name
-      IcebergLocal.addColumn(dir, "n_note", "string")
+      IcebergCommit.local(dir).addColumn("n_note", "string")
       val raw = mapperFor(dir)
       val curId = raw.path("current-schema-id").asInt(0)
       val fields = (0 until raw.get("schemas").size())
@@ -430,9 +430,9 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
         "a fresh column resurrected old bytes — field id was reused")
       // misuse fails loudly
       intercept[IllegalArgumentException](
-        IcebergLocal.addColumn(dir, "n_name", "string"))
+        IcebergCommit.local(dir).addColumn("n_name", "string"))
       intercept[IllegalArgumentException](
-        IcebergLocal.dropColumn(dir, "nope"))
+        IcebergCommit.local(dir).dropColumn("nope"))
     } finally {
       import scala.reflect.io.Directory
       new Directory(dir.toFile).deleteRecursively()
@@ -460,7 +460,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = warehouse.resolve("evolve2")
     val nation = spark.read.parquet(s"$sf/nation.parquet")
       .select("n_nationkey", "n_name") // NOT stamped
-    IcebergLocal.append(dir, partFiles(nation), timestampMs = 1000L,
+    IcebergCommit.local(dir).append(partFiles(nation), timestampMs = 1000L,
       schema = Some(nation.schema))
     try {
       val e = intercept[Exception] {
@@ -484,21 +484,21 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b0 = dir.resolve("data").resolve("b0")
     Files.createDirectories(b0)
     nation.coalesce(1).write.mode("overwrite").parquet(b0.toString)
-    IcebergLocal.append(dir, IcebergMaintenance.parquetFileInfos(b0),
+    IcebergCommit.local(dir).append(IcebergMaintenance.parquetFileInfos(b0),
       timestampMs = 1000L, tag = Some("all"), schema = Some(nation.schema))
     try {
-      assert(IcebergMaintenance.deleteWhere(spark, dir,
+      assert(IcebergMaintenance.deleteWhere(spark, IcebergCommit.local(dir),
         "n_regionkey = 2", () => 2000L) > 0)
       val after1 = IcebergRest.readLocal(spark, dir)
       assert(after1.filter("n_regionkey = 2").count() == 0)
       assert(after1.count() == 20)
       // second delete composes with the first
-      assert(IcebergMaintenance.deleteWhere(spark, dir,
+      assert(IcebergMaintenance.deleteWhere(spark, IcebergCommit.local(dir),
         "n_nationkey = 0", () => 3000L) > 0)
       assert(IcebergRest.readLocal(spark, dir).count() == 19)
       // no match: nothing committed, snapshot count unchanged
       val snaps = IcebergLocal.currentMetadata(dir).get.snapshots.size
-      assert(IcebergMaintenance.deleteWhere(spark, dir,
+      assert(IcebergMaintenance.deleteWhere(spark, IcebergCommit.local(dir),
         "n_nationkey = 999", () => 4000L) == -1L)
       assert(IcebergLocal.currentMetadata(dir).get.snapshots.size == snaps)
       // pre-delete history intact
@@ -522,7 +522,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b0 = dir.resolve("data").resolve("b0")
     Files.createDirectories(b0)
     nation.coalesce(1).write.mode("overwrite").parquet(b0.toString)
-    IcebergLocal.append(dir, IcebergMaintenance.parquetFileInfos(b0),
+    IcebergCommit.local(dir).append(IcebergMaintenance.parquetFileInfos(b0),
       timestampMs = 1000L, schema = Some(nation.schema))
     // an equality delete landing inside the table dir too
     val d0 = dir.resolve("data").resolve("d0")
@@ -530,12 +530,12 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     Seq(0L).toDF("n_nationkey").coalesce(1)
       .write.mode("overwrite").parquet(d0.toString)
-    IcebergLocal.append(dir,
+    IcebergCommit.local(dir).append(
       IcebergMaintenance.parquetFileInfos(d0, content = 2,
         equalityIds = Seq(1)), timestampMs = 2000L)
     try {
       assert(IcebergRest.readLocal(spark, dir).count() == 24)
-      IcebergMaintenance.compact(spark, dir,
+      IcebergMaintenance.compact(spark, IcebergCommit.local(dir),
         clock = () => 3000L, retainLast = Some(1))
       val deleted = IcebergMaintenance.vacuum(dir)
       assert(deleted > 0, "vacuum found nothing to reclaim")
@@ -588,7 +588,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = Files.createTempDirectory("ice-retain").resolve("t")
     val one = partFiles(spark.range(1).toDF("v"))
     (1 to 5).foreach { i =>
-      IcebergLocal.append(dir, one, timestampMs = i * 1000L,
+      IcebergCommit.local(dir).append(one, timestampMs = i * 1000L,
         tag = Some(s"batch-$i"), retainLast = Some(2))
     }
     val m = IcebergLocal.currentMetadata(dir).get
@@ -608,7 +608,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("age-based expire: pinned tags and branch heads survive the sweep") {
     val dir = Files.createTempDirectory("ice-expire-age").resolve("t")
     def commit(i: Int, tag: Option[String] = None): Long =
-      IcebergLocal.append(dir, partFiles(spark.range(1).toDF("v")),
+      IcebergCommit.local(dir).append(partFiles(spark.range(1).toDF("v")),
         timestampMs = i * 1000L, tag = tag)
     commit(1)                      // s1 @1000 — unreferenced, old
     commit(2, Some("pinned"))      // s2 @2000 — tag-protected
@@ -616,7 +616,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     commit(4)                      // s4 @4000 — main head
     val before = countVia(dir)
     // cutoff 3500: s1..s3 are candidates; the tag shields s2
-    val expired = IcebergLocal.expireSnapshots(dir, olderThanMs = 3500L,
+    val expired = IcebergCommit.local(dir).expireSnapshots(olderThanMs = 3500L,
       minSnapshotsToKeep = 1, timestampMs = 9000L)
     assert(expired == Seq(1L, 3L), s"expired $expired")
     val m = IcebergLocal.currentMetadata(dir).get
@@ -637,16 +637,16 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     // of main's lineage retains s2 (ancestor) even past the cutoff
     val dir2 = Files.createTempDirectory("ice-expire-min").resolve("t")
     def commit2(i: Int): Long =
-      IcebergLocal.append(dir2, partFiles(spark.range(1).toDF("v")),
+      IcebergCommit.local(dir2).append(partFiles(spark.range(1).toDF("v")),
         timestampMs = i * 1000L)
     (1 to 4).foreach(commit2)
-    val expired2 = IcebergLocal.expireSnapshots(dir2, olderThanMs = 9999L,
+    val expired2 = IcebergCommit.local(dir2).expireSnapshots(olderThanMs = 9999L,
       minSnapshotsToKeep = 3, timestampMs = 9000L)
     assert(expired2 == Seq(1L), s"expired $expired2")
     assert(IcebergLocal.currentMetadata(dir2).get.snapshots
       .map(_.snapshotId).sorted == Seq(2L, 3L, 4L))
     // nothing left to expire → no-op, no new metadata version
-    assert(IcebergLocal.expireSnapshots(dir2, 9999L, 3, 9001L).isEmpty)
+    assert(IcebergCommit.local(dir2).expireSnapshots(9999L, 3, 9001L).isEmpty)
   }
 
   test("changelog read: inserts and deletes as first-class rows, rewrite refused") {
@@ -654,11 +654,11 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nation = spark.read.parquet(s"$sf/nation.parquet")
       .select("n_nationkey", "n_name", "n_regionkey")
     def commit(pred: String, ts: Long): Long =
-      IcebergLocal.append(dir, partFiles(nation.filter(pred)), ts,
+      IcebergCommit.local(dir).append(partFiles(nation.filter(pred)), ts,
         schema = Some(nation.schema))
     val s1 = commit("n_regionkey <= 1", 1000L)
     val s2 = commit("n_regionkey = 2", 2000L)
-    IcebergMaintenance.deleteWhere(spark, dir,
+    IcebergMaintenance.deleteWhere(spark, IcebergCommit.local(dir),
       "n_nationkey % 2 = 1", () => 3000L)
     def changes(from: Long) =
       IcebergRest.readChanges(spark, dir, from)
@@ -700,7 +700,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       .find(_.toString.endsWith(".parquet")).get
     val s3 = IcebergLocal.currentMetadata(dir).get
       .snapshots.map(_.snapshotId).max
-    IcebergLocal.append(dir, Seq(IcebergLocal.DataFileInfo(
+    IcebergCommit.local(dir).append(Seq(IcebergLocal.DataFileInfo(
       eqFile.toUri.toString, 1, Files.size(eqFile), content = 2,
       equalityIds = Seq(1))), 4000L)
     val eqChanges = IcebergRest.readChanges(spark, dir, s3)
@@ -709,7 +709,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(_.getAs[Number](0).longValue()).toSeq
     assert(eqChanges == Seq(0L), s"equality changelog rows: $eqChanges")
     // a compaction in the window: loud refusal (a rewrite is no change)
-    IcebergMaintenance.compact(spark, dir, () => 5000L)
+    IcebergMaintenance.compact(spark, IcebergCommit.local(dir), () => 5000L)
     val e = intercept[IllegalArgumentException](
       IcebergRest.readChanges(spark, dir, s1))
     assert(e.getMessage.contains("rewrite"))
@@ -724,11 +724,11 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nation = spark.read.parquet(s"$sf/nation.parquet")
       .select("n_nationkey", "n_name", "n_regionkey")
     def commit(pred: String, ts: Long): Long =
-      IcebergLocal.append(dir, partFiles(nation.filter(pred)), ts,
+      IcebergCommit.local(dir).append(partFiles(nation.filter(pred)), ts,
         schema = Some(nation.schema))
     val s1 = commit("n_regionkey = 0", 1000L) // A: pre-window
     commit("n_regionkey = 1", 2000L)          // B: inserted in window
-    IcebergMaintenance.deleteWhere(spark, dir,
+    IcebergMaintenance.deleteWhere(spark, IcebergCommit.local(dir),
       "n_nationkey % 2 = 1", () => 3000L)     // odds of A AND B deleted
     val net = IcebergRest.readChanges(spark, dir, s1,
       toSnapshotId = None, options = Map("net" -> "true"))
@@ -759,14 +759,14 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("per-ref retention overrides: min-keep beats age, max-ref-age expires the ref") {
     val dir = Files.createTempDirectory("ice-refret").resolve("t")
     def commit(i: Int, tag: Option[String] = None): Long =
-      IcebergLocal.append(dir, partFiles(spark.range(1).toDF("v")),
+      IcebergCommit.local(dir).append(partFiles(spark.range(1).toDF("v")),
         timestampMs = i * 1000L, tag = tag)
     commit(1, Some("old-tag"))
     (2 to 5).foreach(i => commit(i))
     // declare: the old tag itself expires after 1 s of age; main keeps
     // its newest 3 regardless of the sweep's age cutoff
-    IcebergLocal.setRefRetention(dir, "old-tag", maxRefAgeMs = Some(1000L))
-    IcebergLocal.setRefRetention(dir, "main",
+    IcebergCommit.local(dir).setRefRetention("old-tag", maxRefAgeMs = Some(1000L))
+    IcebergCommit.local(dir).setRefRetention("main",
       minSnapshotsToKeep = Some(3))
     // retention fields survive ordinary commits (refs are re-stamped)
     commit(6)
@@ -777,7 +777,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     // 8 s old → the REF drops and s1 loses its pin; main's override
     // keeps the newest 3 (s4,s5,s6) past the age cutoff
     val before = countVia(dir)
-    val expired = IcebergLocal.expireSnapshots(dir, olderThanMs = 99999L,
+    val expired = IcebergCommit.local(dir).expireSnapshots(olderThanMs = 99999L,
       minSnapshotsToKeep = 1, timestampMs = 9000L)
     assert(expired == Seq(1L, 2L, 3L), s"expired $expired")
     val m = IcebergLocal.currentMetadata(dir).get
@@ -791,7 +791,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = root.resolve("t")
     val nation = spark.read.parquet(s"$sf/nation.parquet")
       .select("n_nationkey", "n_name", "n_regionkey")
-    IcebergLocal.append(dir, partFiles(nation.filter("n_regionkey <= 1")),
+    IcebergCommit.local(dir).append(partFiles(nation.filter("n_regionkey <= 1")),
       timestampMs = 1000L, schema = Some(nation.schema))
     val server = new IcebergLocal.CatalogServer(root, "lake")
     val port = server.start()
@@ -799,18 +799,18 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       val cat = new IcebergRestCatalog(s"http://127.0.0.1:$port")
       // MoR debt to compact away: two row-level deletes → two
       // position-delete files
-      IcebergMaintenance.deleteWhere(spark, dir,
+      IcebergMaintenance.deleteWhere(spark, IcebergCommit.local(dir),
         "n_nationkey % 2 = 1", () => 2000L)
-      IcebergMaintenance.deleteWhere(spark, dir,
+      IcebergMaintenance.deleteWhere(spark, IcebergCommit.local(dir),
         "n_nationkey = 0", () => 2200L)
       val live = nation.filter(
         "n_regionkey <= 1 AND n_nationkey % 2 = 0 AND n_nationkey <> 0")
         .count()
       // POSITION-DELETE rewrite through the catalog first: the two
       // delete files merge into one, data files untouched, reads same
-      val rewritten = IcebergRestCommit.rewritePositionDeletes(
-        spark, cat, "lake", "t", dir, targetFiles = 1,
-        timestampMs = 2500L)
+      val rewritten = IcebergMaintenance.rewritePositionDeletes(
+        spark, IcebergCommit.rest(cat, "lake", "t", dir), () => 2500L,
+        targetFiles = 1)
       val mRw = cat.loadTable("lake", "t")
       assert(mRw.refs("main")._2 == rewritten)
       val rwScan = IcebergManifests.scanFiles(spark,
@@ -823,8 +823,8 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       // one file qualifies, but rewriting one file into one is legal —
       // assert instead that a DEBT-FREE table no-ops after compaction,
       // below)
-      val compacted = IcebergRestCommit.compact(spark, cat, "lake", "t",
-        dir, timestampMs = 3000L)
+      val compacted = IcebergMaintenance.compact(spark,
+        IcebergCommit.rest(cat, "lake", "t", dir), () => 3000L)
       val m = cat.loadTable("lake", "t")
       assert(m.refs("main")._2 == compacted)
       assert(m.refs.exists(r => r._2 == ("tag", compacted)), m.refs)
@@ -840,13 +840,14 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
         Some(graft.sources.SnapshotLog.ByVersion(rewritten.toString)))
         .count() == live)
       // debt-free after compaction: the posdel rewrite no-ops
-      assert(IcebergRestCommit.rewritePositionDeletes(
-        spark, cat, "lake", "t", dir, 1, 3200L) == -1L)
+      assert(IcebergMaintenance.rewritePositionDeletes(
+        spark, IcebergCommit.rest(cat, "lake", "t", dir), () => 3200L, 1) == -1L)
       // Z-ORDER compaction rides the same route: clustered rewrite,
       // REPLACE commit, reads unchanged, bounded file count
-      val zed = IcebergRestCommit.compactZOrder(spark, cat, "lake", "t",
-        dir, cols = Seq("n_nationkey", "n_regionkey"), files = 2,
-        timestampMs = 3500L)
+      val zed = IcebergMaintenance.compactZOrder(spark,
+        IcebergCommit.rest(cat, "lake", "t", dir),
+        cols = Seq("n_nationkey", "n_regionkey"), files = 2,
+        clock = () => 3500L)
       assert(cat.loadTable("lake", "t").refs("main")._2 == zed)
       assert(IcebergRest.read(spark, cat, "lake", "t").count() == live)
       val zScan = IcebergManifests.scanFiles(spark,
@@ -856,7 +857,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       // a STALE compaction (computed against head H, another commit
       // landed) must 409, never silently drop the racer's rows: replay
       // the same replace body against the moved table
-      IcebergRestCommit.append(cat, "lake", "t", dir,
+      IcebergCommit.rest(cat, "lake", "t", dir).append(
         partFiles(nation.filter("n_regionkey = 2")), 4000L)
       val staleReplace =
         s"""{"requirements":[
@@ -881,15 +882,15 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val root = Files.createTempDirectory("ice-restexpire")
     val dir = root.resolve("t")
     val nation = spark.read.parquet(s"$sf/nation.parquet")
-    IcebergLocal.append(dir, partFiles(nation.filter("n_regionkey = 0")),
+    IcebergCommit.local(dir).append(partFiles(nation.filter("n_regionkey = 0")),
       timestampMs = 1000L, schema = Some(nation.schema))
     val server = new IcebergLocal.CatalogServer(root, "lake")
     val port = server.start()
     try {
       val cat = new IcebergRestCatalog(s"http://127.0.0.1:$port")
-      IcebergRestCommit.append(cat, "lake", "t", dir,
+      IcebergCommit.rest(cat, "lake", "t", dir).append(
         partFiles(nation.filter("n_regionkey = 1")), 2000L)
-      IcebergRestCommit.append(cat, "lake", "t", dir,
+      IcebergCommit.rest(cat, "lake", "t", dir).append(
         partFiles(nation.filter("n_regionkey = 2")), 3000L)
       // tag snapshot 2 for retention through a ref-only commit
       cat.commitTable("lake", "t",
@@ -902,7 +903,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(e.getMessage.contains("still referenced"), e.getMessage)
       // the planned sweep: cutoff expires s1 (s2 is tag-pinned, s3 is
       // the main head) — one CAS-gated commit, server GCs the list
-      val expired = IcebergRestCommit.expireSnapshots(cat, "lake", "t",
+      val expired = IcebergCommit.rest(cat, "lake", "t", dir).expireSnapshots(
         olderThanMs = 2500L, minSnapshotsToKeep = 1, timestampMs = 9000L)
       assert(expired == Seq(1L), s"expired $expired")
       val m = cat.loadTable("lake", "t")
@@ -912,7 +913,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
         nation.filter("n_regionkey <= 2").count(),
         "REST expire changed the published read")
       // nothing left to expire → no commit, empty result
-      assert(IcebergRestCommit.expireSnapshots(cat, "lake", "t",
+      assert(IcebergCommit.rest(cat, "lake", "t", dir).expireSnapshots(
         2500L, 1, 9001L).isEmpty)
       // main can never be removed through the protocol
       val e2 = intercept[Exception](cat.commitTable("lake", "t",
@@ -929,14 +930,14 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("snapshot-log is carried across appends, not rebuilt: WAP + rollback lineage") {
     val dir = Files.createTempDirectory("ice-logcarry").resolve("t")
     def commit(i: Int, branch: Option[String] = None): Long =
-      IcebergLocal.append(dir, partFiles(spark.range(1).toDF("v")),
+      IcebergCommit.local(dir).append(partFiles(spark.range(1).toDF("v")),
         timestampMs = i * 1000L, branch = branch)
     commit(1)                          // s1 published @1000
     commit(2, Some("audit"))           // s2 staged — never logged
     commit(3, Some("audit"))           // s3 staged — never logged
-    IcebergLocal.fastForward(dir, "audit", timestampMs = 4000L) // s3 @4000
+    IcebergCommit.local(dir).fastForward("audit", timestampMs = 4000L) // s3 @4000
     commit(5)                          // s4 @5000 (id 4)
-    IcebergLocal.rollbackTo(dir, 3L, timestampMs = 6000L)
+    IcebergCommit.local(dir).rollbackTo(3L, timestampMs = 6000L)
     commit(7)                          // s5 @7000 (id 5) — the append
                                        // that used to REBUILD the log
     val hist = IcebergRest.metaTable(spark, dir, "history")
@@ -954,21 +955,21 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("rollback refuses an unpublished branch head; cherry-pick refuses a re-pick") {
     val dir = Files.createTempDirectory("ice-guards").resolve("t")
     def commit(i: Int, branch: Option[String] = None): Long =
-      IcebergLocal.append(dir, partFiles(spark.range(1).toDF("v")),
+      IcebergCommit.local(dir).append(partFiles(spark.range(1).toDF("v")),
         timestampMs = i * 1000L, branch = branch)
     commit(1)
     val staged = commit(2, Some("audit"))
     // "rolling back" to the unaudited branch head would publish it
     val e = intercept[IllegalArgumentException](
-      IcebergLocal.rollbackTo(dir, staged, timestampMs = 3000L))
+      IcebergCommit.local(dir).rollbackTo(staged, timestampMs = 3000L))
     assert(e.getMessage.contains("not an ancestor"))
     // main diverges, the branch is cherry-picked once — fine
     commit(3)
-    IcebergLocal.cherryPick(dir, "audit", timestampMs = 4000L)
+    IcebergCommit.local(dir).cherryPick("audit", timestampMs = 4000L)
     val rows = countVia(dir)
     // a second pick of the same branch must refuse, not duplicate rows
     val e2 = intercept[IllegalArgumentException](
-      IcebergLocal.cherryPick(dir, "audit", timestampMs = 5000L))
+      IcebergCommit.local(dir).cherryPick("audit", timestampMs = 5000L))
     assert(e2.getMessage.contains("duplicate"))
     assert(countVia(dir) == rows)
   }
@@ -977,7 +978,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = Files.createTempDirectory("ice-merge").resolve("t")
     val one = partFiles(spark.range(1).toDF("v"))
     val n = IcebergLocal.MergeManifestsAbove + 2
-    (1 to n).foreach(i => IcebergLocal.append(dir, one, i * 1000L))
+    (1 to n).foreach(i => IcebergCommit.local(dir).append(one, i * 1000L))
     val m = IcebergLocal.currentMetadata(dir).get
     // the carried tail reset at the merge: the latest manifest list holds
     // the merged record + the post-merge appends, not one per commit
@@ -1019,7 +1020,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
         |DATE '2024-01-02' AS dt, TIMESTAMP '2024-01-02 03:04:05' AS ts,
         |named_struct('x', 1, 'y', 'v') AS st, array(1, 2) AS arr,
         |map('k', 1) AS m""".stripMargin)
-    IcebergLocal.append(dir, partFiles(df), timestampMs = 1000L,
+    IcebergCommit.local(dir).append(partFiles(df), timestampMs = 1000L,
       schema = Some(df.schema))
     val meta = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
       Files.readString(IcebergLocal.currentMetadataFile(dir).get))
@@ -1053,7 +1054,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ids.distinct.length == ids.length, s"duplicate field ids: $ids")
     assert(ids.min == 1 && ids.max == meta.get("last-column-id").asInt)
     // a schema-less follow-up commit carries the schema forward
-    IcebergLocal.append(dir, partFiles(df), timestampMs = 2000L)
+    IcebergCommit.local(dir).append(partFiles(df), timestampMs = 2000L)
     val meta2 = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
       Files.readString(IcebergLocal.currentMetadataFile(dir).get))
     assert(meta2.get("schemas").get(0).get("fields").size == fields.size)
@@ -1079,10 +1080,10 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       .parquet(vDir.resolve("del").toString)
     def infos(sub: String, content: Int = 0, ids: Seq[Int] = Nil) =
       IcebergMaintenance.parquetFileInfos(vDir.resolve(sub), content, ids)
-    IcebergLocal.append(dir, infos("v1"), 1000L,
+    IcebergCommit.local(dir).append(infos("v1"), 1000L,
       schema = Some(Seq((0L, "x")).toDF("k", "v").schema))
-    IcebergLocal.append(dir, infos("del", content = 2, ids = Seq(1)), 2000L)
-    IcebergLocal.append(dir, infos("v2"), 3000L)
+    IcebergCommit.local(dir).append(infos("del", content = 2, ids = Seq(1)), 2000L)
+    IcebergCommit.local(dir).append(infos("v2"), 3000L)
     // filler: DISTINCT one-row data files (duplicate paths would break
     // the MoR file-tagging join), one commit each, crossing the merge
     val n = IcebergLocal.MergeManifestsAbove + 3
@@ -1094,7 +1095,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fillFiles.size > IcebergLocal.MergeManifestsAbove,
       s"filler too small to cross the merge threshold: ${fillFiles.size}")
     fillFiles.zipWithIndex.foreach { case (f, i) =>
-      IcebergLocal.append(dir, Seq(f), 4000L + i)
+      IcebergCommit.local(dir).append(Seq(f), 4000L + i)
     }
     try {
       // the merge must have actually happened — otherwise this test is
@@ -1133,7 +1134,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = root.resolve("t")
     var t = 0L
     val commit = graft.streaming.IcebergSink.upsertCommitter(
-      dir, Seq("k"), clock = () => { t += 1000; t })
+      IcebergCommit.local(dir), Seq("k"), clock = () => { t += 1000; t })
     def batch(aVal: String, k: Int) = spark.sql(
       s"SELECT named_struct('x', 1, 'y', 2) AS s, '$aVal' AS a, $k AS k")
     try {
@@ -1156,9 +1157,9 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nation = spark.read.parquet(s"$sf/nation.parquet")
       .select("n_nationkey", "n_name")
     val stamped = IcebergLocal.withFieldIds(nation)
-    IcebergLocal.append(dir, partFiles(stamped), timestampMs = 1000L,
+    IcebergCommit.local(dir).append(partFiles(stamped), timestampMs = 1000L,
       schema = Some(stamped.schema))
-    IcebergLocal.renameColumn(dir, "n_name", "label")
+    IcebergCommit.local(dir).renameColumn("n_name", "label")
     try {
       val df = IcebergRest.readLocal(spark, dir,
         options = Map("fieldIdReads" -> "true"))
@@ -1182,7 +1183,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nation = spark.read.parquet(s"$sf/nation.parquet")
       .orderBy("n_nationkey")
     val dataInfos = partFiles(nation)
-    IcebergLocal.append(dir, dataInfos, timestampMs = 1000L,
+    IcebergCommit.local(dir).append(dataInfos, timestampMs = 1000L,
       schema = Some(nation.schema))
     import spark.implicits._
     val posDir = root.resolve("pos")
@@ -1194,7 +1195,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       IcebergMaintenance.parquetFileInfos(posDir, content = 1) ++
       IcebergMaintenance.parquetFileInfos(eqDir, content = 2,
         equalityIds = Seq(1))
-    IcebergLocal.append(dir, mixed, timestampMs = 2000L)
+    IcebergCommit.local(dir).append(mixed, timestampMs = 2000L)
     try {
       val df = IcebergRest.readLocal(spark, dir)
       assert(df.count() == 23)
@@ -1210,14 +1211,14 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = root.resolve("t")
     val nation = spark.read.parquet(s"$sf/nation.parquet")
     // base state: a local first commit (schema lives catalog-side)
-    IcebergLocal.append(dir, partFiles(nation.filter("n_regionkey = 0")),
+    IcebergCommit.local(dir).append(partFiles(nation.filter("n_regionkey = 0")),
       timestampMs = 1000L, schema = Some(nation.schema))
     val server = new IcebergLocal.CatalogServer(root, "lake")
     val port = server.start()
     try {
       val cat = new IcebergRestCatalog(s"http://127.0.0.1:$port")
       // append THROUGH the commit endpoint
-      val snap2 = IcebergRestCommit.append(cat, "lake", "t", dir,
+      val snap2 = IcebergCommit.rest(cat, "lake", "t", dir).append(
         partFiles(nation.filter("n_regionkey = 1")), 2000L,
         tag = Some("rest-1"))
       assert(snap2 == 2L)
@@ -1272,8 +1273,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
         cat.createTable("lake", "fresh", nation.schema)
       }
       // first data commit rides the SAME CAS, main asserted absent
-      val s1 = IcebergRestCommit.append(cat, "lake", "fresh",
-        root.resolve("fresh"), partFiles(nation), 1000L)
+      val s1 = IcebergCommit.rest(cat, "lake", "fresh", root.resolve("fresh")).append(partFiles(nation), 1000L)
       assert(s1 == 1L)
       assert(IcebergRest.read(spark, cat, "lake", "fresh").count() == 25)
     } finally {
@@ -1287,7 +1287,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val root = Files.createTempDirectory("ice-race")
     val dir = root.resolve("t")
     val nation = spark.read.parquet(s"$sf/nation.parquet")
-    IcebergLocal.append(dir, partFiles(nation.filter("n_nationkey = 0")),
+    IcebergCommit.local(dir).append(partFiles(nation.filter("n_nationkey = 0")),
       timestampMs = 1000L, schema = Some(nation.schema))
     val server = new IcebergLocal.CatalogServer(root, "lake")
     val port = server.start()
@@ -1303,7 +1303,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
         pool.submit(new java.util.concurrent.Callable[Long] {
           override def call(): Long = {
             gate.await()
-            IcebergRestCommit.append(cat, "lake", "t", dir, files, 2000L)
+            IcebergCommit.rest(cat, "lake", "t", dir).append(files, 2000L)
           }
         })
       val fa = racer(aFiles)
@@ -1339,7 +1339,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val root = Files.createTempDirectory("ice-stress")
     val dir = root.resolve("t")
-    IcebergLocal.append(dir, partFiles(Seq((-1, -1)).toDF("w", "c")),
+    IcebergCommit.local(dir).append(partFiles(Seq((-1, -1)).toDF("w", "c")),
       timestampMs = 1000L, schema = Some(Seq((-1, -1)).toDF("w", "c").schema))
     val server = new IcebergLocal.CatalogServer(root, "lake")
     val port = server.start()
@@ -1364,7 +1364,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
             val jitter = new scala.util.Random(i * 7919)
             (0 until commitsEach).foreach { j =>
               Thread.sleep(jitter.nextInt(7).toLong)
-              val s = IcebergRestCommit.append(cat, "lake", "t", dir,
+              val s = IcebergCommit.rest(cat, "lake", "t", dir).append(
                 files(i)(j), 2000L + i * 10 + j, tag = Some(s"w$i-c$j"),
                 maxRetries = 200)
               landed.put((i, j), s)
@@ -1407,6 +1407,101 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("REST and local appends record the same snapshot-summary totals") {
+    val root = Files.createTempDirectory("ice-totals")
+    val nation = spark.read.parquet(s"$sf/nation.parquet")
+    val first = partFiles(nation.filter("n_regionkey = 0"))
+    val second = partFiles(nation.filter("n_regionkey = 1"))
+    val localDir = root.resolve("local")
+    val restDir = root.resolve("rest")
+    val local = IcebergCommit.local(localDir)
+    local.append(first, 1000L, schema = Some(nation.schema))
+    local.append(second, 2000L)
+    val server = new IcebergLocal.CatalogServer(root, "lake")
+    val port = server.start()
+    try {
+      val cat = new IcebergRestCatalog(s"http://127.0.0.1:$port")
+      val rest = IcebergCommit.rest(cat, "lake", "rest", restDir)
+      rest.append(first, 1000L, schema = Some(nation.schema))
+      rest.append(second, 2000L)
+      val keys = Seq("added-files-size", "added-records",
+        "total-files-size", "total-records")
+      def totals(meta: IcebergTableMeta) =
+        meta.snapshots.sortBy(_.snapshotId).map(s => keys.map(s.summary.get))
+      val localMeta = local.metadata().get
+      val restMeta = cat.loadTable("lake", "rest")
+      assert(totals(restMeta) == totals(localMeta), restMeta.snapshots)
+      val bytes = (first ++ second).map(_.sizeBytes).sum
+      assert(restMeta.snapshots.maxBy(_.snapshotId).summary
+        .get("total-files-size").contains(bytes.toString))
+      assert(restMeta.snapshots.maxBy(_.snapshotId).summary
+        .get("total-records").contains("10"))
+      // the size answers from the summary: with the head's manifest list
+      // gone, a manifest walk could not
+      Files.delete(java.nio.file.Paths.get(java.net.URI.create(
+        restMeta.snapshots.maxBy(_.snapshotId).manifestList)))
+      assert(IcebergRest.tableSizeBytes(spark, cat, "lake", "rest")
+        .contains(bytes))
+    } finally {
+      server.stop()
+      import scala.reflect.io.Directory
+      new Directory(root.toFile).deleteRecursively()
+    }
+  }
+
+  test("local commits CAS: two racing writers land every snapshot") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("ice-localrace").resolve("t")
+    val table = IcebergCommit.local(dir)
+    // data files first: only the commits race
+    val files = (0 until 2).map(w => (0 until 4).map(c =>
+      partFiles(Seq((w, c)).toDF("w", "c"))))
+    import java.util.concurrent.{CountDownLatch, Executors}
+    val pool = Executors.newFixedThreadPool(2)
+    val gate = new CountDownLatch(1)
+    val tasks = (0 until 2).map { w =>
+      pool.submit(new java.util.concurrent.Callable[Seq[Long]] {
+        override def call(): Seq[Long] = {
+          gate.await()
+          (0 until 4).map(c => table.append(files(w)(c), 1000L + c,
+            tag = Some(s"w$w-c$c"), maxRetries = 50))
+        }
+      })
+    }
+    gate.countDown()
+    val landed = tasks.flatMap(_.get())
+    pool.shutdown()
+    assert(landed.sorted == (1L to 8L), s"snapshots: $landed")
+    val meta = table.metadata().get
+    assert(meta.snapshots.map(_.snapshotId).sorted == (1L to 8L))
+    assert((for (w <- 0 until 2; c <- 0 until 4) yield s"w$w-c$c")
+      .forall(meta.refs.contains), meta.refs)
+    assert(IcebergRest.readLocal(spark, dir).as[(Int, Int)].collect().toSet ==
+      (for (w <- 0 until 2; c <- 0 until 4) yield (w, c)).toSet,
+      "a racing writer's rows were lost")
+  }
+
+  test("a local compaction whose head moved fails instead of dropping rows") {
+    val dir = Files.createTempDirectory("ice-localstale").resolve("t")
+    val table = IcebergCommit.local(dir)
+    val nation = spark.read.parquet(s"$sf/nation.parquet")
+      .select("n_nationkey", "n_regionkey")
+    table.append(partFiles(nation.filter("n_regionkey = 0")), 1000L,
+      schema = Some(nation.schema))
+    table.append(partFiles(nation.filter("n_regionkey = 1")), 2000L)
+    val racer = partFiles(nation.filter("n_regionkey = 2"))
+    // the commit clock is read after the rewrite and before its commit:
+    // a racer lands there
+    val clock = () => { table.append(racer, 3000L); 4000L }
+    intercept[IcebergCommitConflict](
+      IcebergMaintenance.compact(spark, table, clock))
+    val meta = table.metadata().get
+    assert(meta.snapshots.map(_.snapshotId).sorted == Seq(1L, 2L, 3L))
+    assert(IcebergRest.readLocal(spark, dir).count() ==
+      nation.filter("n_regionkey <= 2").count(),
+      "the stale compaction dropped the racer's rows")
+  }
+
   test("partition spec evolution rides the REST commit protocol") {
     val root = Files.createTempDirectory("ice-specrest")
     val dir = root.resolve("t")
@@ -1419,13 +1514,13 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       val cat = new IcebergRestCatalog(s"http://127.0.0.1:$port")
       cat.createTable("lake", "t", orders.schema, Some(specA))
-      IcebergRestCommit.append(cat, "lake", "t", dir,
+      IcebergCommit.rest(cat, "lake", "t", dir).append(
         IcebergPartitioned.writeFiles(orders.where("o_orderkey % 2 = 0"),
           dir.resolve("data").resolve("b0"), specA),
         1000L, partitionSpec = Some(specA), schema = Some(orders.schema))
       // the evolved commit: add-spec + set-default-spec ride the same
       // CommitTableRequest as the snapshot
-      IcebergRestCommit.append(cat, "lake", "t", dir,
+      IcebergCommit.rest(cat, "lake", "t", dir).append(
         IcebergPartitioned.writeFiles(orders.where("o_orderkey % 2 = 1"),
           dir.resolve("data").resolve("b1"), specB),
         2000L, partitionSpec = Some(specB), schema = Some(orders.schema))
@@ -1460,7 +1555,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       assert(cat.loadTable("lake", "t").currentSnapshotId.contains(head))
       // an identical-spec re-commit reuses the id: no spec 2 minted
-      IcebergRestCommit.append(cat, "lake", "t", dir,
+      IcebergCommit.rest(cat, "lake", "t", dir).append(
         IcebergPartitioned.writeFiles(orders.where("o_orderkey % 100 = 50"),
           dir.resolve("data").resolve("b2"), specB),
         3000L, partitionSpec = Some(specB), schema = Some(orders.schema))
@@ -1549,13 +1644,13 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = IcebergLocal.withFieldIds(
       spark.read.parquet(s"$sf/nation.parquet")
         .select("n_nationkey", "n_name"))
-    IcebergLocal.append(dir, partFiles(base), timestampMs = 1000L,
+    IcebergCommit.local(dir).append(partFiles(base), timestampMs = 1000L,
       schema = Some(base.schema))
     try {
       val before = metadataVersions(dir)
       val priorFile = IcebergLocal.currentMetadataFile(dir).get
       val priorBytes = Files.readAllBytes(priorFile)
-      IcebergLocal.addColumn(dir, "note", "string")
+      IcebergCommit.local(dir).addColumn("note", "string")
       val after = metadataVersions(dir)
       assert(after.size == before.size + 1 && after.max == before.max + 1,
         s"evolution did not add exactly one version: $before -> $after")
@@ -1568,7 +1663,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       // a SNAPSHOT commit after the evolution must not collide with
       // (and silently supersede) the evolution's version file — and
       // must carry the evolved schema forward
-      IcebergLocal.append(dir, partFiles(base), timestampMs = 2000L)
+      IcebergCommit.local(dir).append(partFiles(base), timestampMs = 2000L)
       val end = metadataVersions(dir)
       assert(end.size == after.size + 1 && end.max == after.max + 1,
         s"snapshot commit collided with an evolution version: $end")
@@ -1587,15 +1682,14 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = IcebergLocal.withFieldIds(
       spark.read.parquet(s"$sf/nation.parquet")
         .select("n_nationkey", "n_name"))
-    IcebergLocal.append(dir, partFiles(base), timestampMs = 1000L,
+    IcebergCommit.local(dir).append(partFiles(base), timestampMs = 1000L,
       schema = Some(base.schema))
     try {
       // add + rename through the catalog's commit endpoint
-      val sid1 = IcebergRestCommit.addColumn(catalog, "analytics",
-        "restev", "tier", "string")
+      val restev = IcebergCommit.rest(catalog, "analytics", "restev", dir)
+      val sid1 = restev.addColumn("tier", "string")
       assert(sid1 == 1)
-      val sid2 = IcebergRestCommit.renameColumn(catalog, "analytics",
-        "restev", "n_name", "label")
+      val sid2 = restev.renameColumn("n_name", "label")
       assert(sid2 == 2)
       val df = IcebergRest.read(spark, catalog, "analytics", "restev",
         options = Map("fieldIdReads" -> "true"))
@@ -1627,7 +1721,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       intercept[IcebergCommitConflict](
         catalog.commitTable("analytics", "restev", skipId))
       // drop through the protocol; reads reflect it
-      IcebergRestCommit.dropColumn(catalog, "analytics", "restev", "tier")
+      restev.dropColumn("tier")
       val dropped = IcebergRest.read(spark, catalog, "analytics", "restev",
         options = Map("fieldIdReads" -> "true"))
       assert(dropped.columns.toSeq == Seq("n_nationkey", "label"))
@@ -1641,7 +1735,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = warehouse.resolve("incr")
     val nation = spark.read.parquet(s"$sf/nation.parquet")
     def commit(pred: String, ts: Long): Long =
-      IcebergLocal.append(dir, partFiles(nation.filter(pred)), ts,
+      IcebergCommit.local(dir).append(partFiles(nation.filter(pred)), ts,
         schema = Some(nation.schema))
     val s1 = commit("n_regionkey = 0", 1000L)
     val s2 = commit("n_regionkey = 1", 2000L)
@@ -1664,7 +1758,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       intercept[IllegalArgumentException](
         IcebergRest.readIncremental(spark, dir, 99L))
       // a delete in the window: loud refusal
-      IcebergMaintenance.deleteWhere(spark, dir, "n_regionkey = 1",
+      IcebergMaintenance.deleteWhere(spark, IcebergCommit.local(dir), "n_regionkey = 1",
         () => 4000L)
       val e1 = intercept[IllegalArgumentException](
         IcebergRest.readIncremental(spark, dir, s3))
@@ -1673,7 +1767,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(IcebergRest.readIncremental(spark, dir, s1, Some(s3))
         .count() == nation.filter("n_regionkey IN (1,2)").count())
       // a rewrite in the window: loud refusal
-      IcebergMaintenance.compact(spark, dir, () => 5000L)
+      IcebergMaintenance.compact(spark, IcebergCommit.local(dir), () => 5000L)
       val e2 = intercept[IllegalArgumentException](
         IcebergRest.readIncremental(spark, dir, s3))
       assert(e2.getMessage.contains("rewrite"))
@@ -1707,7 +1801,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = warehouse.resolve("wap")
     val nation = spark.read.parquet(s"$sf/nation.parquet")
     def commit(pred: String, ts: Long, branch: Option[String] = None): Long =
-      IcebergLocal.append(dir, partFiles(nation.filter(pred)), ts,
+      IcebergCommit.local(dir).append(partFiles(nation.filter(pred)), ts,
         schema = Some(nation.schema), branch = branch)
     try {
       val s1 = commit("n_regionkey = 0", 1000L)
@@ -1730,7 +1824,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(r => r.getString(0) -> r.getLong(2)).toMap
       assert(refs("main") == s1 && refs("audit") == s3)
       // PUBLISH: fast-forward main to the audited branch
-      val published = IcebergLocal.fastForward(dir, "audit")
+      val published = IcebergCommit.local(dir).fastForward("audit")
       assert(published == s3)
       assert(IcebergRest.readLocal(spark, dir).count() == r012)
       // time travel to the pre-publish main still answers
@@ -1745,11 +1839,11 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       commit("n_regionkey = 4", 6000L, Some("audit2"))
       commit("n_regionkey = 0", 7000L) // main moves past the fork
       val e = intercept[IllegalArgumentException](
-        IcebergLocal.fastForward(dir, "audit2"))
+        IcebergCommit.local(dir).fastForward("audit2"))
       assert(e.getMessage.contains("not a fast-forward"))
       // unknown ref: loud
       intercept[IllegalArgumentException](
-        IcebergLocal.fastForward(dir, "nope"))
+        IcebergCommit.local(dir).fastForward("nope"))
       // and the diverged MAIN commit did not absorb the branch rows
       assert(IcebergRest.readLocal(spark, dir).count() ==
         nation.filter("n_regionkey <= 3").count() + r0)
@@ -1763,19 +1857,19 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val root = Files.createTempDirectory("ice-restrollback")
     val dir = root.resolve("t")
     val nation = spark.read.parquet(s"$sf/nation.parquet")
-    IcebergLocal.append(dir, partFiles(nation.filter("n_regionkey = 0")),
+    IcebergCommit.local(dir).append(partFiles(nation.filter("n_regionkey = 0")),
       timestampMs = 1000L, schema = Some(nation.schema))
     val server = new IcebergLocal.CatalogServer(root, "lake")
     val port = server.start()
     try {
       val cat = new IcebergRestCatalog(s"http://127.0.0.1:$port")
-      val s2 = IcebergRestCommit.append(cat, "lake", "t", dir,
+      val s2 = IcebergCommit.rest(cat, "lake", "t", dir).append(
         partFiles(nation.filter("n_regionkey = 1")), 2000L)
       // un-publish snapshot 2 through the catalog, with the operation
       // time carried on the update (keeps this table's synthetic clock
       // monotonic; omitting it uses server wall clock)
-      assert(IcebergRestCommit.rollbackTo(cat, "lake", "t", 1L,
-        timestampMs = Some(2500L)) == 1L)
+      assert(IcebergCommit.rest(cat, "lake", "t", dir).rollbackTo(1L,
+        timestampMs = 2500L) == 1L)
       assert(IcebergRest.read(spark, cat, "lake", "t").count() ==
         nation.filter("n_regionkey = 0").count(),
         "REST rollback did not move the published view")
@@ -1803,10 +1897,10 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(e.getMessage.contains("no snapshot 77"))
       // unknown snapshot refused client-side too
       intercept[IllegalArgumentException](
-        IcebergRestCommit.rollbackTo(cat, "lake", "t", 99L))
+        IcebergCommit.rest(cat, "lake", "t", dir).rollbackTo(99L))
       // and a post-rollback append through the catalog builds on the
       // rollback target: the undone rows stay unpublished
-      IcebergRestCommit.append(cat, "lake", "t", dir,
+      IcebergCommit.rest(cat, "lake", "t", dir).append(
         partFiles(nation.filter("n_regionkey = 2")), 3000L)
       assert(IcebergRest.read(spark, cat, "lake", "t").count() ==
         nation.filter("n_regionkey IN (0, 2)").count(),
@@ -1844,7 +1938,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val root = Files.createTempDirectory("ice-restwap")
     val dir = root.resolve("t")
     val nation = spark.read.parquet(s"$sf/nation.parquet")
-    IcebergLocal.append(dir, partFiles(nation.filter("n_regionkey = 0")),
+    IcebergCommit.local(dir).append(partFiles(nation.filter("n_regionkey = 0")),
       timestampMs = 1000L, schema = Some(nation.schema))
     val server = new IcebergLocal.CatalogServer(root, "lake")
     val port = server.start()
@@ -1852,10 +1946,10 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       val cat = new IcebergRestCatalog(s"http://127.0.0.1:$port")
       def readMain() = IcebergRest.read(spark, cat, "lake", "t")
       // two AUDIT commits through the catalog: main must see nothing
-      val s2 = IcebergRestCommit.append(cat, "lake", "t", dir,
+      val s2 = IcebergCommit.rest(cat, "lake", "t", dir).append(
         partFiles(nation.filter("n_regionkey = 1")), 2000L,
         branch = Some("audit"))
-      val s3 = IcebergRestCommit.append(cat, "lake", "t", dir,
+      val s3 = IcebergCommit.rest(cat, "lake", "t", dir).append(
         partFiles(nation.filter("n_regionkey = 2")), 3000L,
         branch = Some("audit"))
       val r0 = nation.filter("n_regionkey = 0").count()
@@ -1871,16 +1965,17 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
         .flatMap(_.parentId).contains(s2))
       assert(meta.refs("main")._2 == 1L && meta.refs("audit")._2 == s3)
       // PUBLISH through the protocol
-      assert(IcebergRestCommit.fastForward(cat, "lake", "t", "audit") == s3)
+      assert(IcebergCommit.rest(cat, "lake", "t", dir)
+        .fastForward("audit") == s3)
       assert(readMain().count() == nation.filter("n_regionkey <= 2").count())
       // divergence refusal: a second branch forks, then main moves
-      IcebergRestCommit.append(cat, "lake", "t", dir,
+      IcebergCommit.rest(cat, "lake", "t", dir).append(
         partFiles(nation.filter("n_regionkey = 3")), 4000L,
         branch = Some("audit2"))
-      IcebergRestCommit.append(cat, "lake", "t", dir,
+      IcebergCommit.rest(cat, "lake", "t", dir).append(
         partFiles(nation.filter("n_regionkey = 4")), 5000L)
       val e = intercept[IllegalArgumentException](
-        IcebergRestCommit.fastForward(cat, "lake", "t", "audit2"))
+        IcebergCommit.rest(cat, "lake", "t", dir).fastForward("audit2"))
       assert(e.getMessage.contains("not a fast-forward"))
       // a FRESH-branch commit whose fork point went stale must 409:
       // the requirement pins main at the observed fork
@@ -1916,7 +2011,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = warehouse.resolve("rollback-spec")
     val nation = spark.read.parquet(s"$sf/nation.parquet")
     def commit(pred: String, ts: Long): Long =
-      IcebergLocal.append(dir, partFiles(nation.filter(pred)), ts,
+      IcebergCommit.local(dir).append(partFiles(nation.filter(pred)), ts,
         schema = Some(nation.schema))
     try {
       val s1 = commit("n_regionkey = 0", 1000L)
@@ -1925,7 +2020,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       val r01 = nation.filter("n_regionkey <= 1").count()
       assert(IcebergRest.readLocal(spark, dir).count() == r01)
       // un-publish the second commit
-      assert(IcebergLocal.rollbackTo(dir, s1) == s1)
+      assert(IcebergCommit.local(dir).rollbackTo(s1) == s1)
       assert(IcebergRest.readLocal(spark, dir).count() == r0,
         "rollback did not move the published view")
       // the rolled-past snapshot stays retained: travel forward works
@@ -1933,7 +2028,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
         Some(ByVersion(s2.toString))).count() == r01)
       // unknown snapshot: loud
       val e = intercept[IllegalArgumentException](
-        IcebergLocal.rollbackTo(dir, 99L))
+        IcebergCommit.local(dir).rollbackTo(99L))
       assert(e.getMessage.contains("no snapshot 99"))
       // a commit AFTER rollback builds on the rollback target — the
       // undone rows must NOT resurface through the carried manifests
@@ -1955,15 +2050,15 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = warehouse.resolve("cherry-spec")
     val nation = spark.read.parquet(s"$sf/nation.parquet")
     def commit(pred: String, ts: Long, branch: Option[String] = None): Long =
-      IcebergLocal.append(dir, partFiles(nation.filter(pred)), ts,
+      IcebergCommit.local(dir).append(partFiles(nation.filter(pred)), ts,
         schema = Some(nation.schema), branch = branch)
     try {
       commit("n_regionkey = 0", 1000L)
       val s2 = commit("n_regionkey = 1", 2000L, Some("audit"))
       val s3 = commit("n_regionkey = 2", 3000L) // main diverges
       // fast-forward refuses the diverged table; cherry-pick is the out
-      intercept[IllegalArgumentException](IcebergLocal.fastForward(dir, "audit"))
-      val picked = IcebergLocal.cherryPick(dir, "audit", timestampMs = 4000L)
+      intercept[IllegalArgumentException](IcebergCommit.local(dir).fastForward("audit"))
+      val picked = IcebergCommit.local(dir).cherryPick("audit", timestampMs = 4000L)
       assert(IcebergRest.readLocal(spark, dir).count() ==
         nation.filter("n_regionkey <= 2").count(),
         "cherry-pick did not surface the branch rows on main")
@@ -1980,15 +2075,15 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
         nation.filter("n_regionkey IN (0, 2)").count())
       // non-append refusal: a compaction REPLACE snapshot (tagged by
       // the maintenance op) cannot be replayed onto a different base
-      val compacted = IcebergMaintenance.compact(spark, dir)
+      val compacted = IcebergMaintenance.compact(spark, IcebergCommit.local(dir))
       val tagName = IcebergLocal.currentMetadata(dir).get.refs
         .collectFirst { case (n, ("tag", id)) if id == compacted => n }.get
       val e = intercept[IllegalArgumentException](
-        IcebergLocal.cherryPick(dir, tagName, timestampMs = 5000L))
+        IcebergCommit.local(dir).cherryPick(tagName, timestampMs = 5000L))
       assert(e.getMessage.contains("not a pure fast-append"))
       // unknown ref: loud
       intercept[IllegalArgumentException](
-        IcebergLocal.cherryPick(dir, "nope", timestampMs = 6000L))
+        IcebergCommit.local(dir).cherryPick("nope", timestampMs = 6000L))
     } finally {
       import scala.reflect.io.Directory
       new Directory(dir.toFile).deleteRecursively()
@@ -2010,7 +2105,7 @@ class IcebergRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(PartitionField("o_month", "o_orderdate", "month")),
       timestampMs = 1000L)
     try {
-      IcebergLocal.append(dir, partFiles(orders.limit(5)),
+      IcebergCommit.local(dir).append(partFiles(orders.limit(5)),
         timestampMs = 2000L)
       val raw = mapperFor(dir)
       val specs = (0 until raw.get("partition-specs").size())

@@ -567,7 +567,8 @@ class KafkaSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         }
       var now = 0L
       val committer = graft.streaming.IcebergSink.upsertCommitter(
-        tableDir, keyCols = Seq("k"), clock = () => { now += 1000; now })
+        graft.sources.iceberg.IcebergCommit.local(tableDir), keyCols = Seq("k"),
+        clock = () => { now += 1000; now })
       val parsed = spark.readStream
         .format("graft.sources.kafka.KafkaDataSource")
         .option("bootstrap", s"127.0.0.1:$p2").option("topic", "cdc")

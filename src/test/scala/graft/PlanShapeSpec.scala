@@ -823,7 +823,8 @@ class PlanShapeSpec extends AnyFunSuite {
   test("shuffle width from CATALOG statistics: an Iceberg-registered " +
       "session with no data dir derives volume, not the core floor") {
     import graft.session.ShuffleWidth
-    import graft.sources.iceberg.{IcebergLocal, IcebergRest, IcebergRestCatalog}
+    import graft.sources.iceberg.{IcebergCommit, IcebergLocal, IcebergRest,
+      IcebergRestCatalog}
     import graft.sources.{SourceDef, SourceRegistry, SourcesConfig, TableDef}
     import scala.jdk.CollectionConverters._
     val wh = java.nio.file.Files.createTempDirectory("ice-stats-wh")
@@ -835,7 +836,7 @@ class PlanShapeSpec extends AnyFunSuite {
       .map(p => IcebergLocal.DataFileInfo(p.toUri.toString, 25,
         java.nio.file.Files.size(p)))
     val realBytes = parts.map(_.sizeBytes).sum
-    IcebergLocal.append(wh.resolve("t"), parts, timestampMs = 1000L)
+    IcebergCommit.local(wh.resolve("t")).append(parts, timestampMs = 1000L)
     val server = new IcebergLocal.CatalogServer(wh, "stats")
     val port = server.start()
     ShuffleWidth.clearStats(spark)

@@ -19,7 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    `SourceRegistry`), so no main sizes it on its own.
   *  - Filter pushdown into remote SQL is rendered in one place
   *    (`RemoteSqlSource.whereClause`, quoting and escaping from
-  *    `graft.sql.Dialects`), so no source keeps its own copy. */
+  *    `graft.sql.Dialects`), so no source keeps its own copy.
+  *  - Iceberg table metadata is written by one applier
+  *    (`IcebergCommit`), so local and catalog commits cannot drift
+  *    apart. */
 class SessionFactorySpec extends AnyFunSuite {
 
   private val owners = Seq(
@@ -29,7 +32,8 @@ class SessionFactorySpec extends AnyFunSuite {
     "unpersistRDD" -> Seq("org/apache/spark/sql/GraftPlanBridge.scala"),
     "ShuffleWidth.configure" -> Seq("graft/session/ShuffleWidth.scala",
       "graft/Tables.scala", "graft/sources/SourceRegistry.scala"),
-    "def whereClause" -> Seq("graft/sources/RemoteSqlSource.scala"))
+    "def whereClause" -> Seq("graft/sources/RemoteSqlSource.scala"),
+    "writeMetadataFile(" -> Seq("graft/sources/iceberg/IcebergCommit.scala"))
 
   owners.foreach { case (token, files) =>
     test(s"$token appears only in " +

@@ -219,7 +219,7 @@ class StreamingSpec extends AnyFunSuite {
     val tableDir = warehouse.resolve("feed")
     var now = 1000L
     val committer = graft.streaming.IcebergSink.committer(
-      tableDir, clock = () => { now += 1000; now })
+      IcebergCommit.local(tableDir), clock = () => { now += 1000; now })
     val in = MemoryStream[Long]
     val q = in.toDF().toDF("v").writeStream
       .foreachBatch(committer)
@@ -265,10 +265,11 @@ class StreamingSpec extends AnyFunSuite {
       val cat = new IcebergRestCatalog(s"http://127.0.0.1:$port")
       var now = 0L
       val clock = () => { now += 1000; now }
-      val jobA = graft.streaming.IcebergSink.restCommitter(
-        cat, "lake", "t", dir, clock, streamId = "jobA")
-      val jobB = graft.streaming.IcebergSink.restCommitter(
-        cat, "lake", "t", dir, clock, streamId = "jobB")
+      val table = IcebergCommit.rest(cat, "lake", "t", dir)
+      val jobA = graft.streaming.IcebergSink.committer(
+        table, clock, streamId = Some("jobA"))
+      val jobB = graft.streaming.IcebergSink.committer(
+        table, clock, streamId = Some("jobB"))
       jobA(Seq(("a", 1L)).toDF("src", "v"), 0L) // bootstrap (local)
       jobB(Seq(("b", 1L)).toDF("src", "v"), 0L) // first REST commit
       jobA(Seq(("a", 2L)).toDF("src", "v"), 1L)
@@ -292,6 +293,37 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("ref names survive the REST commit body: quotes and backslashes") {
+    // the stream id lands in the tag, and the tag in the commit body; a
+    // body built as a JSON tree keeps `"` legal and `\t` two characters,
+    // so the replayed batch finds its tag and commits nothing
+    import spark.implicits._
+    import graft.sources.iceberg._
+    val root = java.nio.file.Files.createTempDirectory("ice-refnames")
+    val dir = root.resolve("t")
+    val server = new IcebergLocal.CatalogServer(root, "lake")
+    val port = server.start()
+    try {
+      val cat = new IcebergRestCatalog(s"http://127.0.0.1:$port")
+      val table = IcebergCommit.rest(cat, "lake", "t", dir)
+      val ids = Seq("job\"q", "job\\tab")
+      ids.zipWithIndex.foreach { case (id, i) =>
+        val sink = graft.streaming.IcebergSink.committer(table,
+          () => 1000L * (i + 1), streamId = Some(id))
+        sink(Seq(("a", i.toLong)).toDF("src", "v"), 0L)
+        sink(Seq(("a", i.toLong)).toDF("src", "v"), 0L) // the replay
+      }
+      val meta = cat.loadTable("lake", "t")
+      assert(meta.refs.keySet.filter(_.contains("batch")) ==
+        ids.map(id => s"$id-batch-0").toSet, meta.refs.keySet)
+      assert(meta.snapshots.size == 2, "the replay committed its batch twice")
+    } finally {
+      server.stop()
+      import scala.reflect.io.Directory
+      new Directory(root.toFile).deleteRecursively()
+    }
+  }
+
   test("partitioned streaming commits prune like batch-written tables") {
     // the committer's partitionSpec lands every micro-batch in the
     // IcebergPartitioned layout (tuples + bounds in manifests, spec in
@@ -305,7 +337,7 @@ class StreamingSpec extends AnyFunSuite {
       .createTempDirectory("ice-part-stream").resolve("t")
     var now = 0L
     val committer = graft.streaming.IcebergSink.committer(
-      tableDir, clock = () => { now += 1000; now },
+      IcebergCommit.local(tableDir), clock = () => { now += 1000; now },
       partitionSpec = Some(Seq(PartitionField("cat", "cat", "identity"))))
     val in = MemoryStream[(String, Long)]
     val q = in.toDF().toDF("cat", "v").writeStream
@@ -344,7 +376,8 @@ class StreamingSpec extends AnyFunSuite {
       .createTempDirectory("ice-upsert-dup").resolve("t")
     var now = 0L
     val committer = graft.streaming.IcebergSink.upsertCommitter(
-      tableDir, keyCols = Seq("k"), clock = () => { now += 1000; now })
+      graft.sources.iceberg.IcebergCommit.local(tableDir), keyCols = Seq("k"),
+      clock = () => { now += 1000; now })
     committer(Seq(("a", 1L)).toDF("k", "v"), 0L)
     committer(Seq(("a", 2L), ("a", 3L)).toDF("k", "v"), 1L)
     val rows = graft.sources.iceberg.IcebergRest.readLocal(spark, tableDir)
@@ -368,14 +401,14 @@ class StreamingSpec extends AnyFunSuite {
     var now = 0L
     val clock = () => { now += 1000; now }
     val committer = graft.streaming.IcebergSink.upsertCommitter(
-      tableDir, keyCols = Seq("k"), clock = clock)
+      IcebergCommit.local(tableDir), keyCols = Seq("k"), clock = clock)
     committer(Seq(("a", 1L), ("b", 1L)).toDF("k", "v"), 0L)
     // simulate the crash window: batch 1's DELETE commit landed, the
     // data commit did not (the exact artifacts upsertCommitter writes)
     val delDir = tableDir.resolve("data").resolve("batch-1-del")
     Seq("a").toDF("k").coalesce(1).write.mode("overwrite")
       .parquet(delDir.toString)
-    IcebergLocal.append(tableDir,
+    IcebergCommit.local(tableDir).append(
       IcebergMaintenance.parquetFileInfos(delDir, content = 2,
         equalityIds = Seq(1)), clock(), Some("batch-1-del"))
     val snapsBefore = IcebergLocal.currentMetadata(tableDir).get.snapshots.size
@@ -412,7 +445,7 @@ class StreamingSpec extends AnyFunSuite {
     var now = 1000L
     val clock = () => { now += 1000; now }
     val committer = graft.streaming.IcebergSink.upsertCommitter(
-      tableDir, keyCols = Seq("k"), clock = clock)
+      IcebergCommit.local(tableDir), keyCols = Seq("k"), clock = clock)
     val in = MemoryStream[(String, Long)]
     val q = in.toDF().toDF("k", "v").writeStream
       .foreachBatch(committer)
@@ -436,7 +469,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(state() == Seq(("a", 3L), ("b", 2L), ("c", 2L)))
     // compaction materializes the deletes; current state unchanged,
     // the compacted head carries no delete files
-    IcebergMaintenance.compact(spark, tableDir, clock)
+    IcebergMaintenance.compact(spark, IcebergCommit.local(tableDir), clock)
     assert(state() == Seq(("a", 3L), ("b", 2L), ("c", 2L)))
     val meta = IcebergLocal.currentMetadata(tableDir).get
     val scan = IcebergManifests.scanFiles(spark,
@@ -457,7 +490,7 @@ class StreamingSpec extends AnyFunSuite {
     val clock = () => { now += 1000; now }
     val spec = Seq(PartitionField("dm", "d", "month"))
     val committer = graft.streaming.IcebergSink.upsertCommitter(
-      tableDir, keyCols = Seq("k"), clock = clock,
+      IcebergCommit.local(tableDir), keyCols = Seq("k"), clock = clock,
       partitionSpec = Some(spec))
     def df(rows: (String, String, Long)*) = rows.toDF("k", "ds", "v")
       .select(col("k"), col("ds").cast("date").as("d"), col("v"))
@@ -622,7 +655,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     def commit(pred: String, ts: Long,
         branch: Option[String] = None): Long =
-      IcebergLocal.append(dir, partFiles(nation.filter(pred)), ts,
+      IcebergCommit.local(dir).append(partFiles(nation.filter(pred)), ts,
         schema = Some(nation.schema), branch = branch)
     def n(pred: String) = nation.filter(pred).count()
     commit("n_regionkey = 0", 1000L)
@@ -653,7 +686,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(sunk() == n("n_regionkey <= 2"),
         "unpublished branch commit leaked into the stream")
       // ...until fast-forward publishes it — then admitted exactly once
-      IcebergLocal.fastForward(dir, "audit")
+      IcebergCommit.local(dir).fastForward("audit")
       q.processAllAvailable()
       assert(sunk() == n("n_regionkey <= 3"))
     } finally q.stop()
@@ -673,7 +706,7 @@ class StreamingSpec extends AnyFunSuite {
         .coalesce(1).write.mode("overwrite").parquet(eqOut.toString)
       val del = Files.list(eqOut).iterator().asScala
         .find(_.toString.endsWith(".parquet")).get
-      IcebergLocal.append(dir, Seq(IcebergLocal.DataFileInfo(
+      IcebergCommit.local(dir).append(Seq(IcebergLocal.DataFileInfo(
         del.toUri.toString, 1, Files.size(del), content = 2,
         equalityIds = Seq(2))), 6000L)
       val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -705,7 +738,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     def n(pred: String) = nation.filter(pred).count()
     // seed the table locally, then ALL traffic goes through the catalog
-    IcebergLocal.append(dir, partFiles(nation.filter("n_regionkey = 0")),
+    IcebergCommit.local(dir).append(partFiles(nation.filter("n_regionkey = 0")),
       1000L, schema = Some(nation.schema))
     val server = new IcebergLocal.CatalogServer(root, "lake")
     val port = server.start()
@@ -724,24 +757,24 @@ class StreamingSpec extends AnyFunSuite {
         q.processAllAvailable()
         assert(sunk() == n("n_regionkey = 0"))
         // a catalog commit is admitted incrementally
-        IcebergRestCommit.append(cat, "lake", "t", dir,
+        IcebergCommit.rest(cat, "lake", "t", dir).append(
           partFiles(nation.filter("n_regionkey = 1")), 2000L)
         q.processAllAvailable()
         assert(sunk() == n("n_regionkey <= 1"))
         // WAP through the protocol: the audit commit stays invisible...
-        IcebergRestCommit.append(cat, "lake", "t", dir,
+        IcebergCommit.rest(cat, "lake", "t", dir).append(
           partFiles(nation.filter("n_regionkey = 2")), 3000L,
           branch = Some("audit"))
         q.processAllAvailable()
         assert(sunk() == n("n_regionkey <= 1"),
           "unpublished REST branch commit leaked into the stream")
         // ...until the fast-forward publish — then admitted exactly once
-        IcebergRestCommit.fastForward(cat, "lake", "t", "audit")
+        IcebergCommit.rest(cat, "lake", "t", dir).fastForward("audit")
         q.processAllAvailable()
         assert(sunk() == n("n_regionkey <= 2"))
       } finally q.stop()
       // restart from the checkpoint: the gap commit arrives exactly once
-      IcebergRestCommit.append(cat, "lake", "t", dir,
+      IcebergCommit.rest(cat, "lake", "t", dir).append(
         partFiles(nation.filter("n_regionkey = 3")), 4000L)
       val q2 = startStream()
       try {
@@ -770,7 +803,7 @@ class StreamingSpec extends AnyFunSuite {
         .map(p => IcebergLocal.DataFileInfo(p.toUri.toString, n,
           Files.size(p)))
     }
-    IcebergLocal.append(dir, partFiles(nation.filter("n_regionkey <= 1")),
+    IcebergCommit.local(dir).append(partFiles(nation.filter("n_regionkey <= 1")),
       1000L, schema = Some(nation.schema))
     // each trigger materializes its CDC window; a committed batch's
     // window is released, so at most the latest one stays held
@@ -790,14 +823,14 @@ class StreamingSpec extends AnyFunSuite {
       assert(counts() == Map("insert" -> live.count()), counts())
       // a row-level DELETE commit streams as delete rows — the exact
       // window the append-only mode refuses
-      IcebergMaintenance.deleteWhere(spark, dir,
+      IcebergMaintenance.deleteWhere(spark, IcebergCommit.local(dir),
         "n_nationkey % 2 = 1", () => 2000L)
       q.processAllAvailable()
       val odd = live.filter("n_nationkey % 2 = 1").count()
       assert(counts() == Map("insert" -> live.count(), "delete" -> odd),
         counts())
       // a plain append still streams as inserts
-      IcebergLocal.append(dir, partFiles(nation.filter("n_regionkey = 2")),
+      IcebergCommit.local(dir).append(partFiles(nation.filter("n_regionkey = 2")),
         3000L, schema = Some(nation.schema))
       q.processAllAvailable()
       assert(counts() == Map(
@@ -829,7 +862,7 @@ class StreamingSpec extends AnyFunSuite {
           Files.size(p)))
     }
     def commit(pred: String, ts: Long, branch: Option[String] = None): Long =
-      IcebergLocal.append(dir, partFiles(nation.filter(pred)), ts,
+      IcebergCommit.local(dir).append(partFiles(nation.filter(pred)), ts,
         schema = Some(nation.schema), branch = branch)
     def n(pred: String) = nation.filter(pred).count()
     commit("n_regionkey = 0", 1000L)                    // main
@@ -920,7 +953,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     // FOUR published commits before the stream ever starts — the
     // "stream starts against existing history" catch-up case
-    (0 to 3).foreach(i => IcebergLocal.append(dir,
+    (0 to 3).foreach(i => IcebergCommit.local(dir).append(
       partFiles(nation.filter(s"n_regionkey = $i")), (i + 1) * 1000L,
       schema = Some(nation.schema)))
     val q = spark.readStream.format("graft-iceberg-stream")
