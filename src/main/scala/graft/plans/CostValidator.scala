@@ -26,10 +26,12 @@ final case class CostValidator(
     maxScanBytes: Option[Long] = None,
     maxOutputRows: Option[Long] = None) {
 
-  /** Throws BudgetExceeded if any plan node's estimate breaks the budget. */
+  /** Throws BudgetExceeded if any plan node's estimate breaks the budget.
+    * Without a budget it returns at once, never forcing the optimizer or
+    * the statistics. */
   def validate(df: DataFrame): Unit = {
+    if (maxScanBytes.isEmpty && maxOutputRows.isEmpty) return
     val plan = df.queryExecution.optimizedPlan
-    val nodes = plan.collect { case p => p.stats }
     maxScanBytes.foreach { budget =>
       // Scan budget is judged on LEAF estimates only: Spark propagates
       // sizeInBytes multiplicatively through joins (output ≈ product of the
@@ -43,7 +45,7 @@ final case class CostValidator(
           "add filters or select fewer columns so the scan prunes more data")
     }
     maxOutputRows.foreach { budget =>
-      val counts = nodes.flatMap(_.rowCount)
+      val counts = plan.collect { case p => p.stats }.flatMap(_.rowCount)
       if (counts.nonEmpty && counts.max > budget)
         throw BudgetExceeded("output_rows", counts.max, budget,
           "add a LIMIT or aggregate the result")

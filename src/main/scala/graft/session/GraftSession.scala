@@ -21,10 +21,15 @@ final case class GraftConfig(
 final case class QueryResult(df: DataFrame, warnings: Seq[QueryWarning])
 
 /** Result of planning without executing (prepared-statement analog). */
-final case class PlanInfo(
-    schema: org.apache.spark.sql.types.StructType,
-    plan: String,
-    defensiveLimited: Boolean)
+final class PlanInfo(
+    val schema: org.apache.spark.sql.types.StructType,
+    planText: => String,
+    val defensiveLimited: Boolean) {
+  /** The formatted physical plan. Built on first read: schema-only callers
+    * (Flight `GetFlightInfo`, prepared statements, pg-wire Describe) never
+    * pay for optimization, planning and the explain. */
+  lazy val plan: String = planText
+}
 
 final case class QueryLogEntry(
     userId: String, scrubbedSql: String, durationMillis: Long,
@@ -51,11 +56,11 @@ final case class QueryTotals(ok: Long, error: Long, cacheHits: Long,
   *   [[GraftSession.LogCapacity]] entries plus running [[QueryTotals]].
   *
   * Execution stays distributed; only results come to the driver. A cache
-  * miss runs the query once as a collect bounded at 100,000 rows and keeps
-  * the rows on the driver, with a Parquet copy as the durable one; a hit
-  * serves those rows with no Spark job, and the cache's `maxBytes` bounds
-  * what it holds. Results that are empty, too long or not cacheable stay
-  * lazy for the caller.
+  * miss runs the query once as a collect bounded at 100,000 rows and
+  * serves those rows, keeping them on the driver with a Parquet copy
+  * written there as the durable one; a hit serves them with no Spark job,
+  * and the cache's `maxBytes` bounds what it holds. Results that are too
+  * long or not cacheable stay lazy for the caller.
   */
 final class GraftSession(
     val spark: SparkSession,
@@ -152,8 +157,7 @@ final class GraftSession(
                 hit
               case None =>
                 warnings.add(WarningCodes.CacheMiss, k.take(16))
-                withTimeout(k) { c.store(df, k) }
-                c.lookup(spark, k).getOrElse(df)
+                withTimeout(k) { c.store(df, k) }.getOrElse(df)
             }
           case _ => df
         }
@@ -185,7 +189,7 @@ final class GraftSession(
         limited = true
       }
       validator.validate(df)
-      PlanInfo(df.schema,
+      new PlanInfo(df.schema,
         df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode),
         defensiveLimited = limited)
     } finally RowPolicyRule_clear()

@@ -12,8 +12,7 @@ import org.apache.spark.util.SizeEstimator
 /** Plan-keyed, user-isolated result cache: rows on the driver, Parquet on
   * disk.
   *
-  * Mirrors the reference cache semantics
-  * (/root/reference/crates/runtime/src/query/cache.rs:33-441 and
+  * Mirrors the reference cache semantics (query/cache.rs:33-441 and
   * CacheKey::from_plan in federation.rs:385-413):
   *  - key = SHA-256(canonicalized optimized plan) + user id + sorted
   *    permissions — two users never share entries;
@@ -23,10 +22,13 @@ import org.apache.spark.util.SizeEstimator
   *    Each entry also persists as a single Parquet file, the durable copy
   *    a restarted cache over the same root re-adopts; one file keeps the
   *    rows of a sorted result in order;
-  *  - a miss runs the query once, as a collect bounded at 100,000 rows
-  *    (the edges' largest delivery bound); longer results are not cached;
+  *  - a miss is one bounded collect (100,000 rows, the edges' largest
+  *    delivery bound); the copy starts no job: the collected rows are
+  *    written on the calling thread, as the reference writes the batches
+  *    it holds (cache.rs:389-431). Longer results are not cached;
   *  - TTL expiry + LRU eviction bounded by entry count and by `maxBytes`;
-  *  - empty results are not cached (cache.rs skip-empty);
+  *  - empty results are served from the collected rows but not cached
+  *    (cache.rs skip-empty);
   *  - per-query opt-out.
   *
   * Spark's `plan.canonicalized.semanticHash` would also work, but the
@@ -71,34 +73,38 @@ final class QueryCache(
     }
   }
 
-  /** Runs `df` once as a bounded collect and caches the rows; skips empty
-    * results (cache.rs skip-empty) and results longer than `MaxRows`. The
-    * Parquet write is atomic: tmp dir + rename, so a restart never adopts
-    * a partial copy. */
-  def store(df: DataFrame, k: String): Boolean = {
+  /** Runs `df` once as a bounded collect and returns the result over the
+    * collected rows, caching them unless the result is empty (cache.rs
+    * skip-empty). None when the result is longer than `MaxRows`: the
+    * caller runs `df` itself. The Parquet copy is atomic: tmp dir +
+    * rename, so a restart never adopts a partial copy. */
+  def store(df: DataFrame, k: String): Option[DataFrame] = {
+    val spark = df.sparkSession
     val target = root.resolve(k)
     if (Files.exists(target)) {
       // Data already on disk (persistent root across restarts, or a
       // concurrent store won the race) — read it back into memory once so
       // the key can actually hit from now on.
       if (!index.containsKey(k)) put(k, target, relationOf(df.schema,
-        df.sparkSession.read.schema(df.schema).parquet(target.toString).collect()))
-      return true
+        spark.read.schema(df.schema).parquet(target.toString).collect()))
+      return lookup(spark, k)
     }
     val rows = df.limit(MaxRows + 1).collect()
-    if (rows.isEmpty || rows.length > MaxRows) return false
+    if (rows.length > MaxRows) return None
     val relation = relationOf(df.schema, rows)
-    val tmp = root.resolve(k + ".tmp" + System.nanoTime())
-    GraftPlanBridge.ofRows(df.sparkSession, relation)
-      .coalesce(1).write.parquet(tmp.toString)
-    try Files.move(tmp, target)
-    catch {
-      // concurrent store of the same key won the move — its contents are
-      // identical (same plan + user), so losing the race is success
-      case _: java.nio.file.FileAlreadyExistsException => deleteRec(tmp)
+    if (rows.nonEmpty) {
+      val tmp = root.resolve(k + ".tmp" + System.nanoTime())
+      try GraftPlanBridge.writeParquet(spark, df.schema, relation.data, tmp.toString)
+      catch { case e: Throwable => deleteRec(tmp); throw e }
+      try Files.move(tmp, target)
+      catch {
+        // concurrent store of the same key won the move — its contents are
+        // identical (same plan + user), so losing the race is success
+        case _: java.nio.file.FileAlreadyExistsException => deleteRec(tmp)
+      }
+      put(k, target, relation)
     }
-    put(k, target, relation)
-    true
+    Some(GraftPlanBridge.ofRows(spark, relation))
   }
 
   private def relationOf(schema: StructType, rows: Array[Row]): LocalRelation =

@@ -167,11 +167,11 @@ class GovernanceSpec extends AnyFunSuite {
     val u = AuthenticatedUser("restart-user")
     val c1 = new QueryCache(root)
     val k = c1.key(df, u)
-    assert(c1.store(df, k))
+    assert(c1.store(df, k).isDefined)
     // simulated restart: fresh (empty) index over the same on-disk root
     val c2 = new QueryCache(root)
     assert(c2.lookup(gspark, k).isEmpty)       // cold index, no entry yet
-    assert(c2.store(df, k))                    // adopts the existing dir…
+    assert(c2.store(df, k).isDefined)          // adopts the existing dir…
     val hit = c2.lookup(gspark, k)             // …so the key can hit now
     assert(hit.isDefined)
     assert(hit.get.count() == 5)
@@ -184,7 +184,7 @@ class GovernanceSpec extends AnyFunSuite {
     val probe = gspark.sql("SELECT n_nationkey FROM nation WHERE n_nationkey < 9")
     val c0 = new QueryCache(root)
     val kProbe = c0.key(probe, u)
-    assert(c0.store(probe, kProbe))
+    assert(c0.store(probe, kProbe).isDefined)
     val oneEntry = c0.totalBytes
     assert(oneEntry > 0)
     val c = new QueryCache(
@@ -194,7 +194,7 @@ class GovernanceSpec extends AnyFunSuite {
       gspark.sql(s"SELECT n_nationkey FROM nation WHERE n_nationkey < $i"))
     val keys = dfs.map(c.key(_, u))
     dfs.zip(keys).foreach { case (df, k) =>
-      assert(c.store(df, k)); Thread.sleep(5) }
+      assert(c.store(df, k).isDefined); Thread.sleep(5) }
     // 3 entries exceed the ~2.5-entry byte budget: the oldest was evicted
     assert(c.size == 2, s"size=${c.size} bytes=${c.totalBytes}")
     assert(c.totalBytes <= oneEntry * 5 / 2)

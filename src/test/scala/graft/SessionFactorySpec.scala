@@ -22,7 +22,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    `graft.sql.Dialects`), so no source keeps its own copy.
   *  - Iceberg table metadata is written by one applier
   *    (`IcebergCommit`), so local and catalog commits cannot drift
-  *    apart. */
+  *    apart.
+  *  - Parquet is written on the driver in one place (the Spark shim's
+  *    `writeParquet`, Spark's own task-side writer), so no main builds a
+  *    second writer whose footer could drift from a Spark job's. */
 class SessionFactorySpec extends AnyFunSuite {
 
   private val owners = Seq(
@@ -33,7 +36,8 @@ class SessionFactorySpec extends AnyFunSuite {
     "ShuffleWidth.configure" -> Seq("graft/session/ShuffleWidth.scala",
       "graft/Tables.scala", "graft/sources/SourceRegistry.scala"),
     "def whereClause" -> Seq("graft/sources/RemoteSqlSource.scala"),
-    "writeMetadataFile(" -> Seq("graft/sources/iceberg/IcebergCommit.scala"))
+    "writeMetadataFile(" -> Seq("graft/sources/iceberg/IcebergCommit.scala"),
+    "ParquetUtils.prepareWrite" -> Seq("org/apache/spark/sql/GraftPlanBridge.scala"))
 
   owners.foreach { case (token, files) =>
     test(s"$token appears only in " +
